@@ -249,3 +249,112 @@ def test_update_without_prior_run_fails_cleanly(spark, tmp_path):
     docs = spark.createDataFrame([(1, "Werner Herzog.")], ["doc_id", "text"])
     with pytest.raises(FileNotFoundError, match="run\\(\\) must finish once"):
         pipe.update(docs)
+
+
+@pytest.mark.parametrize("include_lemmas", [False, True])
+def test_run_entities_match_mentions_definition(spark, include_lemmas):
+    """run()'s entity aggregate (sum of per-doc counts, one row per doc)
+    equals, row for row, the mentions-based definition: one row per
+    mention of a kept kind, count(*) -> mention_count and
+    countDistinct(doc_id) -> doc_freq."""
+    from textgraphs_spark.operators.extract import extract_graphs, mentions_table
+
+    docs = synth_pages(spark, 80).select(F.xxhash64("url").alias("doc_id"), "text")
+    got = ERPipeline(spark, include_lemmas=include_lemmas).run(docs)["entities"]
+
+    kind_pred = (F.col("kind") == "ent") | (
+        F.lit(include_lemmas) & (F.col("kind") == "lem")
+        & F.col("pos").isin("NOUN", "PROPN")
+    )
+    want = (
+        mentions_table(extract_graphs(docs, parts=("mentions",)))
+        .filter(kind_pred)
+        .groupBy(F.col("node_key").alias("entity_key"))
+        .agg(
+            F.min("surface").alias("surface"),
+            F.min("label").alias("label"),
+            F.count("*").alias("mention_count"),
+            F.countDistinct("doc_id").alias("doc_freq"),
+        )
+    )
+    typed = lambda df: [(f.name, f.dataType) for f in df.schema]  # noqa: E731
+    assert typed(got) == typed(want)
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, want.collect()))
+
+
+def test_run_accepts_custom_id_and_text_columns(spark):
+    """run() takes the same id/text column names as run_lean() and
+    clusters the same way."""
+    docs = synth_pages(spark, 80).select(
+        F.xxhash64("url").alias("page_id"), F.col("text").alias("body")
+    )
+    full = ERPipeline(spark).run(docs, "page_id", "body")["clusters"]
+    lean = ERPipeline(spark).run_lean(docs, "page_id", "body")
+    assert full.count() > 0
+    assert sorted(map(tuple, full.collect())) == sorted(map(tuple, lean.collect()))
+
+
+def test_every_entry_point_runs_one_resolve_path(spark, tmp_path, monkeypatch):
+    """run, run_lean, update and the streaming fold each block, score and
+    cluster exactly once, through the same three layer functions."""
+    from textgraphs_spark.operators import components as C
+    from textgraphs_spark.operators import scoring as S
+    from textgraphs_spark.plans import er_pipeline as ERP
+    from textgraphs_spark.streaming.er import er_fold_batch
+
+    calls = {}
+
+    def counted(mod, name):
+        fn = getattr(mod, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(mod, name, wrapper)
+
+    counted(ERP, "blocking_pairs")
+    counted(S, "score_pairs")
+    counted(C, "components_over_keys")
+
+    docs = spark.createDataFrame(
+        [(1, "Werner Herzog met Anna Klein."), (2, "W. Herzog filmed in Peru."),
+         (3, "Anna Klein and A. Klein live in Berlin.")],
+        ["doc_id", "text"],
+    )
+    a, b = docs.filter("doc_id < 3"), docs.filter("doc_id = 3")
+    pipe = ERPipeline(spark, workdir=str(tmp_path / "wd"))
+    entry_points = {
+        "run": lambda: pipe.run(a)["clusters"].count(),
+        "update": lambda: pipe.update(b).count(),
+        "run_lean": lambda: ERPipeline(spark).run_lean(docs).count(),
+        "fold v0": lambda: er_fold_batch(a, 0, str(tmp_path / "fold")),
+        "fold v1": lambda: er_fold_batch(b, 1, str(tmp_path / "fold")),
+    }
+    for name, call in entry_points.items():
+        calls.clear()
+        call()
+        assert calls == {
+            "blocking_pairs": 1, "score_pairs": 1, "components_over_keys": 1,
+        }, name
+
+
+def test_flagship_er_queries_match_oracle(spark, sf_dir):
+    """er_clusters, er_incremental (update == batch: its oracle is the
+    batch clustering SQL) and er_ranked_clusters hash-match their DuckDB
+    oracles under tools/check_oracle.py's comparator."""
+    import duckdb
+
+    import __spark_entry__ as em
+    from tools.check_oracle import compare
+
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf_dir}/documents.parquet')"
+    )
+    queries, oracles = em.queries(), em.oracle_sql()
+    for name in ("er_clusters", "er_incremental", "er_ranked_clusters"):
+        got = queries[name](spark, sf_dir).toPandas()
+        assert len(got) > 0, name
+        assert compare(got, con.execute(oracles[name]).df()) == [], name

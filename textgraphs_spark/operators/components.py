@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 # second-seed salt for the low word of the 128-bit id: xxhash64(k, _SALT)
 # is an independent draw from xxhash64(k) (different input tuple)
@@ -257,13 +258,15 @@ def components_over_keys(
     cc = connected_components(
         e, small_graph_threshold=small_graph_threshold, stats=stats
     )
-    assigned = (
+    # min over a comp window: one shuffle, where groupBy + join-back
+    # shuffles the assignment rows twice
+    return (
         ids.join(cc, ids["id"] == cc["node"], "left")
         .select("k", F.coalesce("component", "id").alias("comp"))
-    )
-    canon = assigned.groupBy("comp").agg(F.min("k").alias("cluster_id"))
-    return assigned.join(canon, "comp").select(
-        F.col("k").alias("entity_key"), "cluster_id"
+        .select(
+            F.col("k").alias("entity_key"),
+            F.min("k").over(Window.partitionBy("comp")).alias("cluster_id"),
+        )
     )
 
 

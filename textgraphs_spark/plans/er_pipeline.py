@@ -4,20 +4,25 @@ This is the reference's extraction + entity-linking pipeline
 (reference: textgraphs/doc.py:381-560, kg.py:306-367, 851-1142) re-expressed
 as the north-star record-linkage job:
 
-    extract (mapInPandas, per-doc lemma graphs)
-      → distinct entity surface forms          (vocabulary-sized, not corpus-sized)
+    extract (mapInPandas, flat per-doc entity mentions)
+      → entity aggregate: one groupBy on the entity key (vocabulary-sized)
       → blocking (normalized keys + MinHash-LSH, salted for skew)
       → pairwise scoring (batched JW inside Arrow UDFs)
-      → match edges (score >= min_similarity, reference defaults.py:14)
-      → transitive clustering (large-star/small-star connected components)
-      → clusters + per-cluster ranked members
+      → match edges (score >= MIN_SIMILARITY, reference defaults.py:14)
+      → transitive clustering (connected components, min-member-key ids)
+      → assignments: every entity gets a cluster (unmatched = singleton)
 
-Stage boundaries write parquet checkpoints (mirroring the reference's own
-dump/load round-trip as its resume mechanism, graph.py:236-392) and append
-to two audit tables under the workdir — ``lineage`` (per stage: rows,
-partitions, max-partition rows, skew ratio, wall seconds) and ``metrics``
-(per stage x partition: row count) — the north rule's "resumable from
-checkpoint with per-partition lineage + metrics".
+``entity_aggregate`` and ``ERPipeline.resolve`` (block → score → CC →
+assign) are the one definition of those stages; ``run``, ``run_lean``,
+``update`` and the streaming fold are thin wrappers over them.
+
+``run`` checkpoints its stages (``extracted``, ``entities``,
+``assignments``) to parquet under the workdir (mirroring the reference's
+own dump/load round-trip as its resume mechanism, graph.py:236-392) and
+appends to two audit tables — ``lineage`` (per stage: rows, partitions,
+max-partition rows, skew ratio, wall seconds) and ``metrics`` (per stage
+x partition: row count) — the north rule's "resumable from checkpoint
+with per-partition lineage + metrics".
 """
 
 from __future__ import annotations
@@ -31,39 +36,41 @@ from pyspark.sql import functions as F
 from ..operators import blocking as B
 from ..operators import components as C
 from ..operators import scoring as S
-from ..operators.extract import extract_entities, extract_graphs, mentions_table
+from ..operators.extract import extract_entities, extract_graphs
 from ..sources import tables as TBL
 from .staged import StagedPipeline
 
 
-def entity_aggregate(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    *,
-    include_lemmas: bool = False,
-    checkpoint: bool = True,
-) -> DataFrame:
-    """docs → the vocabulary-sized entity aggregate (entity_key, surface,
-    label, mention_count, doc_freq) the whole ER stack runs on: one
-    extraction pass, one hash aggregation on the entity key.
+def mention_rows(extracted: DataFrame) -> DataFrame:
+    """Per-(doc, key) extraction rows (``extract_entities`` output or
+    ``nodes_table`` rows: node_key, surface, label, count) → the
+    aggregate's input shape: one document's mentions of one key."""
+    return extracted.select(
+        F.col("node_key").alias("entity_key"), "surface", "label",
+        F.col("count").alias("mention_count"), F.lit(1).alias("doc_freq"),
+    )
 
-    ``checkpoint=True`` (the pipeline default) localCheckpoints the
-    result: it truncates lineage so every downstream plan reads the
-    materialized partitions — plain ``.persist()`` can miss cache
-    substitution across mapInPandas lineage and silently recompute the
-    whole extraction. Single-consumer callers (diagnostics queries) pass
-    ``checkpoint=False`` to stay fully lazy.
+
+def entity_aggregate(rows: DataFrame) -> DataFrame:
+    """rows(entity_key, surface, label, mention_count, doc_freq) → the
+    vocabulary-sized entity aggregate the whole ER stack runs on: one
+    hash aggregation on the entity key. Fresh extraction (``mention_rows``)
+    and a prior aggregate unioned with new rows go through the same call.
+
+    The result is localCheckpointed: it truncates lineage so every
+    downstream plan reads the materialized partitions — plain
+    ``.persist()`` can miss cache substitution across mapInPandas lineage
+    and silently recompute the whole extraction.
     """
-    ents = extract_entities(docs, id_col, text_col, include_lemmas=include_lemmas)
-    agg = ents.groupBy(F.col("node_key").alias("entity_key")).agg(
-        # min: deterministic canonical surface (see ERPipeline.run())
+    return rows.groupBy("entity_key").agg(
+        # min, not first: the canonical surface of a key must be
+        # deterministic across partitionings (and reproducible by the
+        # SQL oracle) — first() depends on shuffle order
         F.min("surface").alias("surface"),
         F.min("label").alias("label"),
-        F.sum("count").alias("mention_count"),
-        F.count("*").alias("doc_freq"),
-    )
-    return agg.localCheckpoint() if checkpoint else agg
+        F.sum("mention_count").alias("mention_count"),
+        F.sum("doc_freq").alias("doc_freq"),
+    ).localCheckpoint()
 
 
 def blocked_keys(
@@ -131,8 +138,8 @@ def blocking_pairs(
     surface, salted above ``max_block_size`` (blocking.candidate_pairs).
 
     Module-level so the evaluation operators (plans/er_eval) measure the
-    EXACT candidate set the pipeline clusters from — ERPipeline methods
-    delegate here.
+    EXACT candidate set the pipeline clusters from — ERPipeline.resolve
+    calls it.
     """
     blocked = blocked_keys(
         entities, use_minhash=use_minhash, hash_family=hash_family
@@ -152,19 +159,11 @@ class ERPipeline(StagedPipeline):
     """
 
     def __init__(self, spark: SparkSession, workdir: str | None = None, *,
-                 min_similarity: float = S.MIN_SIMILARITY,
                  max_block_size: int = 200,
-                 use_minhash: bool = True,
-                 hash_family: str = "md5",
                  include_lemmas: bool = False,
                  small_graph_threshold: int = 500_000):
         super().__init__(spark, workdir)
-        self.min_similarity = min_similarity
         self.max_block_size = max_block_size
-        self.use_minhash = use_minhash
-        # md5 family: one md5 per shingle instead of 16 seeded xxhash64
-        # calls, and the band keys are bit-reproducible by the SQL oracle
-        self.hash_family = hash_family
         # include NOUN/PROPN lemma mentions as resolvable entities —
         # for corpora whose text has no NER surface forms
         self.include_lemmas = include_lemmas
@@ -177,80 +176,93 @@ class ERPipeline(StagedPipeline):
         self.small_graph_threshold = small_graph_threshold
         self.cc_stats: dict = {}
 
-    # -- stages ------------------------------------------------------------
-    def _blocking_pairs(self, entities: DataFrame) -> DataFrame:
-        """entities → candidate pairs via every blocking channel.
+    def _extract(self, docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
+        return extract_entities(docs, id_col, text_col, include_lemmas=self.include_lemmas)
 
-        The ONE definition of the blocking strategy — run(), run_lean(),
-        update(), and the standalone evaluation operators (plans/er_eval)
-        all route through module-level ``blocking_pairs``, so no path can
-        silently diverge from the batch pipeline.
+    def resolve(
+        self, entities: DataFrame, *, prior: DataFrame | None = None
+    ) -> dict[str, DataFrame]:
+        """entities(entity_key, surface, label, mention_count, doc_freq) →
+        {entities, match_scores, assignments}: block → score → CC →
+        assign, the one definition every entry point runs.
+
+        ``prior`` is a committed assignment table (entity_key, cluster_id,
+        ...) over a subset of ``entities``. Only pairs touching a FRESH key
+        (one with no prior row) are scored: old-old pair decisions are
+        already encoded by the prior clustering (match scores depend on
+        surfaces alone). Prior rows with ``entity_key != cluster_id``
+        join the match edges as CC edges — ``cluster_id`` is the min
+        member key, so a prior row is an edge inside its old cluster — and
+        connected components merges clusters transitively, so a new
+        bridging form can fuse two old clusters.
         """
-        return blocking_pairs(
-            entities,
-            use_minhash=self.use_minhash,
-            hash_family=self.hash_family,
-            max_block_size=self.max_block_size,
-        )
-
-    def run(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict[str, DataFrame]:
-        extracted = self._stage("extracted", lambda: extract_graphs(docs, id_col, text_col))
-        mentions = mentions_table(extracted)
-
-        # distinct person-entity surface forms; lemma key IS the seed
-        # identity (same key => same node, graph.py:134-137)
-        kind_pred = (
-            (F.col("kind") == "ent")
-            | (F.lit(self.include_lemmas) & (F.col("kind") == "lem") & F.col("pos").isin("NOUN", "PROPN"))
-        )
-        entities = self._stage("entities", lambda: (
-            mentions.filter(kind_pred)
-            .groupBy(F.col("node_key").alias("entity_key"))
-            .agg(
-                # min, not first: the canonical surface of a key must be
-                # deterministic across partitionings (and reproducible by
-                # the SQL oracle) — first() depends on shuffle order
-                F.min("surface").alias("surface"),
-                F.min("label").alias("label"),
-                F.count("*").alias("mention_count"),
-                F.countDistinct(id_col).alias("doc_freq"),
+        pairs = blocking_pairs(entities, max_block_size=self.max_block_size)
+        if prior is not None:
+            # a pair touches a fresh key unless BOTH ends have a prior row
+            ol = prior.select(F.col("entity_key").alias("left_id"), F.lit(True).alias("_ol"))
+            orr = prior.select(F.col("entity_key").alias("right_id"), F.lit(True).alias("_or"))
+            pairs = (
+                pairs.join(ol, "left_id", "left").join(orr, "right_id", "left")
+                .filter(F.col("_ol").isNull() | F.col("_or").isNull())
+                .drop("_ol", "_or")
             )
-        ))
-
-        pairs = self._stage("pairs", lambda: self._blocking_pairs(entities))
-
+        # respread before the scoring UDF: AQE coalesces shuffles by BYTE
+        # size, but a Python-UDF stage is compute-bound per ROW — a few MB
+        # of pairs is minutes of scoring, and a byte-coalesced single
+        # partition would run it serially on one core
         n_score_parts = self.spark.sparkContext.defaultParallelism * 2
-        scores = self._stage(
-            "scores", lambda: S.score_pairs(pairs.repartition(n_score_parts))
+        # checkpoint: match edges are read several times downstream (CC
+        # input, id mapping) — never re-run the scoring UDF. Checkpoint
+        # BEFORE the match filter: a filter over the projected score is
+        # pushed below the projection, which would run the UDF twice (once
+        # to filter, once for the kept score). The score column rides
+        # along so evaluation operators can audit cluster cohesion without
+        # re-scoring.
+        scores = (
+            S.score_pairs(pairs.repartition(n_score_parts), lean=True)
+            .select("left_id", "right_id", "score", "match")
+            .localCheckpoint()
         )
-
-        match_edges = scores.filter(F.col("match")).select("left_id", "right_id")
-
-        clusters = self._stage("clusters", lambda: C.components_over_keys(
-            match_edges,
+        match_scores = scores.filter(F.col("match")).drop("match")
+        edges = match_scores.select("left_id", "right_id")
+        if prior is not None:
+            edges = edges.unionByName(
+                prior.filter(F.col("entity_key") != F.col("cluster_id")).select(
+                    F.col("entity_key").alias("left_id"),
+                    F.col("cluster_id").alias("right_id"),
+                )
+            )
+        clusters = C.components_over_keys(
+            edges,
             small_graph_threshold=self.small_graph_threshold,
             stats=self.cc_stats,
-        ))
-
-        # every entity gets a cluster; unmatched entities are singletons
-        assignments = self._stage("assignments", lambda: (
+        )
+        assignments = (
             entities.join(clusters, "entity_key", "left")
-            .withColumn(
-                "cluster_id", F.coalesce("cluster_id", F.col("entity_key"))
-            )
-            .select("entity_key", "cluster_id", "surface", "label",
-                    "mention_count", "doc_freq")
-        ))
-
-        self.write_lineage()
+            .withColumn("cluster_id", F.coalesce("cluster_id", F.col("entity_key")))
+            .select("entity_key", "cluster_id", "surface", "label", "mention_count", "doc_freq")
+        )
         return {
-            "extracted": extracted,
             "entities": entities,
-            "pairs": pairs,
-            "scores": scores,
-            "clusters": assignments,
+            "match_scores": match_scores,
+            "assignments": assignments,
         }
 
+    def run(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict[str, DataFrame]:
+        """Staged batch run → {extracted, entities, clusters}.
+
+        ``extracted`` (flat per-doc entity mentions), ``entities`` and
+        the assignment table (returned as ``clusters``) each materialize
+        as a stage, so a resumed run reads them back instead of
+        recomputing.
+        """
+        extracted = self._stage("extracted", lambda: self._extract(docs, id_col, text_col))
+        entities = self._stage("entities", lambda: entity_aggregate(mention_rows(extracted)))
+        assignments = self._stage(
+            "assignments", lambda: self.resolve(entities)["assignments"]
+        )
+        self.write_lineage()
+        return {"extracted": extracted, "entities": entities, "clusters": assignments}
 
     def run_lean(
         self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -275,60 +287,19 @@ class ERPipeline(StagedPipeline):
         aggregate from a shared extraction pass.
         """
         if entities is None:
-            entities = entity_aggregate(
-                docs, id_col, text_col, include_lemmas=self.include_lemmas
-            )
-        pairs = self._blocking_pairs(entities)
-        # respread before the scoring UDF: AQE coalesces shuffles by BYTE
-        # size, but a Python-UDF stage is compute-bound per ROW — a few MB
-        # of pairs is minutes of scoring, and a byte-coalesced single
-        # partition would run it serially on one core
-        n_score_parts = self.spark.sparkContext.defaultParallelism * 2
-        scores = S.score_pairs(pairs.repartition(n_score_parts), lean=True)
-        # checkpoint: match edges are read twice downstream (id mapping +
-        # the CC iterations) — never re-run the scoring UDF. The score
-        # column rides along (one double per MATCH edge — a vocabulary-
-        # scale table) so evaluation operators can audit cluster cohesion
-        # without re-scoring.
-        match_scores = (
-            scores.filter(F.col("match"))
-            .select("left_id", "right_id", "score")
-            .localCheckpoint()
-        )
-        match_edges = match_scores.select("left_id", "right_id")
-        clusters = C.components_over_keys(
-            match_edges,
-            small_graph_threshold=self.small_graph_threshold,
-            stats=self.cc_stats,
-        )
-        assignments = (
-            entities.join(clusters, "entity_key", "left")
-            .withColumn("cluster_id", F.coalesce("cluster_id", F.col("entity_key")))
-            .select("entity_key", "cluster_id", "surface", "label", "mention_count", "doc_freq")
-        )
-        if return_parts:
-            return {
-                "entities": entities,
-                "match_scores": match_scores,
-                "assignments": assignments,
-            }
-        return assignments
-
+            entities = entity_aggregate(mention_rows(self._extract(docs, id_col, text_col)))
+        parts = self.resolve(entities)
+        return parts if return_parts else parts["assignments"]
 
     def update(self, new_docs: DataFrame, id_col: str = "doc_id",
                text_col: str = "text", *,
                state_from: str | None = None) -> DataFrame:
         """Incrementally fold a NEW batch of documents into an existing
-        clustering (the continuously-crawled-corpus path).
-
-        Only pairs touching a previously-unseen surface form are scored:
-        old-old pair decisions are fully encoded by the prior clustering
-        (match scores depend on surfaces alone, and the old assignment
-        rows double as edges — ``cluster_id`` is the min member key, so
-        (xxhash64(key), xxhash64(cluster_id)) lives in the same id space
-        as new match edges). Connected components over old-assignment edges +
-        new match edges then merges clusters transitively, so a new
-        bridging form can correctly fuse two old clusters.
+        clustering (the continuously-crawled-corpus path): merge the
+        batch's mention rows into the prior entity aggregate, then
+        ``resolve`` the merged vocabulary against the prior assignments —
+        only pairs touching a previously-unseen surface form are scored,
+        and the result equals a full-batch run.
 
         Work scales with |new batch| + |vocabulary|, never |old corpus|.
         Writes refreshed ``entities``/``assignments`` stages back to the
@@ -341,8 +312,6 @@ class ERPipeline(StagedPipeline):
         mid-write can never corrupt readable state). Default (None) is
         the classic in-place refresh of ``self.workdir``.
         """
-        from ..operators.components import connected_components, key_id128
-
         assert self.workdir, "update() needs the workdir of a prior run()"
         t0 = time.time()
         spark = self.spark
@@ -357,106 +326,21 @@ class ERPipeline(StagedPipeline):
         old_entities = TBL.read_table(spark, os.path.join(src, "entities"))
         old_assign = TBL.read_table(spark, os.path.join(src, "assignments"))
 
-        new_ents = (
-            extract_entities(new_docs, id_col, text_col,
-                             include_lemmas=self.include_lemmas)
-            .groupBy(F.col("node_key").alias("entity_key"))
-            .agg(
-                F.min("surface").alias("surface"),
-                F.min("label").alias("label"),
-                F.sum("count").alias("mention_count"),
-                F.count("*").alias("doc_freq"),
-            )
+        merged = entity_aggregate(
+            old_entities.unionByName(mention_rows(self._extract(new_docs, id_col, text_col)))
         )
-        merged = (
-            old_entities.unionByName(new_ents)
-            .groupBy("entity_key")
-            .agg(
-                F.min("surface").alias("surface"),
-                F.min("label").alias("label"),
-                F.sum("mention_count").alias("mention_count"),
-                F.sum("doc_freq").alias("doc_freq"),
-            )
-            .localCheckpoint()
-        )
-        fresh_keys = new_ents.join(old_entities, "entity_key", "left_anti") \
-            .select("entity_key").localCheckpoint()
-
-        pairs = self._blocking_pairs(merged)
-        # only pairs with at least one fresh key need scoring
-        fl = fresh_keys.select(F.col("entity_key").alias("left_id")) \
-            .withColumn("_fl", F.lit(True))
-        fr = fresh_keys.select(F.col("entity_key").alias("right_id")) \
-            .withColumn("_fr", F.lit(True))
-        touched = (
-            pairs.join(fl, "left_id", "left").join(fr, "right_id", "left")
-            .filter(F.col("_fl").isNotNull() | F.col("_fr").isNotNull())
-            .drop("_fl", "_fr")
-        )
-        n_score_parts = spark.sparkContext.defaultParallelism * 2
-        scores = S.score_pairs(touched.repartition(n_score_parts), lean=True)
-        new_edges = scores.filter(F.col("match")).select(
-            key_id128("left_id").alias("src"), key_id128("right_id").alias("dst")
-        )
-        # cluster_id is the min member KEY; hashing it lands in the same
-        # 128-bit id space as the entity-key hashes, so an old assignment
-        # row (key -> cluster_id) doubles as a CC edge
-        old_edges = old_assign.select(
-            key_id128("entity_key").alias("src"), key_id128("cluster_id").alias("dst")
-        )
-        cc = connected_components(
-            old_edges.unionByName(new_edges).localCheckpoint(),
-            small_graph_threshold=self.small_graph_threshold,
-            stats=self.cc_stats,
-        )
-        with_comp = (
-            merged.withColumn("_id", key_id128("entity_key"))
-            .join(cc, F.col("_id") == F.col("node"), "left")
-            .withColumn("_comp", F.coalesce("component", F.col("_id")))
-        )
-        # relabel components with the min member key — identical contract
-        # to components_over_keys, so update() output == a full-batch run
-        canon = with_comp.groupBy("_comp").agg(F.min("entity_key").alias("cluster_id"))
-        assignments = (
-            with_comp.join(canon, "_comp")
-            .select("entity_key", "cluster_id", "surface", "label",
-                    "mention_count", "doc_freq")
-            .localCheckpoint()
-        )
+        assignments = self.resolve(merged, prior=old_assign)["assignments"].localCheckpoint()
         # refresh the resumable state. Direct overwrite is safe — both
-        # DataFrames are localCheckpoint'ed above, so their lineage no
-        # longer reads the paths being replaced — and it works on any
-        # Hadoop filesystem (hdfs://, s3a://), unlike driver-local
-        # rmtree/rename.
+        # DataFrames are localCheckpoint'ed, so their lineage no longer
+        # reads the paths being replaced — and it works on any Hadoop
+        # filesystem (hdfs://, s3a://), unlike driver-local rmtree/rename.
         for stage, df in (("entities", merged), ("assignments", assignments)):
             TBL.write_table(df, os.path.join(self.workdir, stage))
-        # drop the now-stale sibling stage checkpoints: a later run() on
-        # this workdir must never resume pre-update extracted/pairs/scores/
-        # clusters outputs against post-update entities. Hadoop FS API so
-        # DFS workdirs (hdfs://, s3a://) are handled, not just local paths.
-        for stage in ("extracted", "pairs", "scores", "clusters"):
-            TBL.drop_stage(spark, os.path.join(self.workdir, stage))
-        part_rows = (
-            assignments.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").alias("rows"))
-            .collect()
-        )
-        n = sum(r.rows for r in part_rows)
-        n_parts = max(len(part_rows), 1)
-        max_rows = max((r.rows for r in part_rows), default=0)
-        ts = time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
-        self._metrics.extend(
-            {"stage": "update", "partition_id": r.partition_id, "rows": r.rows, "ts": ts}
-            for r in part_rows
-        )
-        self._lineage.append({
-            "stage": "update", "rows": n,
-            "n_partitions": n_parts,
-            "max_partition_rows": max_rows,
-            "skew": round(max_rows * n_parts / n, 3) if n else 0.0,
-            "seconds": round(time.time() - t0, 3),
-            "ts": ts,
-        })
+        # drop the now-stale extraction checkpoint: a later run() on this
+        # workdir must never resume pre-update mentions against
+        # post-update entities
+        TBL.drop_stage(spark, os.path.join(self.workdir, "extracted"))
+        self._record("update", assignments, t0)
         self.write_lineage()
         return assignments
 
@@ -491,7 +375,7 @@ def ranked_clusters(
     aggregate from per-doc graph nodes equals ``extract_entities``'s —
     one row per (doc, key) with the same surface/label/count fields.
     """
-    from ..operators.extract import extract_graphs, nodes_table
+    from ..operators.extract import corpus_edges, nodes_table
 
     pipe = ERPipeline(spark, workdir, include_lemmas=include_lemmas)
     if workdir:
@@ -504,26 +388,13 @@ def ranked_clusters(
             | (F.lit(include_lemmas) & (F.col("kind") == "lem")
                & F.col("pos").isin("NOUN", "PROPN"))
         )
-        entities = (
-            nodes_table(extracted)
-            .filter(kind_pred)
-            .groupBy(F.col("node_key").alias("entity_key"))
-            .agg(
-                F.min("surface").alias("surface"),
-                F.min("label").alias("label"),
-                F.sum("count").alias("mention_count"),
-                F.count("*").alias("doc_freq"),
-            )
-            .localCheckpoint()
-        )
-        assignments = pipe.run_lean(docs, entities=entities)
+        entities = entity_aggregate(mention_rows(nodes_table(extracted).filter(kind_pred)))
         edges_src = extracted
-        pipe.write_lineage()
     else:
-        assignments = pipe.run_lean(docs)
+        entities = None
         edges_src = extract_graphs(docs, id_col, text_col, parts=("edges",))
-    from ..operators.extract import corpus_edges
-
+    assignments = pipe.run_lean(docs, id_col, text_col, entities=entities)
+    pipe.write_lineage()
     edges = corpus_edges(edges_src).select(
         F.col("src_key").alias("src"), F.col("dst_key").alias("dst"),
         F.col("count").alias("weight"),

@@ -46,9 +46,16 @@ class StagedPipeline:
             df = TBL.read_table(self.spark, path)
         else:
             df = build().localCheckpoint()
-        # one job yields both the stage total and the per-partition row
-        # histogram: partition count is O(shuffle.partitions), so the
-        # collect is a few KB even when the stage holds 10^12 rows
+        self._record(name, df, t0)
+        return df
+
+    def _record(self, name: str, df: DataFrame, t0: float) -> None:
+        """Append stage ``name``'s lineage row and per-partition metrics
+        rows for the materialized ``df``, timed from ``t0``.
+
+        One job yields both the stage total and the per-partition row
+        histogram: partition count is O(shuffle.partitions), so the
+        collect is a few KB even when the stage holds 10^12 rows."""
         part_rows = (
             df.groupBy(F.spark_partition_id().alias("partition_id"))
             .agg(F.count("*").alias("rows"))
@@ -77,7 +84,6 @@ class StagedPipeline:
             "seconds": round(time.time() - t0, 3),
             "ts": ts,
         })
-        return df
 
     def lineage_df(self) -> DataFrame:
         return self.spark.createDataFrame(self._lineage)

@@ -12,9 +12,11 @@ bridge for sinks/updates that need full batch-DataFrame semantics.
 Design points:
 
 * **One codepath.** The fold calls the SAME ``run()``/``update()`` the
-  batch and incremental CLI paths use — streaming adds arrival handling,
-  never a second clustering implementation (the stream==batch pytest pins
-  final assignments bit-equal to a one-shot batch run over the union).
+  batch and incremental CLI paths use, and both are thin wrappers over
+  ``ERPipeline.resolve`` — the one block → score → CC → assign path —
+  so streaming adds arrival handling, never a second clustering
+  implementation (the stream==batch pytest pins final assignments
+  bit-equal to a one-shot batch run over the union).
 * **Snapshot-commit folding (Iceberg semantics on the parquet seam).**
   ``foreachBatch`` replays micro-batches after failures (at-least-once
   per epoch) and ``update()`` is not idempotent — re-folding would
@@ -141,11 +143,11 @@ def er_fold_batch(
     new committed snapshot.
 
     First-ever fold bootstraps snapshot v0 with ``ERPipeline.run``
-    (writes every stage + lineage); later folds ``update()`` from the
-    committed snapshot into the next. Returns False when the batch was
-    skipped (already folded — replay after restart). Usable directly for
-    non-streaming callers that receive arrivals from an external
-    scheduler.
+    (writes the extracted/entities/assignments stages + lineage); later
+    folds ``update()`` from the committed snapshot into the next.
+    Returns False when the batch was skipped (already folded — replay
+    after restart). Usable directly for non-streaming callers that
+    receive arrivals from an external scheduler.
     """
     spark = docs.sparkSession
     version, seen = committed(spark, workdir)
