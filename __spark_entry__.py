@@ -59,7 +59,6 @@ _BM25_QUERIES = [
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from textgraphs_spark.operators import dedup as D
     from textgraphs_spark.operators import gor as G
-    from textgraphs_spark.operators import similarity as SIM
     from textgraphs_spark.operators import textquality as TQ
     from textgraphs_spark.operators import webdata as WD
     from textgraphs_spark.operators.extract import (
@@ -613,74 +612,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return mirror_farms(mirror_pages(spark))
 
-    def host_link_graph_q(spark, sf_dir):
-        # host-level hyperlink graph: map-only href parse + one
-        # pair-keyed hash agg (page graph never materialized)
-        from textgraphs_spark.operators.linkgraph import host_link_graph
-        from textgraphs_spark.sources.pages import link_pages
-
-        return host_link_graph(link_pages(spark))
-
-    def host_link_rank_q(spark, sf_dir):
-        # link-based host authority: weighted PageRank over the
-        # vocabulary-sized host graph via the shared iterative-join kernel
-        from textgraphs_spark.operators.linkgraph import host_link_rank
-        from textgraphs_spark.sources.pages import link_pages
-
-        return host_link_rank(link_pages(spark))
-
-    def anchor_text_census_q(spark, sf_dir):
-        # how the web describes each host: top-k anchor texts per
-        # dst_host (grouped_rank — no hot-host window funnel)
-        from textgraphs_spark.operators.linkgraph import anchor_text_census
-        from textgraphs_spark.sources.pages import link_pages
-
-        return anchor_text_census(link_pages(spark))
-
-    def link_reciprocity_q(spark, sf_dir):
-        # link-farm structural signal: reciprocal fraction of each
-        # host's out-neighborhood over the pre-aggregated pair table
-        from textgraphs_spark.operators.linkgraph import link_reciprocity
-        from textgraphs_spark.sources.pages import link_pages
-
-        return link_reciprocity(link_pages(spark))
-
-    def host_trustrank_q(spark, sf_dir):
-        # TrustRank: PPR over the host graph seeded at a trusted
-        # whitelist — spam farms score ~0 unless trusted hosts link in
-        from textgraphs_spark.operators.linkgraph import host_trustrank
-        from textgraphs_spark.sources.pages import link_pages
-
-        return host_trustrank(
-            link_pages(spark), ["site0.example", "site1.example"]
-        )
-
-    def host_scc_q(spark, sf_dir):
-        # strongly connected components of the directed host graph
-        # (coloring kernel) over the mixed ring/chain fixture; the
-        # mutual-reachability ring signal link_reciprocity only
-        # approximates pairwise
-        from textgraphs_spark.operators.linkgraph import host_scc
-        from textgraphs_spark.sources.pages import ring_pages
-
-        return host_scc(ring_pages(spark))
-
-    def host_condensation_q(spark, sf_dir):
-        # condensation DAG: SCCs contracted to nodes, cross-component
-        # links aggregated — acyclic by construction
-        from textgraphs_spark.operators.linkgraph import host_condensation
-        from textgraphs_spark.sources.pages import ring_pages
-
-        return host_condensation(ring_pages(spark))
-
-    def condensation_depth_q(spark, sf_dir):
-        # topological layer per SCC in the condensation DAG — the
-        # crawl-prioritization key; emit layer d with a filter, no sort
-        from textgraphs_spark.operators.linkgraph import condensation_depth
-        from textgraphs_spark.sources.pages import ring_pages
-
-        return condensation_depth(ring_pages(spark))
-
     def latest_captures_q(spark, sf_dir):
         # SCD-1 snapshot compaction: latest capture per url via one
         # struct-argmax hash agg (no window)
@@ -732,23 +663,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from textgraphs_spark.operators.webdata import host_lang_entropy
 
         return host_lang_entropy(_docs(spark, sf_dir), max_entropy=1.4)
-
-    def crawl_policy_q(spark, sf_dir):
-        # the frontier ACTION over the host-hygiene censuses: traps +
-        # soft-404 + link rank -> per-host block/boost/normal verdicts
-        from textgraphs_spark.operators.linkgraph import host_link_rank
-        from textgraphs_spark.operators.webdata import (
-            crawl_policy, crawler_traps, soft404_hosts,
-        )
-        from textgraphs_spark.sources.pages import (
-            link_pages, soft404_pages, trap_pages,
-        )
-
-        return crawl_policy(
-            crawler_traps(trap_pages(spark)),
-            soft404_hosts(soft404_pages(spark)),
-            host_link_rank(link_pages(spark)),
-        )
 
     def er_reviewed_clusters_q(spark, sf_dir):
         # the full ER-ops loop as one query: monitor (churn) -> review
@@ -817,16 +731,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         out = constrained_run(spark, None, entities=ents)
         return constraint_violations(out["assignments"], out["cannot"])
 
-    def pld_link_graph_q(spark, sf_dir):
-        # site-level web graph: the host link graph contracted to
-        # registered domains over the subdomain-rich corpus
-        # (sources/pages.sublink_pages — RNG-free, regenerated by the
-        # oracle); intra-site cross-subdomain links must collapse away
-        from textgraphs_spark.operators.linkgraph import pld_link_graph
-        from textgraphs_spark.sources.pages import sublink_pages
-
-        return pld_link_graph(sublink_pages(spark))
-
     def pld_rollup_q(spark, sf_dir):
         # registered-domain (pay-level-domain) census over the
         # deterministic multi-level-TLD corpus (sources/pages.pld_pages
@@ -836,14 +740,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from textgraphs_spark.sources.pages import pld_pages
 
         return pld_rollup(pld_pages(spark))
-
-    def training_manifest_q(spark, sf_dir):
-        # the end-to-end training-data plan as one DataFrame: curation
-        # ladder -> leakage-safe split -> byte-balanced shards ->
-        # (split, source, shard) manifest a training launcher consumes
-        from textgraphs_spark.plans.curation_pipeline import training_manifest
-
-        return training_manifest(_docs(spark, sf_dir), target_bytes=16384)
 
     def url_history_q(spark, sf_dir):
         # SCD-2 capture history over the multi-capture corpus: one row
@@ -901,30 +797,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # first BPE merge table) — codegen explode kernel, alphabet²-
         # bounded shuffle
         return TQ.bpe_pair_census(_docs(spark, sf_dir))
-
-    def frontier_schedule_q(spark, sf_dir):
-        # politeness scheduling over the policy verdicts: blocked hosts
-        # dropped, boost hosts interleaved 2x, per-host waves via
-        # grouped_rank (no hot-host funnel)
-        from textgraphs_spark.operators.linkgraph import host_link_rank
-        from textgraphs_spark.operators.webdata import (
-            crawl_policy, crawler_traps, frontier_schedule, soft404_hosts,
-        )
-        from textgraphs_spark.sources.pages import (
-            link_pages, soft404_pages, trap_pages,
-        )
-
-        pol = crawl_policy(
-            crawler_traps(trap_pages(spark)),
-            soft404_hosts(soft404_pages(spark)),
-            host_link_rank(link_pages(spark)),
-        )
-        cands = (
-            trap_pages(spark).select("url")
-            .unionByName(soft404_pages(spark).select("url"))
-            .unionByName(link_pages(spark).select("url"))
-        )
-        return frontier_schedule(cands, pol)
 
     def dedup_winnow(spark, sf_dir):
         # containment channel: localizable shared spans, scored by
@@ -1048,12 +920,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # EXACT cap without the hot-source window funnel: range-partition
         # grouped rank (operators/rankops.py) — same values as the window
         # form (shares its oracle), one task never holds a whole source
+        from textgraphs_spark.operators.lehmer import det_hash
         from textgraphs_spark.operators.rankops import grouped_rank
-        from textgraphs_spark.operators.webdata import _det_hash
 
         d = _docs(spark, sf_dir).select("doc_id", "source")
         ranked = grouped_rank(
-            d, "source", [_det_hash(F.col("doc_id")), F.col("doc_id")]
+            d, "source", [det_hash(F.col("doc_id")), F.col("doc_id")]
         )
         return ranked.filter(F.col("rk") <= 20).select("doc_id", "source", "rk")
 
@@ -1143,66 +1015,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     # ---- similarity search ----------------------------------------------
 
-    def knn_cosine(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        q = emb.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        return SIM.brute_force_topk(q, emb, k=5)
-
-    def ann_cosine(spark, sf_dir):
-        # cast to double on BOTH engines (see knn_cosine) or 6th-decimal
-        # cosine mismatches appear
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        q = emb.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        return SIM.ann_topk(q, emb, k=5)
-
-    def ann_ivf(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        q = emb.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        return SIM.ivf_topk(q, emb, k=5, n_cells=8, nprobe=4)
-
-    def ann_recall(spark, sf_dir):
-        # recall@5 of BOTH approximate indexes (multi-table LSH, IVF
-        # nprobe) against brute-force cosine on the sampled query set —
-        # the measured cost of replacing the cartesian with a bucketed
-        # join; per-query rows, exact integers
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        q = emb.filter(F.col("vec_id") < 20).select(
-            F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-        )
-        knn = SIM.brute_force_topk(q, emb, k=5).localCheckpoint()
-        lsh = SIM.topk_recall(knn, SIM.ann_topk(q, emb, k=5), "lsh", k=5)
-        ivf = SIM.topk_recall(
-            knn, SIM.ivf_topk(q, emb, k=5, n_cells=8, nprobe=4), "ivf", k=5
-        )
-        return ivf.unionByName(lsh).orderBy("method", "q_id")
-
-    def dedup_semantic(spark, sf_dir):
-        # SemDeDup: IVF-quantize the embedding corpus, near-dup pairs
-        # ONLY within a cell, transitive closure, min-id keeper — the
-        # embedding-space sibling of dedup_minhash_clusters
-        from textgraphs_spark.operators.similarity import semdedup_clusters
-
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        # 0.4 = the synthetic embeddings' near-dup regime (same
-        # threshold as embedding_near_dup); 0.9 on real text embeddings
-        return semdedup_clusters(emb, n_cells=8, threshold=0.4)
-
     def embedding_near_dup(spark, sf_dir):
         emb = _t(spark, sf_dir, "embeddings").withColumn(
             "embedding", F.col("embedding").cast("array<double>")
@@ -1218,12 +1030,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             .filter(F.col("cosine") >= 0.4)
             .select("left_id", "right_id", F.round("cosine", 6).alias("cosine"))
         )
-
-    def embedding_near_dup_lsh(spark, sf_dir):
-        emb = _t(spark, sf_dir, "embeddings").withColumn(
-            "embedding", F.col("embedding").cast("array<double>")
-        )
-        return SIM.embedding_near_dup_pairs(emb, threshold=0.4)
 
     # ---- text analysis ---------------------------------------------------
 
@@ -1697,24 +1503,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         triples = infer_relations(arith_pages(spark))
         return inf_edges(triples).orderBy("src_key", "dst_key", "rel")
 
-    def multimodal_features(spark, sf_dir):
-        # feature vector flattened to comma-joined micro-units (x*1e6 as
-        # long): exact integers on both engines, scalar for the driver's
-        # canonicalizer (library API keeps array<float>)
-        from textgraphs_spark.operators.multimodal import extract_features, synth_media
-
-        media = synth_media(spark, 200)
-        return extract_features(media).select(
-            "media_id", "n_bytes", "byte_hash",
-            F.array_join(
-                F.transform(
-                    F.col("feature").cast("array<double>"),
-                    lambda x: F.round(x * 1000000).cast("long").cast("string"),
-                ),
-                ",",
-            ).alias("feature"),
-        ).orderBy("media_id")
-
     # ---- ER evaluation & post-clustering family (plans/er_eval) --------
     # the BASELINE.json metric itself as distributed queries, over the
     # RNG-free labeled name-variant corpus (eval_entities: full /
@@ -2094,9 +1882,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_cluster_churn": er_cluster_churn_q,
         "er_constrained_clusters": er_constrained_clusters_q,
         "er_constraint_violations": er_constraint_violations_q,
-        "pld_link_graph": pld_link_graph_q,
         "pld_rollup": pld_rollup_q,
-        "training_manifest": training_manifest_q,
         "url_history": url_history_q,
         "revisit_schedule": revisit_schedule_q,
         "leakage_safe_split": leakage_safe_split_q,
@@ -2106,22 +1892,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "capture_drift": capture_drift,
         "mirror_hosts": mirror_hosts_q,
         "mirror_farms": mirror_farms_q,
-        "host_link_graph": host_link_graph_q,
-        "host_link_rank": host_link_rank_q,
-        "anchor_text_census": anchor_text_census_q,
-        "link_reciprocity": link_reciprocity_q,
-        "host_trustrank": host_trustrank_q,
-        "host_scc": host_scc_q,
-        "host_condensation": host_condensation_q,
-        "condensation_depth": condensation_depth_q,
         "latest_captures": latest_captures_q,
         "crawl_snapshot_delta": crawl_snapshot_delta,
         "crawler_traps": crawler_traps_q,
         "resolve_redirects": resolve_redirects_q,
         "soft404_hosts": soft404_hosts_q,
         "host_lang_entropy": host_lang_entropy_q,
-        "crawl_policy": crawl_policy_q,
-        "frontier_schedule": frontier_schedule_q,
         "entity_pmi": entity_pmi_q,
         "bpe_pair_census": bpe_pair_census_q,
         "bm25_topk": bm25_topk_q,
@@ -2138,7 +1914,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_edit_join": er_edit_join,
         "er_jaccard_join": er_jaccard_join,
         "graph_modularity": graph_modularity,
-        "ann_recall": ann_recall,
         "source_mixture": source_mixture,
         "k_anonymity": k_anonymity,
         "er_channel_provenance": er_channel_provenance,
@@ -2148,7 +1923,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_two_table_metrics": er_two_table_metrics,
         "dedup_ablation": dedup_ablation,
         "dsir_weights": dsir_weights,
-        "dedup_semantic": dedup_semantic,
         "er_mutual_best": er_mutual_best,
         "er_cluster_sizes": er_cluster_sizes,
         "dedup_span_removal": dedup_span_removal,
@@ -2222,15 +1996,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "per_source_cap_scalable": per_source_cap_scalable,
         "doc_lm_xent": doc_lm_xent,
         "pack_sequences": pack_sequences,
-        "knn_cosine": knn_cosine,
-        "ann_cosine": ann_cosine,
-        "ann_ivf": ann_ivf,
         "embedding_near_dup": embedding_near_dup,
-        "embedding_near_dup_lsh": embedding_near_dup_lsh,
         "lang_id": lang_id,
         "quality_score": quality_score,
         "token_count": token_count,
-        "multimodal_features": multimodal_features,
         "events_ntile": events_ntile,
         "events_value_stripes": events_value_stripes,
         "events_value_percentiles": events_value_percentiles,
@@ -2431,26 +2200,6 @@ SELECT left_id, right_id, hamming FROM p WHERE hamming <= {max_hamming}
 """
 
 
-def _knn_cosine_sql() -> str:
-    """Brute-force cosine top-5 oracle — shared verbatim by knn_cosine
-    and the ann_recall composition so the exact side cannot drift."""
-    return """
-WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS embedding FROM embeddings),
-q AS (SELECT vec_id AS q_id, embedding AS q_vec FROM e0 WHERE vec_id < 20),
-scored AS (
-  SELECT q.q_id, e.vec_id,
-         list_dot_product(q.q_vec, e.embedding)
-           / (sqrt(list_dot_product(q.q_vec, q.q_vec)) * sqrt(list_dot_product(e.embedding, e.embedding))) AS cos_raw
-  FROM q CROSS JOIN e0 e
-),
-ranked AS (
-  SELECT q_id, vec_id, cos_raw,
-         row_number() OVER (PARTITION BY q_id ORDER BY round(cos_raw, 9) DESC, vec_id ASC) AS rank
-  FROM scored
-)
-SELECT q_id, vec_id, round(cos_raw, 6) AS cosine, rank
-FROM ranked WHERE rank <= 5
-"""
 
 
 def _contrastive_pairs_oracle() -> str:
@@ -2480,32 +2229,6 @@ def _source_mixture_oracle() -> str:
     return source_mixture_weights_select("SELECT * FROM documents")
 
 
-def _ann_recall_oracle() -> str:
-    """Oracle for ann_recall: the three EXISTING oracle bodies (brute
-    cosine, multi-table LSH, IVF) wrapped as subqueries, recall@5 =
-    matched/5 per query per method — composition, not re-derivation, so
-    a drift in any index oracle surfaces here too."""
-    from textgraphs_spark.operators.similarity import ann_oracle_sql, ivf_oracle_sql
-
-    return f"""
-WITH knn AS (SELECT q_id, vec_id FROM ({_knn_cosine_sql()}) t),
-lsh AS (SELECT q_id, vec_id FROM ({ann_oracle_sql()}) t),
-ivf AS (SELECT q_id, vec_id FROM ({ivf_oracle_sql(n_cells=8, nprobe=4)}) t),
-per AS (
-  SELECT 'lsh' AS method, k.q_id,
-         count(a.vec_id) AS n_matched
-  FROM knn k LEFT JOIN lsh a ON a.q_id = k.q_id AND a.vec_id = k.vec_id
-  GROUP BY k.q_id
-  UNION ALL
-  SELECT 'ivf' AS method, k.q_id,
-         count(a.vec_id) AS n_matched
-  FROM knn k LEFT JOIN ivf a ON a.q_id = k.q_id AND a.vec_id = k.vec_id
-  GROUP BY k.q_id
-)
-SELECT method, q_id, CAST(n_matched AS BIGINT) AS n_matched,
-       round(n_matched / 5.0, 6) AS recall
-FROM per ORDER BY method, q_id
-"""
 
 
 def _gopher_census_oracle() -> str:
@@ -2646,13 +2369,6 @@ ORDER BY s.ckpt
 def oracle_sql() -> dict[str, str]:
     from textgraphs_spark.operators import dedup as _D
     from textgraphs_spark.operators.dedup import minhash_oracle_sql as _mh_sql
-    from textgraphs_spark.operators.linkgraph import (
-        anchor_text_census_sql as _anchor_sql,
-        host_link_graph_sql as _hlg_sql,
-        host_link_rank_sql as _hlr_sql,
-        host_trustrank_sql as _trust_sql,
-        link_reciprocity_sql as _recip_sql,
-    )
     from textgraphs_spark.operators.webdata import crawl_delta_oracle_sql as _crawl_sql
     from textgraphs_spark.operators.webdata import (
         latest_captures_oracle_sql as _latest_sql,
@@ -2669,23 +2385,10 @@ def oracle_sql() -> dict[str, str]:
         host_lang_entropy_select as _hle_sql,
     )
     from textgraphs_spark.sources.pages import soft404_pages_sql as _s404_pages_sql
-    from textgraphs_spark.operators.linkgraph import host_scc_sql as _scc_sql
-    from textgraphs_spark.operators.linkgraph import (
-        condensation_depth_sql as _depth_sql,
-        host_condensation_sql as _cond_sql,
-    )
-    from textgraphs_spark.sources.pages import ring_pages_sql as _ring_pages_sql
-    from textgraphs_spark.operators.webdata import (
-        crawl_policy_oracle_sql as _policy_sql,
-        frontier_schedule_oracle_sql as _frontier_sql,
-    )
     from textgraphs_spark.sources.pages import capture_pages_sql as _capture_pages_sql
     from textgraphs_spark.sources.pages import trap_pages_sql as _trap_pages_sql
-    from textgraphs_spark.sources.pages import link_pages_sql as _link_pages_sql
     from textgraphs_spark.sources.pages import mirror_pages_sql as _mirror_pages_sql
     from textgraphs_spark.sources.pages import pld_pages_sql as _pld_pages_sql
-    from textgraphs_spark.sources.pages import sublink_pages_sql as _sublink_pages_sql
-    from textgraphs_spark.operators.linkgraph import pld_link_graph_sql as _pld_link_sql
     from textgraphs_spark.operators.gor import affinity_oracle_sql
     from textgraphs_spark.operators.webdata import minhash_clusters_oracle_sql
     from textgraphs_spark.operators.webdata import (
@@ -2878,25 +2581,6 @@ GROUP BY d.source
     # rollup — every stage's twin is the one its standalone oracle uses
     from textgraphs_spark.operators.webdata import plan_shards_select as _shards_sql
 
-    training_manifest_sql = f"""
-WITH cur AS ({{CUR}}),
-kept AS (
-  SELECT d.* FROM documents d JOIN cur ON d.doc_id = cur.doc_id WHERE cur.keep
-),
-sp AS ({_leakage_split_sql('SELECT * FROM kept', val_pct=10, test_pct=10)}),
-labeled AS (
-  SELECT k.doc_id, k.source, k.n_chars, sp.split,
-         sp.split || '|' || k.source AS grp
-  FROM kept k JOIN sp ON k.doc_id = sp.doc_id
-),
-sh AS ({_shards_sql('SELECT doc_id, grp, n_chars FROM labeled',
-                    source_col='grp', target_bytes=16384)})
-SELECT l.split, l.source, sh.shard_idx,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(l.n_chars) AS BIGINT) AS n_bytes
-FROM sh JOIN labeled l ON sh.doc_id = l.doc_id
-GROUP BY l.split, l.source, sh.shard_idx
-"""
 
     # URL canonicalize-then-dedup: regenerate the RNG-free URL corpus
     # (sources/pages.url_pages_sql) and byte-reproduce
@@ -2994,7 +2678,7 @@ FROM b GROUP BY lang, bucket ORDER BY lang, bucket
 
     # deterministic sampling / per-source caps: the Lehmer mixer is
     # plain integer arithmetic, reproduced exactly by DuckDB
-    from textgraphs_spark.operators.webdata import _LEHMER_P, det_hash_sql
+    from textgraphs_spark.operators.lehmer import LEHMER_P, det_hash_sql
     from textgraphs_spark.operators.webdata import plan_shards_select as _shards_sql
 
     # sequence packing: same mixer for shard assignment; the running
@@ -3038,7 +2722,7 @@ FROM g ORDER BY shard
 """
 
     _h_doc = det_hash_sql("doc_id")
-    _sample_threshold = int(0.2 * _LEHMER_P)
+    _sample_threshold = int(0.2 * LEHMER_P)
     corpus_sample_sql = f"""
 SELECT doc_id, {_h_doc} AS sample_key FROM documents
 WHERE {_h_doc} < {_sample_threshold}
@@ -3065,7 +2749,7 @@ SELECT doc_id, source, rk FROM r WHERE rk <= 20
     per_source_cap_threshold_sql = f"""
 WITH t AS (
   SELECT source,
-         CAST(floor(least(1.0, 20.0 / count(*)) * {_LEHMER_P}) AS BIGINT) AS thresh
+         CAST(floor(least(1.0, 20.0 / count(*)) * {LEHMER_P}) AS BIGINT) AS thresh
   FROM documents GROUP BY source
 )
 SELECT d.doc_id, d.source
@@ -3091,11 +2775,6 @@ FROM nation JOIN region ON n_regionkey = r_regionkey
     from textgraphs_spark.operators.dedup import (
         minhash_oracle_sql, span_removal_oracle_sql, winnow_oracle_sql,
         winnow_pairs_oracle_sql,
-    )
-    from textgraphs_spark.operators.multimodal import multimodal_oracle_sql
-    from textgraphs_spark.operators.similarity import (
-        ann_oracle_sql, ivf_oracle_sql, near_dup_lsh_oracle_sql,
-        semdedup_oracle_sql,
     )
     from textgraphs_spark.plans.er_oracle import (
         assortativity_sql, clustering_coefficient_sql,
@@ -3158,9 +2837,6 @@ FROM nation JOIN region ON n_regionkey = r_regionkey
         # twin (webdata.pld_rollup_select — same suffix pool, same PSL
         # fallback and suffix-only NULL rules)
         "pld_rollup": _pld_rollup_select(_pld_pages_sql()),
-        # site-level link graph: shared outlink CTE piped through the
-        # registered-domain twin once per endpoint
-        "pld_link_graph": _pld_link_sql(_sublink_pages_sql()),
         # constrained clustering over the regenerated eval corpus: the
         # oracle derives the SAME deterministic cannot-links from ITS
         # matches CTE (shared Lehmer pair hash) and anti-joins them out
@@ -3185,11 +2861,6 @@ FROM nation JOIN region ON n_regionkey = r_regionkey
         # SCD-2 history: same hash identity, running-sum revision
         # numbering, lead() valid_to
         "url_history": _url_history_sql(_capture_pages_sql()),
-        # manifest: the curation CTE is spliced in verbatim (placeholder
-        # avoids re-interpolating its braces through the outer f-string)
-        "training_manifest": training_manifest_sql.replace(
-            "{CUR}", corpus_curation_sql
-        ),
         # group-aware split: same md5→int64 reduction + Lehmer
         # thresholds as the engine (det_hash_sql keeps them in lockstep)
         "leakage_safe_split": _leakage_split_sql(
@@ -3220,17 +2891,7 @@ FROM d GROUP BY url
 """,
         "mirror_hosts": _mirror_sql(_mirror_pages_sql()),
         "mirror_farms": _farm_sql(_mirror_pages_sql()),
-        "host_link_graph": _hlg_sql(_link_pages_sql()),
-        "host_link_rank": _hlr_sql(_link_pages_sql()),
-        "anchor_text_census": _anchor_sql(_link_pages_sql()),
-        "link_reciprocity": _recip_sql(_link_pages_sql()),
-        "host_trustrank": _trust_sql(
-            _link_pages_sql(), ["site0.example", "site1.example"]
-        ),
         "crawl_snapshot_delta": _crawl_sql(_capture_pages_sql()),
-        "host_scc": _scc_sql(_ring_pages_sql()),
-        "host_condensation": _cond_sql(_ring_pages_sql()),
-        "condensation_depth": _depth_sql(_ring_pages_sql()),
         "latest_captures": _latest_sql(
             _capture_pages_sql(), other_cols=("doc_id", "text")
         ),
@@ -3238,21 +2899,6 @@ FROM d GROUP BY url
         "resolve_redirects": _redir_sql(_redir_pages_sql()),
         "soft404_hosts": _s404_sql(_s404_pages_sql()),
         "host_lang_entropy": _hle_sql("SELECT * FROM documents", max_entropy=1.4),
-        "crawl_policy": _policy_sql(
-            _trap_sql(_trap_pages_sql()),
-            _s404_sql(_s404_pages_sql()),
-            _hlr_sql(_link_pages_sql()),
-        ),
-        "frontier_schedule": _frontier_sql(
-            f"SELECT url FROM ({_trap_pages_sql()}) "
-            f"UNION ALL SELECT url FROM ({_s404_pages_sql()}) "
-            f"UNION ALL SELECT url FROM ({_link_pages_sql()})",
-            _policy_sql(
-                _trap_sql(_trap_pages_sql()),
-                _s404_sql(_s404_pages_sql()),
-                _hlr_sql(_link_pages_sql()),
-            ),
-        ),
         "token_stats_by_lang": f"""
 WITH per_doc AS (
   SELECT lang, len({toks_u}) AS n_words, length(text) AS n_chars
@@ -3460,9 +3106,6 @@ SELECT doc_id, n_grams, n_matched,
        round(n_matched * 1.0 / n_grams, 6) AS overlap_frac
 FROM agg WHERE n_matched > 0
 """ for key in ("decontaminate_overlap", "decontaminate_bloom")},
-        "ann_cosine": ann_oracle_sql(),
-        "ann_ivf": ivf_oracle_sql(n_cells=8, nprobe=4),
-        "ann_recall": _ann_recall_oracle(),
         "source_mixture": _source_mixture_oracle(),
         "k_anonymity": _k_anonymity_oracle(),
         "er_channel_provenance": er_channel_provenance_sql(),
@@ -3483,9 +3126,6 @@ SELECT doc_id, dsir_weight,
                                AS BIGINT)) AS kept
 FROM base WHERE dsir_weight IS NOT NULL
 """,
-        "dedup_semantic": semdedup_oracle_sql(n_cells=8, threshold=0.4),
-        "embedding_near_dup_lsh": near_dup_lsh_oracle_sql(threshold=0.4),
-        "multimodal_features": multimodal_oracle_sql(200),
         "simhash_fingerprints": _simhash_sql(),
         "dedup_simhash": simhash_pairs_sql,
         "gor_affinity": gor_sql,
@@ -3546,7 +3186,6 @@ SELECT left_id, right_id,
 FROM pairs
 WHERE mn > 0 AND inter * 1.0 / mn >= 0.6
 """,
-        "knn_cosine": _knn_cosine_sql(),
         "embedding_near_dup": """
 SELECT a.vec_id AS left_id, b.vec_id AS right_id,
        round(list_dot_product(a.embedding, b.embedding)

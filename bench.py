@@ -78,7 +78,7 @@ def headline_queries(spark, sf_dir):
     qs = entrymod.queries()
     names = [
         "extract_mentions", "er_clusters", "gor_affinity", "dedup_minhash",
-        "dedup_ngram_jaccard", "knn_cosine", "lang_id", "quality_score",
+        "dedup_ngram_jaccard", "lang_id", "quality_score",
         "tpch_pricing_summary", "customer_order_rollup", "events_user_windows",
         "events_sessionize", "events_asof_attribution",
     ]
@@ -261,36 +261,6 @@ def er_scaling_run(cpus: int, n_pages: int, *, equalize_to: int = 0) -> dict:
             p.join(timeout=5)
 
 
-def curation_queries(spark, sf_dir):
-    """Measured walls for the corpus-curation family — recorded in the
-    artifact under their own key, NOT in the headline metric (the
-    headline query set is held fixed across rounds for comparability)."""
-    import __spark_entry__ as entrymod
-
-    qs = entrymod.queries()
-    out = {}
-    for name in ("corpus_curation", "url_dedup", "corpus_sample",
-                 "per_source_cap_scalable"):
-        t0 = time.time()
-        n = qs[name](spark, sf_dir).count()
-        out[name] = round(time.time() - t0, 3)
-        _log(f"  {name}: {out[name]}s ({n} rows)")
-    # staged-path twin of corpus_curation: with the near-dup closure
-    # precomputed (exactly what plans.curation_pipeline checkpoints as
-    # its near_dups stage), the verdict ladder is signals-only — the
-    # delta vs the one-shot wall above is the closure's share, i.e. what
-    # a resumed/staged 100 TB run saves per downstream consumer
-    from textgraphs_spark.operators import webdata as WD
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    dupes = WD.near_dup_members(docs, threshold=0.7).localCheckpoint()
-    t0 = time.time()
-    n = WD.curation_decisions(docs, threshold=0.7, dupes=dupes).count()
-    out["corpus_curation_staged"] = round(time.time() - t0, 3)
-    _log(f"  corpus_curation_staged: {out['corpus_curation_staged']}s ({n} rows)")
-    return out
-
-
 def distributed_engage(n_pages: int) -> dict:
     """Measured proof of the distributed machinery the 100 TB story
     rests on: ONE end-to-end lean-ER run where BOTH scale paths
@@ -410,70 +380,14 @@ def distributed_engage(n_pages: int) -> dict:
         spark.stop()
 
 
-
-def crawlops_queries(spark):
-    """Measured walls for the round-5 crawl-ops family at SCALE (large
-    synthesized inputs, not the sf0.01 oracle fixtures) — recorded
-    under their own artifact key, NOT in the headline metric. Each
-    fixture is index-arithmetic generation, so the measured wall is
-    the OPERATOR, not an input scan."""
-    from textgraphs_spark.operators.linkgraph import host_scc
-    from textgraphs_spark.operators.webdata import (
-        crawler_traps, resolve_redirects, soft404_hosts,
-    )
-    from textgraphs_spark.sources.pages import (
-        redirect_pages, ring_pages, soft404_pages, trap_pages,
-    )
-
-    out = {}
-
-    def run(name, thunk):
-        # the thunk CALLS the operator inside the timer: the iterative
-        # kernels (resolve_redirects, host_scc) materialize eagerly via
-        # localCheckpoint at call time, so construction is the work
-        t0 = time.time()
-        n = thunk().count()
-        out[name] = round(time.time() - t0, 3)
-        _log(f"  {name}: {out[name]}s ({n} rows)")
-
-    n_urls = int(os.environ.get("SPARK_GRAFT_CRAWLOPS_URLS", "2000000"))
-    run("crawler_traps_2m",
-        lambda: crawler_traps(trap_pages(spark, n_urls)))
-    run("soft404_hosts_2m",
-        lambda: soft404_hosts(soft404_pages(spark, n_urls)))
-    run("resolve_redirects_1m",
-        lambda: resolve_redirects(redirect_pages(spark, n_urls // 12)))
-    run("host_scc_20k", lambda: host_scc(ring_pages(spark, 20000)))
-    # session-6 family at the same scales
-    from textgraphs_spark.operators.linkgraph import pld_link_graph
-    from textgraphs_spark.operators.webdata import (
-        pld_rollup, revisit_schedule, url_history,
-    )
-    from textgraphs_spark.sources.pages import (
-        capture_pages, pld_pages, sublink_pages,
-    )
-
-    run("pld_rollup_2m", lambda: pld_rollup(pld_pages(spark, n_urls)))
-    run("pld_link_graph_1m",
-        lambda: pld_link_graph(sublink_pages(spark, n_urls // 2)))
-    run("revisit_schedule_400k_urls",
-        lambda: revisit_schedule(capture_pages(spark, n_urls // 5, 5)))
-    run("url_history_400k_urls",
-        lambda: url_history(capture_pages(spark, n_urls // 5, 5)))
-    return out
-
 def main():
-    results = {}
     sf = _sf_from_dir(SF_DIR)
 
     spark = get_spark("bench", master=f"local[{CPUS}]", shuffle_partitions=CPUS)
     spark.sparkContext.setLogLevel("ERROR")
     t_all = time.time()
-    results["queries"] = headline_queries(spark, SF_DIR)
+    queries = headline_queries(spark, SF_DIR)
     total = round(time.time() - t_all, 3)
-    results["curation"] = curation_queries(spark, SF_DIR)
-    if os.environ.get("SPARK_GRAFT_SKIP_CRAWLOPS") != "1":
-        results["crawlops"] = crawlops_queries(spark)
     # OFF, not ERROR: a stopping context's accumulator-update threads log
     # their benign connection-refused traces at ERROR, which would open
     # the artifact's tail with a stack fragment
@@ -484,13 +398,9 @@ def main():
         "metric": "headline_queries_wall",
         "value": total,
         "unit": "sec",
-        "queries": results["queries"],
-        "curation": results["curation"],
+        "queries": queries,
         "sf": sf,
     }
-    if "crawlops" in results:
-        payload["crawlops"] = results["crawlops"]
-
     if (os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1"
             and os.environ.get("SPARK_GRAFT_SKIP_ENGAGE") != "1"):
         payload["distributed"] = distributed_engage(

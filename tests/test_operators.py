@@ -1,12 +1,10 @@
-"""Operator-level tests: dedup, similarity, text quality, pagerank,
-multimodal plumbing, streaming."""
+"""Operator-level tests: dedup, text quality, pagerank, streaming."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from textgraphs_spark.operators import dedup as D
-from textgraphs_spark.operators import similarity as SIM
 from textgraphs_spark.operators import textquality as TQ
 
 
@@ -174,63 +172,6 @@ def test_simhash_near_dup_pairs(docs):
     assert pairs.get((0, 1)) == 0
 
 
-def test_brute_force_topk_self_is_best(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = emb.filter("vec_id < 5").select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    top = SIM.brute_force_topk(q, emb, k=3).collect()
-    best = {r["q_id"]: r["vec_id"] for r in top if r["rank"] == 1}
-    for qid, cid in best.items():
-        assert qid == cid  # self-similarity = 1.0 must rank first
-
-
-def test_ann_recall_vs_brute_force(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = emb.filter("vec_id < 10").select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    exact = {
-        (r["q_id"], r["vec_id"])
-        for r in SIM.brute_force_topk(q, emb, k=3).collect()
-    }
-    approx = {
-        (r["q_id"], r["vec_id"])
-        for r in SIM.ann_topk(q, emb, k=3, n_planes=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.5, f"ANN recall too low: {recall}"
-
-
-def test_topk_ignores_nan_null_and_zero_vectors(spark):
-    """Spark's descending sort puts NaN above every real value, so one
-    corrupt embedding would rank 1 in every query's top-k; zero-norm
-    and NULL vectors yield NULL cosine (try_divide). All three must be
-    excluded from neighbor lists in every query path."""
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0]),
-        (1, [0.9, 0.1, 0.0, 0.0]),
-        (2, None),
-        (3, [0.0, 0.0, 0.0, 0.0]),
-        (4, [float("nan"), 1.0, 0.0, 0.0]),
-        (5, [1.0, 0.0, 0.0, 0.0]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    q = emb.filter("vec_id = 0").selectExpr("vec_id as q_id", "embedding as q_vec")
-    for got in (
-        SIM.brute_force_topk(q, emb, k=6),
-        SIM.ann_topk(q, emb, k=6, dim=4),
-        SIM.ivf_topk(q, emb, k=6, n_cells=2, nprobe=2),
-    ):
-        ids = {r["vec_id"] for r in got.collect()}
-        assert ids and ids.isdisjoint({2, 3, 4}), ids
-        assert all(r["cosine"] == r["cosine"] for r in got.collect())
-
-
 def test_lang_id(docs):
     langs = {r["doc_id"]: r["pred_lang"] for r in TQ.lang_id(docs).collect()}
     assert langs[0] == "en"
@@ -256,94 +197,6 @@ def test_corpus_pagerank_matches_doclevel(spark):
     got = {r["node"]: r["rank"] for r in df_pr(df, max_iter=100).collect()}
     for i in range(4):
         assert abs(got[i] - expected[i]) < 1e-5, (i, got[i], expected[i])
-
-
-def test_multimodal_features(spark):
-    from textgraphs_spark.operators.multimodal import extract_features, frame_sample_plan, synth_media
-
-    media = synth_media(spark, 30).cache()
-    feats = extract_features(media).collect()
-    assert len(feats) == 30
-    for r in feats:
-        assert abs(sum(r["feature"]) - 1.0) < 1e-3
-        assert r["n_bytes"] > 0
-    frames = frame_sample_plan(media).collect()
-    assert len(frames) > 0
-    assert all(r["frame_ts_ms"] % 1000 == 0 for r in frames)
-
-
-def _make_png(width: int, height: int) -> bytes:
-    """A real, valid grayscale PNG via stdlib struct+zlib."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 0, 0, 0, 0)
-    raw = b"".join(b"\x00" + bytes(width) for _ in range(height))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _make_wav(n_frames: int, rate: int = 8000) -> bytes:
-    """A real, valid 16-bit mono PCM WAV via the stdlib wave module."""
-    import io
-    import struct
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(b"".join(
-            struct.pack("<h", (1000 if i % 2 == 0 else -1000)) for i in range(n_frames)
-        ))
-    return buf.getvalue()
-
-
-def test_multimodal_real_decode(spark):
-    """The REAL decode branch parses genuine PNG / WAV containers
-    (stdlib-built fixtures) into header-derived feature vectors."""
-    from textgraphs_spark.operators.multimodal import (
-        DecoderUnavailable, decode_png_header, decode_wav_header, extract_features,
-    )
-
-    png = _make_png(37, 21)
-    wav = _make_wav(64)
-
-    meta = decode_png_header(png)
-    assert (meta["width"], meta["height"], meta["bit_depth"]) == (37, 21, 8)
-    wmeta = decode_wav_header(wav)
-    assert (wmeta["channels"], wmeta["sample_rate"], wmeta["n_frames"]) == (1, 8000, 64)
-    assert abs(wmeta["rms"] - 1000.0) < 1e-6
-
-    media = spark.createDataFrame(
-        [(0, bytearray(png)), (1, bytearray(wav))], "media_id long, payload binary"
-    )
-    feats = {r["media_id"]: r for r in extract_features(media, real_decode=True).collect()}
-    assert feats[0]["feature"][0] == 1.0 and feats[0]["feature"][1] == 37.0
-    assert feats[1]["feature"][0] == 2.0 and feats[1]["feature"][2] == 8000.0
-
-    import pytest as _pytest
-
-    with _pytest.raises(DecoderUnavailable):
-        decode_png_header(b"not a png at all")
-
-    # truncated fmt chunk: undecodable, not a struct.error task crash
-    import struct as _struct
-
-    short_fmt = b"RIFF" + _struct.pack("<I", 20) + b"WAVE" + b"fmt " + _struct.pack("<I", 8) + b"\x00" * 8
-    with _pytest.raises(DecoderUnavailable):
-        decode_wav_header(short_fmt)
 
 
 def test_stripe_column_guards():
@@ -381,31 +234,6 @@ def test_streaming_windowed_counts(spark, sf_dir, tmp_path):
     got = spark.sql("SELECT sum(n_events) AS n FROM win_counts").collect()[0]["n"]
     expected = spark.read.parquet(f"{sf_dir}/events.parquet").count()
     assert got == expected
-
-
-def test_ivf_recall_vs_brute_force(spark, sf_dir):
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = emb.filter("vec_id < 10").select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    exact = {
-        (r["q_id"], r["vec_id"])
-        for r in SIM.brute_force_topk(q, emb, k=3).collect()
-    }
-    approx = {
-        (r["q_id"], r["vec_id"])
-        for r in SIM.ivf_topk(q, emb, k=3, n_cells=8, nprobe=4).collect()
-    }
-    recall = len(exact & approx) / len(exact)
-    assert recall >= 0.6, f"IVF recall too low: {recall}"
-    # every query returns exactly k rows with ranks 1..k
-    out = SIM.ivf_topk(q, emb, k=3, n_cells=8, nprobe=4).collect()
-    per_q = {}
-    for r in out:
-        per_q.setdefault(r["q_id"], []).append(r["rank"])
-    assert all(sorted(v) == [1, 2, 3] for v in per_q.values())
 
 
 def test_xxh64_matches_spark(spark):

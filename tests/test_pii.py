@@ -13,7 +13,6 @@ import random
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from textgraphs_spark.operators.pii import (
     PII_PATTERNS,
@@ -136,46 +135,6 @@ def test_pii_plan_is_map_only(spark):
     for df in (pii_signals(docs), redact_pii(docs)):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan
-
-
-def test_curation_pipeline_pii_stage(spark, tmp_path):
-    """Optional redacted_docs stage: redacts the boilerplate-stripped
-    text when clean_docs ran (composition order), checkpoints/resumes,
-    and stays off by default."""
-    import os
-
-    from textgraphs_spark.plans.curation_pipeline import CurationPipeline
-
-    footer = "subscribe to the weekly newsletter"
-    topics = ["gardens", "engines", "rivers", "mountains", "museums", "libraries"]
-    rows = [
-        (i, f"the writer composed notes about {topics[i]} with careful "
-            f"attention to {topics[(i + 1) % 6]} mail them at a{i}@ex{i}.org"
-            f"\n{footer}")
-        for i in range(6)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    wd = str(tmp_path / "curp")
-    p = CurationPipeline(
-        spark, workdir=wd, boilerplate_min_df=3, redact_pii=True, threshold=0.95
-    )
-    out = p.run(docs)
-    red = {r["doc_id"]: r for r in out["redacted_docs"].collect()}
-    assert set(red) == set(range(6))
-    for i in range(6):
-        # composed over clean_docs: footer already stripped, email redacted
-        assert footer not in red[i]["clean_text"]
-        assert "<EMAIL>" in red[i]["clean_text"]
-        assert red[i]["n_redacted"] == 1
-    assert os.path.isdir(os.path.join(wd, "redacted_docs"))
-    out2 = CurationPipeline(
-        spark, workdir=wd, boilerplate_min_df=3, redact_pii=True, threshold=0.95
-    ).run(docs.limit(0))
-    assert {tuple(r) for r in out2["redacted_docs"].collect()} == {
-        tuple(r) for r in out["redacted_docs"].collect()
-    }
-    out3 = CurationPipeline(spark, threshold=0.95).run(docs)
-    assert "redacted_docs" not in out3
 
 
 def test_pii_patterns_are_mutually_exclusive():

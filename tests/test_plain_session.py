@@ -99,28 +99,3 @@ def test_entry_contract_without_arrow(plain):
     rows = df.collect()
     assert len(rows) > 0
     assert "cluster_id" in df.columns
-
-
-def test_similarity_family_without_arrow(plain, sf_dir):
-    """VERDICT r4 stretch: the ANN family's pandas_udf bucket/cell
-    assignment crosses the Arrow transport — which pandas UDFs use
-    UNCONDITIONALLY, independent of the session conf — so results must
-    be identical with session Arrow off. Exercise all three paths and
-    pin ann/ivf against brute force under the plain shape."""
-    from textgraphs_spark.operators import similarity as SIM
-
-    emb = plain.read.parquet(f"{sf_dir}/embeddings.parquet").withColumn(
-        "embedding", F.col("embedding").cast("array<double>")
-    )
-    q = emb.filter("vec_id < 8").select(
-        F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
-    )
-    exact = {(r["q_id"], r["vec_id"])
-             for r in SIM.brute_force_topk(q, emb, k=3).collect()}
-    assert exact
-    ann = {(r["q_id"], r["vec_id"])
-           for r in SIM.ann_topk(q, emb, k=3, n_planes=4).collect()}
-    ivf = {(r["q_id"], r["vec_id"])
-           for r in SIM.ivf_topk(q, emb, k=3, n_cells=8, nprobe=4).collect()}
-    assert len(exact & ann) / len(exact) >= 0.5
-    assert len(exact & ivf) / len(exact) >= 0.5

@@ -697,28 +697,6 @@ def test_modularity_default_labels_are_label_prop(spark):
     assert {r["label"] for r in rows} == want_labels
 
 
-def test_topk_recall_identical_and_disjoint(spark):
-    """recall@k = 1 when the approximate index returns the exact set,
-    0 when it returns none of it, fractional otherwise — and a query
-    the approximate side misses ENTIRELY still yields a row (left
-    join, 0 matched)."""
-    from textgraphs_spark.operators.similarity import topk_recall
-
-    exact = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 20), (2, 21), (3, 30), (3, 31)],
-        "q_id long, vec_id long",
-    )
-    approx = spark.createDataFrame(
-        [(1, 10), (1, 11), (2, 20), (2, 99)],  # q3 absent entirely
-        "q_id long, vec_id long",
-    )
-    got = {r["q_id"]: r for r in topk_recall(exact, approx, "m", k=2).collect()}
-    assert got[1]["n_matched"] == 2 and got[1]["recall"] == 1.0
-    assert got[2]["n_matched"] == 1 and got[2]["recall"] == 0.5
-    assert got[3]["n_matched"] == 0 and got[3]["recall"] == 0.0
-    assert all(r["method"] == "m" for r in got.values())
-
-
 def test_source_mixture_weights_upweights_small_sources(spark):
     """alpha=0.5 mixture: a source with 4x the tokens gets only 2x the
     weight (sqrt scaling); weights sum to 1; eff_epochs flags the small
@@ -969,31 +947,6 @@ def test_dsir_weights_separate_target_from_offtarget(spark):
     assert got[4]["dsir_weight"] is None and got[4]["n_tokens"] == 0
 
 
-def test_semdedup_clusters_within_cell_closure(spark):
-    """Two tight groups of near-parallel vectors collapse to two
-    clusters with min-id keepers; the orthogonal outlier joins no
-    cluster; member lists are sorted numeric ids."""
-    from textgraphs_spark.operators.similarity import semdedup_clusters
-
-    def v(base, eps):
-        out = [0.0] * 8
-        out[base] = 1.0
-        out[(base + 1) % 8] = eps
-        return out
-
-    rows = (
-        [(i, v(0, 0.01 * i)) for i in range(1, 4)]       # group A: ids 1-3
-        + [(10 + i, v(4, 0.01 * i)) for i in range(1, 4)]  # group B: ids 11-13
-        + [(99, v(2, 0.0))]                                # orthogonal outlier
-    )
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got = {r["keep_id"]: r for r in
-           semdedup_clusters(emb, n_cells=3, threshold=0.95).collect()}
-    assert got[1]["n_vecs"] == 3 and got[1]["member_ids"] == "1|2|3"
-    assert got[11]["n_vecs"] == 3 and got[11]["member_ids"] == "11|12|13"
-    assert set(got) == {1, 11}                 # the outlier is no cluster
-
-
 def test_imatch_collapses_band_filtered_near_dups(spark):
     """Docs differing ONLY in out-of-band terms (a corpus-wide stopword
     or a df=1 rare term) share an I-Match signature; docs differing in
@@ -1140,105 +1093,6 @@ def test_mirror_pages_fixture_four_farms(spark):
     assert sorted(r["farm_id"] for r in got) == [
         "mirror0.org", "mirror10.org", "mirror3.org", "mirror6.org"
     ]
-
-
-def test_extract_outlinks_parse_and_normalization(spark):
-    """Href parsing, host normalization (www./port/case), NULL rows
-    dropped, self-links kept at extraction (graph level filters them)."""
-    from textgraphs_spark.operators.linkgraph import extract_outlinks
-
-    rows = [
-        (1, "https://a.org/x",
-         b'<html><body><a href="https://WWW.B.net:8080/p/1">Read This</a>'
-         b'<a href="http://a.org/self">self</a></body></html>'),
-        (2, None, b'<a href="https://c.com/x">never</a>'),
-        (3, "https://d.io/y", None),
-    ]
-    pages = spark.createDataFrame(rows, "doc_id long, url string, html binary")
-    got = {(r["src_host"], r["dst_host"], r["anchor"])
-           for r in extract_outlinks(pages).collect()}
-    assert got == {("a.org", "b.net", "Read This"), ("a.org", "a.org", "self")}
-
-
-def test_host_link_graph_and_rank(spark):
-    """Pair counts aggregate across pages; self-links excluded; hub
-    host outranks leaf hosts under PageRank."""
-    from textgraphs_spark.operators.linkgraph import host_link_graph, host_link_rank
-    from textgraphs_spark.sources.pages import link_pages
-
-    pages = link_pages(spark)
-    g = {(r["src_host"], r["dst_host"]): r["n_links"]
-         for r in host_link_graph(pages).collect()}
-    assert all(s != d for s, d in g)
-    # the reciprocal farm pair exists in both directions
-    assert ("spam0.biz", "spam1.biz") in g and ("spam1.biz", "spam0.biz") in g
-    ranks = {r["host"]: r["rank"] for r in host_link_rank(pages).collect()}
-    assert abs(sum(ranks.values()) - 1.0) < 1e-3
-    # the even-page hub bias puts site0 above the organic mean (the t1
-    # channel carries double weight per page, so site0 need not be #1)
-    organic = [v for k, v in ranks.items() if k.startswith("site")]
-    assert ranks["site0.example"] > sum(organic) / len(organic)
-    assert len(ranks) == 12
-
-
-def test_anchor_text_census_topk_and_normalization(spark):
-    """Anchors lowercase/whitespace-squeeze before counting; rk is per
-    dst_host with the (count desc, anchor asc) tie-break; top_k cuts."""
-    from textgraphs_spark.operators.linkgraph import anchor_text_census
-
-    rows = [
-        (1, "https://a.org/1", b'<a href="https://t.com/x">Big  News</a>'),
-        (2, "https://b.net/2", b'<a href="https://t.com/y">big news</a>'),
-        (3, "https://c.com/3", b'<a href="https://t.com/z">alpha</a>'),
-        (4, "https://d.io/4", b'<a href="https://t.com/w">beta</a>'),
-    ]
-    pages = spark.createDataFrame(rows, "doc_id long, url string, html binary")
-    got = [(r["anchor"], r["n_links"], r["rk"])
-           for r in anchor_text_census(pages, top_k=2)
-           .orderBy("rk").collect()]
-    assert got == [("big news", 2, 1), ("alpha", 1, 2)]
-
-
-def test_link_reciprocity_signals(spark):
-    """Reciprocal pair scores 1.0 both ways; a one-way link scores 0 for
-    the source and contributes only in-degree to the target."""
-    from textgraphs_spark.operators.linkgraph import link_reciprocity
-
-    rows = [
-        (1, "https://a.org/1", b'<a href="https://b.net/x">to b</a>'),
-        (2, "https://b.net/2", b'<a href="https://a.org/y">to a</a>'),
-        (3, "https://c.com/3", b'<a href="https://a.org/z">to a</a>'),
-    ]
-    pages = spark.createDataFrame(rows, "doc_id long, url string, html binary")
-    got = {r["host"]: r for r in link_reciprocity(pages).collect()}
-    assert got["a.org"]["reciprocity"] == 1.0
-    assert got["b.net"]["reciprocity"] == 1.0
-    assert got["c.com"]["n_out_hosts"] == 1 and got["c.com"]["reciprocity"] == 0.0
-    assert got["c.com"]["n_in_hosts"] == 0
-    assert got["a.org"]["n_in_hosts"] == 2
-
-
-def test_host_trustrank_demotes_unreachable_farm(spark):
-    """Trust mass flows only along links out of the seed set: a farm no
-    trusted host points toward scores exactly 0, regardless of how many
-    in-links it manufactures for itself."""
-    from textgraphs_spark.operators.linkgraph import host_trustrank
-
-    rows = [
-        # trusted.org -> good.net -> other.com (forward trust chain)
-        (1, "https://trusted.org/1", b'<a href="https://good.net/x">good</a>'),
-        (2, "https://good.net/2", b'<a href="https://other.com/y">other</a>'),
-        # farm: two hosts interlinking furiously, plus links INTO good.net
-        (3, "https://farm-a.biz/3",
-         b'<a href="https://farm-b.biz/i">b</a><a href="https://good.net/z">g</a>'),
-        (4, "https://farm-b.biz/4", b'<a href="https://farm-a.biz/j">a</a>'),
-    ]
-    pages = spark.createDataFrame(rows, "doc_id long, url string, html binary")
-    got = {r["host"]: r["trust"] for r in
-           host_trustrank(pages, ["trusted.org"]).collect()}
-    assert got["farm-a.biz"] == 0.0 and got["farm-b.biz"] == 0.0
-    assert got["good.net"] > 0.0 and got["other.com"] > 0.0
-    assert got["trusted.org"] > got["other.com"]
 
 
 def test_crawl_delta_new_changed_unchanged(spark):
@@ -1603,21 +1457,6 @@ def test_scc_direction_matters_vs_undirected_cc(spark):
     assert got == {"a": "a", "b": "b", "c": "c"}
 
 
-def test_host_scc_ring_fixture_partition(spark):
-    """Ring groups collapse to one SCC per group keyed by the group's
-    first host; chain hosts stay singletons."""
-    import collections
-
-    from textgraphs_spark.operators.linkgraph import host_scc
-    from textgraphs_spark.sources.pages import ring_pages
-
-    got = host_scc(ring_pages(spark, 24)).collect()
-    sizes = collections.Counter(r["scc_id"] for r in got)
-    assert sizes["r00.example"] == 4 and sizes["r16.example"] == 4
-    assert sum(1 for v in sizes.values() if v == 1) == 8
-    assert len(got) == 24
-
-
 def test_frontier_schedule_waves_and_gates(spark):
     """Blocked hosts vanish, unknown hosts default to normal, boost
     hosts ship two urls per wave, normal hosts one per wave."""
@@ -1773,35 +1612,6 @@ def test_grouped_cumsum_matches_window(spark):
     exp = df.withColumn("cum", F.sum("v").over(w).cast("long")).orderBy("g", "o")
     assert [r.asDict() for r in got.collect()] == [
         r.asDict() for r in exp.select(got.columns).collect()]
-
-
-def test_host_condensation_is_acyclic_dag(spark):
-    """Condensing the ring fixture leaves only the chain edges (rings
-    collapse internally), the result references SCC ids on both sides,
-    and no mutual pair survives — acyclicity at the pair level."""
-    from textgraphs_spark.operators.linkgraph import host_condensation
-    from textgraphs_spark.sources.pages import ring_pages
-
-    got = [(r["src_scc"], r["dst_scc"]) for r in
-           host_condensation(ring_pages(spark, 24)).collect()]
-    assert len(got) == 8
-    pairs = set(got)
-    assert not any((b, a) in pairs for a, b in pairs)  # no 2-cycles
-    assert ("r11.example", "r00.example") in pairs      # chain into ring 0
-
-
-def test_condensation_depth_layers(spark):
-    """Chain components layer 0..3, the ring they feed sits one past
-    the deepest feeder, isolated rings sit at 0."""
-    from textgraphs_spark.operators.linkgraph import condensation_depth
-    from textgraphs_spark.sources.pages import ring_pages
-
-    got = {r["scc_id"]: r["depth"] for r in
-           condensation_depth(ring_pages(spark, 24)).collect()}
-    assert got["r08.example"] == 0 and got["r11.example"] == 3
-    assert got["r00.example"] == 4            # fed by both depth-3 chains
-    for iso in ("r04.example", "r12.example", "r16.example"):
-        assert got[iso] == 0
 
 
 def test_latest_captures_keeps_newest_per_url(spark):

@@ -88,6 +88,42 @@ def test_revisit_schedule_weekly_band(spark):
     assert got["change_rate"] == 0.25 and got["revisit"] == "weekly"
 
 
+def test_revisit_and_history_break_timestamp_ties_by_content(spark):
+    # two captures of u share a timestamp: they order by content hash
+    # (md5("a") < md5("b")), so the sequence is a, b, a — two changes,
+    # three revisions — in the engine and in its DuckDB twin alike
+    import duckdb
+
+    from textgraphs_spark.operators.webdata import (
+        revisit_schedule_select, url_history, url_history_select,
+    )
+
+    rows = [("u", "2024-01-01", "b"), ("u", "2024-01-01", "a"),
+            ("u", "2024-01-02", "a")]
+    df = spark.createDataFrame(rows, "url string, warc_ts string, text string")
+    src = "SELECT * FROM (VALUES " + ", ".join(
+        f"('{u}', '{t}', '{x}')" for u, t, x in rows
+    ) + ") v(url, warc_ts, text)"
+    got = revisit_schedule(df).collect()[0]
+    assert (got["n_caps"], got["n_changes"]) == (3, 2)
+    duck = duckdb.sql(
+        f"SELECT n_caps, n_changes FROM ({revisit_schedule_select(src)})"
+    ).fetchall()
+    assert duck == [(3, 2)]
+
+    def hist(rs):
+        return sorted((r[0], r[1], r[2], r[3]) for r in rs)
+
+    want = [("2024-01-01", "2024-01-01", 1, False),
+            ("2024-01-01", "2024-01-02", 1, False),
+            ("2024-01-02", None, 1, True)]
+    cols = "valid_from, valid_to, n_captures, is_current"
+    assert hist(url_history(df).select(*cols.split(", ")).collect()) == want
+    assert hist(duckdb.sql(
+        f"SELECT {cols} FROM ({url_history_select(src)})"
+    ).fetchall()) == want
+
+
 def test_leakage_safe_split_no_straddle(spark):
     # byte-identical texts must land in the same split, whatever it is;
     # with 20/20 the tiny corpus still hits all three splits
@@ -122,6 +158,11 @@ def test_leakage_safe_split_rejects_bad_pcts(spark):
     docs = spark.createDataFrame([(1, "t")], "doc_id long, text string")
     with pytest.raises(ValueError):
         leakage_safe_split(docs, val_pct=60, test_pct=60)
+    # a negative band must not shrink val silently (t_hi > v_hi)
+    with pytest.raises(ValueError):
+        leakage_safe_split(docs, val_pct=-10, test_pct=20)
+    with pytest.raises(ValueError):
+        leakage_safe_split(docs, val_pct=10, test_pct=-1)
 
 
 def _mixture_docs(spark):
@@ -146,27 +187,6 @@ def test_doremi_upweights_hard_source(spark):
     assert out["hard"]["weight"] > out["hard"]["share"]
     total = sum(r["weight"] for r in out.values())
     assert math.isclose(total, 1.0, abs_tol=5e-6)
-
-
-def test_pld_link_graph_collapses_intra_site_links(spark):
-    # two subdomains of alpha.com link each other (must vanish) and both
-    # link beta.com (must merge into ONE site-level edge of weight 2)
-    rows = [
-        (0, "https://blog.alpha.com/p/0",
-         b'<a href="https://docs.alpha.com/x">in</a>'),
-        (1, "https://docs.alpha.com/p/1",
-         b'<a href="https://beta.com/x">out</a>'),
-        (2, "https://blog.alpha.com/p/2",
-         b'<a href="https://beta.com/x">out</a>'),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string, html binary")
-    from textgraphs_spark.operators.linkgraph import pld_link_graph
-
-    got = pld_link_graph(df, ["com"]).collect()
-    assert len(got) == 1
-    assert got[0]["src_domain"] == "alpha.com"
-    assert got[0]["dst_domain"] == "beta.com"
-    assert got[0]["n_links"] == 2
 
 
 def _eval_ents(spark, n_base=20, n_twin=5):
@@ -260,29 +280,6 @@ def test_url_history_intervals(spark):
     assert got[0]["content_hash"] != got[1]["content_hash"]
 
 
-def test_training_manifest_accounting(spark, sf_dir):
-    # every curated-keep doc lands in exactly one (split, source, shard)
-    # cell; bytes reconcile with the kept corpus
-    from textgraphs_spark.operators.webdata import curation_decisions
-    from textgraphs_spark.plans.curation_pipeline import training_manifest
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    m = training_manifest(docs, target_bytes=8192)
-    rows = m.collect()
-    assert rows and all(r["n_docs"] > 0 and r["n_bytes"] > 0 for r in rows)
-    assert {r["split"] for r in rows} <= {"train", "val", "test"}
-    kept = docs.join(
-        curation_decisions(docs, threshold=0.7).filter(F.col("keep"))
-        .select("doc_id"),
-        "doc_id", "left_semi",
-    )
-    want = kept.agg(
-        F.count("*").alias("n"), F.sum("n_chars").alias("b")
-    ).collect()[0]
-    assert sum(r["n_docs"] for r in rows) == want["n"]
-    assert sum(r["n_bytes"] for r in rows) == want["b"]
-
-
 def test_blocking_budget_curve_monotone(spark):
     # larger caps can only keep more pairs; an unsalted-size cap keeps
     # every pair (coverage exactly 1.0); block count is cap-invariant
@@ -346,25 +343,20 @@ def test_registered_domain_parity_fuzz(spark):
 # ---------------------------------------------------------------------------
 
 def test_session6_ops_empty_inputs(spark):
-    from textgraphs_spark.operators.linkgraph import pld_link_graph
     from textgraphs_spark.operators.webdata import (
         doremi_mixture, pld_rollup, revisit_schedule, url_history,
     )
-    from textgraphs_spark.plans.curation_pipeline import training_manifest
 
     hosts = spark.createDataFrame([], "doc_id long, host string")
     assert pld_rollup(hosts).count() == 0
     caps = spark.createDataFrame([], "url string, warc_ts string, text string")
     assert revisit_schedule(caps).count() == 0
     assert url_history(caps).count() == 0
-    pages = spark.createDataFrame([], "doc_id long, url string, html binary")
-    assert pld_link_graph(pages).count() == 0
     docs = spark.createDataFrame(
         [], "doc_id long, text string, lang string, source string, n_chars long"
     )
     assert doremi_mixture(docs).count() == 0
     assert leakage_safe_split(docs).count() == 0
-    assert training_manifest(docs).count() == 0
 
 
 def test_blocking_budget_curve_empty_entities(spark):

@@ -53,21 +53,6 @@ def test_stream_sessionize_closes_on_gap_and_timeout(spark, tmp_path):
     assert (2, 1) not in rows
 
 
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    from textgraphs_spark.streaming.events import stream_dedup
-
-    src = str(tmp_path / "dups")
-    ckpt = str(tmp_path / "dck")
-    rows = [(1, T0), (1, T0), (2, T0 + timedelta(minutes=1)), (1, T0)]
-    spark.createDataFrame(rows, "event_id long, ts timestamp").coalesce(1) \
-        .write.parquet(src)
-    stream = read_events_stream(spark, src)
-    out = stream_dedup(stream, keys=["event_id"], watermark="10 minutes")
-    run_available_now(out, checkpoint=ckpt, table_name="dedup_out")
-    got = spark.sql("SELECT event_id FROM dedup_out").collect()
-    assert sorted(r.event_id for r in got) == [1, 2]
-
-
 def test_stream_extract_builds_on_stream(spark, tmp_path):
     """_respread must not force batch planning on a streaming source."""
     from textgraphs_spark.streaming.events import run_available_now
@@ -197,128 +182,6 @@ def test_simhash_col_matches_batch_kernel(spark):
     assert batch == exprv
 
 
-def test_stream_near_dup_candidates(spark, tmp_path):
-    """Near-identical docs arriving within the lag window are flagged by
-    the band self-join; the result matches the batch near-dup operator."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from textgraphs_spark.operators.dedup import simhash_near_dup_pairs
-    from textgraphs_spark.streaming.events import (
-        run_available_now, stream_near_dup_candidates,
-    )
-
-    base = "the quick brown fox jumps over the lazy dog again and again"
-    rows = []
-    for i in range(6):
-        # three near-dup pairs (i, i+100) + unrelated docs
-        rows.append((i, base + f" tail {i}", f"2024-01-01 10:0{i}:00"))
-        rows.append((i + 100, base + f" tail {i} extra", f"2024-01-01 10:0{i}:30"))
-        rows.append((i + 200, f"completely different text number {i} about "
-                              f"unrelated topic {i * 7}", f"2024-01-01 10:0{i}:15"))
-    src = tmp_path / "neardup_src"
-    src.mkdir()
-    pd.DataFrame(rows, columns=["doc_id", "text", "ts"]).to_parquet(
-        src / "part0.parquet"
-    )
-
-    schema = "doc_id long, text string, ts string"
-    stream = (
-        spark.readStream.schema(schema).parquet(str(src))
-    )
-    out = stream_near_dup_candidates(stream, watermark="10 minutes",
-                                     max_lag="10 minutes", max_hamming=8)
-    run_available_now(out, checkpoint=str(tmp_path / "ck"), table_name="nd_out")
-    got = {
-        frozenset((r.left_id, r.right_id))
-        for r in spark.sql("SELECT DISTINCT left_id, right_id FROM nd_out").collect()
-    }
-    # streamed left/right is time-ordered; batch is id-ordered — compare
-    # the unordered pair sets
-    batch_docs = spark.createDataFrame(
-        [(d, t) for d, t, _ in rows], "doc_id long, text string"
-    )
-    want = {
-        frozenset((r.left_id, r.right_id))
-        for r in simhash_near_dup_pairs(batch_docs, max_hamming=8).collect()
-    }
-    assert want, "fixture must contain near-dups"
-    assert got == want
-
-
-def test_stream_contamination_matches_batch(spark, tmp_path):
-    """Streaming decontamination (inlined eval grams, stateless) must
-    emit exactly the batch operator's rows over the same corpus."""
-    import pandas as pd
-
-    from textgraphs_spark.operators.webdata import contaminated_docs
-    from textgraphs_spark.streaming.events import stream_contamination
-
-    eval_rows = [(100, "the exact benchmark answer string here")]
-    corpus_rows = [
-        (0, "prefix words the exact benchmark answer string here suffix"),
-        (1, "entirely unrelated corpus document with different words"),
-        (2, "answer string here exact benchmark the"),
-        (3, "more filler the exact benchmark answer string here again"),
-    ]
-    src = tmp_path / "contam_src"
-    src.mkdir()
-    pd.DataFrame(corpus_rows, columns=["doc_id", "text"]).to_parquet(
-        src / "part0.parquet"
-    )
-    eval_docs = spark.createDataFrame(eval_rows, "doc_id long, text string")
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    out = stream_contamination(stream, eval_docs, n=4)
-    assert out.isStreaming
-    run_available_now(out, checkpoint=str(tmp_path / "cck"), table_name="contam_out")
-    got = {
-        tuple(r) for r in spark.sql(
-            "SELECT doc_id, n_grams, n_matched, overlap_frac FROM contam_out"
-        ).collect()
-    }
-    batch_docs = spark.createDataFrame(corpus_rows, "doc_id long, text string")
-    want = {tuple(r) for r in contaminated_docs(batch_docs, eval_docs, n=4).collect()}
-    assert want, "fixture must contain contaminated docs"
-    assert got == want
-
-
-def test_stream_quality_signals_match_batch(spark, tmp_path):
-    """Stateless streaming quality/lang signals must emit exactly the
-    batch operators' values over the same corpus."""
-    import pandas as pd
-
-    from textgraphs_spark.operators.textquality import lang_id, quality_score
-    from textgraphs_spark.streaming.events import stream_quality_signals
-
-    rows = [
-        (0, "the quiet analyst wrote careful notes about spark plans"),
-        (1, "der schnelle braune fuchs springt und ist nicht mit auf dem feld"),
-        (2, "el rapido zorro es en la casa con una pluma por las tardes"),
-        (3, "x!!!"),
-        (4, ""),
-    ]
-    src = tmp_path / "q_src"
-    src.mkdir()
-    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(src / "p.parquet")
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    out = stream_quality_signals(stream)
-    assert out.isStreaming
-    run_available_now(out, checkpoint=str(tmp_path / "qck"), table_name="quality_out")
-    got = {
-        r["doc_id"]: (r["pred_lang"], r["quality"], r["n_words"])
-        for r in spark.sql("SELECT * FROM quality_out").collect()
-    }
-    batch = spark.createDataFrame(rows, "doc_id long, text string")
-    lang = {r["doc_id"]: r["pred_lang"] for r in lang_id(batch).collect()}
-    qual = {r["doc_id"]: (r["quality"], r["n_words"]) for r in quality_score(batch).collect()}
-    assert len(got) == 5
-    for d, (pl, q, n) in got.items():
-        assert pl == lang[d] and (q, n) == qual[d]
-    assert got[1][0] == "de" and got[2][0] == "es"  # fixture exercises non-en
-
-
 def test_stream_er_matches_batch_and_skips_replay(spark, tmp_path):
     """Streaming incremental ER (foreachBatch -> run()/update() folds):
     after draining 3 micro-batches the committed assignments must equal a
@@ -446,117 +309,3 @@ def test_stream_er_snapshot_pruning(spark, tmp_path):
     markers = [n for n in os.listdir(os.path.join(wd, "commits"))
                if not n.startswith(".")]  # Hadoop local-FS .crc sidecars
     assert sorted(markers) == ["v0-b0.json", "v1-b1.json", "v2-b2.json"]
-
-
-def test_stream_winnow_matches_batch(spark, tmp_path):
-    """Shared-fingerprint tallies from the stream == batch
-    winnow_near_dup_pairs on the same corpus, with the hot-fingerprint
-    cut composed from a batch mining pass (stop_fps)."""
-    from pyspark.sql import functions as F
-
-    from textgraphs_spark.operators.dedup import (
-        winnow_fingerprints, winnow_near_dup_pairs,
-    )
-    from textgraphs_spark.streaming.events import stream_winnow_matches
-
-    boiler = "copyright header identical on every page of this site "
-    rows = [
-        (i, boiler + f"page body text {i} with enough distinct words "
-         + "to fingerprint reliably across the corpus", T0 + timedelta(minutes=i))
-        for i in range(4)
-    ]
-    dup = ("page body text 1 with enough distinct words to fingerprint "
-           "reliably across the corpus")
-    rows += [(9, boiler + dup, T0 + timedelta(minutes=9))]
-    src = str(tmp_path / "wdocs")
-    spark.createDataFrame(
-        rows, "doc_id long, text string, ts timestamp"
-    ).coalesce(1).write.parquet(src)
-
-    batch_docs = spark.read.parquet(src)
-    max_df = 3
-    fps = winnow_fingerprints(batch_docs).select("doc_id", "fp").distinct()
-    hot = fps.groupBy("fp").count().filter(F.col("count") > max_df).select("fp")
-
-    stream = spark.readStream.schema(batch_docs.schema).parquet(src)
-    out = stream_winnow_matches(
-        stream, watermark="10 minutes", max_lag="1 hour", stop_fps=hot,
-    )
-    from textgraphs_spark.streaming.events import run_available_now
-    run_available_now(out, checkpoint=str(tmp_path / "wck"), table_name="wm_out")
-    streamed = {
-        (r.left_id, r.right_id): r.shared
-        for r in spark.sql(
-            "SELECT left_id, right_id, count(DISTINCT fp) AS shared "
-            "FROM wm_out GROUP BY 1, 2"
-        ).collect()
-    }
-    batch = {
-        (r.left_id, r.right_id): r.shared
-        for r in winnow_near_dup_pairs(
-            batch_docs, min_shared=1, max_df=max_df
-        ).collect()
-    }
-    assert streamed == batch and (1, 9) in batch
-
-
-def test_stream_redact_pii_matches_batch(spark, tmp_path):
-    """Stateless streaming PII redaction must emit exactly the batch
-    operator's values — scrub-on-arrival before any stateful stage."""
-    import pandas as pd
-
-    from textgraphs_spark.operators.pii import redact_pii
-    from textgraphs_spark.streaming.events import stream_redact_pii
-
-    rows = [
-        (0, "reach me at jo@mail.co or 555-123-4567"),
-        (1, "hosts 192.168.0.1, ssn 987-65-4321"),
-        (2, "user@localhost and v1.2.3 stay put"),
-        (3, ""),
-        (4, None),
-    ]
-    src = tmp_path / "pii_src"
-    src.mkdir()
-    pd.DataFrame(rows, columns=["doc_id", "text"]).to_parquet(src / "p.parquet")
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    out = stream_redact_pii(stream)
-    assert out.isStreaming
-    run_available_now(out, checkpoint=str(tmp_path / "pck"), table_name="pii_out")
-    got = {
-        r["doc_id"]: tuple(r)[1:]
-        for r in spark.sql("SELECT * FROM pii_out").collect()
-    }
-    batch = spark.createDataFrame(rows, "doc_id long, text string")
-    want = {r["doc_id"]: tuple(r)[1:] for r in redact_pii(batch).collect()}
-    assert got == want and len(got) == 5
-    assert got[0][0] == "reach me at <EMAIL> or <PHONE>"
-    assert got[2][0] == rows[2][1]  # decoys untouched
-
-
-def test_stream_c4_clean_matches_batch(spark, tmp_path):
-    """Stateless streaming C4 cleaning must emit exactly the batch
-    operator's rows (kept counts, gates, cleaned-text md5) over the
-    same dirty corpus."""
-    from textgraphs_spark.operators.textquality import c4_line_filter
-    from textgraphs_spark.sources.pages import c4_pages
-    from textgraphs_spark.streaming.events import run_available_now, stream_c4_clean
-
-    src = tmp_path / "c4_src"
-    c4_pages(spark, n_pages=44).write.parquet(str(src))
-
-    stream = spark.readStream.schema("doc_id long, text string").parquet(str(src))
-    out = stream_c4_clean(stream)
-    assert out.isStreaming
-    run_available_now(out, checkpoint=str(tmp_path / "c4ck"), table_name="c4_out")
-    got = {
-        r["doc_id"]: (r["n_lines"], r["n_kept"], r["n_sentences"],
-                      r["keep"], r["clean_md5"])
-        for r in spark.sql("SELECT * FROM c4_out").collect()
-    }
-    want = {
-        r["doc_id"]: (r["n_lines"], r["n_kept"], r["n_sentences"],
-                      r["keep"], r["clean_md5"])
-        for r in c4_line_filter(c4_pages(spark, n_pages=44)).collect()
-    }
-    assert got == want and len(got) == 44

@@ -35,3 +35,38 @@ def test_spark_submit_py_files_runs_er_job(tmp_path):
     assert "clusters:" in proc.stdout, proc.stdout
     # stage checkpoints + lineage landed in the workdir
     assert (tmp_path / "wd" / "lineage").exists()
+
+
+def test_session_runs_outside_checkout(tmp_path):
+    """get_spark() from a neutral cwd with no PYTHONPATH/SPARK_GRAFT_CPUS:
+    the calling process finds the package through sys.path only, so the
+    UDF workers must get it from the session, and the default core count
+    follows the process's CPU affinity."""
+    import os
+    import sys
+
+    script = tmp_path / "job.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {str(REPO)!r})\n"
+        "from textgraphs_spark.session import get_spark\n"
+        "from textgraphs_spark.operators.extract import extract_entities\n"
+        "spark = get_spark('outside_checkout')\n"
+        "docs = spark.createDataFrame(\n"
+        "    [(1, 'Werner Herzog met Anna Schmidt in Berlin.')],\n"
+        "    'doc_id long, text string')\n"
+        "print('master', spark.sparkContext.master)\n"
+        "print('rows', extract_entities(docs).count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items()
+           if k not in ("PYTHONPATH", "SPARK_GRAFT_CPUS")}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    lines = dict(ln.split(" ", 1) for ln in proc.stdout.splitlines() if " " in ln)
+    assert lines["master"] == f"local[{len(os.sched_getaffinity(0))}]"
+    assert int(lines["rows"]) == 3

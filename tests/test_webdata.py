@@ -277,7 +277,7 @@ def test_lehmer_hash_matches_duckdb(spark):
     the contract every sampling/cap oracle rests on."""
     import duckdb
 
-    from textgraphs_spark.operators.webdata import _det_hash, det_hash_sql
+    from textgraphs_spark.operators.lehmer import det_hash, det_hash_sql
 
     # full signed-64 range incl. xxhash64-style huge/negative ids (the
     # submit tool hashes urls) — the mixer must not ANSI-overflow
@@ -286,7 +286,7 @@ def test_lehmer_hash_matches_duckdb(spark):
     df = spark.createDataFrame([(i,) for i in ids], "doc_id long")
     got = {
         r["doc_id"]: r["h"]
-        for r in df.select("doc_id", _det_hash(F.col("doc_id")).alias("h")).collect()
+        for r in df.select("doc_id", det_hash(F.col("doc_id")).alias("h")).collect()
     }
     vals = ", ".join(f"({i})" for i in ids)
     want = dict(duckdb.sql(
@@ -510,109 +510,6 @@ def test_canonical_url_spark_duckdb_fuzz_parity(spark):
     sql = canonical_url_select(f"SELECT * FROM (VALUES {vals}) t(doc_id, url)")
     want = dict(duckdb.sql(sql).fetchall())
     assert got == want
-
-
-def test_curation_pipeline_staged_and_resumable(spark, tmp_path):
-    """The staged curation job must (a) agree row-for-row with the
-    one-shot operator, (b) resume from stage checkpoints (empty input on
-    the second run proves the parquet is the source of truth), and
-    (c) keep lineage/metrics reconciled."""
-    import os
-
-    from textgraphs_spark.plans.curation_pipeline import CurationPipeline
-
-    dup_base = (
-        "the quick brown fox jumps over the lazy dog with many more words "
-        "to comfortably pass every single quality gate in the ladder"
-    )
-    rows = [
-        (0, dup_base + " first"),
-        (1, dup_base + " second"),   # near_dup
-        (2, "der schnelle braune fuchs springt und ist nicht mit auf dem feld"),
-        (3, "the x y z!!!!!!!!!!!!!!!!"),
-        (4, "the spam spam spam spam spam spam spam spam spam spam spam"),
-    ] + [
-        (10 + i, f"the quiet analyst number {i} wrote careful notes about "
-                 "spark plans with plenty of time for review")
-        for i in range(10)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    wd = str(tmp_path / "cur")
-
-    p1 = CurationPipeline(spark, workdir=wd, sample_fraction=0.5, threshold=0.5)
-    out1 = p1.run(docs)
-    verdicts1 = {tuple(r) for r in out1["verdicts"].collect()}
-    # (a) staged == one-shot operator
-    want = {tuple(r) for r in W.curation_decisions(docs, threshold=0.5).collect()}
-    assert verdicts1 == want
-    kept_ids = {r["doc_id"] for r in out1["kept_docs"].collect()}
-    assert kept_ids == {d for d, reason, keep in verdicts1 if keep}
-    assert 0 in kept_ids and 1 not in kept_ids
-    shard_ids = {r["doc_id"] for r in out1["shard"].collect()}
-    assert shard_ids < kept_ids  # strict subset at fraction 0.5 on 11 keeps
-    # kept rows carry the input columns
-    assert set(out1["kept_docs"].columns) == {"doc_id", "text"}
-
-    # (c) lineage/metrics reconcile per stage
-    from pyspark.sql import functions as SF
-    lineage = {r["stage"]: r for r in spark.read.parquet(os.path.join(wd, "lineage")).collect()}
-    metrics = spark.read.parquet(os.path.join(wd, "metrics"))
-    per_stage = {
-        r["stage"]: r["total"]
-        for r in metrics.groupBy("stage").agg(SF.sum("rows").alias("total")).collect()
-    }
-    assert set(lineage) == {"near_dups", "verdicts", "kept_docs", "shard"}
-    for stage, row in lineage.items():
-        assert per_stage[stage] == row["rows"], stage
-
-    # (b) resume: a fresh instance over EMPTY input returns run-1 rows
-    p2 = CurationPipeline(spark, workdir=wd, sample_fraction=0.5, threshold=0.5)
-    out2 = p2.run(docs.limit(0))
-    assert {tuple(r) for r in out2["verdicts"].collect()} == verdicts1
-    assert {r["doc_id"] for r in out2["kept_docs"].collect()} == kept_ids
-
-
-def test_curation_pipeline_boilerplate_stage(spark, tmp_path):
-    """Optional clean_docs stage: boilerplate lines are stripped from
-    the KEPT corpus (df computed post-keep), the stage checkpoints and
-    resumes, and it stays off when boilerplate_min_df is None."""
-    import os
-
-    from textgraphs_spark.plans.curation_pipeline import CurationPipeline
-
-    footer = "subscribe to the weekly newsletter"
-    topics = ["gardens", "engines", "rivers", "mountains", "museums", "libraries"]
-    rows = [
-        (i, f"the writer composed notes about {topics[i]} with careful "
-            f"attention to {topics[(i + 1) % 6]} and many details for review"
-            f"\n{footer}")
-        for i in range(6)
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    wd = str(tmp_path / "curb")
-    # threshold=0.95: structurally similar docs stay below the near-dup
-    # bar, so all six survive the ladder and feed the clean stage
-    p = CurationPipeline(
-        spark, workdir=wd, boilerplate_min_df=3, threshold=0.95
-    )
-    out = p.run(docs)
-    assert {r["doc_id"] for r in out["kept_docs"].collect()} == set(range(6))
-    clean = {r["doc_id"]: r for r in out["clean_docs"].collect()}
-    for i in range(6):
-        assert clean[i]["n_lines"] == 2 and clean[i]["n_removed"] == 1
-        assert footer not in clean[i]["clean_text"]
-        assert topics[i] in clean[i]["clean_text"]
-    assert os.path.isdir(os.path.join(wd, "clean_docs"))
-    # resume with empty input: parquet is the source of truth
-    out2 = CurationPipeline(
-        spark, workdir=wd, boilerplate_min_df=3, threshold=0.95
-    ).run(docs.limit(0))
-    assert {tuple(r) for r in out2["clean_docs"].collect()} == {
-        tuple(r) for r in out["clean_docs"].collect()
-    }
-    # stage off by default
-    out3 = CurationPipeline(spark, threshold=0.95).run(docs)
-    assert "clean_docs" not in out3
 
 
 def test_text_signals_fuzz_parity(spark):

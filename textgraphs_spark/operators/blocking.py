@@ -25,7 +25,7 @@ Scale discipline (the part that must survive 1000 executors / 10^12 docs):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # normalized name parts: strip punctuation, lowercase
@@ -371,6 +371,13 @@ def candidate_pairs(
 # TF-IDF token-cosine similarity join (AllPairs/PPJoin-style prefix filter)
 # ---------------------------------------------------------------------------
 
+def tokens_col(text_col: str) -> Column:
+    """Lowercased Unicode-letter/digit runs of ``text_col`` (array<string>)."""
+    return F.expr(
+        f"filter(split(lower({text_col}), '[^\\\\p{{L}}0-9]+'), t -> t <> '')"
+    )
+
+
 def tfidf_unit_vectors(
     records: DataFrame,
     *,
@@ -390,8 +397,6 @@ def tfidf_unit_vectors(
     joined back on rid. Every stage is a partial-aggregated hash agg —
     no windows, no Python.
     """
-    from .textquality import tokens_col
-
     toks = records.select(
         F.col(id_col).alias("rid"),
         F.explode(tokens_col(text_col)).alias("token"),

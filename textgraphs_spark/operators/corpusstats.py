@@ -32,8 +32,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .blocking import tokens_col
 from .rankops import global_rank
-from .textquality import tokens_col
 
 
 def _counts(df: DataFrame, key_col: str, weight_col: str | None) -> DataFrame:

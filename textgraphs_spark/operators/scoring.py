@@ -471,7 +471,7 @@ def monge_elkan_scores(
     Token multiplicity is per OCCURRENCE (the original definition
     averages over the token sequence, not the distinct set).
     """
-    from .textquality import tokens_col
+    from .blocking import tokens_col
 
     tok = records.select(
         F.col(id_col).alias("rid"),

@@ -15,7 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-_TOKENS = "filter(split(lower({c}), '[^\\\\p{{L}}0-9]+'), t -> t <> '')"
+from .blocking import tokens_col
+
 
 # tiny distinctive stopword sets (deterministic, versioned)
 LANG_STOPWORDS = {
@@ -24,10 +25,6 @@ LANG_STOPWORDS = {
     "es": ["el", "la", "los", "las", "es", "en", "que", "con", "una", "por"],
     "fr": ["le", "la", "les", "et", "est", "dans", "que", "avec", "une", "pour"],
 }
-
-
-def tokens_col(text_col: str) -> Column:
-    return F.expr(_TOKENS.format(c=text_col))
 
 
 def token_count(docs: DataFrame, *, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

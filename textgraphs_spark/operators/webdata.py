@@ -55,6 +55,7 @@ from pyspark.sql import functions as F
 
 from .components import connected_components
 from .dedup import _TOKENS, minhash_dedup_pairs
+from .lehmer import LEHMER_P, det_hash, det_hash_sql
 
 __all__ = [
     "repetition_signals",
@@ -678,13 +679,13 @@ def stratified_sample_select(
     engine-parity fuzz test."""
     h = det_hash_sql(id_col)
     cases = " ".join(
-        f"WHEN {stratum_col} = '{s}' THEN {int(f * _LEHMER_P)}"
+        f"WHEN {stratum_col} = '{s}' THEN {int(f * LEHMER_P)}"
         for s, f in sorted(fractions.items())
     )
     return f"""
 WITH src AS ({source_sql})
 SELECT {id_col}, {stratum_col}, {h} AS sample_key FROM src
-WHERE {h} < (CASE {cases} ELSE {int(default_fraction * _LEHMER_P)} END)
+WHERE {h} < (CASE {cases} ELSE {int(default_fraction * LEHMER_P)} END)
 """
 
 
@@ -712,16 +713,16 @@ def stratified_sample(
             raise ValueError(f"fraction for {stratum!r} must be in [0, 1], got {frac}")
     if not 0.0 <= default_fraction <= 1.0:
         raise ValueError(f"default_fraction must be in [0, 1], got {default_fraction}")
-    thresh = F.lit(int(default_fraction * _LEHMER_P))
+    thresh = F.lit(int(default_fraction * LEHMER_P))
     for stratum, frac in sorted(fractions.items()):
         thresh = F.when(
-            F.col(stratum_col) == stratum, F.lit(int(frac * _LEHMER_P))
+            F.col(stratum_col) == stratum, F.lit(int(frac * LEHMER_P))
         ).otherwise(thresh)
     return (
         docs.select(
             F.col(id_col),
             F.col(stratum_col),
-            _det_hash(F.col(id_col)).alias("sample_key"),
+            det_hash(F.col(id_col)).alias("sample_key"),
         )
         .filter(F.col("sample_key") < thresh)
     )
@@ -946,33 +947,6 @@ def source_curation_rollup(
     )
 
 
-# Engine-neutral deterministic mixer: reduce the id into the Lehmer
-# field, then two MINSTD rounds — h = pmod(k, p) followed twice by
-# h = (h*48271) % p, with p = 2^31 - 1. Chosen over xxhash64 ONLY
-# because the DuckDB oracle must reproduce it with plain integer
-# arithmetic; two rounds equidistribute sequential ids well enough for
-# threshold sampling. The leading pmod makes it overflow-safe under
-# ANSI mode for the FULL signed int64 range (ids are often xxhash64
-# values — e.g. tools/submit_curation.py hashes urls): after reduction
-# h < 2^31, so h*48271 < 1.5e14 stays far inside int64. Values are
-# unchanged vs the unreduced form for ids in [0, p).
-_LEHMER_P = 2147483647
-_LEHMER_A = 48271
-
-
-def _det_hash(col: Column) -> Column:
-    h = F.pmod(col, F.lit(_LEHMER_P))
-    h = F.pmod(h * _LEHMER_A, F.lit(_LEHMER_P))
-    return F.pmod(h * _LEHMER_A, F.lit(_LEHMER_P))
-
-
-def det_hash_sql(expr: str) -> str:
-    """DuckDB twin of ``_det_hash`` — keep in lockstep. The double-%
-    idiom reproduces Spark's pmod (nonnegative) for negative inputs."""
-    k = f"((({expr}) % {_LEHMER_P} + {_LEHMER_P}) % {_LEHMER_P})"
-    return f"(({k} * {_LEHMER_A}) % {_LEHMER_P} * {_LEHMER_A}) % {_LEHMER_P}"
-
-
 def deterministic_sample(
     docs: DataFrame, fraction: float, *, id_col: str = "doc_id"
 ) -> DataFrame:
@@ -988,9 +962,9 @@ def deterministic_sample(
     """
     if not 0.0 <= fraction <= 1.0:
         raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    threshold = int(fraction * _LEHMER_P)
+    threshold = int(fraction * LEHMER_P)
     return (
-        docs.select(F.col(id_col), _det_hash(F.col(id_col)).alias("sample_key"))
+        docs.select(F.col(id_col), det_hash(F.col(id_col)).alias("sample_key"))
         .filter(F.col("sample_key") < threshold)
     )
 
@@ -1018,7 +992,7 @@ def per_source_cap(
     from pyspark.sql import Window
 
     w = Window.partitionBy(source_col).orderBy(
-        _det_hash(F.col(id_col)), F.col(id_col)
+        det_hash(F.col(id_col)), F.col(id_col)
     )
     return (
         docs.select(F.col(id_col), F.col(source_col))
@@ -1052,7 +1026,7 @@ def per_source_cap_threshold(
     frac = F.least(F.lit(1.0), F.lit(cap) / F.col("_n"))
     thresholds = counts.select(
         F.col(source_col).alias("_src"),
-        F.floor(frac * _LEHMER_P).cast("long").alias("_thresh"),
+        F.floor(frac * LEHMER_P).cast("long").alias("_thresh"),
     )
     return (
         docs.select(F.col(id_col), F.col(source_col))
@@ -1060,7 +1034,7 @@ def per_source_cap_threshold(
             F.broadcast(thresholds),
             F.col(source_col).eqNullSafe(F.col("_src")),
         )
-        .filter(_det_hash(F.col(id_col)) < F.col("_thresh"))
+        .filter(det_hash(F.col(id_col)) < F.col("_thresh"))
         .select(F.col(id_col), F.col(source_col))
     )
 
@@ -1168,7 +1142,7 @@ def pack_sequences(
     if seq_len <= 0:
         raise ValueError(f"seq_len must be positive, got {seq_len}")
     toks = F.expr(_TOKENS.format(c=text_col))
-    shard = F.pmod(_det_hash(F.col(id_col)), F.lit(n_shards))
+    shard = F.pmod(det_hash(F.col(id_col)), F.lit(n_shards))
     base = docs.select(
         F.col(id_col),
         shard.alias("shard"),
@@ -1266,7 +1240,7 @@ def source_mixture_weights(
     combining), then a 1-row normalizer broadcast crossJoin. The
     corpus never shuffles.
     """
-    from .textquality import tokens_col
+    from .blocking import tokens_col
 
     per = (
         docs.groupBy(F.col(source_col).alias("source"))
@@ -1356,7 +1330,7 @@ def contrastive_pairs(
     cand = minhash_dedup_pairs(
         docs, threshold=0.0, text_col=text_col, id_col=id_col
     )
-    key = _det_hash(F.col("left_id") * F.lit(1_000_003) + F.col("right_id"))
+    key = det_hash(F.col("left_id") * F.lit(1_000_003) + F.col("right_id"))
     pos = cand.filter(F.col("jaccard") >= hi).withColumn(
         "label", F.lit(1).cast("long")
     )
@@ -2546,7 +2520,7 @@ def dsir_resample(
         F.lit(1_000_000).cast("long"),
         F.floor(F.exp(F.round("dsir_weight", 6)) * 1_000_000).cast("long"),
     )
-    key = F.pmod(_det_hash(F.col(id_col)), F.lit(1_000_000))
+    key = F.pmod(det_hash(F.col(id_col)), F.lit(1_000_000))
     return w.select(
         id_col, "dsir_weight",
         prob.alias("keep_prob_micro"),
@@ -2753,11 +2727,13 @@ def revisit_schedule(
     frequency (the ``crawl_delta`` precedent: no hot key can form), then
     ONE url-keyed hash agg. ``change_rate`` is a single IEEE division
     of two exact integers — bit-identical across engines, so the
-    threshold CASE can never flap between engine and oracle.
+    threshold CASE can never flap between engine and oracle. Captures
+    of one url with the same timestamp are ordered by content hash, so
+    the change count is deterministic and engine-neutral.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(url_col).orderBy(ts_col)
+    w = Window.partitionBy("url").orderBy(ts_col, "_h")
     h = F.md5(F.coalesce(F.col(text_col), F.lit("")))
     changed = (
         captures.select(F.col(url_col).alias("url"), F.col(ts_col), h.alias("_h"))
@@ -2791,13 +2767,14 @@ def revisit_schedule_select(
     slow: float = 0.2,
 ) -> str:
     """DuckDB twin of ``revisit_schedule`` — same md5 identity, lag
-    window, exact-integer rate, and threshold CASE."""
+    window (hash tiebreak), exact-integer rate, and threshold CASE."""
     return f"""
 WITH _c AS (
   SELECT {url_col} AS url,
          md5(coalesce({text_col}, '')) AS h,
          lag(md5(coalesce({text_col}, ''))) OVER (
-           PARTITION BY {url_col} ORDER BY {ts_col}) AS prev
+           PARTITION BY {url_col}
+           ORDER BY {ts_col}, md5(coalesce({text_col}, ''))) AS prev
   FROM ({source_sql})
 ),
 _a AS (
@@ -2849,16 +2826,18 @@ def leakage_safe_split(
     layout, cluster size, retries, and corpus growth (a doc keeps its
     split when new docs arrive). Map-only codegen, zero shuffle.
     """
-    if not 0 <= val_pct + test_pct <= 100:
-        raise ValueError("val_pct + test_pct must be within [0, 100]")
+    if val_pct < 0 or test_pct < 0 or val_pct + test_pct > 100:
+        raise ValueError(
+            "val_pct and test_pct must be >= 0 with val_pct + test_pct <= 100"
+        )
     key = (
         F.col(group_col).cast("string") if group_col
         else F.md5(F.coalesce(F.col(text_col), F.lit("")))
     )
     gid = F.conv(F.substring(F.md5(key), 1, 15), 16, 10).cast("long")
-    h = _det_hash(gid)
-    t_hi = int(_LEHMER_P * test_pct / 100)
-    v_hi = int(_LEHMER_P * (test_pct + val_pct) / 100)
+    h = det_hash(gid)
+    t_hi = int(LEHMER_P * test_pct / 100)
+    v_hi = int(LEHMER_P * (test_pct + val_pct) / 100)
     return docs.select(
         F.col(id_col),
         key.alias("group_key"),
@@ -2883,8 +2862,8 @@ def leakage_safe_split_select(
     key = group_expr or f"md5(coalesce({text_col}, ''))"
     gid = f"CAST('0x' || substr(md5({key}), 1, 15) AS BIGINT)"
     h = det_hash_sql(gid)
-    t_hi = int(_LEHMER_P * test_pct / 100)
-    v_hi = int(_LEHMER_P * (test_pct + val_pct) / 100)
+    t_hi = int(LEHMER_P * test_pct / 100)
+    v_hi = int(LEHMER_P * (test_pct + val_pct) / 100)
     return f"""
 SELECT {id_col}, {key} AS group_key,
   CASE WHEN {h} < {t_hi} THEN 'test'
@@ -3058,24 +3037,24 @@ def url_history(
     100 TB shape: md5 per row map-only, then TWO url-partitioned lag/
     lead windows (per-url capture counts bounded by crawl frequency —
     the crawl_delta no-hot-key argument) and one (url, rev)-keyed hash
-    agg. No global sort, no funnel.
+    agg. No global sort, no funnel. Captures of one url with the same
+    timestamp are ordered by content hash (and intervals with the same
+    valid_from by revision number), so the history is deterministic and
+    engine-neutral.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(url_col).orderBy(ts_col)
     h = F.md5(F.coalesce(F.col(text_col), F.lit("")))
+    w = Window.partitionBy("url").orderBy("ts", "_h")
     rows = (
         captures.select(F.col(url_col).alias("url"), F.col(ts_col).alias("ts"),
                         h.alias("_h"))
-        .withColumn("_prev", F.lag("_h").over(Window.partitionBy("url").orderBy("ts")))
+        .withColumn("_prev", F.lag("_h").over(w))
         .withColumn(
             "_rev",
             F.sum(
                 (F.col("_prev").isNull() | (F.col("_h") != F.col("_prev"))).cast("long")
-            ).over(
-                Window.partitionBy("url").orderBy("ts")
-                .rowsBetween(Window.unboundedPreceding, 0)
-            ),
+            ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
         )
     )
     iv = rows.groupBy("url", "_rev").agg(
@@ -3085,7 +3064,7 @@ def url_history(
         # construction; min() states that determinism, first() wouldn't
         F.min("_h").alias("content_hash"),
     )
-    w2 = Window.partitionBy("url").orderBy("valid_from")
+    w2 = Window.partitionBy("url").orderBy("valid_from", "_rev")
     return (
         iv.withColumn("valid_to", F.lead("valid_from").over(w2))
         .select(
@@ -3102,20 +3081,22 @@ def url_history_select(
     ts_col: str = "warc_ts",
     text_col: str = "text",
 ) -> str:
-    """DuckDB twin of ``url_history`` — same hash identity, revision
-    numbering via the running sum of change flags, lead() valid_to."""
+    """DuckDB twin of ``url_history`` — same hash identity and
+    tiebreaks, revision numbering via the running sum of change flags,
+    lead() valid_to."""
     return f"""
 WITH _r AS (
   SELECT {url_col} AS url, {ts_col} AS ts,
          md5(coalesce({text_col}, '')) AS h,
          lag(md5(coalesce({text_col}, ''))) OVER (
-           PARTITION BY {url_col} ORDER BY {ts_col}) AS prev
+           PARTITION BY {url_col}
+           ORDER BY {ts_col}, md5(coalesce({text_col}, ''))) AS prev
   FROM ({source_sql})
 ),
 _n AS (
   SELECT url, ts, h,
          sum(CASE WHEN prev IS NULL OR h <> prev THEN 1 ELSE 0 END) OVER (
-           PARTITION BY url ORDER BY ts
+           PARTITION BY url ORDER BY ts, h
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rev
   FROM _r
 ),
@@ -3126,9 +3107,9 @@ _iv AS (
   FROM _n GROUP BY url, rev
 )
 SELECT url, valid_from,
-       lead(valid_from) OVER (PARTITION BY url ORDER BY valid_from) AS valid_to,
+       lead(valid_from) OVER (PARTITION BY url ORDER BY valid_from, rev) AS valid_to,
        n_captures, content_hash,
-       (lead(valid_from) OVER (PARTITION BY url ORDER BY valid_from) IS NULL)
+       (lead(valid_from) OVER (PARTITION BY url ORDER BY valid_from, rev) IS NULL)
          AS is_current
 FROM _iv
 """

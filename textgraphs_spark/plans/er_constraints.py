@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators import components as C
-from ..operators.webdata import _det_hash
+from ..operators.lehmer import det_hash
 from .er_pipeline import ERPipeline
 
 
@@ -50,15 +50,15 @@ def _canonical_edges(match_edges: DataFrame) -> DataFrame:
 
 def pair_hash(left: str = "left_id", right: str = "right_id"):
     """Engine-neutral Lehmer hash of the canonical (left, right) pair —
-    the same md5 → 60-bit int → MINSTD mixer as deterministic_sample,
-    over the '|'-joined pair key."""
+    the md5 → 60-bit int → MINSTD mixer (operators/lehmer.py) over the
+    '|'-joined pair key."""
     gid = F.conv(
         F.substring(
             F.md5(F.concat(F.col(left), F.lit("|"), F.col(right))), 1, 15
         ),
         16, 10,
     ).cast("long")
-    return _det_hash(gid)
+    return det_hash(gid)
 
 
 def synthetic_cannot_links(match_edges: DataFrame, *, modulus: int = 7) -> DataFrame:

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..operators.lehmer import LEHMER_P, det_hash, det_hash_sql
+
 
 # ---------------------------------------------------------------------------
 # RNG-free labeled entity corpus
@@ -3393,18 +3395,14 @@ JOIN assignments a2 ON c.right_id = a2.entity_key
 
 def _key_hash(col):
     """Engine-neutral Lehmer hash of an entity key (md5 → 60-bit int →
-    MINSTD mixer) — the deterministic_sample convention applied to
-    string keys, shared with the churn oracle via key_hash_sql."""
-    from ..operators.webdata import _det_hash
-
+    MINSTD mixer, operators/lehmer.py) applied to string keys, shared
+    with the churn oracle via key_hash_sql."""
     gid = F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-    return _det_hash(gid)
+    return det_hash(gid)
 
 
 def key_hash_sql(expr: str) -> str:
     """DuckDB twin of ``_key_hash`` — keep in lockstep."""
-    from ..operators.webdata import det_hash_sql
-
     return det_hash_sql(f"CAST('0x' || substr(md5({expr}), 1, 15) AS BIGINT)")
 
 
@@ -3417,7 +3415,7 @@ def cluster_churn(entities: DataFrame, parts: dict, *,
     is a pipeline regression the aggregate metrics can hide.
 
     The PRIOR run is the deterministic ``prior_frac`` entity subset
-    (Lehmer key hash — the deterministic_sample discipline, so the
+    (Lehmer key hash — a pure function of the key, so the
     "yesterday" corpus is stable across retries) clustered on its
     subset-internal match edges — exactly the closure an earlier run
     over only those entities would have produced, derived WITHOUT a
@@ -3436,9 +3434,8 @@ def cluster_churn(entities: DataFrame, parts: dict, *,
     argmax, no window.
     """
     from ..operators import components as C
-    from ..operators.webdata import _LEHMER_P
 
-    thr = int(prior_frac * _LEHMER_P)
+    thr = int(prior_frac * LEHMER_P)
     edges = parts["match_scores"].select("left_id", "right_id")
     e_prior = edges.filter(
         (_key_hash(F.col("left_id")) < thr) & (_key_hash(F.col("right_id")) < thr)
@@ -3488,9 +3485,7 @@ def er_cluster_churn_sql(*, n_base: int = 150, n_twin: int = 30,
     """Oracle for ``cluster_churn``: the eval clustering chain plus a
     p-prefixed second closure over the hash-filtered prior edge subset
     (the er_clustering_agreement two-closure pattern)."""
-    from ..operators.webdata import _LEHMER_P
-
-    thr = int(prior_frac * _LEHMER_P)
+    thr = int(prior_frac * LEHMER_P)
     hl = key_hash_sql("left_id")
     hr = key_hash_sql("right_id")
     hk = key_hash_sql("entity_key")
@@ -3639,9 +3634,8 @@ def merge_review(entities: DataFrame, parts: dict, *,
     re-run the UDF).
     """
     from ..operators import components as C
-    from ..operators.webdata import _LEHMER_P
 
-    thr = int(prior_frac * _LEHMER_P)
+    thr = int(prior_frac * LEHMER_P)
     edges = parts["match_scores"]
     e_prior = edges.filter(
         (_key_hash(F.col("left_id")) < thr) & (_key_hash(F.col("right_id")) < thr)
@@ -3697,9 +3691,7 @@ def _merge_review_ctes(n_base: int, n_twin: int, min_similarity: float,
     closure + merged-cluster bridging edges. Must be placed under WITH
     RECURSIVE. Shared by the merge-review oracle and the reviewed-
     clustering oracle (which removes rejected bridges and re-closes)."""
-    from ..operators.webdata import _LEHMER_P
-
-    thr = int(prior_frac * _LEHMER_P)
+    thr = int(prior_frac * LEHMER_P)
     hl = key_hash_sql("left_id")
     hr = key_hash_sql("right_id")
     hk = key_hash_sql("entity_key")

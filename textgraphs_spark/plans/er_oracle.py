@@ -27,6 +27,7 @@ from __future__ import annotations
 from ..nlp import lex
 from ..operators.blocking import minhash_xor_constants
 from ..operators.graphops import BALL_MAX_ITER
+from ..operators.lehmer import det_hash_sql
 
 
 def _inlist(words) -> str:
@@ -1491,8 +1492,6 @@ def constrained_clustering_ctes(
     ≡ 0 (mod modulus) are EXCEPTed out before the closure, and the
     ``cannot`` CTE stays visible for the violations audit. Must be
     placed under WITH RECURSIVE."""
-    from ..operators.webdata import det_hash_sql  # lazy: avoid cycles
-
     ph = det_hash_sql(
         "CAST('0x' || substr(md5(left_id || '|' || right_id), 1, 15) AS BIGINT)"
     )

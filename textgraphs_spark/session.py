@@ -10,6 +10,9 @@ one that matters on a real multi-executor cluster at 100 TB:
   (mapInPandas / applyInPandas); no per-row Python anywhere.
 * shuffle partitions sized to cores locally; on a cluster this should be
   ~2-3x total executor cores (or left to AQE's coalescing).
+* Python workers get this package's parent directory on their
+  PYTHONPATH, so UDF-backed operators run from any cwd without the
+  caller exporting PYTHONPATH.
 """
 
 from __future__ import annotations
@@ -25,8 +28,16 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession with this engine's defaults."""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Build (or fetch) a SparkSession with this engine's defaults.
+
+    The default core count is ``$SPARK_GRAFT_CPUS``, else the CPUs this
+    process may run on."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+    # workers are forked by the JVM and import this package by name
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(
+        p for p in (package_root, os.environ.get("PYTHONPATH")) if p
+    )
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -46,6 +57,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.python.worker.reuse", "true")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

@@ -753,100 +753,6 @@ FROM (
 """
 
 
-def link_pages(spark: SparkSession, n_pages: int = 480) -> DataFrame:
-    """Deterministic hyperlinked corpus for the host link-graph family —
-    (doc_id, url, html:binary). Pure index arithmetic so the DuckDB twin
-    (``link_pages_sql``) regenerates it bit-identically.
-
-    Page ``i`` lives on host index ``h = i % 12``: ``site{h}.example``
-    for h<10 (organic sites), ``spam{h-10}.biz`` for h in {10, 11} (a
-    two-host reciprocal link farm). Each page body carries THREE
-    ``<a href>`` outlinks:
-
-    * ``t1 = (h + 1 + i%3) % 10`` — a varying organic target, anchor
-      ``story {i%5}``;
-    * ``t2 = 0`` for even i, else ``(i*7) % 10`` — a hub bias so
-      site0.example collects in-links corpus-wide, anchor ``home page``;
-    * ``t3`` — for spam hosts, the OTHER spam host (the reciprocal-farm
-      signature ``link_reciprocity`` must expose), anchor ``cheap deals
-      now``; for organic pages with ``i % 10 == 9``, a link INTO
-      spam0.biz (the occasional organic pointer that makes naive
-      in-degree a bad spam filter), same spam anchor; otherwise a
-      repeat of t1 (collapsed by the per-pair aggregate), anchor
-      ``story {i%5}``.
-    """
-    i = F.col("id")
-    h = i % 12
-    hostname = F.when(h < 10, F.format_string("site%d.example", h.cast("int"))) \
-        .otherwise(F.format_string("spam%d.biz", (h - 10).cast("int")))
-
-    def _host_of(t):
-        return F.when(t < 10, F.format_string("site%d.example", t.cast("int"))) \
-            .otherwise(F.format_string("spam%d.biz", (t - 10).cast("int")))
-
-    t1 = (h + 1 + i % 3) % 10
-    t2 = F.when(i % 2 == 0, F.lit(0)).otherwise((i * 7) % 10)
-    t3 = (
-        F.when(h >= 10, F.lit(10) + (h - 9) % 2)
-        .when(i % 10 == 9, F.lit(10))
-        .otherwise(t1)
-    )
-    a1 = F.format_string("story %d", (i % 5).cast("int"))
-    a3 = F.when(t3 >= 10, F.lit("cheap deals now")).otherwise(a1)
-    html = F.format_string(
-        '<html><body><p>page %d</p>'
-        '<a href="https://%s/p/%d">%s</a> '
-        '<a href="https://%s/p/%d">home page</a> '
-        '<a href="https://%s/p/%d">%s</a></body></html>',
-        i.cast("int"),
-        _host_of(t1), ((i * 3 + 1) % n_pages).cast("int"), a1,
-        _host_of(t2), ((i * 3 + 2) % n_pages).cast("int"),
-        _host_of(t3), ((i * 3 + 3) % n_pages).cast("int"), a3,
-    )
-    return spark.range(0, n_pages).select(
-        i.alias("doc_id"),
-        F.format_string("https://%s/p/%d", hostname, i.cast("int")).alias("url"),
-        html.cast("binary").alias("html"),
-    )
-
-
-def link_pages_sql(n_pages: int = 480) -> str:
-    """DuckDB twin of ``link_pages`` — html as TEXT (the Spark side casts
-    binary→string before parsing, so the parse input is byte-identical).
-    Keep the target/anchor formulas in lockstep."""
-    return f"""
-SELECT i AS doc_id,
-  'https://' || hostname || '/p/' || i AS url,
-  '<html><body><p>page ' || i || '</p>'
-    || '<a href="https://' || h1 || '/p/' || ((i*3+1) % {n_pages}) || '">' || a1 || '</a> '
-    || '<a href="https://' || h2 || '/p/' || ((i*3+2) % {n_pages}) || '">home page</a> '
-    || '<a href="https://' || h3 || '/p/' || ((i*3+3) % {n_pages}) || '">' || a3 || '</a>'
-    || '</body></html>' AS html
-FROM (
-  SELECT i, hostname, a1,
-    CASE WHEN t1 < 10 THEN 'site' || t1 || '.example'
-         ELSE 'spam' || (t1 - 10) || '.biz' END AS h1,
-    CASE WHEN t2 < 10 THEN 'site' || t2 || '.example'
-         ELSE 'spam' || (t2 - 10) || '.biz' END AS h2,
-    CASE WHEN t3 < 10 THEN 'site' || t3 || '.example'
-         ELSE 'spam' || (t3 - 10) || '.biz' END AS h3,
-    CASE WHEN t3 >= 10 THEN 'cheap deals now' ELSE a1 END AS a3
-  FROM (
-    SELECT t.i AS i,
-      CASE WHEN t.i % 12 < 10 THEN 'site' || (t.i % 12) || '.example'
-           ELSE 'spam' || (t.i % 12 - 10) || '.biz' END AS hostname,
-      'story ' || (t.i % 5) AS a1,
-      ((t.i % 12) + 1 + t.i % 3) % 10 AS t1,
-      CASE WHEN t.i % 2 = 0 THEN 0 ELSE (t.i * 7) % 10 END AS t2,
-      CASE WHEN t.i % 12 >= 10 THEN 10 + (t.i % 12 - 9) % 2
-           WHEN t.i % 10 = 9 THEN 10
-           ELSE ((t.i % 12) + 1 + t.i % 3) % 10 END AS t3
-    FROM range(0, {n_pages}) t(i)
-  )
-)
-"""
-
-
 def trap_pages(spark: SparkSession, n_pages: int = 400) -> DataFrame:
     """Deterministic crawler-trap corpus — (doc_id, url). Pure index
     arithmetic (``trap_pages_sql`` regenerates it bit-identically).
@@ -1011,57 +917,6 @@ FROM range(0, {n_pages}) t(i)
 """
 
 
-def ring_pages(spark: SparkSession, n_hosts: int = 24) -> DataFrame:
-    """Deterministic directed-link corpus for SCC — (doc_id, url,
-    html:binary), ONE page per host ``r{i:02d}.example`` (zero-padded so
-    lexicographic min == numeric min). Host ``i`` sits in group
-    ``g = i // 4`` at position ``p = i % 4``:
-
-    * ``g % 3 < 2`` — ring group: p links to (p+1) % 4 within the
-      group — a 4-host directed cycle, ONE SCC per group.
-    * otherwise — chain group: p < 3 links to i+1, p == 3 links into
-      host 0's ring — four singleton SCCs (one-directional edges only).
-
-    ``n_hosts`` must be a multiple of 4.
-    """
-    i = F.col("id")
-    g = (i / 4).cast("long")
-    p = i % 4
-    host = F.format_string("r%02d.example", i.cast("int"))
-    tgt_idx = (
-        F.when(g % 3 < 2, g * 4 + (p + 1) % 4)
-        .when(p < 3, i + 1)
-        .otherwise(F.lit(0))
-    )
-    tgt = F.format_string("r%02d.example", tgt_idx.cast("int"))
-    html = F.format_string(
-        '<html><body><a href="https://%s/p">go</a></body></html>', tgt
-    )
-    return spark.range(0, n_hosts).select(
-        i.alias("doc_id"),
-        F.format_string("https://%s/p/%d", host, i.cast("int")).alias("url"),
-        html.cast("binary").alias("html"),
-    )
-
-
-def ring_pages_sql(n_hosts: int = 24) -> str:
-    """DuckDB twin of ``ring_pages`` — keep the group arithmetic in
-    lockstep."""
-    return f"""
-SELECT i AS doc_id,
-  'https://' || printf('r%02d.example', CAST(i AS INT)) || '/p/' || i AS url,
-  '<html><body><a href="https://' || printf('r%02d.example', CAST(t AS INT))
-    || '/p">go</a></body></html>' AS html
-FROM (
-  SELECT t.i AS i,
-    CASE WHEN (t.i // 4) % 3 < 2 THEN (t.i // 4) * 4 + (t.i + 1) % 4
-         WHEN t.i % 4 < 3 THEN t.i + 1
-         ELSE 0 END AS t
-  FROM range(0, {n_hosts}) t(i)
-)
-"""
-
-
 def pld_pages(spark: SparkSession, n_pages: int = 420) -> DataFrame:
     """Deterministic multi-level-TLD URL corpus for registered-domain
     (pay-level-domain) extraction — (doc_id, url, host), pure index
@@ -1114,82 +969,5 @@ FROM (
            || ({lst(_PLD_SUFFIXES)})[CAST((t.i // 40) % 6 AS INT) + 1]
     END AS host
   FROM range(0, {n_pages}) t(i)
-)
-"""
-
-
-def sublink_pages(spark: SparkSession, n_pages: int = 480) -> DataFrame:
-    """Deterministic subdomain-rich hyperlinked corpus for the
-    site-level (registered-domain-contracted) link graph —
-    (doc_id, url, html:binary), pure index arithmetic (RNG-free;
-    ``sublink_pages_sql`` regenerates it bit-identically).
-
-    Page ``i`` lives on site ``s = i % 8`` (name ``_PLD_NAMES[s]``,
-    suffix ``{com, co.uk, org}[s % 3]``) under subdomain
-    ``{'', www., blog., docs.}[(i//8) % 4]``, and carries ONE outlink:
-
-    * ``i % 5 == 0`` — an INTRA-site cross-subdomain link (same site,
-      next subdomain): a host-level edge the site-level contraction
-      must collapse into a self-edge and drop;
-    * otherwise — a cross-site link to site ``(s + 1 + (i//24) % 3) % 8``
-      (offset 1..3, never self) under subdomain ``(i//96) % 4``.
-    """
-    i = F.col("id")
-    pick = lambda xs, idx: F.element_at(  # noqa: E731
-        F.array(*[F.lit(x) for x in xs]), (idx + 1).cast("int")
-    )
-
-    def _host(site, sub):
-        return F.concat(
-            pick(_SUBLINK_SUBS, sub), pick(_PLD_NAMES, site),
-            F.lit("."), pick(_SUBLINK_SUFS, site % 3),
-        )
-
-    s = i % 8
-    p = F.floor(i / 8) % 4
-    intra = i % 5 == 0
-    t = F.when(intra, s).otherwise((s + 1 + F.floor(i / 24) % 3) % 8)
-    q = F.when(intra, (p + 1) % 4).otherwise(F.floor(i / 96) % 4)
-    src = _host(s, p)
-    dst = _host(t, q)
-    html = F.format_string(
-        '<html><body><p>page %d</p><a href="https://%s/x/%d">go %s</a></body></html>',
-        i.cast("int"), dst, (i % 7).cast("int"), pick(_PLD_NAMES, t),
-    )
-    return spark.range(0, n_pages).select(
-        i.alias("doc_id"),
-        F.format_string("https://%s/p/%d", src, i.cast("int")).alias("url"),
-        html.cast("binary").alias("html"),
-    )
-
-
-_SUBLINK_SUBS = ["", "www.", "blog.", "docs."]
-_SUBLINK_SUFS = ["com", "co.uk", "org"]
-
-
-def sublink_pages_sql(n_pages: int = 480) -> str:
-    """DuckDB twin of ``sublink_pages`` — keep the site/subdomain
-    arithmetic and the html shape in lockstep."""
-    lst = lambda xs: "[" + ", ".join(f"'{x}'" for x in xs) + "]"  # noqa: E731
-    subs, names, sufs = lst(_SUBLINK_SUBS), lst(_PLD_NAMES), lst(_SUBLINK_SUFS)
-    return f"""
-SELECT i AS doc_id,
-  'https://' || src || '/p/' || i AS url,
-  '<html><body><p>page ' || i || '</p><a href="https://' || dst || '/x/'
-    || (i % 7) || '">go ' || ({names})[CAST(t AS INT) + 1] || '</a></body></html>' AS html
-FROM (
-  SELECT i, t,
-    ({subs})[CAST(p AS INT) + 1] || ({names})[CAST(s AS INT) + 1]
-      || '.' || ({sufs})[CAST(s % 3 AS INT) + 1] AS src,
-    ({subs})[CAST(q AS INT) + 1] || ({names})[CAST(t AS INT) + 1]
-      || '.' || ({sufs})[CAST(t % 3 AS INT) + 1] AS dst
-  FROM (
-    SELECT t.i AS i, t.i % 8 AS s, (t.i // 8) % 4 AS p,
-      CASE WHEN t.i % 5 = 0 THEN t.i % 8
-           ELSE (t.i % 8 + 1 + (t.i // 24) % 3) % 8 END AS t,
-      CASE WHEN t.i % 5 = 0 THEN ((t.i // 8) % 4 + 1) % 4
-           ELSE (t.i // 96) % 4 END AS q
-    FROM range(0, {n_pages}) t(i)
-  )
 )
 """

@@ -1,7 +1,7 @@
 """Structured Streaming entry points.
 
 The reference has no streaming surface (processing is batch per chunk;
-SURVEY.md §2.11) — this package covers the engine-completeness cases a
-production corpus pipeline needs: incremental page ingestion and windowed
-event aggregation with late-data handling.
+SURVEY.md §2.11) — this package covers incremental page ingestion and
+extraction, windowed event aggregation with late-data handling, stateful
+sessionization, and the exactly-once incremental ER fold (``er``).
 """

@@ -5,6 +5,8 @@ transformations are identical; only the source/sink differ. This is the
 Spark-idiomatic way to keep one codepath for backfill (batch over parquet)
 and incremental (readStream) runs:
 
+* ``read_events_stream`` — file-backed readStream with optional
+  one-file-per-trigger batching (deterministic batch boundaries).
 * ``windowed_counts``  — tumbling-window counts per event_type with a
   watermark for late data.
 * ``stream_extract``   — incremental mention extraction: the same
@@ -18,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.extract import EXTRACT_SCHEMA, extract_graphs
+from ..operators.extract import extract_graphs
 
 
 def read_events_stream(
@@ -84,314 +86,3 @@ def run_available_now(
         .start()
     )
     q.awaitTermination()
-
-
-def stream_dedup(
-    events: DataFrame,
-    *,
-    keys: list[str] | None = None,
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of exact dedup: drop duplicate events within the
-    watermark horizon.
-
-    State is bounded by the watermark — a key is remembered only until
-    event time passes ``watermark``, so state size tracks the duplicate
-    arrival window, not the stream length. (Batch exact dedup over full
-    history stays `operators/dedup.py::exact_duplicates`.)
-    """
-    keys = keys or ["event_id"]
-    return (
-        events.withColumn(ts_col, events[ts_col].cast("timestamp"))
-        .withWatermark(ts_col, watermark)
-        .dropDuplicatesWithinWatermark(keys)
-    )
-
-
-def stream_contamination(
-    docs_stream: DataFrame,
-    eval_docs: DataFrame,
-    *,
-    n: int = 4,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of ``webdata.contaminated_docs``: flag arriving
-    documents sharing ≥ 1 token n-gram with a (batch) eval set.
-
-    STATELESS by construction — the only way the per-doc aggregate
-    stays out of Spark's state store: the eval gram set is collected
-    once at plan-build time and inlined as a literal array (the same
-    inlining discipline as similarity.py's LSH hyperplanes), so each
-    document is scored with one ``array_intersect`` against its own
-    distinct-gram array, no explode, no groupBy, no join. Bounded by
-    the eval-suite size (the whole gram set becomes ONE typed array
-    literal — a single expression-tree node, so plan size stays O(1)
-    in gram count; the hard bound below guards codegen/serialized-plan
-    limits); a corpus-sized "eval" set belongs in the batch operator,
-    not here. Emits the batch operator's exact schema
-    (doc_id, n_grams, n_matched, overlap_frac), contaminated rows only.
-    """
-    from ..operators.dedup import _TOKENS
-    from ..operators.webdata import _gram_col
-
-    _MAX_EVAL_GRAMS = 1_000_000
-    toks = F.expr(_TOKENS.format(c=text_col))
-    eval_grams = sorted(
-        r["gram"]
-        for r in eval_docs.select(toks.alias("_toks"))
-        .select(F.explode(_gram_col(n)).alias("gram"))
-        .distinct()
-        .collect()
-    )
-    if len(eval_grams) > _MAX_EVAL_GRAMS:
-        raise ValueError(
-            f"{len(eval_grams)} eval grams > {_MAX_EVAL_GRAMS}: an eval set "
-            "this large is not inlineable — use the batch operator "
-            "(webdata.contaminated_docs, broadcast-joined) instead"
-        )
-    # one typed literal for the WHOLE list (not one F.lit node per gram —
-    # 10^5+ Column nodes blow plan construction long before the data does)
-    lit_grams = F.lit(eval_grams).cast("array<string>")
-    d = docs_stream.select(
-        F.col(id_col), toks.alias("_toks")
-    ).select(F.col(id_col), F.array_distinct(_gram_col(n)).alias("_grams"))
-    return (
-        d.select(
-            F.col(id_col),
-            F.size("_grams").alias("n_grams"),
-            F.size(F.array_intersect("_grams", lit_grams)).alias("n_matched"),
-        )
-        .filter(F.col("n_matched") > 0)
-        .withColumn(
-            "overlap_frac", F.round(F.col("n_matched") / F.col("n_grams"), 6)
-        )
-    )
-
-
-def stream_near_dup_candidates(
-    docs_stream: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    max_lag: str = "1 hour",
-    max_hamming: int = 8,
-) -> DataFrame:
-    """Streaming near-duplicate detection: each arriving document is
-    checked against documents seen within ``max_lag`` via a SimHash-band
-    stream-stream self-join — the streaming twin of
-    ``operators/dedup.py::simhash_near_dup_pairs``.
-
-    Plan shape (state bounded by the watermark on both sides):
-    1. fingerprint each doc with the STATELESS per-row SimHash expression
-       (``dedup.simhash_col`` — bit-identical to the batch aggregation
-       kernel, no groupBy, so the only stateful operator is the join);
-    2. explode into 4 x 16-bit band keys (pigeonhole: any pair within
-       Hamming <= 3 shares a band; larger ``max_hamming`` trades recall);
-    3. stream-stream self-join on (band, bkey) with an event-time
-       interval condition — Spark retains only ``max_lag`` of band state;
-    4. exact Hamming verify on the candidates.
-
-    Emits (left_id, right_id, left_ts, right_ts, band, hamming) with
-    left before right in EVENT TIME (the earlier doc is the "original",
-    the later its near-dup; id breaks exact ties) — one row per MATCHING
-    BAND, keeping the plan to a single stateful operator; a pair within
-    Hamming of several bands appears once per band, and the trivial
-    downstream dedup is a batch concern, exactly like the batch
-    operator's final dropDuplicates.
-    """
-    from ..operators.dedup import simhash_col
-
-    fp = docs_stream.select(
-        F.col(id_col),
-        F.col(ts_col).cast("timestamp").alias("_ts"),
-        simhash_col(text_col).alias("simhash"),
-    )
-    bands = []
-    for i in range(4):
-        bands.append(fp.select(
-            F.col(id_col), F.col("simhash"), F.col("_ts"),
-            F.lit(i).alias("band"),
-            F.shiftrightunsigned("simhash", i * 16).bitwiseAND(F.lit(0xFFFF)).alias("bkey"),
-        ))
-    banded = bands[0]
-    for b in bands[1:]:
-        banded = banded.unionByName(b)
-
-    left = (
-        banded.select(
-            F.col(id_col).alias("left_id"), F.col("simhash").alias("lh"),
-            F.col("_ts").alias("left_ts"),
-            F.col("band").alias("lband"), F.col("bkey").alias("lbkey"),
-        ).withWatermark("left_ts", watermark)
-    )
-    right = (
-        banded.select(
-            F.col(id_col).alias("right_id"), F.col("simhash").alias("rh"),
-            F.col("_ts").alias("right_ts"),
-            F.col("band").alias("rband"), F.col("bkey").alias("rbkey"),
-        ).withWatermark("right_ts", watermark)
-    )
-    # pair by TIME order (the earlier doc is the "original", the later
-    # one its near-dup), id as the tie-break — unlike the batch operator
-    # ids carry no arrival meaning here
-    joined = left.join(
-        right,
-        (F.col("lband") == F.col("rband"))
-        & (F.col("lbkey") == F.col("rbkey"))
-        & (
-            (F.col("left_ts") < F.col("right_ts"))
-            | ((F.col("left_ts") == F.col("right_ts"))
-               & (F.col("left_id") < F.col("right_id")))
-        )
-        & (F.col("right_ts") <= F.col("left_ts") + F.expr(f"interval {max_lag}")),
-    )
-    hamming = F.bit_count(F.col("lh").bitwiseXOR(F.col("rh")))
-    return (
-        joined.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= max_hamming)
-        .select(
-            "left_id", "right_id", "left_ts", "right_ts",
-            F.col("lband").alias("band"), "hamming",
-        )
-    )
-
-
-def stream_quality_signals(
-    docs_stream: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of the map-only curation signals: per-arriving-doc
-    language ID, composite quality, and token count — STATELESS (pure
-    column expressions from textquality; no watermark, no state store),
-    so it composes with any downstream streaming gate. Batch twins are
-    ``textquality.lang_id`` / ``quality_score``; stream == batch is
-    asserted in tests/test_stream_sessions.py.
-    """
-    from ..operators.textquality import pred_lang_col, quality_col, tokens_col
-
-    return docs_stream.select(
-        F.col(id_col),
-        pred_lang_col(text_col).alias("pred_lang"),
-        quality_col(text_col).alias("quality"),
-        F.size(tokens_col(text_col)).alias("n_words"),
-    )
-
-
-def stream_redact_pii(
-    docs_stream: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of :func:`operators.pii.redact_pii` — STATELESS
-    (redaction is a pure per-row function, so a crawled page can be
-    scrubbed the moment it arrives, before any stateful stage sees the
-    raw text): per-arriving-doc typed-placeholder redaction + per-kind
-    counts. Stream == batch is asserted in tests/test_stream_sessions.py.
-    """
-    from ..operators.pii import redact_pii
-
-    return redact_pii(docs_stream, text_col=text_col, id_col=id_col)
-
-
-def stream_winnow_matches(
-    docs_stream: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    ts_col: str = "ts",
-    watermark: str = "1 hour",
-    max_lag: str = "1 hour",
-    k: int = 5,
-    window: int = 4,
-    stop_fps: DataFrame | None = None,
-) -> DataFrame:
-    """Streaming containment detection: each arriving document's
-    winnowing fingerprints (``dedup.winnow_fingerprints`` — the same
-    md5 gram hashes and local-min selection, computed STATELESSLY as
-    per-row array expressions) are matched against fingerprints of
-    documents seen within ``max_lag`` via a stream-stream self-join
-    keyed on the fingerprint value.
-
-    Emits one row PER SHARED FINGERPRINT — (left_id, right_id, left_ts,
-    right_ts, fp, left_pos, right_pos), earlier doc on the left (id
-    tie-break) — so downstream consumers get the positional match
-    localization batch ``winnow_near_dup_pairs`` aggregates away; a
-    windowed count over (left_id, right_id) reproduces its ``shared``
-    tally (pinned stream==batch in tests).
-
-    Boilerplate control at crawl scale: a hot fingerprint (license
-    header, navigation chrome) joins every pair of docs carrying it,
-    exactly the df-quadratic term the batch operator's ``max_df`` cuts.
-    A stream cannot compute document frequency, so the cut composes
-    with batch instead: pass ``stop_fps`` — any static DataFrame with
-    an ``fp`` column, e.g. the high-df fingerprints the last batch
-    curation run mined — and arriving fingerprints are anti-joined
-    against it (stream-static anti-join: stateless, broadcast-sized by
-    construction) BEFORE entering the stateful self-join.
-    """
-    from ..operators.dedup import _winnow_gram_hashes, winnow_select_expr
-
-    fps = (
-        docs_stream.select(
-            F.col(id_col),
-            F.col(ts_col).cast("timestamp").alias("_ts"),
-            _winnow_gram_hashes(text_col, k).alias("_hs"),
-        )
-        .select(
-            F.col(id_col), F.col("_ts"),
-            F.explode(F.expr(winnow_select_expr(window))).alias("_s"),
-        )
-        .select(
-            F.col(id_col), F.col("_ts"),
-            F.col("_s.pos").alias("pos"), F.col("_s.fp").alias("fp"),
-        )
-    )
-    if stop_fps is not None:
-        fps = fps.join(stop_fps.select("fp").distinct(), "fp", "left_anti")
-    left = fps.select(
-        F.col(id_col).alias("left_id"), F.col("_ts").alias("left_ts"),
-        F.col("pos").alias("left_pos"), F.col("fp"),
-    ).withWatermark("left_ts", watermark)
-    right = fps.select(
-        F.col(id_col).alias("right_id"), F.col("_ts").alias("right_ts"),
-        F.col("pos").alias("right_pos"), F.col("fp").alias("rfp"),
-    ).withWatermark("right_ts", watermark)
-    return left.join(
-        right,
-        (F.col("fp") == F.col("rfp"))
-        & (
-            (F.col("left_ts") < F.col("right_ts"))
-            | ((F.col("left_ts") == F.col("right_ts"))
-               & (F.col("left_id") < F.col("right_id")))
-        )
-        & (F.col("right_ts") <= F.col("left_ts") + F.expr(f"interval {max_lag}")),
-    ).select(
-        "left_id", "right_id", "left_ts", "right_ts",
-        "fp", "left_pos", "right_pos",
-    )
-
-
-def stream_c4_clean(
-    docs_stream: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Streaming twin of :func:`operators.textquality.c4_line_filter` —
-    STATELESS (every C4 rule is a pure per-row array expression, so a
-    crawled page is line-cleaned and gate-flagged the moment it
-    arrives). Batch twin is ``c4_line_filter``; stream == batch is
-    asserted in tests/test_stream_sessions.py.
-    """
-    from ..operators.textquality import c4_line_filter
-
-    return c4_line_filter(
-        docs_stream, id_col=id_col, text_col=text_col, ordered=False
-    )
