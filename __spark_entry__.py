@@ -354,17 +354,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         _, parts = _eval_parts(spark)
         return cluster_size_histogram(parts["assignments"])
 
-    def er_mutual_best(spark, sf_dir):
-        # reciprocal-best 1:1 assignment over the shared name-channel
-        # Dice scores: per-node best is a hash agg (min of a
-        # (-score, partner) struct), mutuality one keyed self-join —
-        # each record in at most one output pair, no windows
-        from textgraphs_spark.plans.er_eval import (
-            eval_entities, mutual_best_study,
-        )
-
-        return mutual_best_study(eval_entities(spark))
-
     def token_concentration(spark, sf_dir):
         # corpus-health concentration census of the token-frequency
         # distribution (Gini / HHI / top-k share) — boilerplate floods
@@ -395,59 +384,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from textgraphs_spark.operators.corpusstats import vocab_growth as vg
 
         return vg(_docs(spark, sf_dir))
-
-    def er_channel_provenance(spark, sf_dir):
-        # match-provenance pivot: per candidate pair, which of the five
-        # blocking channels produced it + truth label — same candidate
-        # generator as the recall study (shared helper, shared CTEs)
-        from textgraphs_spark.plans.er_eval import channel_provenance, eval_entities
-
-        return channel_provenance(eval_entities(spark))
-
-    def er_five_channel_recall(spark, sf_dir):
-        # the capstone budget-vs-recall table: all five blocking
-        # channels + union (name/minhash/skeleton production trio +
-        # round-5 suffix and phonetic), distinct pre-salting candidates
-        from textgraphs_spark.plans.er_eval import (
-            eval_entities, five_channel_recall,
-        )
-
-        return five_channel_recall(eval_entities(spark))
-
-    def er_phonetic_blocking(spark, sf_dir):
-        # sound-alike blocking channel (simplified-Russell code of the
-        # last token + first initial) — the misspelling-recall channel;
-        # the IDENTICAL key expression runs in the DuckDB twin
-        from textgraphs_spark.plans.er_eval import (
-            eval_entities, phonetic_blocking_metrics,
-        )
-
-        return phonetic_blocking_metrics(eval_entities(spark))
-
-    def er_suffix_blocking(spark, sf_dir):
-        # Aizawa-Oyama suffix blocking evaluated on the labeled corpus:
-        # the prefix-corruption channel (truncated first tokens) the
-        # positional name key splits apart; stop-suffix cap at 12 is the
-        # pair budget AND the skew story (oversized blocks dropped,
-        # recall loss measured here, never silent)
-        from textgraphs_spark.plans.er_eval import (
-            eval_entities, suffix_blocking_metrics,
-        )
-
-        return suffix_blocking_metrics(eval_entities(spark))
-
-    def er_canopy_blocking(spark, sf_dir):
-        # rarest-token canopy channel (overlapping canopies, block cap):
-        # anchors on token RARITY, so it survives the reorderings that
-        # break positional keys — and its measured completeness on THIS
-        # corpus (shared surnames by construction) is deliberately low:
-        # the query exists to MEASURE that, the way a production run
-        # decides which channels earn their pair budget
-        from textgraphs_spark.plans.er_eval import (
-            canopy_blocking_metrics, eval_entities,
-        )
-
-        return canopy_blocking_metrics(eval_entities(spark))
 
     def dedup_containment(spark, sf_dir):
         # Broder containment |A∩B|/min(|A|,|B|) over word 3-grams — the
@@ -827,8 +763,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def decontaminate_bloom(spark, sf_dir):
         # scale twin of decontaminate_overlap: broadcast Bloom bitmap
         # prefilter + exact verify — output-identical by construction,
-        # so it shares the EXACT oracle (hash-green = losslessness
-        # proof, the er_edit_join naive-oracle contract)
+        # so it shares the EXACT oracle (hash-green against the naive
+        # oracle = the prefilter lost nothing)
         docs = _docs(spark, sf_dir)
         return WD.contaminated_docs_bloom(
             docs.filter(F.col("doc_id") % 50 != 0),
@@ -1589,16 +1525,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return c4_line_filter(c4_pages(spark))
 
-    def er_jaccard_join(spark, sf_dir):
-        # token-set Jaccard similarity join (PPJoin prefix filter):
-        # rarest-first canonical order, per-set prefix, length filter,
-        # exact set verify; oracle = naive quadratic join, so
-        # hash-green == pruning is lossless
-        from textgraphs_spark.operators.blocking import jaccard_set_join
-        from textgraphs_spark.plans.er_eval import eval_entities
-
-        return jaccard_set_join(eval_entities(spark))
-
     def quality_c4_corpus(spark, sf_dir):
         # the C4 filter in its production form: over the real documents
         # corpus (the generator variant attributes rules; this measures
@@ -1612,15 +1538,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from textgraphs_spark.operators.textquality import gopher_census
 
         return gopher_census(_docs(spark, sf_dir))
-
-    def er_edit_join(spark, sf_dir):
-        # edit-distance similarity join (ED-Join): positional q-gram
-        # prefix filter + JVM levenshtein verify; the oracle is the
-        # naive quadratic join, so hash-green == pruning is lossless
-        from textgraphs_spark.operators.blocking import edit_distance_join
-        from textgraphs_spark.plans.er_eval import eval_entities
-
-        return edit_distance_join(eval_entities(spark))
 
     def er_star_clusters(spark, sf_dir):
         # precision-first alternative to transitive closure: star
@@ -1677,46 +1594,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return fs_tf_adjustments(eval_entities(spark))
 
-    def er_channel_recall(spark, sf_dir):
-        # per-channel blocking recall study (name / minhash / skeleton /
-        # union): the skeleton channel's order-invariant devoweled key
-        # recovers the reversed 'Last First' variants and transposition
-        # typos the last-token key cannot block together
-        from textgraphs_spark.plans.er_eval import channel_recall, eval_entities
-
-        return channel_recall(eval_entities(spark))
-
-    def er_sorted_neighborhood(spark, sf_dir):
-        # Hernandez-Stolfo sorted-neighborhood blocking evaluated on the
-        # labeled corpus: lexicographic locality instead of key equality;
-        # the sort is the range-partitioned global_rank (no single-task
-        # window), the neighborhood an equi-join on rank+d
-        from textgraphs_spark.plans.er_eval import (
-            eval_entities, sorted_neighborhood_metrics,
-        )
-
-        return sorted_neighborhood_metrics(eval_entities(spark))
-
-    def er_meta_blocking(spark, sf_dir):
-        # Papadakis-style meta-blocking: pairs weighted by common-block
-        # count across all three channels; weighted-edge pruning at the
-        # global mean — the candidate-budget-vs-recall trade, measured
-        from textgraphs_spark.plans.er_eval import (
-            eval_entities, meta_blocking_metrics,
-        )
-
-        return meta_blocking_metrics(eval_entities(spark))
-
-    def er_tfidf_pairs(spark, sf_dir):
-        # TF-IDF token-cosine channel via EXACT AllPairs prefix
-        # filtering (rarest-first index); the oracle is the UNFILTERED
-        # inverted-index join, so green == pruning provably lossless.
-        # Weighted-token evidence recovers 'Last First' reorderings
-        # (cosine 1.0) the positional name key blocks apart
-        from textgraphs_spark.plans.er_eval import eval_entities, tfidf_pair_study
-
-        return tfidf_pair_study(eval_entities(spark))
-
     def er_split_overmerged(spark, sf_dir):
         # over-merge repair audit: recluster each loose cluster over
         # match edges at score >= 0.95 only (same components_over_keys
@@ -1737,15 +1614,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         return bcubed_metrics(
             parts["assignments"], ents.select("entity_key", "truth_id")
         )
-
-    def er_soft_tfidf(spark, sf_dir):
-        # Cohen's soft-TF-IDF over the name-key channel: JW-close
-        # (>= 0.9) tokens contribute their full idf weight, so typo'd
-        # first names score near 1.0 where exact-token cosine sees only
-        # the shared last name; JW via the Arrow-batched parity kernel
-        from textgraphs_spark.plans.er_eval import eval_entities, soft_tfidf_study
-
-        return soft_tfidf_study(eval_entities(spark))
 
     def er_clustering_agreement(spark, sf_dir):
         # ARI + NMI between the loose (0.9) clustering and the strict
@@ -1773,23 +1641,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         from textgraphs_spark.plans.er_weights import fs_review_queue
 
         return fs_review_queue(eval_entities(spark))
-
-    def er_dice(spark, sf_dir):
-        # the scorer-comparison floor: Sørensen–Dice token-set overlap
-        # on the SAME name-channel candidates as soft-TF-IDF and
-        # Monge–Elkan — pure set math, no character kernel
-        from textgraphs_spark.plans.er_eval import dice_study, eval_entities
-
-        return dice_study(eval_entities(spark))
-
-    def er_monge_elkan(spark, sf_dir):
-        # the other classic hybrid scorer, on the SAME name-channel
-        # candidates as er_soft_tfidf: mean-of-max JW, unweighted and
-        # threshold-free — rates initialed short forms (~0.89) that
-        # idf-weighting mutes (~0.13); one Arrow JW pass, symmetrized
-        from textgraphs_spark.plans.er_eval import eval_entities, monge_elkan_study
-
-        return monge_elkan_study(eval_entities(spark))
 
     def er_fs_weights(spark, sf_dir):
         # Fellegi-Sunter match weights by unsupervised EM: candidate
@@ -1911,19 +1762,15 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "quality_c4": quality_c4,
         "quality_c4_corpus": quality_c4_corpus,
         "quality_gopher_corpus": quality_gopher_corpus,
-        "er_edit_join": er_edit_join,
-        "er_jaccard_join": er_jaccard_join,
         "graph_modularity": graph_modularity,
         "source_mixture": source_mixture,
         "k_anonymity": k_anonymity,
-        "er_channel_provenance": er_channel_provenance,
         "contrastive_mined_pairs": contrastive_mined_pairs,
         "er_cluster_depth": er_cluster_depth,
         "er_two_table": er_two_table,
         "er_two_table_metrics": er_two_table_metrics,
         "dedup_ablation": dedup_ablation,
         "dsir_weights": dsir_weights,
-        "er_mutual_best": er_mutual_best,
         "er_cluster_sizes": er_cluster_sizes,
         "dedup_span_removal": dedup_span_removal,
         "er_score_calibration": er_score_calibration,
@@ -1931,10 +1778,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "token_concentration": token_concentration,
         "corpus_zipf": corpus_zipf,
         "vocab_growth": vocab_growth,
-        "er_suffix_blocking": er_suffix_blocking,
-        "er_canopy_blocking": er_canopy_blocking,
-        "er_phonetic_blocking": er_phonetic_blocking,
-        "er_five_channel_recall": er_five_channel_recall,
         "graph_clustering_coeff": graph_clustering_coeff,
         "graph_assortativity": graph_assortativity,
         "graph_ktruss": graph_ktruss,
@@ -1944,7 +1787,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "events_funnel": events_funnel,
         "events_cohort_retention": events_cohort_retention,
         "doc_lm_xent2": doc_lm_xent2,
-        "er_dice": er_dice,
         "pack_efficiency": pack_efficiency,
         "graph_kcore": graph_kcore,
         "graph_ppr": graph_ppr,
@@ -1966,10 +1808,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_incremental": er_incremental,
         "dedup_minhash_clusters": dedup_minhash_clusters,
         "communities_label_prop": communities_label_prop,
-        # (d) green r4 but touched this round (shared HyperBall cap,
-        # scorer materialize knob)
-        "er_soft_tfidf": er_soft_tfidf,
-        "er_monge_elkan": er_monge_elkan,
+        # (d) green r4 but touched this round (shared HyperBall cap)
         "graph_harmonic": graph_harmonic,
         "graph_reach_curve": graph_reach_curve,
         # (e) stale: green in r2/r3 records, not re-sampled since
@@ -2045,10 +1884,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_fs_weights": er_fs_weights,
         "er_fs_classify": er_fs_classify,
         "er_fs_tf_adjustments": er_fs_tf_adjustments,
-        "er_channel_recall": er_channel_recall,
-        "er_sorted_neighborhood": er_sorted_neighborhood,
-        "er_meta_blocking": er_meta_blocking,
-        "er_tfidf_pairs": er_tfidf_pairs,
         "er_review_queue": er_review_queue,
         "lm_xent_buckets": lm_xent_buckets,
         "lm_xent_bucket_stats": lm_xent_bucket_stats,
@@ -2794,23 +2629,15 @@ FROM nation JOIN region ON n_regionkey = r_regionkey
         salted_blocking_pairs_sql,
     )
     from textgraphs_spark.plans.er_eval import (
-        er_blocking_stats_sql, er_channel_recall_sql, er_cluster_cohesion_sql,
-        er_cluster_sizes_sql,
+        er_blocking_stats_sql, er_cluster_cohesion_sql, er_cluster_sizes_sql,
         er_eval_blocked_sql, er_eval_clusters_sql, er_golden_records_sql,
         er_constrained_clusters_sql, er_constraint_violations_sql,
         er_cluster_churn_sql, er_merge_review_sql, er_reviewed_clusters_sql,
         blocking_budget_curve_sql as _ER_EVAL_budget_sql,
-        er_bcubed_sql, er_clustering_agreement_sql, er_dice_sql,
-        er_channel_provenance_sql, er_cluster_depth_sql, er_two_table_sql,
-        er_two_table_metrics_sql,
-        er_five_channel_recall_sql, er_meta_blocking_sql,
-        er_monge_elkan_sql, er_mutual_best_sql, er_phonetic_blocking_sql,
-        er_score_calibration_sql, er_soft_tfidf_sql,
-        er_edit_join_sql, er_jaccard_join_sql,
-        er_sorted_neighborhood_sql, er_split_overmerged_sql,
-        er_star_clusters_sql,
-        er_canopy_blocking_sql,
-        er_suffix_blocking_sql, er_threshold_sweep_sql, er_tfidf_pairs_sql,
+        er_bcubed_sql, er_clustering_agreement_sql,
+        er_cluster_depth_sql, er_two_table_sql, er_two_table_metrics_sql,
+        er_score_calibration_sql, er_split_overmerged_sql,
+        er_star_clusters_sql, er_threshold_sweep_sql,
     )
     from textgraphs_spark.plans.er_oracle import entity_pmi_sql
     from textgraphs_spark.operators.textquality import (
@@ -2934,18 +2761,12 @@ FROM per_doc GROUP BY lang
         "token_concentration": _concentration_sql(toks_u),
         "corpus_zipf": _zipf_sql(toks_u),
         "vocab_growth": _vocab_growth_sql(toks_u),
-        "er_suffix_blocking": er_suffix_blocking_sql(),
-        "er_canopy_blocking": er_canopy_blocking_sql(),
         "entity_pmi": entity_pmi_sql(),
         "bpe_pair_census": _bpe_sql("SELECT * FROM documents"),
         "bm25_topk": _bm25_sql(
             "SELECT * FROM documents",
             ", ".join(f"({q}, '{t}')" for q, t in _BM25_QUERIES),
         ),
-        "er_phonetic_blocking": er_phonetic_blocking_sql(),
-        "er_five_channel_recall": er_five_channel_recall_sql(),
-        "er_dice": er_dice_sql(),
-        "er_mutual_best": er_mutual_best_sql(),
         "er_cluster_sizes": er_cluster_sizes_sql(),
         "er_score_calibration": er_score_calibration_sql(),
         "ranked_phrases": ranked_phrases_sql(),
@@ -2966,8 +2787,6 @@ FROM per_doc GROUP BY lang
         "quality_c4": _c4_filter_oracle(),
         "quality_c4_corpus": _c4_corpus_oracle(),
         "quality_gopher_corpus": _gopher_corpus_oracle(),
-        "er_edit_join": er_edit_join_sql(),
-        "er_jaccard_join": er_jaccard_join_sql(),
         "er_golden_records": er_golden_records_sql(),
         "er_cluster_cohesion": er_cluster_cohesion_sql(),
         "er_threshold_sweep": er_threshold_sweep_sql(),
@@ -2976,16 +2795,10 @@ FROM per_doc GROUP BY lang
         "er_fs_classify": fs_classified_metrics_sql(),
         "er_fs_clusters": fs_cluster_eval_sql(),
         "er_fs_tf_adjustments": fs_tf_adjustments_sql(),
-        "er_channel_recall": er_channel_recall_sql(),
-        "er_sorted_neighborhood": er_sorted_neighborhood_sql(),
-        "er_meta_blocking": er_meta_blocking_sql(),
-        "er_tfidf_pairs": er_tfidf_pairs_sql(),
         "er_split_overmerged": er_split_overmerged_sql(),
         "er_bcubed": er_bcubed_sql(),
-        "er_soft_tfidf": er_soft_tfidf_sql(),
         "er_clustering_agreement": er_clustering_agreement_sql(),
         "er_review_queue": fs_review_queue_sql(),
-        "er_monge_elkan": er_monge_elkan_sql(),
         "lm_xent_buckets": lm_xent_buckets_sql,
         "lm_xent_bucket_stats": lm_xent_bucket_stats_sql,
         "dedup_minhash": minhash_oracle_sql(threshold=0.7),
@@ -3108,7 +2921,6 @@ FROM agg WHERE n_matched > 0
 """ for key in ("decontaminate_overlap", "decontaminate_bloom")},
         "source_mixture": _source_mixture_oracle(),
         "k_anonymity": _k_anonymity_oracle(),
-        "er_channel_provenance": er_channel_provenance_sql(),
         "contrastive_mined_pairs": _contrastive_pairs_oracle(),
         "er_cluster_depth": er_cluster_depth_sql(),
         "er_two_table": er_two_table_sql(),

@@ -5,10 +5,10 @@
    "er": {...}, "scaling": {...}}
 
 * headline queries at $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-  on local[$SPARK_GRAFT_CPUS] (default 32);
+  on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on);
 * the north-rule scaling evidence: the same lean ER job on identical
   synthetic pages at local[N] and local[4N] (default 2 vs 8 — both levels
-  fit the 32-CPU host with headroom, the sandbox proxy for N vs 4N
+  fit a 32-CPU host with headroom, the sandbox proxy for N vs 4N
   executors; override with SPARK_GRAFT_SCALE_LOW/HIGH), reporting docs/sec
   at both plus scaling efficiency = (throughput_4N / throughput_N) / 4.
 
@@ -52,7 +52,7 @@ def _log(msg: str) -> None:
     print(msg, file=_ERR)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
 SCALING_PAGES = int(os.environ.get("SPARK_GRAFT_SCALING_PAGES", "500000"))
 # N vs 4N parallelism for the scaling criterion. Default 2 vs 8: on this
 # single box, both levels are below machine saturation, so the measurement

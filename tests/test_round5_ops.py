@@ -1,10 +1,10 @@
 """Round-5 operator tests: clustering coefficient, degree
-assortativity, suffix blocking, n-gram containment.
+assortativity, n-gram containment.
 
 Each pins hand-computable values on tiny synthetic graphs/corpora —
 the oracle sweep covers corpus-scale value parity, these cover the
 semantics the oracle can't isolate (known-topology coefficients,
-subset-dup vs resemblance separation, prefix-corruption recall)."""
+subset-dup vs resemblance separation)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -15,7 +15,6 @@ from textgraphs_spark.operators.dedup import (
 from textgraphs_spark.operators.graphops import (
     clustering_coefficient, degree_assortativity,
 )
-from textgraphs_spark.plans.er_eval import suffix_blocking_metrics
 
 
 def test_clustering_coefficient_known_graph(spark):
@@ -62,47 +61,6 @@ def test_assortativity_regular_graph_is_null(spark):
     row = degree_assortativity(edges).collect()[0]
     assert row["n_edges"] == 4
     assert row["assortativity"] is None
-
-
-def test_suffix_blocking_catches_prefix_corruption(spark):
-    # 'werner herzog' vs 'w herzog': the positional name key channel and
-    # any prefix-anchored key miss nothing here, but the point is the
-    # SHARED SUFFIX 'herzog' (len >= 5) blocks them together; the
-    # unrelated pair shares no >=5 suffix
-    ents = spark.createDataFrame(
-        [
-            ("e1", "Werner Herzog", 1),
-            ("e2", "W. Herzog", 1),
-            ("e3", "Lotte Eisner", 2),
-            ("e4", "Klaus Kinski", 3),
-        ],
-        "entity_key string, surface string, truth_id long",
-    )
-    row = suffix_blocking_metrics(ents, min_len=5, max_block=4).collect()[0]
-    assert row["covered_true_pairs"] == 1      # the herzog pair
-    assert row["pair_completeness"] == 1.0     # it is the only true pair
-    assert row["n_candidates"] >= 1
-
-
-def test_suffix_blocking_stop_suffix_cap(spark):
-    # every surface ends in 'common' -> that suffix's block (and its
-    # 5-char tail 'ommon') holds all 5 records; max_block=3 drops both,
-    # so ONLY pairs sharing a rarer (longer) suffix survive: the twins.
-    # The letter just before 'common' differs across non-twins, so no
-    # accidental longer suffix is shared.
-    ents = spark.createDataFrame(
-        [
-            ("e1", "zzkaren common", 1),
-            ("e2", "zzkaren common", 1),
-            ("e3", "qqlouis common", 2),
-            ("e4", "rrmarie common", 3),
-            ("e5", "ssnigel common", 4),
-        ],
-        "entity_key string, surface string, truth_id long",
-    )
-    row = suffix_blocking_metrics(ents, min_len=5, max_block=3).collect()[0]
-    assert row["n_candidates"] == 1
-    assert row["covered_true_pairs"] == 1
 
 
 def test_containment_finds_subset_dup_jaccard_misses(spark):
@@ -175,48 +133,6 @@ def test_ktruss_cascading_peel(spark):
     assert out.columns == ["a", "b", "support"]
     # k=3 (support >= 1) keeps all 7 edges of the triangle chain
     assert ktruss(edges, k=3).count() == 7
-
-
-def test_phonetic_blocking_sound_alikes(spark):
-    # johnson/jonson and smith/smyth key together phonetically while
-    # every exact last_tok key splits them; the unrelated pair stays
-    # apart -> completeness 1.0 with exactly 2 candidates
-    from textgraphs_spark.plans.er_eval import phonetic_blocking_metrics
-
-    ents = spark.createDataFrame(
-        [
-            ("e1", "Mary Johnson", 1),
-            ("e2", "Mary Jonson", 1),
-            ("e3", "John Smith", 2),
-            ("e4", "Jon Smyth", 2),
-            ("e5", "Klaus Kinski", 3),
-        ],
-        "entity_key string, surface string, truth_id long",
-    )
-    row = phonetic_blocking_metrics(ents).collect()[0]
-    assert row["n_candidates"] == 2
-    assert row["covered_true_pairs"] == 2
-    assert row["pair_completeness"] == 1.0
-
-
-def test_phonetic_expr_parity_spark_vs_duckdb(spark):
-    # the SAME expression text modulo the 'g' flag must produce the
-    # SAME keys in both engines — the parity-by-construction claim
-    import duckdb
-
-    from textgraphs_spark.operators.blocking import phonetic_expr
-
-    toks = ["johnson", "jonson", "smith", "smyth", "herzog", "kinski",
-            "eisner", "a", "zzz", "aeiou"]
-    sdf = spark.createDataFrame([(t,) for t in toks], "t string").selectExpr(
-        "t", f"{phonetic_expr('t')} AS k"
-    )
-    got_spark = {r["t"]: r["k"] for r in sdf.collect()}
-    vals = ", ".join(f"('{t}')" for t in toks)
-    got_duck = dict(duckdb.sql(
-        f"SELECT t, {phonetic_expr('t', duck=True)} FROM (VALUES {vals}) v(t)"
-    ).fetchall())
-    assert got_spark == got_duck
 
 
 def test_hits_matches_numpy_power_iteration(spark):
@@ -366,43 +282,6 @@ def test_bigram_xent_short_docs(spark):
     assert got[3]["xent2"] == 0.0
 
 
-def test_five_channel_recall_union_dominates(spark):
-    # union completeness >= every single channel's, and the frame has
-    # exactly the six expected channel rows
-    from textgraphs_spark.plans.er_eval import (
-        eval_entities, five_channel_recall,
-    )
-
-    rows = {r["channel"]: r for r in
-            five_channel_recall(eval_entities(spark, n_base=40, n_twin=10)).collect()}
-    assert set(rows) == {"name", "minhash", "skeleton", "suffix",
-                         "phonetic", "union"}
-    u = rows["union"]["pair_completeness"]
-    for ch, r in rows.items():
-        assert r["pair_completeness"] <= u + 1e-9, ch
-        assert r["n_candidates"] >= r["covered_true_pairs"]
-
-
-def test_dice_known_values(spark):
-    # 'Werner Herzog' vs 'Werner X Herzog': sets {werner,herzog} vs
-    # {werner,x,herzog} -> dice = 2*2/(2+3) = 0.8, sharing the name key
-    from textgraphs_spark.plans.er_eval import dice_study
-
-    ents = spark.createDataFrame(
-        [
-            ("e1", "Werner Herzog", 1),
-            ("e2", "Werner X. Herzog", 1),
-            ("e3", "Walter Herzog", 2),
-        ],
-        "entity_key string, surface string, truth_id long",
-    )
-    got = {(r["left_id"], r["right_id"]): r for r in dice_study(ents).collect()}
-    assert got[("e1", "e2")]["dice"] == 0.8
-    assert got[("e1", "e2")]["is_true"] is True
-    assert got[("e1", "e3")]["dice"] == 0.5     # {werner,herzog}|{walter,herzog}
-    assert got[("e1", "e3")]["is_true"] is False
-
-
 def test_pack_efficiency_conservation(spark, sf_dir):
     # per-shard invariants of the packing plan: capacity covers tokens,
     # padding < one sequence's worth, and the doc/token totals
@@ -518,48 +397,6 @@ def test_gopher_census_on_generator(spark):
     assert abs(got["all_rules"]["pass_share"] - (n - n_bad) / n) < 1e-9
 
 
-def test_edit_join_matches_naive_with_short_strings(spark):
-    """edit_distance_join == the naive quadratic join on a corpus that
-    exercises every channel: short strings sharing ZERO grams but
-    within distance k ('ab'/'cd' would be invisible to any gram index —
-    the short channel must catch them), transpositions (lev 2),
-     1-substitutions, and far pairs that must be pruned."""
-    import itertools
-
-    from textgraphs_spark.operators.blocking import edit_distance_join
-
-    surfs = [
-        "ab", "cd", "abc", "alice stone", "alice stnoe", "alise stone",
-        "bob stone", "alice ston", "wholly unrelated surface", "a", "",
-    ]
-    ents = spark.createDataFrame(
-        [(f"e{i}", s) for i, s in enumerate(surfs)], "entity_key string, surface string"
-    )
-    got = {(r["left_id"], r["right_id"]): r["lev"]
-           for r in edit_distance_join(ents, k=2).collect()}
-
-    def lev(a, b):
-        dp = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, dp[0] = dp[0], i
-            for j, cb in enumerate(b, 1):
-                prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1,
-                                         prev + (ca != cb))
-        return dp[len(b)]
-
-    want = {}
-    for (i, a), (j, b) in itertools.combinations(enumerate(surfs), 2):
-        d = lev(a.lower(), b.lower())
-        if d <= 2:
-            # engine contract (and oracle): left_id < right_id as STRINGS,
-            # not enumeration order — "e10" sorts before "e9"
-            want[tuple(sorted((f"e{i}", f"e{j}")))] = d
-    assert got == want
-    assert got[("e0", "e1")] == 2          # zero shared grams, short channel
-    assert got[("e3", "e4")] == 2          # transposition
-    assert ("e3", "e8") not in got         # far pair pruned AND verified out
-
-
 def test_c4_line_filter_on_generator(spark):
     """Every C4 gate fires on exactly the residues built to trip it:
     0-kept pages (no terminal punct / short lines), 2-kept pages
@@ -588,59 +425,6 @@ def test_c4_line_filter_on_generator(spark):
     import hashlib
     empty = hashlib.md5(b"").hexdigest()
     assert all(r["clean_md5"] == empty for r in by_res[1])
-
-
-def test_jaccard_join_matches_naive(spark):
-    """jaccard_set_join == the naive quadratic join on a corpus with
-    identical sets (j=1), majority-overlap sets, sub-threshold pairs,
-    singleton tokens, and an empty-after-normalization surface (must be
-    excluded, not crash)."""
-    import itertools
-
-    from textgraphs_spark.operators.blocking import jaccard_set_join
-
-    surfs = [
-        "alice stone", "alice b stone", "stone alice", "alice stone jr",
-        "bob iron gate", "iron gate", "zz", "", "alice", "bob gate iron",
-    ]
-    ents = spark.createDataFrame(
-        [(f"e{i:02d}", s) for i, s in enumerate(surfs)],
-        "entity_key string, surface string",
-    )
-    got = {(r["left_id"], r["right_id"]): r["jaccard"]
-           for r in jaccard_set_join(ents, threshold=0.5).collect()}
-
-    def toks(s):
-        return set(t for t in s.lower().split() if t)
-
-    want = {}
-    for (i, a), (j, b) in itertools.combinations(enumerate(surfs), 2):
-        ta, tb = toks(a), toks(b)
-        if not ta or not tb:
-            continue
-        jac = len(ta & tb) / len(ta | tb)
-        if round(jac, 9) >= 0.5:
-            want[(f"e{i:02d}", f"e{j:02d}")] = round(jac, 6)
-    assert got == want
-    assert got[("e00", "e02")] == 1.0            # same token set, reordered
-    assert got[("e04", "e09")] == 1.0            # 3-token permutation
-    assert got[("e00", "e01")] == round(2 / 3, 6)
-    # ('alice stone','alice') -> |inter|=1, |union|=2 -> exactly 0.5: kept,
-    # and the length filter (1 >= 0.5*2) admits the asymmetric pair
-    assert got[("e00", "e08")] == 0.5
-
-
-def test_jaccard_join_threshold_boundary(spark):
-    """A pair at exactly the threshold is KEPT (>=, both engines round
-    through 9 digits first)."""
-    from textgraphs_spark.operators.blocking import jaccard_set_join
-
-    ents = spark.createDataFrame(
-        [("a", "alice stone"), ("b", "alice")],
-        "entity_key string, surface string",
-    )
-    rows = jaccard_set_join(ents, threshold=0.5).collect()
-    assert len(rows) == 1 and rows[0]["jaccard"] == 0.5
 
 
 def test_modularity_two_triangles_bridge(spark):
@@ -737,37 +521,6 @@ def test_k_anonymity_census_hand_computed(spark):
     assert got[5]["share_below"] == 0.375
 
 
-def test_channel_provenance_flags(spark):
-    """Sound-alike twins are found by phonetic but not by the exact
-    name key; identical surfaces hit every applicable channel; flags
-    agree with n_channels."""
-    from textgraphs_spark.plans.er_eval import channel_provenance
-
-    ents = spark.createDataFrame(
-        [
-            ("e1", "Mary Johnson", 1),
-            ("e2", "Mary Jonson", 1),
-            ("e3", "Mary Johnson", 1),
-            ("e4", "Peter Quill", 2),
-        ],
-        "entity_key string, surface string, truth_id long",
-    )
-    got = {(r["left_id"], r["right_id"]): r for r in channel_provenance(ents).collect()}
-    twins = got[("e1", "e3")]
-    assert twins["in_name"] == 1 and twins["in_phonetic"] == 1
-    assert twins["is_true"]
-    sound = got[("e1", "e2")]
-    assert sound["in_phonetic"] == 1
-    assert sound["in_name"] == 0          # johnson != jonson exact key
-    for r in got.values():
-        n = (r["in_name"] + r["in_minhash"] + r["in_skeleton"]
-             + r["in_suffix"] + r["in_phonetic"])
-        assert n == r["n_channels"]
-    assert not any(
-        "e4" in k and r["is_true"] for k, r in got.items()
-    )
-
-
 def test_contrastive_pairs_labels_and_determinism(spark):
     """Near-identical docs label 1; bucket-colliding low-Jaccard pairs
     label 0 (when the pair hash keeps them); labels never overlap; and
@@ -823,34 +576,6 @@ def test_cluster_depth_census_chain_star_singleton(spark):
     assert got[2] == (1, 4)     # star via leaf root: m->z->n,p
     assert got[0] == (1, 1)     # the singleton
     assert set(got) == {0, 2, 3}
-
-
-def test_similarity_joins_null_and_unicode_surfaces(spark):
-    """NULL surfaces and surfaces that normalize to empty (pure-unicode
-    names under the [A-Za-z ] normalizer) are EXCLUDED, not crashed on,
-    by both lossless similarity joins; the surviving ASCII pair still
-    matches."""
-    from textgraphs_spark.operators.blocking import (
-        edit_distance_join, jaccard_set_join,
-    )
-
-    ents = spark.createDataFrame(
-        [("e1", "alice stone"), ("e2", "alice stone"), ("e3", None),
-         ("e4", "寿司 太郎"), ("e5", "émile zola")],
-        "entity_key string, surface string",
-    )
-    ej = {(r["left_id"], r["right_id"]): r["lev"]
-          for r in edit_distance_join(ents, k=2).collect()}
-    assert ej[("e1", "e2")] == 0
-    assert all("e3" not in k and "e4" not in k for k in ej)
-    jj = {(r["left_id"], r["right_id"]): r["jaccard"]
-          for r in jaccard_set_join(ents, threshold=0.5).collect()}
-    assert jj[("e1", "e2")] == 1.0
-    assert all("e3" not in k and "e4" not in k for k in jj)
-    # 'émile zola' normalizes to 'mile zola' (accented char stripped):
-    # still a valid 2-token surface, present in neither result only
-    # because nothing matches it — not because it was dropped
-    assert not any("e5" in k for k in jj)
 
 
 def test_two_table_linkage_semantics(spark):
@@ -1117,46 +842,6 @@ def test_crawl_delta_new_changed_unchanged(spark):
     d2 = got["2024-01-02 00:00:00"]
     assert (d2["n_new"], d2["n_changed"], d2["n_unchanged"]) == (1, 1, 1)
     assert d2["change_rate"] == 0.5
-
-
-def test_canopy_blocking_survives_token_reordering(spark):
-    """'Herzog, Werner' vs 'Werner Herzog': last_tok positional keys
-    split them ('werner' vs 'herzog'), but both sit in the rare-token
-    canopies {werner, herzog} -> covered. The unrelated record shares
-    no canopy."""
-    from textgraphs_spark.plans.er_eval import canopy_blocking_metrics
-
-    ents = spark.createDataFrame(
-        [
-            ("e1", "Werner Herzog", 1),
-            ("e2", "Herzog, Werner", 1),
-            ("e3", "Lotte Eisner", 2),
-        ],
-        "entity_key string, surface string, truth_id long",
-    )
-    row = canopy_blocking_metrics(ents, n_keys=2, max_block=4).collect()[0]
-    assert row["covered_true_pairs"] == 1
-    assert row["pair_completeness"] == 1.0
-    assert row["n_candidates"] == 1
-
-
-def test_canopy_blocking_block_cap_drops_stop_token(spark):
-    """A token shared by every record ('gmbh') is dropped by the block
-    cap; only the rare-token canopy pair survives."""
-    from textgraphs_spark.plans.er_eval import canopy_blocking_metrics
-
-    ents = spark.createDataFrame(
-        [
-            ("e1", "acme gmbh", 1),
-            ("e2", "acme gmbh", 1),
-            ("e3", "volt gmbh", 2),
-            ("e4", "kern gmbh", 3),
-            ("e5", "lund gmbh", 4),
-        ],
-        "entity_key string, surface string, truth_id long",
-    )
-    row = canopy_blocking_metrics(ents, n_keys=2, max_block=3).collect()[0]
-    assert row["n_candidates"] == 1 and row["covered_true_pairs"] == 1
 
 
 def test_crawler_traps_separates_trap_from_organic_hosts(spark):

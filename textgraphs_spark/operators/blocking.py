@@ -50,48 +50,10 @@ def normalize_names(entities: DataFrame) -> DataFrame:
     )
 
 
-# Russell/Soundex consonant classes: b f p v → 1, c g j k q s x z → 2,
-# d t → 3, l → 4, m n → 5, r → 6, vowels + h/w/y → 0 (dropped)
-_PHON_SRC = "abcdefghijklmnopqrstuvwxyz"
-_PHON_DST = "01230120022455012623010202"
-
-
-def phonetic_expr(col: str, *, duck: bool = False) -> str:
-    """Simplified Russell-style phonetic code of an already-normalized
-    (lowercase alpha) token column, as ONE SQL expression valid in both
-    Spark SQL and DuckDB (``duck=True`` adds the 'g' regexp flag DuckDB
-    needs for replace-all; Spark replaces all by default): first letter
-    + soundex consonant classes of the rest, adjacent same-class runs
-    collapsed, vowel class dropped, truncated to 4. Deliberately NOT
-    the full Soundex h/w boundary rule — the identical expression runs
-    in both engines, so cross-engine parity is by construction, and the
-    channel's recall is measured by its metrics row, never assumed.
-    'johnson' and 'jonson' both key to j525; 'smith'/'smyth' to s53."""
-    g = ", 'g'" if duck else ""
-    codes = f"translate(substring({col}, 2), '{_PHON_SRC}', '{_PHON_DST}')"
-    for d in "123456":
-        codes = f"regexp_replace({codes}, '{d}{d}+', '{d}'{g})"
-    codes = f"regexp_replace({codes}, '0', ''{g})"
-    return f"substring(concat(substring({col}, 1, 1), {codes}), 1, 4)"
-
-
 def block_keys(entities: DataFrame) -> DataFrame:
     """entities(entity_key, surface, ...) → (block_key, entity_key, ...)."""
     e = normalize_names(entities)
     return e.withColumn("block_key", F.concat_ws("|", "last_tok", "first_init"))
-
-
-def skeleton_key(norm_col: str = "norm"):
-    """Order-invariant devoweled blocking key over a normalized surface:
-    each token's consonant skeleton, sorted, '|'-joined. Robust to the
-    two variant families the last-token|first-initial key cannot block
-    together — token reorder ('Herzog Werner' vs 'Werner Herzog') and
-    vowel-adjacent transposition typos ('Wrener' → 'wrnr' = 'Werner').
-    Pure codegen expression; no UDF. The DuckDB twin lives in
-    plans/er_eval.er_channel_recall_sql (list_transform + list_sort)."""
-    toks = F.split(F.trim(F.col(norm_col)), " +")
-    skel = F.transform(toks, lambda t: F.regexp_replace(t, "[aeiou]", ""))
-    return F.concat_ws("|", F.array_sort(skel))
 
 
 def minhash_xor_constants(num_hashes: int) -> list[int]:
@@ -265,16 +227,15 @@ def _salt_oversized(df: DataFrame, key_col: str, id_col: str, max_block_size: in
 
     EAGER + BATCH-ONLY: this materializes ``df`` (localCheckpoint) and
     runs the sizing count at plan-construction time — public operators
-    built on it (``candidate_pairs``, ``ngram_jaccard_pairs``) therefore
-    execute jobs when *called*, not when acted on, and cannot accept
-    streaming DataFrames (use the stateless band-join path in
-    streaming/events.py for streams).
+    built on it (``candidate_pairs``, ``dedup.ngram_jaccard_pairs``)
+    therefore execute jobs when *called*, not when acted on, and cannot
+    accept streaming DataFrames: block sizing is a global aggregate over
+    the whole input, which a stream never has.
     """
     if df.isStreaming:
         raise TypeError(
-            "salted blocking requires a batch DataFrame (block sizing is "
-            "a global aggregate); for streams use the SimHash/band join "
-            "operators in textgraphs_spark.streaming.events"
+            "salted blocking is batch-only: block sizing is a global "
+            "aggregate over the whole input, so it needs a batch DataFrame"
         )
     # materialize the input ONCE: the sizing aggregation, the broadcast
     # guard's count, and the downstream self-join all read these
@@ -367,360 +328,8 @@ def candidate_pairs(
     return pairs.dropDuplicates(["left_id", "right_id"])
 
 
-# ---------------------------------------------------------------------------
-# TF-IDF token-cosine similarity join (AllPairs/PPJoin-style prefix filter)
-# ---------------------------------------------------------------------------
-
 def tokens_col(text_col: str) -> Column:
     """Lowercased Unicode-letter/digit runs of ``text_col`` (array<string>)."""
     return F.expr(
         f"filter(split(lower({text_col}), '[^\\\\p{{L}}0-9]+'), t -> t <> '')"
-    )
-
-
-def tfidf_unit_vectors(
-    records: DataFrame,
-    *,
-    id_col: str = "entity_key",
-    text_col: str = "surface",
-) -> DataFrame:
-    """Unit-normalized TF-IDF token vectors — (rid, token, df, u).
-
-    Weighting: ``tf * ln(1 + N / df)`` (smooth idf — never zero, so a
-    record of all-common tokens still has a defined direction), then
-    L2-normalized per record. Records whose surface tokenizes to
-    nothing are dropped (a zero vector has no cosine).
-
-    Scale shape: tf is one (rid, token) hash agg; df one token-keyed
-    agg joined back by SHUFFLE on token (the token vocabulary of a
-    10^12-doc corpus is not broadcastable); norms one rid-keyed agg
-    joined back on rid. Every stage is a partial-aggregated hash agg —
-    no windows, no Python.
-    """
-    toks = records.select(
-        F.col(id_col).alias("rid"),
-        F.explode(tokens_col(text_col)).alias("token"),
-    )
-    tf = toks.groupBy("rid", "token").agg(F.count("*").alias("tf"))
-    dfreq = tf.groupBy("token").agg(F.count("*").alias("df"))
-    n_total = records.select(F.count("*").alias("n_total"))
-    w = (
-        tf.join(dfreq, "token")
-        .crossJoin(F.broadcast(n_total))
-        .withColumn("w", F.col("tf") * F.log(F.lit(1.0) + F.col("n_total") / F.col("df")))
-    )
-    nrm = w.groupBy("rid").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nm"))
-    return (
-        w.join(nrm, "rid")
-        .filter(F.col("nm") > 0)
-        .select("rid", "token", "df", (F.col("w") / F.col("nm")).alias("u"))
-    )
-
-
-def tfidf_cosine_pairs(
-    records: DataFrame,
-    *,
-    id_col: str = "entity_key",
-    text_col: str = "surface",
-    threshold: float = 0.5,
-    prefix_filter: bool = True,
-    materialize: bool = True,
-) -> DataFrame:
-    """All record pairs with TF-IDF token cosine >= ``threshold`` —
-    (left_id, right_id, cosine), EXACT, via AllPairs-style prefix
-    filtering (Bayardo/Ma/Srikant WWW'07; Xiao et al. PPJoin).
-
-    The candidate join indexes only each record's PREFIX tokens — its
-    tokens ordered rarest-first (df asc, token asc), keeping position i
-    only while the unit-vector tail from i has norm >= threshold. If
-    two records share no prefix token of x, every shared token lies in
-    x's tail T, so cos <= ||T|| < threshold — pruning is LOSSLESS
-    (asserted against the unfiltered inverted-index join in tests).
-    Rarest-first ordering makes the indexed posting lists the SHORT
-    ones: the head token of the df distribution ("smith", "www") is
-    exactly what the prefix bound evicts first, so the quadratic
-    blow-up of the full inverted-index self-join never materializes.
-
-    This is the third candidate channel next to key-blocking and
-    MinHash-LSH: weighted-token evidence catches token REORDERINGS
-    ('Smith John' vs 'John Smith' -> cosine 1.0) that positional name
-    keys miss, and down-weights agreement on ubiquitous tokens that
-    equi-joins over-trust.
-
-    The verify stage re-joins candidates to FULL vectors (dot product
-    over all shared tokens), so the threshold compare — on
-    round(cos, 9), making the boundary identical across engines —
-    never trusts the prune. Per-record prefix marking is one window
-    partitioned by rid (records are tiny; rid is never hot).
-
-    ``materialize=True`` (EAGER + BATCH-ONLY, like ``candidate_pairs``)
-    localCheckpoints the unit-vector table: it feeds the prefix index
-    AND both verify sides, so the lazy form re-derives the tf/df/norm
-    agg chain three times — at 10^12 docs that is two redundant corpus
-    scans. Streaming callers pass ``materialize=False``.
-
-    Returns cosine rounded to 6 (hash-stable across summation orders).
-    """
-    from pyspark.sql import Window
-
-    u = tfidf_unit_vectors(records, id_col=id_col, text_col=text_col)
-    if materialize:
-        u = u.localCheckpoint()
-    if prefix_filter:
-        wspec = (
-            Window.partitionBy("rid")
-            .orderBy(F.asc("df"), F.asc("token"))
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        head = F.coalesce(F.sum(F.col("u") * F.col("u")).over(wspec), F.lit(0.0))
-        idx = u.withColumn("_head", head).filter(
-            # tail norm^2 = 1 - head; keep while tail can still reach t
-            # (1e-12 slack: err on indexing MORE, never less)
-            F.lit(1.0) - F.col("_head") > threshold * threshold - 1e-12
-        )
-    else:
-        idx = u
-    cand = (
-        idx.select("token", F.col("rid").alias("left_id"))
-        .join(idx.select("token", F.col("rid").alias("right_id")), "token")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .dropDuplicates(["left_id", "right_id"])
-    )
-    ua = u.select(F.col("rid").alias("left_id"), "token", F.col("u").alias("ul"))
-    ub = u.select(F.col("rid").alias("right_id"), "token", F.col("u").alias("ur"))
-    return (
-        cand.join(ua, "left_id")
-        .join(ub, ["right_id", "token"])
-        .groupBy("left_id", "right_id")
-        .agg(F.sum(F.col("ul") * F.col("ur")).alias("_cos"))
-        .filter(F.round("_cos", 9) >= threshold)
-        .select("left_id", "right_id", F.round("_cos", 6).alias("cosine"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# edit-distance similarity join (ED-Join: positional q-gram prefix filter
-# + native Levenshtein verify)
-# ---------------------------------------------------------------------------
-
-def edit_distance_join(
-    entities: DataFrame,
-    *,
-    k: int = 2,
-    q: int = 2,
-    id_col: str = "entity_key",
-) -> DataFrame:
-    """All unordered surface pairs within Levenshtein distance ``k`` of
-    each other — WITHOUT the naive all-pairs join (Xiao et al., ED-Join,
-    VLDB'08; reference kg.py scores candidate spans with edit-family
-    similarity, this is the join that FINDS them at corpus scale).
-
-    Plan (lossless by the q-gram prefix-filter theorem):
-
-    1. positional q-grams per normalized surface; one tiny global
-       gram-frequency table (<= (27)^q rows for name text — always
-       broadcastable);
-    2. PREFIX selection: each string keeps only its q*k + 1 rarest
-       grams (df asc, gram, pos tiebreak) — one edit destroys at most
-       q positional grams, so two strings within distance k MUST share
-       a prefix gram with positions differing by <= k;
-    3. inverted-index join on (gram) + position window + length window
-       (|len_a - len_b| <= k), distinct pairs;
-    4. SHORT channel: strings with <= q*k grams (the prefix theorem is
-       vacuous there — a k-edit can destroy every gram) are paired
-       exhaustively within the length window instead;
-    5. exact verify: JVM-native levenshtein(a, b) <= k.
-
-    Output: (left_id, right_id, lev). The oracle twin is the NAIVE
-    quadratic join — a hash-green record proves the pruning loses
-    nothing, mirroring the tfidf_cosine_pairs prefix-filter design.
-
-    100 TB shape: runs on the DISTINCT-surface vocabulary, not the
-    corpus; the prefix index carries q*k+1 rows per string with the
-    rarest grams first, so hot postings (common name bigrams) are
-    mostly pruned away; the short channel is a single bounded block
-    (strings of <= q*k+q-1 chars) and is the documented skew cap.
-    """
-    npre = q * k + 1
-    r = (
-        normalize_names(entities)
-        .select(F.col(id_col).alias("_id"), F.trim("norm").alias("s"))
-        .withColumn("ln", F.length("s"))
-    )
-    grams = r.select(
-        "_id", "ln", "s",
-        F.explode(F.expr(
-            f"transform(sequence(1, greatest(length(s) - {q - 1}, 1)),"
-            f" i -> struct(substring(s, i, {q}) AS g, i AS pos))"
-        )).alias("gp"),
-    ).select("_id", "ln", "s", F.col("gp.g").alias("g"), F.col("gp.pos").alias("pos"))
-    df_tab = grams.groupBy("g").agg(F.countDistinct("_id").alias("df"))
-    pre = (
-        grams.join(F.broadcast(df_tab), "g")
-        .groupBy("_id", "ln", "s")
-        .agg(F.collect_list(F.struct("df", "g", "pos")).alias("gs"))
-        .select(
-            "_id", "ln", "s",
-            F.slice(F.array_sort("gs"), 1, npre).alias("pre"),
-            F.size("gs").alias("ng"),
-        )
-    )
-    long_side = pre.filter(F.col("ng") > q * k).select(
-        "_id", "ln", "s", F.explode("pre").alias("p")
-    ).select("_id", "ln", "s", F.col("p.g").alias("g"), F.col("p.pos").alias("pos"))
-    cand_long = (
-        long_side.alias("a")
-        .join(
-            long_side.alias("b"),
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col("a._id") < F.col("b._id"))
-            & (F.abs(F.col("a.pos") - F.col("b.pos")) <= k)
-            & (F.abs(F.col("a.ln") - F.col("b.ln")) <= k),
-        )
-        .select(
-            F.col("a._id").alias("left_id"), F.col("b._id").alias("right_id"),
-            F.col("a.s").alias("sa"), F.col("b.s").alias("sb"),
-        )
-    )
-    # short channel as an EQUI-join: explode each short string to its
-    # k-window of target lengths so the length filter becomes a hash
-    # join key (a non-equi |ln_a - ln_b| <= k predicate would plan as a
-    # nested-loop join — wrong shape once the corpus side is large)
-    short = (
-        pre.filter(F.col("ng") <= q * k)
-        .select(
-            "_id", "ln", "s",
-            F.explode(
-                F.sequence(
-                    F.greatest(F.col("ln") - k, F.lit(0)), F.col("ln") + k
-                )
-            ).alias("_tl"),
-        )
-    )
-    cand_short = (
-        short.alias("a")
-        .join(
-            r.alias("b"),
-            (F.col("a._tl") == F.col("b.ln"))
-            & (F.col("a._id") != F.col("b._id")),
-        )
-        .select(
-            F.least(F.col("a._id"), F.col("b._id")).alias("left_id"),
-            F.greatest(F.col("a._id"), F.col("b._id")).alias("right_id"),
-            F.when(F.col("a._id") < F.col("b._id"), F.col("a.s"))
-            .otherwise(F.col("b.s")).alias("sa"),
-            F.when(F.col("a._id") < F.col("b._id"), F.col("b.s"))
-            .otherwise(F.col("a.s")).alias("sb"),
-        )
-    )
-    return (
-        cand_long.unionByName(cand_short)
-        .distinct()
-        .withColumn("lev", F.levenshtein("sa", "sb").cast("long"))
-        .filter(F.col("lev") <= k)
-        .select("left_id", "right_id", "lev")
-        .orderBy("left_id", "right_id")
-    )
-
-
-# ---------------------------------------------------------------------------
-# token-set Jaccard similarity join (PPJoin-style prefix filter
-# + exact set verify)
-# ---------------------------------------------------------------------------
-
-def jaccard_set_join(
-    entities: DataFrame,
-    *,
-    threshold: float = 0.5,
-    id_col: str = "entity_key",
-) -> DataFrame:
-    """All unordered surface pairs with token-set Jaccard >=
-    ``threshold`` — WITHOUT the naive all-pairs join (prefix filtering,
-    Chaudhuri et al. ICDE'06 / Xiao et al. PPJoin WWW'08; completes the
-    lossless-similarity-join family next to ``tfidf_cosine_pairs``
-    (cosine) and ``edit_distance_join`` (edit distance)).
-
-    Plan (lossless by the prefix-filter theorem):
-
-    1. distinct normalized tokens per surface; one global token-df
-       table (vocabulary-sized, broadcastable);
-    2. canonical token order = (df asc, token asc) — rarest first, so
-       hot postings (common name tokens) are pruned out of prefixes;
-    3. PREFIX selection: a set of n tokens keeps its first
-       n - ceil(t*n) + 1; J(A,B) >= t with the length filter implies
-       |A∩B| >= ceil(t*max(|A|,|B|)), so the two prefixes MUST share a
-       token (pigeonhole under one global order);
-    4. inverted-index join on prefix token + length filter
-       (min(na, nb) >= t * max(na, nb)), distinct pairs;
-    5. exact verify: |A∩B| / (na + nb - |A∩B|) >= t on the full sets.
-
-    Output: (left_id, right_id, jaccard rounded to 6). The oracle twin
-    is the NAIVE quadratic join — a hash-green record proves the
-    pruning loses nothing on the labeled corpus.
-
-    100 TB shape: runs on the DISTINCT-surface vocabulary; candidate
-    volume is bounded by prefix-posting products on the RAREST tokens,
-    and the length filter caps each posting's fan-out. No all-pairs
-    anywhere.
-    """
-    t = float(threshold)
-    if not 0.0 < t <= 1.0:
-        raise ValueError("threshold must be in (0, 1]")
-    r = (
-        normalize_names(entities)
-        .select(
-            F.col(id_col).alias("_id"),
-            F.array_distinct(
-                F.filter(F.split(F.trim(F.col("norm")), " +"), lambda x: x != "")
-            ).alias("ts"),
-        )
-        .withColumn("n", F.size("ts"))
-        .filter(F.col("n") > 0)
-    )
-    toks = r.select("_id", F.explode("ts").alias("tok"))
-    df_tab = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    ordered = (
-        toks.join(F.broadcast(df_tab), "tok")
-        .groupBy("_id")
-        .agg(F.array_sort(F.collect_list(F.struct("df", "tok"))).alias("os"))
-        .select("_id", F.expr("transform(os, s -> s.tok)").alias("os"))
-    )
-    pre = (
-        r.join(ordered, "_id")
-        .select(
-            "_id", "ts", "n",
-            F.slice(
-                "os", 1,
-                (F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1).cast("int"),
-            ).alias("pre"),
-        )
-    )
-    side = pre.select("_id", "ts", "n", F.explode("pre").alias("tok"))
-    return (
-        side.alias("a")
-        .join(
-            side.alias("b"),
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a._id") < F.col("b._id"))
-            & (F.least("a.n", "b.n")
-               >= F.lit(t) * F.greatest("a.n", "b.n")),
-        )
-        .select(
-            F.col("a._id").alias("left_id"), F.col("b._id").alias("right_id"),
-            F.col("a.ts").alias("lts"), F.col("b.ts").alias("rts"),
-            F.col("a.n").alias("na"), F.col("b.n").alias("nb"),
-        )
-        .distinct()
-        .withColumn("_i", F.size(F.array_intersect("lts", "rts")))
-        .withColumn(
-            "jaccard",
-            F.round(F.col("_i") / (F.col("na") + F.col("nb") - F.col("_i")), 6),
-        )
-        .filter(
-            F.round(F.col("_i") / (F.col("na") + F.col("nb") - F.col("_i")), 9)
-            >= t
-        )
-        .select("left_id", "right_id", "jaccard")
-        .orderBy("left_id", "right_id")
     )

@@ -366,150 +366,3 @@ def score_pairs(
         .withColumn("jw", jaro_winkler_udf(F.lower(F.col(left_col)), F.lower(F.col(right_col))))
         .withColumn("lev_ratio", lev_ratio.cast("double"))
     )
-
-
-def soft_tfidf_scores(
-    records: DataFrame,
-    candidates: DataFrame,
-    *,
-    id_col: str = "entity_key",
-    text_col: str = "surface",
-    theta: float = 0.9,
-    materialize: bool = True,
-) -> DataFrame:
-    """Cohen/Ravikumar/Fienberg soft-TF-IDF over candidate pairs —
-    (left_id, right_id, soft_tfidf): TF-IDF weighted token agreement
-    where tokens need only be JW-CLOSE (>= ``theta``), not equal.
-
-    For each token a of one side, its best-JW partner b* on the other
-    side contributes ``w(a) * w(b*) * jw(a, b*)`` when ``jw >= theta``;
-    the directional sums A->B and B->A are averaged (the mean makes the
-    score symmetric — the classic definition is directional). This is
-    the scorer that rates 'Jon Smith' ~ 'John Smith' near 1.0 where
-    exact-token cosine sees only 'smith': fuzzy evidence WITHIN the
-    weighted-token frame.
-
-    argmax tie-break is (jw DESC, partner weight DESC, partner token
-    ASC) — total, so both engines pick the same partner. JW comes from
-    the Arrow-batched DuckDB-parity kernel: one vectorized pass over
-    the (pair, token, token) rows, which are bounded by |candidates| x
-    |tokens_left| x |tokens_right| (tokens per record are few; the
-    candidate generator carries the budget). No per-row Python.
-    """
-    from pyspark.sql import Window
-
-    from .blocking import tfidf_unit_vectors
-
-    u = tfidf_unit_vectors(records, id_col=id_col, text_col=text_col)
-    ua = u.select(F.col("rid").alias("left_id"), F.col("token").alias("ta"),
-                  F.col("u").alias("wa"))
-    ub = u.select(F.col("rid").alias("right_id"), F.col("token").alias("tb"),
-                  F.col("u").alias("wb"))
-    tp = (
-        candidates.select("left_id", "right_id")
-        .join(ua, "left_id")
-        .join(ub, "right_id")
-        .withColumn("jw", jaro_winkler_udf(F.col("ta"), F.col("tb")))
-    )
-    if materialize:
-        # EAGER + BATCH-ONLY (localCheckpoint, same knob as
-        # blocking.tfidf_cosine_pairs): both directional reductions read
-        # this frame — without the checkpoint the Arrow JW kernel (and
-        # the whole unit-vector chain) runs twice, once per direction.
-        # Streaming callers pass materialize=False and pay the recompute.
-        tp = tp.localCheckpoint()
-
-    def directional(part_tok, part_w, other_w):
-        wspec = Window.partitionBy("left_id", "right_id", part_tok).orderBy(
-            F.desc("jw"), F.desc(other_w), F.asc("tb" if part_tok == "ta" else "ta")
-        )
-        return (
-            tp.withColumn("_rn", F.row_number().over(wspec))
-            .filter((F.col("_rn") == 1) & (F.col("jw") >= theta))
-            .groupBy("left_id", "right_id")
-            .agg(F.sum(F.col(part_w) * F.col(other_w) * F.col("jw")).alias("_s"))
-        )
-
-    ab = directional("ta", "wa", "wb")
-    ba = directional("tb", "wb", "wa")
-    return (
-        candidates.select("left_id", "right_id")
-        .join(ab.withColumnRenamed("_s", "_sab"), ["left_id", "right_id"], "left")
-        .join(ba.withColumnRenamed("_s", "_sba"), ["left_id", "right_id"], "left")
-        .select(
-            "left_id", "right_id",
-            F.round(
-                (F.coalesce("_sab", F.lit(0.0)) + F.coalesce("_sba", F.lit(0.0)))
-                / 2.0, 6,
-            ).alias("soft_tfidf"),
-        )
-    )
-
-
-def monge_elkan_scores(
-    records: DataFrame,
-    candidates: DataFrame,
-    *,
-    id_col: str = "entity_key",
-    text_col: str = "surface",
-    materialize: bool = True,
-) -> DataFrame:
-    """Monge–Elkan similarity over candidate pairs — (left_id,
-    right_id, monge_elkan): for each token of one side, its best JW
-    against the other side, AVERAGED over that side's tokens; the two
-    directional means are averaged again (the symmetric form). The
-    other classic hybrid scorer next to soft-TF-IDF: unweighted — every
-    token counts equally, so it rates short/long surface pairs that
-    idf-weighting mutes — and threshold-free: near-misses contribute
-    their actual JW instead of falling off a close/not-close cliff.
-
-    Same shape as ``soft_tfidf_scores``: tokens explode per side, ONE
-    Arrow-batched JW pass over the (pair, token, token) rows (eager
-    checkpoint under ``materialize=True`` — both directional reductions
-    read it; streaming callers pass False), max via
-    (pair, token)-keyed aggregation, mean via pair-keyed aggregation.
-    Token multiplicity is per OCCURRENCE (the original definition
-    averages over the token sequence, not the distinct set).
-    """
-    from .blocking import tokens_col
-
-    tok = records.select(
-        F.col(id_col).alias("rid"),
-        F.posexplode(tokens_col(text_col)).alias("pos", "token"),
-    )
-    ta = tok.select(F.col("rid").alias("left_id"), F.col("pos").alias("pa"),
-                    F.col("token").alias("ta"))
-    tb = tok.select(F.col("rid").alias("right_id"), F.col("pos").alias("pb"),
-                    F.col("token").alias("tb"))
-    tp = (
-        candidates.select("left_id", "right_id")
-        .join(ta, "left_id")
-        .join(tb, "right_id")
-        .withColumn("jw", jaro_winkler_udf(F.col("ta"), F.col("tb")))
-    )
-    if materialize:
-        # EAGER + BATCH-ONLY, same knob as soft_tfidf_scores — see there
-        tp = tp.localCheckpoint()
-
-    def direction(pos_col):
-        return (
-            tp.groupBy("left_id", "right_id", pos_col)
-            .agg(F.max("jw").alias("_best"))
-            .groupBy("left_id", "right_id")
-            .agg(F.avg("_best").alias("_mean"))
-        )
-
-    ab = direction("pa").withColumnRenamed("_mean", "_mab")
-    ba = direction("pb").withColumnRenamed("_mean", "_mba")
-    return (
-        candidates.select("left_id", "right_id")
-        .join(ab, ["left_id", "right_id"], "left")
-        .join(ba, ["left_id", "right_id"], "left")
-        .select(
-            "left_id", "right_id",
-            F.round(
-                (F.coalesce("_mab", F.lit(0.0)) + F.coalesce("_mba", F.lit(0.0)))
-                / 2.0, 6,
-            ).alias("monge_elkan"),
-        )
-    )

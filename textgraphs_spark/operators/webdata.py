@@ -2300,8 +2300,9 @@ def contaminated_docs_bloom(
     gram-keyed shuffle carries the survivor set (true matches + the
     ~(1-e^(-kn/m))^k false-positive sliver), not the corpus. No false
     negatives exist, and the verify kills every false positive — the
-    hash-green against the EXACT oracle is the losslessness proof
-    (same naive-oracle contract as er_edit_join / er_jaccard_join).
+    hash-green against the EXACT oracle is the losslessness proof (the
+    oracle is the unfiltered join, so any pruned-away match would show
+    as a missing row).
 
     Spark's own ``bloom_filter_agg`` is optimizer-internal (not a
     public routine), hence the explicit build: probe → bit word/mask →
@@ -2903,8 +2904,8 @@ def doremi_mixture(
     source column + ONE source-keyed hash agg (|sources| rows).
     Normalizers ride 1-row broadcast crossJoins — no SinglePartition
     exchange, no collect. The per-source aggregate is EAGERLY
-    materialized (localCheckpoint, BATCH-ONLY — the
-    blocking.tfidf_cosine_pairs convention; ``materialize=False`` for
+    materialized (localCheckpoint, which runs a job at call time and
+    rejects streams; ``materialize=False`` is the lazy form for
     streaming callers) because THREE downstream consumers (total, ref,
     normalizer) would otherwise each replay the corpus scan: plan-audit
     measured 84 exchanges unmaterialized vs single-digit with the

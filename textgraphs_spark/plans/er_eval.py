@@ -482,8 +482,6 @@ def blocking_stats(
     entities: DataFrame,
     *,
     max_block_size: int = 200,
-    use_minhash: bool = True,
-    hash_family: str = "md5",
 ) -> DataFrame:
     """Per-channel blocking diagnostics: the numbers an operator tunes
     ``max_block_size`` (and judges channel health) with, computed from
@@ -514,8 +512,7 @@ def blocking_stats(
     # signature build is the expensive part) — same discipline as
     # _salt_oversized
     bk = blocked_keys(
-        entities.select("entity_key", "surface"),
-        use_minhash=use_minhash, hash_family=hash_family,
+        entities.select("entity_key", "surface")
     ).select("channel", "bkey", "entity_key").localCheckpoint()
     per_key = bk.groupBy("channel", "bkey").agg(F.count("*").alias("m"))
     m = F.col("m")
@@ -937,469 +934,9 @@ ORDER BY s.cluster_id
 """
 
 
-def channel_recall(
-    entities: DataFrame,
-    *,
-    truth_col: str = "truth_id",
-    hash_family: str = "md5",
-) -> DataFrame:
-    """Per-channel blocking recall study: for each blocking channel —
-    'name' (last token|first initial), 'minhash' (LSH bands),
-    'skeleton' (order-invariant devoweled key, the opt-in third
-    channel) — plus their 'union', the distinct pre-salting candidate
-    pairs, how many true pairs they cover, and pair completeness.
-
-    This is the measurement that justifies adding (or not adding) a
-    channel: the skeleton key recovers the reversed 'Last First'
-    variants and vowel-adjacent typos the name key cannot block
-    together, at the cost of extra candidates.
-
-    Output, one row per channel ordered by name: (channel,
-    n_candidates, covered_true_pairs, pair_completeness).
-
-    100 TB shape: the block table is built once (localCheckpoint) and
-    self-joined per (channel, key) — the same equi-join shape as
-    production blocking, measured pre-salting (recall POTENTIAL; the
-    production pair budget then caps it). All metrics are aggregates;
-    no pair list leaves the executors.
-    """
-    from .er_pipeline import blocked_keys
-
-    bk = blocked_keys(
-        entities.select("entity_key", "surface"),
-        use_minhash=True, use_skeleton=True, hash_family=hash_family,
-    ).select("channel", "bkey", "entity_key").localCheckpoint()
-    a = bk.select("channel", "bkey", F.col("entity_key").alias("l"))
-    b = bk.select("channel", "bkey", F.col("entity_key").alias("r"))
-    pairs = (
-        a.join(b, ["channel", "bkey"])
-        .filter(F.col("l") < F.col("r"))
-        .select("channel", "l", "r")
-        .distinct()
-        .localCheckpoint()
-    )
-    allp = pairs.unionByName(
-        pairs.select(F.lit("union").alias("channel"), "l", "r").distinct()
-    )
-    truth = entities.select("entity_key", truth_col)
-    lab = allp.join(
-        truth.select(F.col("entity_key").alias("l"), F.col(truth_col).alias("lt")),
-        "l",
-    ).join(
-        truth.select(F.col("entity_key").alias("r"), F.col(truth_col).alias("rt")),
-        "r",
-    )
-    per = lab.groupBy("channel").agg(
-        F.count("*").alias("n_candidates"),
-        F.sum((F.col("lt") == F.col("rt")).cast("long")).alias("covered_true_pairs"),
-    )
-    tot = (
-        entities.groupBy(truth_col)
-        .agg(F.count("*").alias("n"))
-        .agg(F.sum(F.expr("n * (n - 1) DIV 2")).alias("n_true_pairs"))
-    )
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "channel",
-            "n_candidates",
-            "covered_true_pairs",
-            F.round(
-                F.col("covered_true_pairs") / F.col("n_true_pairs"), 6
-            ).alias("pair_completeness"),
-        )
-        .orderBy("channel")
-    )
-
-
-# SQL twin of blocking.skeleton_key + the 3-channel block table — shared
-# by the channel-recall and meta-blocking oracles (builds on kparts /
-# chan_key / chan_mh from er_oracle.blocking_ctes)
-_THREE_CHANNEL_CTES = """chan_sk AS MATERIALIZED (
-  SELECT entity_key,
-         concat_ws('|', 'sk', array_to_string(
-           list_sort(list_transform(toks, t -> regexp_replace(t, '[aeiou]', '', 'g'))),
-           '|')) AS bkey
-  FROM kparts
-),
-bl AS (
-  SELECT 'name' AS channel, entity_key, bkey FROM chan_key
-  UNION ALL SELECT 'minhash', entity_key, bkey FROM chan_mh
-  UNION ALL SELECT 'skeleton', entity_key, bkey FROM chan_sk
-)"""
-
-
-def er_channel_recall_sql(*, n_base: int = 150, n_twin: int = 30) -> str:
-    """Oracle for channel_recall over eval_entities: the shared blocking
-    channel CTEs plus the skeleton-key twin of blocking.skeleton_key."""
-    from .er_oracle import blocking_ctes
-
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{blocking_ctes('entities')},
-{_THREE_CHANNEL_CTES},
-cpairs AS MATERIALIZED (
-  SELECT DISTINCT a.channel, a.entity_key AS l, b.entity_key AS r
-  FROM bl a JOIN bl b
-    ON a.channel = b.channel AND a.bkey = b.bkey AND a.entity_key < b.entity_key
-),
-allp AS (
-  SELECT channel, l, r FROM cpairs
-  UNION ALL
-  SELECT DISTINCT 'union' AS channel, l, r FROM cpairs
-),
-per AS (
-  SELECT p.channel,
-         CAST(count(*) AS BIGINT) AS n_candidates,
-         CAST(sum(CASE WHEN lt.truth_id = rt.truth_id THEN 1 ELSE 0 END) AS BIGINT)
-           AS covered_true_pairs
-  FROM allp p
-  JOIN entities lt ON lt.entity_key = p.l
-  JOIN entities rt ON rt.entity_key = p.r
-  GROUP BY p.channel
-),
-tot AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_true_pairs
-  FROM (SELECT count(*) AS n FROM entities GROUP BY truth_id)
-)
-SELECT channel, n_candidates, covered_true_pairs,
-       round(covered_true_pairs / n_true_pairs, 6) AS pair_completeness
-FROM per, tot
-ORDER BY channel
-"""
-
-
-def sorted_neighborhood_metrics(
-    entities: DataFrame,
-    *,
-    window: int = 5,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Sorted-neighborhood blocking (Hernandez & Stolfo 1995) evaluated
-    against labels: records sort by the normalized surface, and every
-    record pairs with the ``window - 1`` records that follow it —
-    recall comes from lexicographic locality instead of key equality,
-    so near-miss spellings block together even when every exact key
-    disagrees. Output one row: (window, n_candidates,
-    covered_true_pairs, pair_completeness).
-
-    100 TB shape: the sort is ``rankops.global_rank`` — range-partition
-    + local rank + per-partition offsets, NO single-task window — and
-    the neighborhood is an equi-join of rank against rank+d for
-    d in 1..window-1 (a ``window - 1``-row broadcast explode), so the
-    candidate budget is exactly (N - d) summed over d: linear in N,
-    skew-free by construction (ranks are unique). The classical
-    multi-pass variant is this operator unioned over several sort keys.
-    """
-    from ..operators import blocking as B
-    from ..operators.rankops import global_rank
-
-    spark = entities.sparkSession
-    e = B.normalize_names(entities.select("entity_key", "surface")).select(
-        "entity_key", "norm"
-    )
-    ranked = global_rank(
-        e, [F.col("norm"), F.col("entity_key")], rank_col="rnk"
-    ).localCheckpoint()
-    offs = spark.range(1, int(window)).select(F.col("id").alias("d"))
-    left = ranked.crossJoin(F.broadcast(offs)).select(
-        F.col("entity_key").alias("l"), (F.col("rnk") + F.col("d")).alias("rj")
-    )
-    right = ranked.select(
-        F.col("entity_key").alias("r"), F.col("rnk").alias("rj")
-    )
-    pairs = left.join(right, "rj").select("l", "r")
-    truth = entities.select("entity_key", truth_col)
-    lab = pairs.join(
-        truth.select(F.col("entity_key").alias("l"), F.col(truth_col).alias("lt")),
-        "l",
-    ).join(
-        truth.select(F.col("entity_key").alias("r"), F.col(truth_col).alias("rt")),
-        "r",
-    )
-    per = lab.agg(
-        F.count("*").alias("n_candidates"),
-        F.sum((F.col("lt") == F.col("rt")).cast("long")).alias("covered_true_pairs"),
-    )
-    tot = (
-        entities.groupBy(truth_col)
-        .agg(F.count("*").alias("n"))
-        .agg(F.sum(F.expr("n * (n - 1) DIV 2")).alias("n_true_pairs"))
-    )
-    return per.crossJoin(F.broadcast(tot)).select(
-        F.lit(int(window)).alias("window"),
-        "n_candidates",
-        "covered_true_pairs",
-        F.round(
-            F.col("covered_true_pairs") / F.col("n_true_pairs"), 6
-        ).alias("pair_completeness"),
-    )
-
-
-def er_sorted_neighborhood_sql(
-    *, n_base: int = 150, n_twin: int = 30, window: int = 5
-) -> str:
-    """Oracle for sorted_neighborhood_metrics over eval_entities."""
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-keyed AS (
-  SELECT entity_key, truth_id,
-         lower(regexp_replace(surface, '[^A-Za-z ]', '', 'g')) AS norm
-  FROM entities
-),
-ranked AS (
-  SELECT entity_key, truth_id,
-         row_number() OVER (ORDER BY norm, entity_key) AS rnk
-  FROM keyed
-),
-pairs AS (
-  SELECT a.truth_id AS lt, b.truth_id AS rt
-  FROM ranked a JOIN ranked b
-    ON b.rnk > a.rnk AND b.rnk <= a.rnk + {int(window) - 1}
-),
-per AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_candidates,
-         CAST(sum(CASE WHEN lt = rt THEN 1 ELSE 0 END) AS BIGINT) AS covered_true_pairs
-  FROM pairs
-),
-tot AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_true_pairs
-  FROM (SELECT count(*) AS n FROM entities GROUP BY truth_id)
-)
-SELECT CAST({int(window)} AS INT) AS window, n_candidates, covered_true_pairs,
-       round(covered_true_pairs / n_true_pairs, 6) AS pair_completeness
-FROM per, tot
-"""
-
-
-def meta_blocking_metrics(
-    entities: DataFrame,
-    *,
-    truth_col: str = "truth_id",
-    hash_family: str = "md5",
-) -> DataFrame:
-    """Meta-blocking (Papadakis-style CBS weighting + weighted-edge
-    pruning): candidate pairs from the union of all three blocking
-    channels are weighted by how many distinct (channel, key) blocks
-    BOTH records share — redundancy-positive evidence that two records
-    co-occurring in many blocks are likelier matches — and pairs below
-    the global mean weight are pruned. Output, one row per stage:
-    (stage 'all' | 'pruned', n_candidates, covered_true_pairs,
-    pair_completeness, mean_weight).
-
-    The study's point is the trade: how much of the candidate budget
-    pruning saves vs how many true pairs it costs.
-
-    100 TB shape: the weight is a per-pair COUNT off the same
-    (channel, key) self-join production blocking runs — one hash agg
-    over pair rows (partial-combining; the heaviest key is already
-    salting-bounded upstream). Pruning compares against a broadcast
-    1-row mean; no second pass over the block table, no pair list on
-    the driver.
-    """
-    from .er_pipeline import blocked_keys
-
-    bk = blocked_keys(
-        entities.select("entity_key", "surface"),
-        use_minhash=True, use_skeleton=True, hash_family=hash_family,
-    ).select("channel", "bkey", "entity_key").localCheckpoint()
-    a = bk.select("channel", "bkey", F.col("entity_key").alias("l"))
-    b = bk.select("channel", "bkey", F.col("entity_key").alias("r"))
-    weighted = (
-        a.join(b, ["channel", "bkey"])
-        .filter(F.col("l") < F.col("r"))
-        .groupBy("l", "r")
-        .agg(F.count("*").alias("w"))
-        .localCheckpoint()
-    )
-    mean_w = weighted.agg(F.avg("w").alias("_mw"))
-    truth = entities.select("entity_key", truth_col)
-    lab = (
-        weighted.crossJoin(F.broadcast(mean_w))
-        .join(
-            truth.select(F.col("entity_key").alias("l"), F.col(truth_col).alias("lt")),
-            "l",
-        )
-        .join(
-            truth.select(F.col("entity_key").alias("r"), F.col(truth_col).alias("rt")),
-            "r",
-        )
-    )
-    same = (F.col("lt") == F.col("rt")).cast("long")
-    kept = F.col("w") >= F.col("_mw")
-    stages = lab.select(
-        F.explode(
-            F.when(kept, F.array(F.lit("all"), F.lit("pruned"))).otherwise(
-                F.array(F.lit("all"))
-            )
-        ).alias("stage"),
-        same.alias("same"),
-        "w",
-    )
-    per = stages.groupBy("stage").agg(
-        F.count("*").alias("n_candidates"),
-        F.sum("same").alias("covered_true_pairs"),
-        F.round(F.avg("w"), 6).alias("mean_weight"),
-    )
-    tot = (
-        entities.groupBy(truth_col)
-        .agg(F.count("*").alias("n"))
-        .agg(F.sum(F.expr("n * (n - 1) DIV 2")).alias("n_true_pairs"))
-    )
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "stage",
-            "n_candidates",
-            "covered_true_pairs",
-            F.round(
-                F.col("covered_true_pairs") / F.col("n_true_pairs"), 6
-            ).alias("pair_completeness"),
-            "mean_weight",
-        )
-        .orderBy("stage")
-    )
-
-
-def er_meta_blocking_sql(*, n_base: int = 150, n_twin: int = 30) -> str:
-    """Oracle for meta_blocking_metrics over eval_entities."""
-    from .er_oracle import blocking_ctes
-
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{blocking_ctes('entities')},
-{_THREE_CHANNEL_CTES},
-weighted AS MATERIALIZED (
-  SELECT a.entity_key AS l, b.entity_key AS r, CAST(count(*) AS BIGINT) AS w
-  FROM bl a JOIN bl b
-    ON a.channel = b.channel AND a.bkey = b.bkey AND a.entity_key < b.entity_key
-  GROUP BY 1, 2
-),
-mw AS (SELECT avg(w) AS _mw FROM weighted),
-lab AS (
-  SELECT p.w, p.w >= mw._mw AS kept,
-         CASE WHEN lt.truth_id = rt.truth_id THEN 1 ELSE 0 END AS same
-  FROM weighted p, mw
-  JOIN entities lt ON lt.entity_key = p.l
-  JOIN entities rt ON rt.entity_key = p.r
-),
-stages AS (
-  SELECT 'all' AS stage, w, same FROM lab
-  UNION ALL
-  SELECT 'pruned', w, same FROM lab WHERE kept
-),
-per AS (
-  SELECT stage,
-         CAST(count(*) AS BIGINT) AS n_candidates,
-         CAST(sum(same) AS BIGINT) AS covered_true_pairs,
-         round(avg(w), 6) AS mean_weight
-  FROM stages GROUP BY stage
-),
-tot AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_true_pairs
-  FROM (SELECT count(*) AS n FROM entities GROUP BY truth_id)
-)
-SELECT stage, n_candidates, covered_true_pairs,
-       round(covered_true_pairs / n_true_pairs, 6) AS pair_completeness,
-       mean_weight
-FROM per, tot
-ORDER BY stage
-"""
-
-
 # ---------------------------------------------------------------------------
-# TF-IDF cosine channel study + over-merge split audit
+# over-merge split audit
 # ---------------------------------------------------------------------------
-
-def tfidf_pair_study(
-    entities: DataFrame,
-    *,
-    threshold: float = 0.5,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """The TF-IDF token-cosine channel (blocking.tfidf_cosine_pairs)
-    measured on the labeled corpus: every pair at cosine >= threshold,
-    labeled true/false — (left_id, right_id, cosine, is_true).
-
-    Weighted-token evidence is the channel that recovers token
-    REORDERINGS — the reversed 'Last First' variants score cosine 1.0
-    against their 'First Last' base (identical token multiset), where
-    the positional name key blocks them apart — while agreement on a
-    ubiquitous last name alone stays under threshold because idf
-    down-weights it. The oracle computes the UNFILTERED inverted-index
-    join, so a green hash additionally witnesses that the AllPairs
-    prefix pruning is lossless on this corpus.
-    """
-    from ..operators.blocking import tfidf_cosine_pairs
-
-    pairs = tfidf_cosine_pairs(entities, threshold=threshold)
-    truth = entities.select("entity_key", truth_col)
-    return (
-        pairs.join(
-            truth.select(F.col("entity_key").alias("left_id"),
-                         F.col(truth_col).alias("_lt")), "left_id")
-        .join(
-            truth.select(F.col("entity_key").alias("right_id"),
-                         F.col(truth_col).alias("_rt")), "right_id")
-        .select(
-            "left_id", "right_id", "cosine",
-            (F.col("_lt") == F.col("_rt")).alias("is_true"),
-        )
-        .orderBy("left_id", "right_id")
-    )
-
-
-def tfidf_pairs_ctes(src: str) -> str:
-    """CTE chain ``{src}(entity_key, surface)`` → ``pairs(left_id,
-    right_id, cos)`` — the UNFILTERED inverted-index TF-IDF cosine
-    join, the exactness baseline the prefix-filtered engine must
-    reproduce. Shared by the eval oracle and the dirty-data fuzz
-    tests (which run it against arbitrary registered tables)."""
-    return f"""tok AS (
-  SELECT entity_key, t.token, CAST(count(*) AS BIGINT) AS tf
-  FROM (
-    SELECT entity_key,
-           unnest(list_filter(string_split_regex(lower(surface), '[^\\p{{L}}0-9]+'),
-                              x -> x <> '')) AS token
-    FROM {src}
-  ) t
-  GROUP BY entity_key, t.token
-),
-dfreq AS (SELECT token, CAST(count(*) AS BIGINT) AS df FROM tok GROUP BY token),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM {src}),
-w AS (
-  SELECT entity_key, tok.token, tf * ln(1 + n_total / df) AS w
-  FROM tok JOIN dfreq USING (token), n
-),
-nrm AS (SELECT entity_key, sqrt(sum(w * w)) AS nm FROM w GROUP BY entity_key),
-u AS (
-  SELECT w.entity_key, token, w / nm AS u
-  FROM w JOIN nrm USING (entity_key) WHERE nm > 0
-),
-pairs AS (
-  SELECT a.entity_key AS left_id, b.entity_key AS right_id,
-         sum(a.u * b.u) AS cos
-  FROM u a JOIN u b ON a.token = b.token AND a.entity_key < b.entity_key
-  GROUP BY a.entity_key, b.entity_key
-)"""
-
-
-def er_tfidf_pairs_sql(*, n_base: int = 150, n_twin: int = 30,
-                       threshold: float = 0.5) -> str:
-    """Oracle for tfidf_pair_study: the EXACT all-pairs inverted-index
-    cosine join (no prefix filter) — hash-green means the Spark prefix
-    pruning dropped nothing."""
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{tfidf_pairs_ctes('entities')}
-SELECT p.left_id, p.right_id, round(p.cos, 6) AS cosine,
-       (lt.truth_id = rt.truth_id) AS is_true
-FROM pairs p
-JOIN entities lt ON lt.entity_key = p.left_id
-JOIN entities rt ON rt.entity_key = p.right_id
-WHERE round(p.cos, 9) >= {threshold}
-ORDER BY left_id, right_id
-"""
 
 
 def strict_subclusters(
@@ -1508,7 +1045,7 @@ ORDER BY cluster_id
 
 
 # ---------------------------------------------------------------------------
-# B-cubed clustering metrics + soft-TF-IDF scorer study
+# B-cubed clustering metrics + clustering agreement
 # ---------------------------------------------------------------------------
 
 def bcubed_metrics(
@@ -1581,110 +1118,6 @@ SELECT n_records,
        round(2 * (sp / n_records) * (sr / n_records)
              / (sp / n_records + sr / n_records), 6) AS bcubed_f1
 FROM sums
-"""
-
-
-def soft_tfidf_study(
-    entities: DataFrame,
-    *,
-    theta: float = 0.9,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Cohen's soft-TF-IDF scored over the name-key blocking channel —
-    (left_id, right_id, soft_tfidf, is_true).
-
-    The name key ('last token | first initial') blocks the typo pairs
-    ('Jhon Smith' ~ 'John Smith') that exact-token cosine cannot see
-    past — and soft-TF-IDF is the scorer built for exactly them: the
-    typo'd first names are JW-close (>= theta), so they contribute
-    their full idf weight and the pair scores near 1.0, while pairs
-    agreeing only on the common last name stay low. Candidate
-    generation is the plain name-channel equi-join (no salting — the
-    oracle mirrors it exactly); scoring is operators.scoring.
-    soft_tfidf_scores.
-    """
-    from ..operators.scoring import soft_tfidf_scores
-    from .er_pipeline import blocked_keys
-
-    bk = blocked_keys(
-        entities.select("entity_key", "surface"), use_minhash=False
-    ).select("bkey", "entity_key")
-    cand = (
-        bk.select("bkey", F.col("entity_key").alias("left_id"))
-        .join(bk.select("bkey", F.col("entity_key").alias("right_id")), "bkey")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    scores = soft_tfidf_scores(entities, cand, theta=theta)
-    truth = entities.select("entity_key", truth_col)
-    return (
-        scores.join(
-            truth.select(F.col("entity_key").alias("left_id"),
-                         F.col(truth_col).alias("_lt")), "left_id")
-        .join(
-            truth.select(F.col("entity_key").alias("right_id"),
-                         F.col(truth_col).alias("_rt")), "right_id")
-        .select(
-            "left_id", "right_id", "soft_tfidf",
-            (F.col("_lt") == F.col("_rt")).alias("is_true"),
-        )
-        .orderBy("left_id", "right_id")
-    )
-
-
-def er_soft_tfidf_sql(*, n_base: int = 150, n_twin: int = 30,
-                      theta: float = 0.9) -> str:
-    """Oracle for soft_tfidf_study: name-channel candidates (chan_key
-    from the shared blocking CTEs), TF-IDF unit weights, token-pair JW
-    via jaro_winkler_similarity with the same total argmax tie-break,
-    directional sums averaged."""
-    from .er_oracle import blocking_ctes
-
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{blocking_ctes('entities')},
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.entity_key AS left_id, b.entity_key AS right_id
-  FROM chan_key a JOIN chan_key b
-    ON a.bkey = b.bkey AND a.entity_key < b.entity_key
-),
-{tfidf_pairs_ctes('entities')},
-tp AS MATERIALIZED (
-  SELECT c.left_id, c.right_id, a.token AS ta, a.u AS wa,
-         b.token AS tb, b.u AS wb,
-         jaro_winkler_similarity(a.token, b.token) AS jw
-  FROM cand c
-  JOIN u a ON a.entity_key = c.left_id
-  JOIN u b ON b.entity_key = c.right_id
-),
-ab AS (
-  SELECT left_id, right_id, sum(wa * wb * jw) AS s
-  FROM (
-    SELECT *, row_number() OVER (PARTITION BY left_id, right_id, ta
-                                 ORDER BY jw DESC, wb DESC, tb ASC) AS rn
-    FROM tp
-  ) WHERE rn = 1 AND jw >= {theta}
-  GROUP BY left_id, right_id
-),
-ba AS (
-  SELECT left_id, right_id, sum(wa * wb * jw) AS s
-  FROM (
-    SELECT *, row_number() OVER (PARTITION BY left_id, right_id, tb
-                                 ORDER BY jw DESC, wa DESC, ta ASC) AS rn
-    FROM tp
-  ) WHERE rn = 1 AND jw >= {theta}
-  GROUP BY left_id, right_id
-)
-SELECT c.left_id, c.right_id,
-       round((coalesce(ab.s, 0) + coalesce(ba.s, 0)) / 2, 6) AS soft_tfidf,
-       (lt.truth_id = rt.truth_id) AS is_true
-FROM cand c
-LEFT JOIN ab USING (left_id, right_id)
-LEFT JOIN ba USING (left_id, right_id)
-JOIN entities lt ON lt.entity_key = c.left_id
-JOIN entities rt ON rt.entity_key = c.right_id
-ORDER BY left_id, right_id
 """
 
 
@@ -1809,731 +1242,6 @@ SELECT CAST(n AS BIGINT) AS n_records,
              6) AS ari,
        round(mi / nullif(sqrt(ha * hb), 0.0), 6) AS nmi
 FROM tot, easum, ebsum, misum, hasum, hbsum
-"""
-
-
-def monge_elkan_study(
-    entities: DataFrame,
-    *,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Monge–Elkan (mean-of-max JW, symmetrized) scored over the SAME
-    name-channel candidates as ``soft_tfidf_study`` — (left_id,
-    right_id, monge_elkan, is_true). Running both hybrid scorers on one
-    candidate set is the comparison that picks between them: soft-TF-IDF
-    discounts common tokens by idf, Monge–Elkan weighs every token
-    occurrence equally and has no close/not-close threshold cliff.
-    """
-    from ..operators.scoring import monge_elkan_scores
-    from .er_pipeline import blocked_keys
-
-    bk = blocked_keys(
-        entities.select("entity_key", "surface"), use_minhash=False
-    ).select("bkey", "entity_key")
-    cand = (
-        bk.select("bkey", F.col("entity_key").alias("left_id"))
-        .join(bk.select("bkey", F.col("entity_key").alias("right_id")), "bkey")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    truth = entities.select("entity_key", truth_col)
-    return (
-        monge_elkan_scores(entities, cand)
-        .join(
-            truth.select(F.col("entity_key").alias("left_id"),
-                         F.col(truth_col).alias("_lt")), "left_id")
-        .join(
-            truth.select(F.col("entity_key").alias("right_id"),
-                         F.col(truth_col).alias("_rt")), "right_id")
-        .select(
-            "left_id", "right_id", "monge_elkan",
-            (F.col("_lt") == F.col("_rt")).alias("is_true"),
-        )
-        .orderBy("left_id", "right_id")
-    )
-
-
-def er_monge_elkan_sql(*, n_base: int = 150, n_twin: int = 30) -> str:
-    """Oracle for monge_elkan_study: name-channel candidates, per-
-    OCCURRENCE token positions (aligned double-unnest), token-pair JW
-    via jaro_winkler_similarity, per-position max, per-side mean,
-    directions averaged."""
-    from .er_oracle import blocking_ctes
-
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{blocking_ctes('entities')},
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.entity_key AS left_id, b.entity_key AS right_id
-  FROM chan_key a JOIN chan_key b
-    ON a.bkey = b.bkey AND a.entity_key < b.entity_key
-),
-tokp AS (
-  SELECT entity_key, unnest(ls) AS token,
-         unnest(range(1, len(ls) + 1)) AS pos
-  FROM (
-    SELECT entity_key,
-           list_filter(string_split_regex(lower(surface), '[^\\p{{L}}0-9]+'),
-                       x -> x <> '') AS ls
-    FROM entities
-  )
-),
-tp AS MATERIALIZED (
-  SELECT c.left_id, c.right_id, a.pos AS pa, b.pos AS pb,
-         jaro_winkler_similarity(a.token, b.token) AS jw
-  FROM cand c
-  JOIN tokp a ON a.entity_key = c.left_id
-  JOIN tokp b ON b.entity_key = c.right_id
-),
-ab AS (
-  SELECT left_id, right_id, avg(best) AS m FROM (
-    SELECT left_id, right_id, pa, max(jw) AS best
-    FROM tp GROUP BY left_id, right_id, pa
-  ) GROUP BY left_id, right_id
-),
-ba AS (
-  SELECT left_id, right_id, avg(best) AS m FROM (
-    SELECT left_id, right_id, pb, max(jw) AS best
-    FROM tp GROUP BY left_id, right_id, pb
-  ) GROUP BY left_id, right_id
-)
-SELECT c.left_id, c.right_id,
-       round((coalesce(ab.m, 0) + coalesce(ba.m, 0)) / 2, 6) AS monge_elkan,
-       (lt.truth_id = rt.truth_id) AS is_true
-FROM cand c
-LEFT JOIN ab USING (left_id, right_id)
-LEFT JOIN ba USING (left_id, right_id)
-JOIN entities lt ON lt.entity_key = c.left_id
-JOIN entities rt ON rt.entity_key = c.right_id
-ORDER BY left_id, right_id
-"""
-
-
-def suffix_blocking_metrics(
-    entities: DataFrame,
-    *,
-    min_len: int = 5,
-    max_block: int = 12,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Suffix-array blocking (Aizawa & Oyama 2005) evaluated against
-    labels: every suffix of length >= ``min_len`` of the space-stripped
-    normalized surface is a blocking key, suffixes shared by more than
-    ``max_block`` records are dropped (the classical stop-suffix rule —
-    a suffix that common is non-discriminative and would quadratically
-    dominate the pair budget), and the candidates are the DISTINCT
-    intra-block pairs. One metrics row out: (min_len, max_block,
-    n_candidates, covered_true_pairs, pair_completeness).
-
-    Why it earns a place next to the key/LSH/sorted-neighborhood
-    channels: suffix blocking catches PREFIX corruption — truncated
-    first tokens, dropped honorifics, OCR damage at the head of the
-    string — which the positional name key (last_tok|first_init)
-    splits apart and sorted-neighborhood only covers when the damage
-    sorts nearby.
-
-    100 TB shape: the suffix explode is linear in total key length
-    (bounded: normalized names, not documents); the per-suffix census
-    is one hash agg; the stop-suffix rule caps every block at
-    ``max_block`` so the self-join budget is <= C(max_block, 2) per
-    surviving suffix — the cap IS the skew story, no salting needed
-    because oversized blocks are dropped (recall loss measured here,
-    never silent at production call sites which warn). The pair
-    distinct and the label joins are vocabulary-sized.
-    """
-    from ..operators import blocking as B
-
-    e = B.normalize_names(entities.select("entity_key", "surface")).select(
-        "entity_key", F.regexp_replace("norm", " ", "").alias("k")
-    )
-    # IF-guard: sequence(1, 0) counts DOWN in Spark (sign-inferred step),
-    # so short keys must yield an EMPTY suffix set, not [1, 0] indices
-    sfx = e.select(
-        "entity_key",
-        F.explode(
-            F.expr(
-                f"IF(length(k) >= {int(min_len)},"
-                f" transform(sequence(1, length(k) - {int(min_len)} + 1),"
-                f" i -> substring(k, i)),"
-                f" cast(array() as array<string>))"
-            )
-        ).alias("sfx"),
-    ).localCheckpoint()  # feeds the census AND both sides of the pair join
-    blocks = (
-        sfx.groupBy("sfx")
-        .agg(F.count("*").alias("bn"))
-        .filter((F.col("bn") >= 2) & (F.col("bn") <= int(max_block)))
-        .select("sfx")
-    )
-    kept = sfx.join(blocks, "sfx")
-    pairs = (
-        kept.select("sfx", F.col("entity_key").alias("l"))
-        .join(kept.select("sfx", F.col("entity_key").alias("r")), "sfx")
-        .filter(F.col("l") < F.col("r"))
-        .select("l", "r")
-        .distinct()
-    )
-    truth = entities.select("entity_key", truth_col)
-    lab = pairs.join(
-        truth.select(F.col("entity_key").alias("l"), F.col(truth_col).alias("lt")),
-        "l",
-    ).join(
-        truth.select(F.col("entity_key").alias("r"), F.col(truth_col).alias("rt")),
-        "r",
-    )
-    per = lab.agg(
-        F.count("*").alias("n_candidates"),
-        F.sum((F.col("lt") == F.col("rt")).cast("long")).alias("covered_true_pairs"),
-    )
-    tot = (
-        entities.groupBy(truth_col)
-        .agg(F.count("*").alias("n"))
-        .agg(F.sum(F.expr("n * (n - 1) DIV 2")).alias("n_true_pairs"))
-    )
-    return per.crossJoin(F.broadcast(tot)).select(
-        F.lit(int(min_len)).alias("min_len"),
-        F.lit(int(max_block)).alias("max_block"),
-        "n_candidates",
-        "covered_true_pairs",
-        F.round(
-            F.col("covered_true_pairs") / F.col("n_true_pairs"), 6
-        ).alias("pair_completeness"),
-    )
-
-
-def er_suffix_blocking_sql(
-    *, n_base: int = 150, n_twin: int = 30, min_len: int = 5,
-    max_block: int = 12,
-) -> str:
-    """Oracle for suffix_blocking_metrics over eval_entities."""
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-keyed AS (
-  SELECT entity_key, truth_id,
-         replace(lower(regexp_replace(surface, '[^A-Za-z ]', '', 'g')), ' ', '') AS k
-  FROM entities
-),
-sfx AS MATERIALIZED (
-  SELECT entity_key, truth_id, k[i:] AS sfx
-  FROM keyed,
-       unnest(range(1, greatest(length(k) - {int(min_len)} + 1, 0) + 1)) AS t(i)
-),
-blocks AS (
-  SELECT sfx FROM (SELECT sfx, count(*) AS bn FROM sfx GROUP BY sfx)
-  WHERE bn BETWEEN 2 AND {int(max_block)}
-),
-kept AS (SELECT s.* FROM sfx s JOIN blocks b ON b.sfx = s.sfx),
-pairs AS (
-  SELECT DISTINCT a.entity_key AS l, b.entity_key AS r,
-         a.truth_id AS lt, b.truth_id AS rt
-  FROM kept a JOIN kept b ON a.sfx = b.sfx AND a.entity_key < b.entity_key
-),
-per AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_candidates,
-         CAST(sum(CASE WHEN lt = rt THEN 1 ELSE 0 END) AS BIGINT)
-           AS covered_true_pairs
-  FROM pairs
-),
-tot AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_true_pairs
-  FROM (SELECT count(*) AS n FROM entities GROUP BY truth_id)
-)
-SELECT CAST({int(min_len)} AS INT) AS min_len,
-       CAST({int(max_block)} AS INT) AS max_block,
-       n_candidates, covered_true_pairs,
-       round(covered_true_pairs / n_true_pairs, 6) AS pair_completeness
-FROM per, tot
-"""
-
-
-def phonetic_blocking_metrics(
-    entities: DataFrame,
-    *,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Phonetic blocking evaluated against labels: block key =
-    simplified-Russell code of the last token (see
-    ``blocking.phonetic_expr`` — the IDENTICAL SQL expression runs in
-    the DuckDB twin, so parity is by construction) + first initial —
-    the sound-alike channel (johnson/jonson, smith/smyth) the exact
-    last_tok key splits apart while JW scoring would still accept.
-    One metrics row: (n_candidates, covered_true_pairs,
-    pair_completeness), the same contract as the sorted-neighborhood
-    and suffix channels so the three are directly comparable.
-
-    100 TB shape: key derivation is map-only codegen (translate +
-    bounded regexp chain), the census/self-join is the standard
-    blocked-pair shape — skew bounded because phonetic keys subdivide
-    by first initial and production callers pass the result through
-    ``blocking.candidate_pairs``'s salting cap; here the raw channel is
-    measured without a cap so the metrics expose its true budget.
-    """
-    from ..operators import blocking as B
-    from ..operators.blocking import phonetic_expr
-
-    e = B.normalize_names(entities.select("entity_key", "surface"))
-    keyed = e.select(
-        "entity_key",
-        F.concat_ws(
-            "|", F.expr(phonetic_expr("last_tok")), F.col("first_init")
-        ).alias("bkey"),
-    )
-    pairs = (
-        keyed.select("bkey", F.col("entity_key").alias("l"))
-        .join(keyed.select("bkey", F.col("entity_key").alias("r")), "bkey")
-        .filter(F.col("l") < F.col("r"))
-        .select("l", "r")
-        .distinct()
-    )
-    truth = entities.select("entity_key", truth_col)
-    lab = pairs.join(
-        truth.select(F.col("entity_key").alias("l"), F.col(truth_col).alias("lt")),
-        "l",
-    ).join(
-        truth.select(F.col("entity_key").alias("r"), F.col(truth_col).alias("rt")),
-        "r",
-    )
-    per = lab.agg(
-        F.count("*").alias("n_candidates"),
-        F.sum((F.col("lt") == F.col("rt")).cast("long")).alias("covered_true_pairs"),
-    )
-    tot = (
-        entities.groupBy(truth_col)
-        .agg(F.count("*").alias("n"))
-        .agg(F.sum(F.expr("n * (n - 1) DIV 2")).alias("n_true_pairs"))
-    )
-    return per.crossJoin(F.broadcast(tot)).select(
-        "n_candidates",
-        "covered_true_pairs",
-        F.round(
-            F.col("covered_true_pairs") / F.col("n_true_pairs"), 6
-        ).alias("pair_completeness"),
-    )
-
-
-def er_phonetic_blocking_sql(*, n_base: int = 150, n_twin: int = 30) -> str:
-    """Oracle for phonetic_blocking_metrics over eval_entities."""
-    from ..operators.blocking import phonetic_expr
-
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-keyed AS (
-  SELECT entity_key, truth_id,
-         string_split_regex(trim(lower(regexp_replace(surface, '[^A-Za-z ]', '', 'g'))), ' +') AS toks
-  FROM entities
-),
-bk AS MATERIALIZED (
-  SELECT entity_key, truth_id,
-         concat_ws('|', {phonetic_expr("toks[len(toks)]", duck=True)},
-                   substr(toks[1], 1, 1)) AS bkey
-  FROM keyed
-),
-pairs AS (
-  SELECT DISTINCT a.entity_key AS l, b.entity_key AS r,
-         a.truth_id AS lt, b.truth_id AS rt
-  FROM bk a JOIN bk b ON a.bkey = b.bkey AND a.entity_key < b.entity_key
-),
-per AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_candidates,
-         CAST(sum(CASE WHEN lt = rt THEN 1 ELSE 0 END) AS BIGINT)
-           AS covered_true_pairs
-  FROM pairs
-),
-tot AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_true_pairs
-  FROM (SELECT count(*) AS n FROM entities GROUP BY truth_id)
-)
-SELECT n_candidates, covered_true_pairs,
-       round(covered_true_pairs / n_true_pairs, 6) AS pair_completeness
-FROM per, tot
-"""
-
-
-def _five_channel_pairs(
-    entities: DataFrame,
-    *,
-    hash_family: str = "md5",
-    min_len: int = 5,
-    max_block: int = 12,
-) -> DataFrame:
-    """Distinct pre-salting candidate pairs per channel — (channel, l,
-    r) over 'name', 'minhash', 'skeleton', 'suffix', 'phonetic'.
-    SHARED candidate generator for five_channel_recall and
-    channel_provenance so the two surfaces describe the same blocks."""
-    from ..operators import blocking as B
-    from ..operators.blocking import phonetic_expr
-    from .er_pipeline import blocked_keys
-
-    bk3 = blocked_keys(
-        entities.select("entity_key", "surface"),
-        use_minhash=True, use_skeleton=True, hash_family=hash_family,
-    ).select("channel", "bkey", "entity_key")
-    e = B.normalize_names(entities.select("entity_key", "surface")).localCheckpoint()
-    k = e.select("entity_key", F.regexp_replace("norm", " ", "").alias("k"))
-    sfx_all = k.select(
-        "entity_key",
-        F.explode(
-            F.expr(
-                f"IF(length(k) >= {int(min_len)},"
-                f" transform(sequence(1, length(k) - {int(min_len)} + 1),"
-                f" i -> substring(k, i)),"
-                f" cast(array() as array<string>))"
-            )
-        ).alias("bkey"),
-    ).localCheckpoint()  # census + channel rows
-    sfx_keep = (
-        sfx_all.groupBy("bkey")
-        .agg(F.count("*").alias("bn"))
-        .filter((F.col("bn") >= 2) & (F.col("bn") <= int(max_block)))
-        .select("bkey")
-    )
-    chan_sfx = sfx_all.join(sfx_keep, "bkey").select(
-        F.lit("suffix").alias("channel"), "bkey", "entity_key"
-    )
-    chan_ph = e.select(
-        F.lit("phonetic").alias("channel"),
-        F.concat_ws(
-            "|", F.expr(phonetic_expr("last_tok")), F.col("first_init")
-        ).alias("bkey"),
-        "entity_key",
-    )
-    bk = bk3.unionByName(chan_sfx).unionByName(chan_ph).localCheckpoint()
-    a = bk.select("channel", "bkey", F.col("entity_key").alias("l"))
-    b = bk.select("channel", "bkey", F.col("entity_key").alias("r"))
-    return (
-        a.join(b, ["channel", "bkey"])
-        .filter(F.col("l") < F.col("r"))
-        .select("channel", "l", "r")
-        .distinct()
-        .localCheckpoint()
-    )
-
-
-def five_channel_recall(
-    entities: DataFrame,
-    *,
-    truth_col: str = "truth_id",
-    hash_family: str = "md5",
-    min_len: int = 5,
-    max_block: int = 12,
-) -> DataFrame:
-    """The channel-recall study extended to ALL FIVE blocking channels —
-    'name', 'minhash', 'skeleton' (the production trio), plus the
-    round-5 'suffix' (prefix-corruption recall, stop-suffix rule
-    applied inside the channel) and 'phonetic' (sound-alike recall) —
-    and their 'union': per channel, distinct pre-salting candidate
-    pairs, covered true pairs, pair completeness. The capstone
-    measurement for the budget-vs-recall decision of which channels a
-    deployment enables; same shape and semantics as ``channel_recall``
-    (which stays the production trio's record).
-
-    100 TB shape: identical to channel_recall — one block table built
-    once, one (channel, key) equi-join, metrics as aggregates; the
-    suffix channel's stop-suffix cap bounds its blocks, the others are
-    measured pre-salting by design.
-    """
-    pairs = _five_channel_pairs(
-        entities, hash_family=hash_family, min_len=min_len,
-        max_block=max_block,
-    )
-    allp = pairs.unionByName(
-        pairs.select(F.lit("union").alias("channel"), "l", "r").distinct()
-    )
-    truth = entities.select("entity_key", truth_col)
-    lab = allp.join(
-        truth.select(F.col("entity_key").alias("l"), F.col(truth_col).alias("lt")),
-        "l",
-    ).join(
-        truth.select(F.col("entity_key").alias("r"), F.col(truth_col).alias("rt")),
-        "r",
-    )
-    per = lab.groupBy("channel").agg(
-        F.count("*").alias("n_candidates"),
-        F.sum((F.col("lt") == F.col("rt")).cast("long")).alias("covered_true_pairs"),
-    )
-    tot = (
-        entities.groupBy(truth_col)
-        .agg(F.count("*").alias("n"))
-        .agg(F.sum(F.expr("n * (n - 1) DIV 2")).alias("n_true_pairs"))
-    )
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "channel",
-            "n_candidates",
-            "covered_true_pairs",
-            F.round(
-                F.col("covered_true_pairs") / F.col("n_true_pairs"), 6
-            ).alias("pair_completeness"),
-        )
-        .orderBy("channel")
-    )
-
-
-def er_five_channel_recall_sql(
-    *, n_base: int = 150, n_twin: int = 30, min_len: int = 5,
-    max_block: int = 12,
-) -> str:
-    """Oracle for five_channel_recall: the three-channel CTEs plus the
-    suffix and phonetic channel twins, same metrics tail."""
-    from ..operators.blocking import phonetic_expr
-    from .er_oracle import blocking_ctes
-
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{blocking_ctes('entities')},
-{_THREE_CHANNEL_CTES},
-sk AS (SELECT entity_key, replace(norm, ' ', '') AS k FROM kparts),
-sfx_all AS MATERIALIZED (
-  SELECT entity_key, k[i:] AS bkey
-  FROM sk,
-       unnest(range(1, greatest(length(k) - {int(min_len)} + 1, 0) + 1)) AS u(i)
-),
-sfx_keep AS (
-  SELECT bkey FROM (SELECT bkey, count(*) AS bn FROM sfx_all GROUP BY bkey)
-  WHERE bn BETWEEN 2 AND {int(max_block)}
-),
-chan_sfx AS (
-  SELECT s.entity_key, s.bkey FROM sfx_all s JOIN sfx_keep kk ON kk.bkey = s.bkey
-),
-chan_ph AS (
-  SELECT entity_key,
-         concat_ws('|', {phonetic_expr("toks[len(toks)]", duck=True)},
-                   substr(toks[1], 1, 1)) AS bkey
-  FROM kparts
-),
-bl5 AS (
-  SELECT channel, entity_key, bkey FROM bl
-  UNION ALL SELECT 'suffix', entity_key, bkey FROM chan_sfx
-  UNION ALL SELECT 'phonetic', entity_key, bkey FROM chan_ph
-),
-cpairs AS MATERIALIZED (
-  SELECT DISTINCT a.channel, a.entity_key AS l, b.entity_key AS r
-  FROM bl5 a JOIN bl5 b
-    ON a.channel = b.channel AND a.bkey = b.bkey AND a.entity_key < b.entity_key
-),
-allp AS (
-  SELECT channel, l, r FROM cpairs
-  UNION ALL
-  SELECT DISTINCT 'union' AS channel, l, r FROM cpairs
-),
-per AS (
-  SELECT p.channel,
-         CAST(count(*) AS BIGINT) AS n_candidates,
-         CAST(sum(CASE WHEN lt.truth_id = rt.truth_id THEN 1 ELSE 0 END) AS BIGINT)
-           AS covered_true_pairs
-  FROM allp p
-  JOIN entities lt ON lt.entity_key = p.l
-  JOIN entities rt ON rt.entity_key = p.r
-  GROUP BY p.channel
-),
-tot AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_true_pairs
-  FROM (SELECT count(*) AS n FROM entities GROUP BY truth_id)
-)
-SELECT channel, n_candidates, covered_true_pairs,
-       round(covered_true_pairs / n_true_pairs, 6) AS pair_completeness
-FROM per, tot
-ORDER BY channel
-"""
-
-
-def dice_study(
-    entities: DataFrame,
-    *,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Sørensen–Dice token-set similarity over the SAME name-channel
-    candidates as the soft-TF-IDF and Monge–Elkan studies — (left_id,
-    right_id, dice, is_true). The cheapest member of the scorer
-    comparison: pure set math (2·|A∩B| / (|A|+|B|)) on the distinct
-    normalized tokens, no character-level kernel at all — the floor
-    any fuzzier scorer must beat to justify its cost.
-
-    Scale: per-candidate array intersection over name-length token
-    sets (bounded small constants), map-side after the candidate join;
-    exact integer numerator/denominator so the rounded division is
-    bit-equal to the DuckDB twin.
-    """
-    from ..operators import blocking as B
-    from .er_pipeline import blocked_keys
-
-    bk = blocked_keys(
-        entities.select("entity_key", "surface"), use_minhash=False
-    ).select("bkey", "entity_key")
-    cand = (
-        bk.select("bkey", F.col("entity_key").alias("left_id"))
-        .join(bk.select("bkey", F.col("entity_key").alias("right_id")), "bkey")
-        .filter(F.col("left_id") < F.col("right_id"))
-        .select("left_id", "right_id")
-        .distinct()
-    )
-    ts = B.normalize_names(entities.select("entity_key", "surface")).select(
-        "entity_key",
-        F.array_distinct(F.split(F.trim(F.col("norm")), " +")).alias("ts"),
-    )
-    truth = entities.select("entity_key", truth_col)
-    return (
-        cand.join(
-            ts.select(F.col("entity_key").alias("left_id"), F.col("ts").alias("lts")),
-            "left_id",
-        )
-        .join(
-            ts.select(F.col("entity_key").alias("right_id"), F.col("ts").alias("rts")),
-            "right_id",
-        )
-        .join(
-            truth.select(F.col("entity_key").alias("left_id"),
-                         F.col(truth_col).alias("_lt")), "left_id")
-        .join(
-            truth.select(F.col("entity_key").alias("right_id"),
-                         F.col(truth_col).alias("_rt")), "right_id")
-        .select(
-            "left_id", "right_id",
-            F.round(
-                2.0 * F.size(F.array_intersect("lts", "rts"))
-                / (F.size("lts") + F.size("rts")),
-                6,
-            ).alias("dice"),
-            (F.col("_lt") == F.col("_rt")).alias("is_true"),
-        )
-        .orderBy("left_id", "right_id")
-    )
-
-
-def _dice_ctes(*, n_base: int = 150, n_twin: int = 30) -> str:
-    """Shared CTE chain ending in ``dice(left_id, right_id, dice,
-    is_true)`` — composed by the er_dice oracle and everything scored on
-    top of it (mutual-best matching), so the two oracles cannot drift."""
-    from .er_oracle import blocking_ctes
-
-    return f"""{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{blocking_ctes('entities')},
-cand AS MATERIALIZED (
-  SELECT DISTINCT a.entity_key AS left_id, b.entity_key AS right_id
-  FROM chan_key a JOIN chan_key b
-    ON a.bkey = b.bkey AND a.entity_key < b.entity_key
-),
-tsets AS (
-  SELECT entity_key, list_distinct(toks) AS ts FROM kparts
-),
-dice AS MATERIALIZED (
-  SELECT c.left_id, c.right_id,
-         round(2.0 * len(list_intersect(a.ts, b.ts))
-               / (len(a.ts) + len(b.ts)), 6) AS dice,
-         (lt.truth_id = rt.truth_id) AS is_true
-  FROM cand c
-  JOIN tsets a ON a.entity_key = c.left_id
-  JOIN tsets b ON b.entity_key = c.right_id
-  JOIN entities lt ON lt.entity_key = c.left_id
-  JOIN entities rt ON rt.entity_key = c.right_id
-)"""
-
-
-def er_dice_sql(*, n_base: int = 150, n_twin: int = 30) -> str:
-    """Oracle for dice_study: name-channel candidates, distinct-token
-    Dice from the shared kparts token arrays."""
-    return f"""WITH
-{_dice_ctes(n_base=n_base, n_twin=n_twin)}
-SELECT left_id, right_id, dice, is_true
-FROM dice
-ORDER BY left_id, right_id
-"""
-
-
-def mutual_best_study(
-    entities: DataFrame,
-    *,
-    min_score: float = 0.5,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Reciprocal-best one-to-one matching over the shared name-channel
-    Dice scores: keep a candidate pair only when each side is the
-    other's single best-scoring partner (score desc, partner key asc on
-    ties — fully deterministic). The classic greedy-free 1:1 assignment
-    baseline for record linkage: no global matching solve, yet each
-    record appears in at most one output pair.
-
-    Scale: the per-node best is a hash AGGREGATE over the directed
-    candidate list (min of a (-score, partner) struct — map-side
-    partials absorb hot nodes), and mutuality is one self-join keyed by
-    node. No windows, no driver state; the candidate list itself is the
-    blocked (vocabulary-sized) frame, never all-pairs.
-
-    Reference parity: the strongest-edge selection mirrors how
-    textgraphs keeps the single best-probability alias match per query
-    (kg.py:530-550 _match_aliases: score every alias, sort desc, take
-    the head), lifted from per-query argmax to a symmetric pairwise
-    assignment.
-    """
-    p = dice_study(entities, truth_col=truth_col).filter(
-        F.col("dice") >= min_score
-    )
-    # feeds the doubled directed view AND the final score join: one
-    # materialization (EAGER + BATCH-ONLY) instead of three chain re-runs
-    p = p.localCheckpoint()
-    directed = p.select(
-        F.col("left_id").alias("src"), F.col("right_id").alias("dst"), "dice"
-    ).unionAll(
-        p.select(
-            F.col("right_id").alias("src"), F.col("left_id").alias("dst"),
-            "dice",
-        )
-    )
-    best = (
-        directed.groupBy("src")
-        .agg(
-            F.min(
-                F.struct((-F.col("dice")).alias("ns"), F.col("dst").alias("dst"))
-            ).alias("b")
-        )
-        .select("src", F.col("b.dst").alias("best"))
-    )
-    mutual = (
-        best.alias("x")
-        .join(
-            best.select(
-                F.col("src").alias("y_src"), F.col("best").alias("y_best")
-            ),
-            (F.col("best") == F.col("y_src")) & (F.col("y_best") == F.col("src")),
-        )
-        .filter(F.col("src") < F.col("best"))
-        .select(F.col("src").alias("left_id"), F.col("best").alias("right_id"))
-    )
-    return (
-        mutual.join(p, ["left_id", "right_id"])
-        .select("left_id", "right_id", "dice", "is_true")
-        .orderBy("left_id", "right_id")
-    )
-
-
-def er_mutual_best_sql(
-    *, n_base: int = 150, n_twin: int = 30, min_score: float = 0.5
-) -> str:
-    """Oracle for mutual_best_study: the shared dice CTE chain + a
-    per-src window argmax (score desc, partner asc) + the mutuality
-    self-join."""
-    return f"""WITH
-{_dice_ctes(n_base=n_base, n_twin=n_twin)},
-scored AS (SELECT * FROM dice WHERE dice >= {min_score}),
-directed AS (
-  SELECT left_id AS src, right_id AS dst, dice FROM scored
-  UNION ALL
-  SELECT right_id AS src, left_id AS dst, dice FROM scored
-),
-best AS (
-  SELECT src, dst AS best FROM (
-    SELECT src, dst,
-           row_number() OVER (PARTITION BY src ORDER BY dice DESC, dst) AS rn
-    FROM directed
-  ) WHERE rn = 1
-)
-SELECT s.left_id, s.right_id, s.dice, s.is_true
-FROM best x
-JOIN best y ON x.best = y.src AND y.best = x.src AND x.src < x.best
-JOIN scored s ON s.left_id = x.src AND s.right_id = x.best
-ORDER BY s.left_id, s.right_id
 """
 
 
@@ -2705,169 +1413,6 @@ ORDER BY method
 """
 
 
-def er_edit_join_sql(*, n_base: int = 150, n_twin: int = 30, k: int = 2) -> str:
-    """Oracle for blocking.edit_distance_join over eval_entities: the
-    NAIVE quadratic join (every pair, native levenshtein) — a green
-    record therefore proves the engine's q-gram prefix pruning lossless
-    on the labeled corpus, the same contract as er_tfidf_pairs."""
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-keyed AS (
-  SELECT entity_key,
-         trim(lower(regexp_replace(surface, '[^A-Za-z ]', '', 'g'))) AS s
-  FROM entities
-)
-SELECT a.entity_key AS left_id, b.entity_key AS right_id,
-       CAST(levenshtein(a.s, b.s) AS BIGINT) AS lev
-FROM keyed a JOIN keyed b ON a.entity_key < b.entity_key
-WHERE levenshtein(a.s, b.s) <= {k}
-ORDER BY left_id, right_id
-"""
-
-
-def er_jaccard_join_sql(
-    *, n_base: int = 150, n_twin: int = 30, threshold: float = 0.5
-) -> str:
-    """Oracle for blocking.jaccard_set_join over eval_entities: the
-    NAIVE quadratic join (every pair, exact list intersection) — a
-    green record therefore proves the engine's prefix-filter pruning
-    lossless on the labeled corpus, same contract as er_tfidf_pairs
-    (cosine) and er_edit_join (edit distance)."""
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-keyed AS (
-  SELECT entity_key,
-         list_distinct(list_filter(
-           string_split_regex(
-             trim(lower(regexp_replace(surface, '[^A-Za-z ]', '', 'g'))),
-             ' +'),
-           x -> x <> '')) AS ts
-  FROM entities
-),
-sized AS (
-  SELECT entity_key, ts, len(ts) AS n FROM keyed WHERE len(ts) > 0
-)
-SELECT a.entity_key AS left_id, b.entity_key AS right_id,
-       round(len(list_intersect(a.ts, b.ts))
-             / (a.n + b.n - len(list_intersect(a.ts, b.ts))), 6) AS jaccard
-FROM sized a JOIN sized b ON a.entity_key < b.entity_key
-WHERE round(len(list_intersect(a.ts, b.ts))
-            / (a.n + b.n - len(list_intersect(a.ts, b.ts))), 9) >= {threshold}
-ORDER BY left_id, right_id
-"""
-
-
-def channel_provenance(
-    entities: DataFrame,
-    *,
-    truth_col: str = "truth_id",
-    hash_family: str = "md5",
-    min_len: int = 5,
-    max_block: int = 12,
-) -> DataFrame:
-    """Match-provenance table: per distinct candidate pair, WHICH of the
-    five blocking channels produced it — (left_id, right_id, in_name,
-    in_minhash, in_skeleton, in_suffix, in_phonetic, n_channels,
-    is_true) ordered by pair. The explainability record behind every
-    downstream score: a pair found by 4 channels that scores low is a
-    scorer bug; a true pair found by exactly one channel is the
-    channel you cannot disable. Built on the SAME candidate generator
-    as five_channel_recall (one block table, pairs never re-derived).
-
-    Scale: the pivot is one hash agg over the channel-pair table
-    (bounded by the recall study's own candidate volume); truth labels
-    join on the entity key. Nothing touches pair space twice.
-    """
-    pairs = _five_channel_pairs(
-        entities, hash_family=hash_family, min_len=min_len,
-        max_block=max_block,
-    )
-    flag = lambda c: F.max((F.col("channel") == c).cast("long")).alias(f"in_{c}")  # noqa: E731
-    flags = (
-        pairs.groupBy(F.col("l").alias("left_id"), F.col("r").alias("right_id"))
-        .agg(
-            flag("name"), flag("minhash"), flag("skeleton"),
-            flag("suffix"), flag("phonetic"),
-            F.countDistinct("channel").cast("long").alias("n_channels"),
-        )
-    )
-    truth = entities.select("entity_key", truth_col)
-    return (
-        flags.join(
-            truth.select(F.col("entity_key").alias("left_id"),
-                         F.col(truth_col).alias("_lt")), "left_id")
-        .join(
-            truth.select(F.col("entity_key").alias("right_id"),
-                         F.col(truth_col).alias("_rt")), "right_id")
-        .select(
-            "left_id", "right_id", "in_name", "in_minhash", "in_skeleton",
-            "in_suffix", "in_phonetic", "n_channels",
-            (F.col("_lt") == F.col("_rt")).alias("is_true"),
-        )
-        .orderBy("left_id", "right_id")
-    )
-
-
-def er_channel_provenance_sql(
-    *, n_base: int = 150, n_twin: int = 30, min_len: int = 5,
-    max_block: int = 12,
-) -> str:
-    """Oracle for channel_provenance: the five-channel candidate CTEs
-    (same construction as er_five_channel_recall_sql) pivoted into
-    per-pair channel flags."""
-    from ..operators.blocking import phonetic_expr
-    from .er_oracle import blocking_ctes
-
-    flag = lambda c: (  # noqa: E731
-        f"CAST(max(CASE WHEN p.channel = '{c}' THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS in_{c}"
-    )
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-{blocking_ctes('entities')},
-{_THREE_CHANNEL_CTES},
-sk AS (SELECT entity_key, replace(norm, ' ', '') AS k FROM kparts),
-sfx_all AS MATERIALIZED (
-  SELECT entity_key, k[i:] AS bkey
-  FROM sk,
-       unnest(range(1, greatest(length(k) - {int(min_len)} + 1, 0) + 1)) AS u(i)
-),
-sfx_keep AS (
-  SELECT bkey FROM (SELECT bkey, count(*) AS bn FROM sfx_all GROUP BY bkey)
-  WHERE bn BETWEEN 2 AND {int(max_block)}
-),
-chan_sfx AS (
-  SELECT s.entity_key, s.bkey FROM sfx_all s JOIN sfx_keep kk ON kk.bkey = s.bkey
-),
-chan_ph AS (
-  SELECT entity_key,
-         concat_ws('|', {phonetic_expr("toks[len(toks)]", duck=True)},
-                   substr(toks[1], 1, 1)) AS bkey
-  FROM kparts
-),
-bl5 AS (
-  SELECT channel, entity_key, bkey FROM bl
-  UNION ALL SELECT 'suffix', entity_key, bkey FROM chan_sfx
-  UNION ALL SELECT 'phonetic', entity_key, bkey FROM chan_ph
-),
-cpairs AS MATERIALIZED (
-  SELECT DISTINCT a.channel, a.entity_key AS l, b.entity_key AS r
-  FROM bl5 a JOIN bl5 b
-    ON a.channel = b.channel AND a.bkey = b.bkey AND a.entity_key < b.entity_key
-)
-SELECT p.l AS left_id, p.r AS right_id,
-       {flag('name')}, {flag('minhash')}, {flag('skeleton')},
-       {flag('suffix')}, {flag('phonetic')},
-       CAST(count(DISTINCT p.channel) AS BIGINT) AS n_channels,
-       (lt.truth_id = rt.truth_id) AS is_true
-FROM cpairs p
-JOIN entities lt ON lt.entity_key = p.l
-JOIN entities rt ON rt.entity_key = p.r
-GROUP BY p.l, p.r, lt.truth_id, rt.truth_id
-ORDER BY left_id, right_id
-"""
-
-
 # BFS cap shared by cluster_depth_census and its oracle — ONE constant so
 # a cap change cannot desynchronize the engines (the harmonic-centrality
 # lesson from the round-4 advice).
@@ -3002,16 +1547,16 @@ def two_table_linkage(
     Scale: the cross-table restriction makes the candidate join
     strictly smaller than the self-join; reciprocal best is two
     map-side-combining hash aggs (min of a (-score, partner) struct —
-    the er_mutual_best shape, no window over a hot key).
+    no window over a hot key).
     """
+    from ..operators.blocking import block_keys
     from ..operators.scoring import score_pairs
-    from .er_pipeline import blocked_keys
 
     idx = F.substring("entity_key", 2, 10).cast("long")
     sides = entities.select("entity_key", (idx < n_true).alias("_is_a"))
     bk = (
-        blocked_keys(entities.select("entity_key", "surface"), use_minhash=False)
-        .select("bkey", "entity_key", "surface")
+        block_keys(entities.select("entity_key", "surface"))
+        .select(F.col("block_key").alias("bkey"), "entity_key", "surface")
         .join(sides, "entity_key")
     )
     cand = (
@@ -3177,170 +1722,6 @@ SELECT n_a, n_b, n_linked, n_correct,
        round(n_correct * 1.0 / n_linked, 6) AS precision,
        round(n_correct * 1.0 / n_b, 6) AS recall
 FROM sides, la
-"""
-
-
-def canopy_blocking_metrics(
-    entities: DataFrame,
-    *,
-    n_keys: int = 2,
-    max_block: int = 12,
-    truth_col: str = "truth_id",
-) -> DataFrame:
-    """Canopy blocking (McCallum, Nigam & Ungar, KDD'00) evaluated
-    against labels, in the deterministic rarest-token form: each record
-    joins the canopies of its ``n_keys`` RAREST normalized tokens
-    (document frequency ASC, token ASC — a total order both engines
-    reproduce), canopies sharing more than ``max_block`` records are
-    dropped, candidates are the distinct intra-canopy pairs. One metrics
-    row: (n_keys, max_block, n_candidates, covered_true_pairs,
-    pair_completeness).
-
-    The classic sequential canopy algorithm (greedy T1/T2 center
-    picking) is order-dependent and unshardable; the rarest-token form
-    is the standard distributed determinization (Mahout's canopy keyer):
-    a record's least-common token is its best cheap-distance proxy, and
-    taking the top ``n_keys`` rather than one gives the OVERLAPPING
-    canopies the original intends (a record can sit in two canopies, so
-    a name pair disagreeing on its single rarest token still meets).
-
-    Why it earns a place next to key/suffix/phonetic/sorted-neighborhood:
-    those channels anchor on string POSITIONS (last token, suffixes,
-    initials); canopy anchors on token RARITY, so it survives token
-    reorderings ("Herzog, Werner") and middle-token noise that break
-    positional keys, at the cost of missing single-token typos (the
-    phonetic/LSH channels' job).
-
-    100 TB shape: token df is one vocabulary-sized hash agg; the
-    per-record top-k runs in an entity-keyed window (names are a few
-    tokens — partitions are uniformly tiny); the canopy census caps
-    every block at ``max_block`` so the self-join budget is
-    <= C(max_block, 2) per surviving canopy — recall loss is measured
-    here, never silent.
-    """
-    from pyspark.sql import Window
-
-    from ..operators.blocking import normalize_names
-
-    e = normalize_names(entities.select("entity_key", "surface")).select(
-        "entity_key", "norm"
-    )
-    toks = (
-        e.select(
-            "entity_key",
-            F.explode(F.split(F.trim("norm"), " +")).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
-        .distinct()
-        .localCheckpoint()  # feeds the df census AND the rank join
-    )
-    dfreq = toks.groupBy("tok").agg(F.count("*").alias("df"))
-    w = Window.partitionBy("entity_key").orderBy(F.asc("df"), F.asc("tok"))
-    keys = (
-        toks.join(dfreq, "tok")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= int(n_keys))
-        .select("entity_key", "tok")
-        .localCheckpoint()  # census + both sides of the pair join
-    )
-    blocks = (
-        keys.groupBy("tok")
-        .agg(F.count("*").alias("bn"))
-        .filter((F.col("bn") >= 2) & (F.col("bn") <= int(max_block)))
-        .select("tok")
-    )
-    kept = keys.join(blocks, "tok")
-    pairs = (
-        kept.select("tok", F.col("entity_key").alias("l"))
-        .join(kept.select("tok", F.col("entity_key").alias("r")), "tok")
-        .filter(F.col("l") < F.col("r"))
-        .select("l", "r")
-        .distinct()
-    )
-    truth = entities.select("entity_key", truth_col)
-    lab = pairs.join(
-        truth.select(F.col("entity_key").alias("l"), F.col(truth_col).alias("lt")),
-        "l",
-    ).join(
-        truth.select(F.col("entity_key").alias("r"), F.col(truth_col).alias("rt")),
-        "r",
-    )
-    per = lab.agg(
-        F.count("*").alias("n_candidates"),
-        F.sum((F.col("lt") == F.col("rt")).cast("long")).alias("covered_true_pairs"),
-    )
-    tot = (
-        entities.groupBy(truth_col)
-        .agg(F.count("*").alias("n"))
-        .agg(F.sum(F.expr("n * (n - 1) DIV 2")).alias("n_true_pairs"))
-    )
-    return per.crossJoin(F.broadcast(tot)).select(
-        F.lit(int(n_keys)).alias("n_keys"),
-        F.lit(int(max_block)).alias("max_block"),
-        "n_candidates",
-        "covered_true_pairs",
-        F.round(
-            F.col("covered_true_pairs") / F.col("n_true_pairs"), 6
-        ).alias("pair_completeness"),
-    )
-
-
-def er_canopy_blocking_sql(
-    *, n_base: int = 150, n_twin: int = 30, n_keys: int = 2,
-    max_block: int = 12,
-) -> str:
-    """Oracle for canopy_blocking_metrics over eval_entities — same
-    normalization, df census, (df ASC, tok ASC) top-k and block cap."""
-    return f"""WITH
-{eval_entities_cte(n_base=n_base, n_twin=n_twin)},
-normed AS (
-  SELECT entity_key, truth_id,
-         trim(lower(regexp_replace(surface, '[^A-Za-z ]', '', 'g'))) AS norm
-  FROM entities
-),
-toks AS MATERIALIZED (
-  SELECT DISTINCT entity_key, tok
-  FROM normed, unnest(string_split_regex(norm, ' +')) AS t(tok)
-  WHERE tok <> ''
-),
-dfreq AS (SELECT tok, count(*) AS df FROM toks GROUP BY tok),
-keys AS MATERIALIZED (
-  SELECT entity_key, tok FROM (
-    SELECT t.entity_key, t.tok,
-           row_number() OVER (PARTITION BY t.entity_key
-                              ORDER BY d.df ASC, t.tok ASC) AS rk
-    FROM toks t JOIN dfreq d ON t.tok = d.tok
-  ) WHERE rk <= {int(n_keys)}
-),
-blocks AS (
-  SELECT tok FROM (SELECT tok, count(*) AS bn FROM keys GROUP BY tok)
-  WHERE bn BETWEEN 2 AND {int(max_block)}
-),
-kept AS (SELECT k.* FROM keys k JOIN blocks b ON b.tok = k.tok),
-pairs AS (
-  SELECT DISTINCT a.entity_key AS l, b.entity_key AS r
-  FROM kept a JOIN kept b ON a.tok = b.tok AND a.entity_key < b.entity_key
-),
-lab AS (
-  SELECT p.l, p.r, tl.truth_id AS lt, tr.truth_id AS rt
-  FROM pairs p JOIN entities tl ON tl.entity_key = p.l
-               JOIN entities tr ON tr.entity_key = p.r
-),
-per AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_candidates,
-         CAST(sum(CASE WHEN lt = rt THEN 1 ELSE 0 END) AS BIGINT)
-           AS covered_true_pairs
-  FROM lab
-),
-tot AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_true_pairs
-  FROM (SELECT count(*) AS n FROM entities GROUP BY truth_id)
-)
-SELECT CAST({int(n_keys)} AS INT) AS n_keys,
-       CAST({int(max_block)} AS INT) AS max_block,
-       n_candidates, covered_true_pairs,
-       round(covered_true_pairs / n_true_pairs, 6) AS pair_completeness
-FROM per, tot
 """
 
 
@@ -3553,9 +1934,13 @@ def blocking_budget_curve(entities: DataFrame,
 
     Runs the REAL ``blocking.candidate_pairs`` once per cap over the
     same keyed entities (each run a bounded block self-join; the union
-    is |caps| independent branches), plus one unsalted baseline ridden
-    in as a 1-row broadcast. Per-branch stats are two-level
-    vocabulary-sized aggs (per-block counts, then one row).
+    is |caps| independent branches). Per-branch stats are two-level
+    vocabulary-sized aggs (per-block counts, then one row). The
+    unsalted baseline never self-joins a hot block: ``block_keys``
+    gives each entity exactly one key, so with unique entity keys (as
+    ``entity_aggregate`` emits them) the distinct-pair count is
+    sum C(n, 2) over block sizes — one more vocabulary-sized agg,
+    ridden in as a 1-row broadcast.
     """
     from functools import reduce
 
@@ -3572,8 +1957,10 @@ def blocking_budget_curve(entities: DataFrame,
 
     curve = reduce(lambda a, b: a.unionByName(b), [stats(c) for c in caps])
     base = (
-        B.candidate_pairs(B.block_keys(entities), max_block_size=2**31 - 1)
-        .agg(F.count("*").alias("_base"))
+        B.block_keys(entities).groupBy("block_key")
+        .agg(F.count("*").alias("_n"))
+        .agg(F.coalesce(F.sum(F.expr("_n * (_n - 1) DIV 2")), F.lit(0))
+             .alias("_base"))
     )
     # nullif: an empty entity table has a zero baseline — coverage is
     # NULL then, not an ANSI divide-by-zero crash (edge-tested)

@@ -73,67 +73,40 @@ def entity_aggregate(rows: DataFrame) -> DataFrame:
     ).localCheckpoint()
 
 
-def blocked_keys(
-    entities: DataFrame,
-    *,
-    use_minhash: bool = True,
-    hash_family: str = "md5",
-    use_skeleton: bool = False,
-) -> DataFrame:
+def blocked_keys(entities: DataFrame) -> DataFrame:
     """entities(entity_key, surface, ...) → (entity_key, surface,
-    channel, bkey): one row per blocking-key membership across every
-    channel — ``channel`` is ``'name'`` (normalized last token + first
-    initial) or ``'minhash'`` (LSH band keys over the normalized
-    surface). This is the pre-salting block table ``blocking_pairs``
-    self-joins; exposed so diagnostics (plans/er_eval.blocking_stats)
-    describe the EXACT blocks the pipeline builds.
+    channel, bkey): one row per blocking-key membership across both
+    channels — ``channel`` is ``'name'`` (normalized last token + first
+    initial) or ``'minhash'`` (md5-family LSH band keys over the
+    normalized surface, reproducible in DuckDB). This is the pre-salting
+    block table ``blocking_pairs`` self-joins; exposed so diagnostics
+    (plans/er_eval.blocking_stats) describe the EXACT blocks the
+    pipeline builds.
     """
     keyed = B.block_keys(entities)
-    chans = [
-        keyed.select(
+    name = keyed.select(
+        "entity_key", "surface",
+        F.lit("name").alias("channel"),
+        F.col("block_key").alias("bkey"),
+    )
+    mh = B.minhash_band_keys(
+        keyed, "entity_key", "norm", carry_cols=("surface",),
+        hash_family="md5",
+    )
+    return name.unionByName(
+        mh.select(
             "entity_key", "surface",
-            F.lit("name").alias("channel"),
-            F.col("block_key").alias("bkey"),
+            F.lit("minhash").alias("channel"),
+            F.concat_ws("|", F.lit("mh"), "band_id", "band_key").alias("bkey"),
         )
-    ]
-    if use_minhash:
-        mh = B.minhash_band_keys(
-            keyed, "entity_key", "norm", carry_cols=("surface",),
-            hash_family=hash_family,
-        )
-        chans.append(
-            mh.select(
-                "entity_key", "surface",
-                F.lit("minhash").alias("channel"),
-                F.concat_ws("|", F.lit("mh"), "band_id", "band_key").alias("bkey"),
-            )
-        )
-    if use_skeleton:
-        # opt-in third channel (off by default: the shipped clustering
-        # oracles pin the two-channel candidate set): order-invariant
-        # devoweled key — recovers reversed and vowel-transposed variants
-        chans.append(
-            keyed.select(
-                "entity_key", "surface",
-                F.lit("skeleton").alias("channel"),
-                F.concat_ws("|", F.lit("sk"), B.skeleton_key("norm")).alias("bkey"),
-            )
-        )
-    blocked = chans[0]
-    for c in chans[1:]:
-        blocked = blocked.unionByName(c)
-    return blocked
+    )
 
 
 def blocking_pairs(
-    entities: DataFrame,
-    *,
-    use_minhash: bool = True,
-    hash_family: str = "md5",
-    max_block_size: int = 200,
+    entities: DataFrame, *, max_block_size: int = 200
 ) -> DataFrame:
     """entities(entity_key, surface, ...) → distinct candidate pairs via
-    every blocking channel: the normalized-name block key (last token +
+    both blocking channels: the normalized-name block key (last token +
     first initial) UNION MinHash-LSH band keys over the normalized
     surface, salted above ``max_block_size`` (blocking.candidate_pairs).
 
@@ -141,9 +114,7 @@ def blocking_pairs(
     EXACT candidate set the pipeline clusters from — ERPipeline.resolve
     calls it.
     """
-    blocked = blocked_keys(
-        entities, use_minhash=use_minhash, hash_family=hash_family
-    ).drop("channel")
+    blocked = blocked_keys(entities).drop("channel")
     return B.candidate_pairs(
         blocked, key_col="bkey", id_col="entity_key",
         max_block_size=max_block_size,
