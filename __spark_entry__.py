@@ -351,8 +351,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # two map-side-combining hash aggs, histogram-sized output
         from textgraphs_spark.plans.er_eval import cluster_size_histogram
 
-        _, parts = _eval_parts(spark)
-        return cluster_size_histogram(parts["assignments"])
+        _, assignments = _eval_assignments(spark)
+        return cluster_size_histogram(assignments)
 
     def token_concentration(spark, sf_dir):
         # corpus-health concentration census of the token-frequency
@@ -600,25 +600,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return host_lang_entropy(_docs(spark, sf_dir), max_entropy=1.4)
 
-    def er_reviewed_clusters_q(spark, sf_dir):
-        # the full ER-ops loop as one query: monitor (churn) -> review
-        # (bridging edges) -> constrain (reject low-score bridges) ->
-        # re-close -> summary; the table that ships after review
-        from textgraphs_spark.plans.er_eval import reviewed_clusters
-
-        ents, parts = _eval_parts(spark)
-        return reviewed_clusters(ents, parts)
-
-    def er_merge_review_q(spark, sf_dir):
-        # the review queue for churn's 'merged' alarms: every match
-        # edge stitching members of DIFFERENT prior clusters (null-safe
-        # — merges run through new entities by construction), scores
-        # riding along from the checkpointed scoring stage
-        from textgraphs_spark.plans.er_eval import merge_review
-
-        ents, parts = _eval_parts(spark)
-        return merge_review(ents, parts)
-
     def er_blocking_budget_q(spark, sf_dir):
         # the salting-cap tuning curve over the hot-block fixture: pair
         # budget and coverage per max_block_size, REAL candidate_pairs
@@ -628,44 +609,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         ents = spark.createDataFrame(hot_entities(), ["entity_key", "surface"])
         return blocking_budget_curve(ents)
-
-    def er_cluster_churn_q(spark, sf_dir):
-        # run-over-run cluster lineage: prior = deterministic 2/3
-        # entity subset clustered on subset-internal match edges;
-        # per-current-cluster status new/grown/merged/stable — the
-        # nightly-rerun regression monitor aggregate metrics can't see
-        from textgraphs_spark.plans.er_eval import cluster_churn
-
-        ents, parts = _eval_parts(spark)
-        return cluster_churn(ents, parts)
-
-    def er_constrained_clusters_q(spark, sf_dir):
-        # human-in-the-loop ER: reviewer cannot-link verdicts (the
-        # deterministic 1/7 stand-in) removed from the match edges
-        # before closure, over the labeled eval corpus
-        from textgraphs_spark.plans.er_constraints import constrained_run
-        from textgraphs_spark.plans.er_eval import eval_entities
-        from textgraphs_spark.plans.er_pipeline import cluster_summary
-
-        ents = eval_entities(spark).select(
-            "entity_key", "surface", "label", "mention_count", "doc_freq"
-        )
-        return cluster_summary(constrained_run(spark, None, entities=ents)["assignments"])
-
-    def er_constraint_violations_q(spark, sf_dir):
-        # the audit: every rejected pair with whether OTHER accepted
-        # edges still reconnect it transitively (correlation-clustering
-        # repair is NP-hard — report the residue, never hide it)
-        from textgraphs_spark.plans.er_constraints import (
-            constrained_run, constraint_violations,
-        )
-        from textgraphs_spark.plans.er_eval import eval_entities
-
-        ents = eval_entities(spark).select(
-            "entity_key", "surface", "label", "mention_count", "doc_freq"
-        )
-        out = constrained_run(spark, None, entities=ents)
-        return constraint_violations(out["assignments"], out["cannot"])
 
     def pld_rollup_q(spark, sf_dir):
         # registered-domain (pay-level-domain) census over the
@@ -1439,53 +1382,24 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         triples = infer_relations(arith_pages(spark))
         return inf_edges(triples).orderBy("src_key", "dst_key", "rel")
 
-    # ---- ER evaluation & post-clustering family (plans/er_eval) --------
+    # ---- ER evaluation family (plans/er_eval) ---------------------------
     # the BASELINE.json metric itself as distributed queries, over the
     # RNG-free labeled name-variant corpus (eval_entities: full /
     # initialed / typo-or-reversed forms per truth entity, plus
     # typo-doppelganger twins that force deterministic FP pressure)
 
-    def _eval_parts(spark):
+    def _eval_assignments(spark):
         from textgraphs_spark.plans.er_eval import eval_entities
         from textgraphs_spark.plans.er_pipeline import ERPipeline
 
         ents = eval_entities(spark)
-        parts = ERPipeline(spark).run_lean(
+        assignments = ERPipeline(spark).run_lean(
             None,
             entities=ents.select(
                 "entity_key", "surface", "label", "mention_count", "doc_freq"
             ),
-            return_parts=True,
         )
-        return ents, parts
-
-    def er_two_table(spark, sf_dir):
-        # A x B record LINKAGE (registry of full names vs incoming
-        # initial/variant file): cross-table blocking, the PRODUCTION
-        # decision scorer gated at the match threshold, reciprocal-best
-        # one-to-one assignment — the classic linkage configuration
-        # next to the self-dedup pipelines
-        from textgraphs_spark.plans.er_eval import eval_entities, two_table_linkage
-
-        return two_table_linkage(eval_entities(spark))
-
-    def er_two_table_metrics(spark, sf_dir):
-        # one-row quality summary of the A x B linkage: precision over
-        # assignments, recall over the incoming file (every B record
-        # has exactly one true registry partner)
-        from textgraphs_spark.plans.er_eval import eval_entities, two_table_metrics
-
-        return two_table_metrics(eval_entities(spark))
-
-    def er_cluster_depth(spark, sf_dir):
-        # chain-geometry census: per cluster, BFS eccentricity from the
-        # representative — deep clusters are transitive chains whose
-        # endpoints never compared (the over-merge geometry behind the
-        # star-vs-closure tradeoff); shared DEPTH_MAX_ITER with the oracle
-        from textgraphs_spark.plans.er_eval import cluster_depth_census
-
-        _, parts = _eval_parts(spark)
-        return cluster_depth_census(parts["assignments"], parts["match_scores"])
+        return ents, assignments
 
     def er_eval_blocked(spark, sf_dir):
         # blocking quality (pair completeness, reduction ratio) +
@@ -1501,10 +1415,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 10^12-entity scale (three vocabulary-sized aggregates)
         from textgraphs_spark.plans.er_eval import clustering_metrics
 
-        ents, parts = _eval_parts(spark)
-        return clustering_metrics(
-            parts["assignments"], ents.select("entity_key", "truth_id")
-        )
+        ents, assignments = _eval_assignments(spark)
+        return clustering_metrics(assignments, ents.select("entity_key", "truth_id"))
 
     def quality_gopher(spark, sf_dir):
         # Gopher-rule census (Rae et al. 2021 heuristic filters) over
@@ -1539,33 +1451,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return gopher_census(_docs(spark, sf_dir))
 
-    def er_star_clusters(spark, sf_dir):
-        # precision-first alternative to transitive closure: star
-        # clustering (independent-set centers by degree order, best-
-        # score satellite attach) vs the closure clustering over the
-        # SAME match edges — one contingency-metric row per method;
-        # star precision >= closure precision by construction
-        from textgraphs_spark.plans.er_eval import star_vs_closure
-
-        ents, parts = _eval_parts(spark)
-        return star_vs_closure(ents, parts)
-
-    def er_golden_records(spark, sf_dir):
-        # survivorship: one canonical master record per cluster
-        # (max mention_count, min-key tiebreak) + sorted alternates
-        from textgraphs_spark.plans.er_eval import golden_records
-
-        _, parts = _eval_parts(spark)
-        return golden_records(parts["assignments"])
-
-    def er_cluster_cohesion(spark, sf_dir):
-        # transitive-closure audit: match-edge density + min edge score
-        # per non-singleton cluster; chained over-merges flag is_weak
-        from textgraphs_spark.plans.er_eval import cluster_cohesion
-
-        _, parts = _eval_parts(spark)
-        return cluster_cohesion(parts["assignments"], parts["match_scores"])
-
     def er_threshold_sweep(spark, sf_dir):
         # P/R/F1 at every candidate threshold in ONE blocking+scoring
         # pass (bucket-then-cumulate — never a |pairs| x k explode):
@@ -1585,91 +1470,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
         return blocking_stats(eval_entities(spark), max_block_size=50)
 
-    def er_fs_tf_adjustments(spark, sf_dir):
-        # Splink-style term-frequency adjustment of the exact-surface
-        # feature: per-surface log2(u1 / tf) weight shift — a shared
-        # rare surface is stronger evidence than a shared common one
-        from textgraphs_spark.plans.er_eval import eval_entities
-        from textgraphs_spark.plans.er_weights import fs_tf_adjustments
-
-        return fs_tf_adjustments(eval_entities(spark))
-
-    def er_split_overmerged(spark, sf_dir):
-        # over-merge repair audit: recluster each loose cluster over
-        # match edges at score >= 0.95 only (same components_over_keys
-        # closure) and report the subcluster census per cluster — the
-        # chain-merge decomposition cluster_cohesion flags, measured
-        from textgraphs_spark.plans.er_eval import split_overmerged
-
-        _, parts = _eval_parts(spark)
-        return split_overmerged(parts["assignments"], parts["match_scores"])
-
     def er_bcubed(spark, sf_dir):
         # B-cubed precision/recall/F1 — the per-RECORD clustering metric
         # next to pairwise F1; three vocabulary-sized contingency aggs,
         # so the metric itself runs at 10^12 entities
         from textgraphs_spark.plans.er_eval import bcubed_metrics
 
-        ents, parts = _eval_parts(spark)
-        return bcubed_metrics(
-            parts["assignments"], ents.select("entity_key", "truth_id")
-        )
-
-    def er_clustering_agreement(spark, sf_dir):
-        # ARI + NMI between the loose (0.9) clustering and the strict
-        # (0.95) subclustering, from contingency cells only — how much
-        # the threshold choice matters, measured at 10^12-entity cost
-        from textgraphs_spark.plans.er_eval import (
-            clustering_agreement, strict_subclusters,
-        )
-
-        _, parts = _eval_parts(spark)
-        a = parts["assignments"].select("entity_key", "cluster_id")
-        b = (
-            a.select("entity_key")
-            .join(strict_subclusters(parts["match_scores"]), "entity_key", "left")
-            .withColumn("cluster_id", F.coalesce("cluster_id", F.col("entity_key")))
-        )
-        return clustering_agreement(a, b)
-
-    def er_review_queue(spark, sf_dir):
-        # the Fellegi-Sunter THIRD decision class: gray-zone posteriors
-        # routed to clerical review, most-ambiguous-first — the queue
-        # every production linkage system ships; posterior table joins
-        # back broadcast-side, the zone filter is map-only
-        from textgraphs_spark.plans.er_eval import eval_entities
-        from textgraphs_spark.plans.er_weights import fs_review_queue
-
-        return fs_review_queue(eval_entities(spark))
-
-    def er_fs_weights(spark, sf_dir):
-        # Fellegi-Sunter match weights by unsupervised EM: candidate
-        # pairs -> 3-bit comparison vectors -> one <=2^3-row pattern agg
-        # -> 5 unrolled EM iterations -> per-pattern log2 likelihood
-        # ratio + posterior. Pattern agg is the ONLY corpus-scale stage.
-        from textgraphs_spark.plans.er_eval import eval_entities
-        from textgraphs_spark.plans.er_weights import fs_match_weights
-
-        return fs_match_weights(eval_entities(spark))
-
-    def er_fs_classify(spark, sf_dir):
-        # the learned FS model applied back to the candidate set:
-        # posterior >= 0.5 predicts match; P/R/F1 vs labels with
-        # end-to-end recall (blocking misses count as FN), plus the
-        # EM-estimated match prevalence lambda
-        from textgraphs_spark.plans.er_eval import eval_entities
-        from textgraphs_spark.plans.er_weights import fs_classified_metrics
-
-        return fs_classified_metrics(eval_entities(spark))
-
-    def er_fs_clusters(spark, sf_dir):
-        # the FS model driving the ACTUAL clustering path: posterior
-        # matches -> components_over_keys closure -> contingency P/R/F1,
-        # directly comparable to er_eval_clusters' JW-threshold row
-        from textgraphs_spark.plans.er_eval import eval_entities
-        from textgraphs_spark.plans.er_weights import fs_cluster_eval
-
-        return fs_cluster_eval(eval_entities(spark))
+        ents, assignments = _eval_assignments(spark)
+        return bcubed_metrics(assignments, ents.select("entity_key", "truth_id"))
 
     def dedup_paragraphs(spark, sf_dir):
         # RefinedWeb-style exact paragraph dedup, keep-FIRST occurrence
@@ -1724,15 +1532,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     return {
         # round-5 ordering (least-recently-driver-verified first):
         # (a) never in any driver record — session-6 additions first
-        # (constrained ER, churn, budget curve, PLD family, revisit/
-        # history, split/mixture/manifest), then earlier round-5
+        # (budget curve, PLD family, revisit/history,
+        # split/mixture/manifest), then earlier round-5
         # additions, then the four added after the r4 snapshot
-        "er_reviewed_clusters": er_reviewed_clusters_q,
-        "er_merge_review": er_merge_review_q,
         "er_blocking_budget": er_blocking_budget_q,
-        "er_cluster_churn": er_cluster_churn_q,
-        "er_constrained_clusters": er_constrained_clusters_q,
-        "er_constraint_violations": er_constraint_violations_q,
         "pld_rollup": pld_rollup_q,
         "url_history": url_history_q,
         "revisit_schedule": revisit_schedule_q,
@@ -1757,7 +1560,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "plan_shards": plan_shards_q,
         "dsir_resample": dsir_resample_q,
         "token_stats_by_lang": token_stats_by_lang,
-        "er_star_clusters": er_star_clusters,
         "quality_gopher": quality_gopher,
         "quality_c4": quality_c4,
         "quality_c4_corpus": quality_c4_corpus,
@@ -1766,9 +1568,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "source_mixture": source_mixture,
         "k_anonymity": k_anonymity,
         "contrastive_mined_pairs": contrastive_mined_pairs,
-        "er_cluster_depth": er_cluster_depth,
-        "er_two_table": er_two_table,
-        "er_two_table_metrics": er_two_table_metrics,
         "dedup_ablation": dedup_ablation,
         "dsir_weights": dsir_weights,
         "er_cluster_sizes": er_cluster_sizes,
@@ -1795,12 +1594,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # (b) red in CORRECTNESS_r04 (struct-id union-find under the
         # driver's non-Arrow session) — the fix must be proven green
         "er_eval_clusters": er_eval_clusters,
-        "er_golden_records": er_golden_records,
-        "er_cluster_cohesion": er_cluster_cohesion,
-        "er_fs_clusters": er_fs_clusters,
-        "er_split_overmerged": er_split_overmerged,
         "er_bcubed": er_bcubed,
-        "er_clustering_agreement": er_clustering_agreement,
         # (c) green r3 but routed through code changed since (struct-id
         # CC fast path / minhash semi-join prune)
         "er_clusters": er_clusters,
@@ -1881,10 +1675,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "er_eval_blocked": er_eval_blocked,
         "er_threshold_sweep": er_threshold_sweep,
         "er_blocking_stats": er_blocking_stats,
-        "er_fs_weights": er_fs_weights,
-        "er_fs_classify": er_fs_classify,
-        "er_fs_tf_adjustments": er_fs_tf_adjustments,
-        "er_review_queue": er_review_queue,
         "lm_xent_buckets": lm_xent_buckets,
         "lm_xent_bucket_stats": lm_xent_bucket_stats,
         "graph_triangles": graph_triangles,
@@ -2629,24 +2419,15 @@ FROM nation JOIN region ON n_regionkey = r_regionkey
         salted_blocking_pairs_sql,
     )
     from textgraphs_spark.plans.er_eval import (
-        er_blocking_stats_sql, er_cluster_cohesion_sql, er_cluster_sizes_sql,
-        er_eval_blocked_sql, er_eval_clusters_sql, er_golden_records_sql,
-        er_constrained_clusters_sql, er_constraint_violations_sql,
-        er_cluster_churn_sql, er_merge_review_sql, er_reviewed_clusters_sql,
+        er_blocking_stats_sql, er_cluster_sizes_sql,
+        er_eval_blocked_sql, er_eval_clusters_sql,
         blocking_budget_curve_sql as _ER_EVAL_budget_sql,
-        er_bcubed_sql, er_clustering_agreement_sql,
-        er_cluster_depth_sql, er_two_table_sql, er_two_table_metrics_sql,
-        er_score_calibration_sql, er_split_overmerged_sql,
-        er_star_clusters_sql, er_threshold_sweep_sql,
+        er_bcubed_sql, er_score_calibration_sql, er_threshold_sweep_sql,
     )
     from textgraphs_spark.plans.er_oracle import entity_pmi_sql
     from textgraphs_spark.operators.textquality import (
         bm25_topk_select as _bm25_sql,
         bpe_pair_census_select as _bpe_sql,
-    )
-    from textgraphs_spark.plans.er_weights import (
-        fs_classified_metrics_sql, fs_cluster_eval_sql, fs_match_weights_sql,
-        fs_review_queue_sql, fs_tf_adjustments_sql,
     )
 
     return {
@@ -2664,21 +2445,6 @@ FROM nation JOIN region ON n_regionkey = r_regionkey
         # twin (webdata.pld_rollup_select — same suffix pool, same PSL
         # fallback and suffix-only NULL rules)
         "pld_rollup": _pld_rollup_select(_pld_pages_sql()),
-        # constrained clustering over the regenerated eval corpus: the
-        # oracle derives the SAME deterministic cannot-links from ITS
-        # matches CTE (shared Lehmer pair hash) and anti-joins them out
-        # before the recursive closure
-        "er_constrained_clusters": er_constrained_clusters_sql(),
-        "er_constraint_violations": er_constraint_violations_sql(),
-        # churn: second (p-prefixed) closure over the hash-filtered
-        # prior edge subset, per-cluster lineage statuses
-        "er_cluster_churn": er_cluster_churn_sql(),
-        # merge review: churn's prior closure + the null-safe bridging
-        # filter over scored matches, restricted to merged clusters
-        "er_merge_review": er_merge_review_sql(),
-        # reviewed clustering: rejected low-score bridges removed, third
-        # recursive closure, shipped summary
-        "er_reviewed_clusters": er_reviewed_clusters_sql(),
         # budget curve: one salted-blocking twin per cap, coverage vs
         # the unsalted instance
         "er_blocking_budget": _ER_EVAL_budget_sql(),
@@ -2782,23 +2548,13 @@ FROM per_doc GROUP BY lang
         # uses → metric aggregations (plans/er_eval.py)
         "er_eval_blocked": er_eval_blocked_sql(),
         "er_eval_clusters": er_eval_clusters_sql(),
-        "er_star_clusters": er_star_clusters_sql(),
         "quality_gopher": _gopher_census_oracle(),
         "quality_c4": _c4_filter_oracle(),
         "quality_c4_corpus": _c4_corpus_oracle(),
         "quality_gopher_corpus": _gopher_corpus_oracle(),
-        "er_golden_records": er_golden_records_sql(),
-        "er_cluster_cohesion": er_cluster_cohesion_sql(),
         "er_threshold_sweep": er_threshold_sweep_sql(),
         "er_blocking_stats": er_blocking_stats_sql(),
-        "er_fs_weights": fs_match_weights_sql(),
-        "er_fs_classify": fs_classified_metrics_sql(),
-        "er_fs_clusters": fs_cluster_eval_sql(),
-        "er_fs_tf_adjustments": fs_tf_adjustments_sql(),
-        "er_split_overmerged": er_split_overmerged_sql(),
         "er_bcubed": er_bcubed_sql(),
-        "er_clustering_agreement": er_clustering_agreement_sql(),
-        "er_review_queue": fs_review_queue_sql(),
         "lm_xent_buckets": lm_xent_buckets_sql,
         "lm_xent_bucket_stats": lm_xent_bucket_stats_sql,
         "dedup_minhash": minhash_oracle_sql(threshold=0.7),
@@ -2922,9 +2678,6 @@ FROM agg WHERE n_matched > 0
         "source_mixture": _source_mixture_oracle(),
         "k_anonymity": _k_anonymity_oracle(),
         "contrastive_mined_pairs": _contrastive_pairs_oracle(),
-        "er_cluster_depth": er_cluster_depth_sql(),
-        "er_two_table": er_two_table_sql(),
-        "er_two_table_metrics": er_two_table_metrics_sql(),
         "dedup_ablation": _dedup_ablation_oracle(),
         "dsir_weights": dsir_sql,
         "plan_shards": _shards_sql("SELECT * FROM documents", target_bytes=16384),

@@ -81,30 +81,6 @@ def test_range_bucket_join_broadcast(spark):
     assert "BroadcastNestedLoopJoin" in plan or "Broadcast" in plan
 
 
-def test_score_pairs_embedding_blend(spark):
-    from textgraphs_spark.operators.scoring import score_pairs
-
-    pairs = spark.createDataFrame(
-        [
-            ("Werner Herzog", "Werner Herzog", [1.0, 0.0], [1.0, 0.0]),
-            ("Werner Herzog", "Werner Herzog", [1.0, 0.0], [0.0, 1.0]),
-            ("Werner Herzog", "Werner Herzog", None, [1.0, 0.0]),
-        ],
-        "left_surface string, right_surface string, "
-        "left_vec array<double>, right_vec array<double>",
-    )
-    out = score_pairs(
-        pairs, lean=True, left_vec="left_vec", right_vec="right_vec",
-        vec_weight=0.4,
-    ).collect()
-    aligned, orthogonal, missing = (r.score for r in out)
-    # identical names: name score 1.0; cosine 1.0 vs 0.0 vs fallback
-    assert abs(aligned - 1.0) < 1e-9
-    assert abs(orthogonal - 0.6) < 1e-9
-    assert abs(missing - 1.0) < 1e-9   # NULL vector -> pure name score
-    assert {r.match for r in out} == {True, False}
-
-
 def test_asof_join_matches_bruteforce_random(spark):
     """Union+window as-of join == brute-force max-ts-per-left reference."""
     import random
@@ -166,22 +142,6 @@ def test_sessionize_matches_bruteforce_random(spark):
                 seq += 1
             last = ts
             assert got[(u, eid)] == seq, (u, eid)
-
-
-def test_score_pairs_zero_norm_vector_falls_back(spark):
-    from textgraphs_spark.operators.scoring import score_pairs
-
-    pairs = spark.createDataFrame(
-        [("Werner Herzog", "Werner Herzog", [0.0, 0.0], [1.0, 0.0])],
-        "left_surface string, right_surface string, "
-        "left_vec array<double>, right_vec array<double>",
-    )
-    [row] = score_pairs(
-        pairs, lean=True, left_vec="left_vec", right_vec="right_vec"
-    ).collect()
-    # zero-norm cosine is 0/0 -> NULL; must fall back to the name score
-    assert row.score is not None and abs(row.score - 1.0) < 1e-9
-    assert row.match is True
 
 
 def test_minhash_single_band_skips_prefilter(spark):

@@ -249,6 +249,9 @@ def test_update_without_prior_run_fails_cleanly(spark, tmp_path):
     docs = spark.createDataFrame([(1, "Werner Herzog.")], ["doc_id", "text"])
     with pytest.raises(FileNotFoundError, match="run\\(\\) must finish once"):
         pipe.update(docs)
+    # no workdir at all: a ValueError that survives ``python -O``
+    with pytest.raises(ValueError, match="needs the workdir of a prior run"):
+        ERPipeline(spark).update(docs)
 
 
 @pytest.mark.parametrize("include_lemmas", [False, True])

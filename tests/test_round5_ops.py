@@ -553,65 +553,6 @@ def test_contrastive_pairs_labels_and_determinism(spark):
         assert (r["jaccard"] >= 0.6) if r["label"] == 1 else (r["jaccard"] <= 0.4)
 
 
-def test_cluster_depth_census_chain_star_singleton(spark):
-    """Chain a-b-c-d has eccentricity 3 from its min-key root; a star
-    rooted at a LEAF (min key) reaches the far leaves at depth 2; a
-    singleton sits at depth 0."""
-    from textgraphs_spark.plans.er_eval import cluster_depth_census
-
-    matches = spark.createDataFrame(
-        [("a", "b", 0.95), ("b", "c", 0.95), ("c", "d", 0.95),
-         ("m", "z", 0.95), ("n", "z", 0.95), ("p", "z", 0.95)],
-        "left_id string, right_id string, score double",
-    )
-    assigns = spark.createDataFrame(
-        [("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"),
-         ("z", "m"), ("m", "m"), ("n", "m"), ("p", "m"),
-         ("solo", "solo")],
-        "entity_key string, cluster_id string",
-    )
-    got = {r["max_depth"]: (r["n_clusters"], r["n_entities"])
-           for r in cluster_depth_census(assigns, matches).collect()}
-    assert got[3] == (1, 4)     # the chain
-    assert got[2] == (1, 4)     # star via leaf root: m->z->n,p
-    assert got[0] == (1, 1)     # the singleton
-    assert set(got) == {0, 2, 3}
-
-
-def test_two_table_linkage_semantics(spark):
-    """Linked pairs are strictly cross-table (A keys < n_true, B keys
-    >= n_true), assignments are one-to-one in both directions, and the
-    precision on the labeled corpus is high (the point of reciprocal
-    best)."""
-    from textgraphs_spark.plans.er_eval import eval_entities, two_table_linkage
-
-    rows = two_table_linkage(eval_entities(spark)).collect()
-    assert rows, "linkage produced no assignments"
-    a_seen, b_seen = set(), set()
-    for r in rows:
-        ai, bi = int(r["left_id"][1:]), int(r["right_id"][1:])
-        assert ai < 180 and bi >= 180
-        assert r["left_id"] not in a_seen and r["right_id"] not in b_seen
-        a_seen.add(r["left_id"]); b_seen.add(r["right_id"])
-        assert r["score"] >= 0.9          # only above-threshold assignments
-    precision = sum(r["is_true"] for r in rows) / len(rows)
-    # the corpus DESIGNS a precision ceiling: twin entities' initialed
-    # forms are byte-identical to their base partner's (_eval_name_lists
-    # docstring), so those B records are unresolvable by ANY name-only
-    # linker and reciprocal-best picks one by tie-break. Links are
-    # correct away from that designed ambiguity, so precision sits well
-    # above chance but below 1.0 — assert the band, not perfection.
-    assert 0.7 <= precision < 1.0
-    # and the designed pressure is the ONLY error source: every false
-    # link involves a TWIN entity (truth >= n_base) on at least one
-    # side — base-vs-base links are never confused
-    for r in rows:
-        if not r["is_true"]:
-            a_truth = int(r["left_id"][1:]) % 180
-            b_truth = int(r["right_id"][1:]) % 180
-            assert a_truth >= 150 or b_truth >= 150, (r["left_id"], r["right_id"])
-
-
 def test_dedup_ablation_channels_and_overlaps(spark):
     """A corpus with byte-exact twins (caught by every channel),
     near-identical docs (minhash+simhash), and unrelated docs: the
@@ -1107,41 +1048,6 @@ def test_bloom_decontamination_matches_exact_even_saturated(spark):
             assert got[k]["overlap_frac"] == exact[k]["overlap_frac"]
 
 
-def test_scc_known_graph(spark):
-    """3-cycle, feeder, 2-cycle, and chain vertices resolve to the
-    textbook SCC partition; scc_id is the min member."""
-    from textgraphs_spark.operators.components import (
-        strongly_connected_components,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a"), ("d", "a"),
-         ("e", "f"), ("f", "e"), ("g", "d")],
-        "src string, dst string",
-    )
-    stats = {}
-    got = sorted((r["node"], r["scc_id"]) for r in
-                 strongly_connected_components(edges, stats=stats).collect())
-    assert got == [("a", "a"), ("b", "a"), ("c", "a"), ("d", "d"),
-                   ("e", "e"), ("f", "e"), ("g", "g")]
-    assert stats["rounds"] >= 1
-
-
-def test_scc_direction_matters_vs_undirected_cc(spark):
-    """A path a->b->c is ONE weak component but THREE SCCs — the
-    directed closure the undirected kernel cannot express."""
-    from textgraphs_spark.operators.components import (
-        strongly_connected_components,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c")], "src string, dst string"
-    )
-    got = {r["node"]: r["scc_id"] for r in
-           strongly_connected_components(edges).collect()}
-    assert got == {"a": "a", "b": "b", "c": "c"}
-
-
 def test_frontier_schedule_waves_and_gates(spark):
     """Blocked hosts vanish, unknown hosts default to normal, boost
     hosts ship two urls per wave, normal hosts one per wave."""
@@ -1200,9 +1106,6 @@ def test_round5_ops_empty_inputs(spark):
     """Every round-5 operator returns an empty, correctly-schema'd
     frame on empty input instead of throwing — the resume/first-batch
     path of a staged pipeline."""
-    from textgraphs_spark.operators.components import (
-        strongly_connected_components,
-    )
     from textgraphs_spark.operators.webdata import (
         crawl_policy, crawler_traps, frontier_schedule, resolve_redirects,
         soft404_hosts,
@@ -1211,7 +1114,6 @@ def test_round5_ops_empty_inputs(spark):
     no_urls = spark.createDataFrame([], "doc_id long, url string")
     no_pages = spark.createDataFrame([], "doc_id long, url string, text string")
     no_redirects = spark.createDataFrame([], "url string, redirect_to string")
-    no_edges = spark.createDataFrame([], "src string, dst string")
     no_policy = spark.createDataFrame([], "host string, verdict string")
 
     assert crawler_traps(no_urls).count() == 0
@@ -1219,8 +1121,6 @@ def test_round5_ops_empty_inputs(spark):
     rr = resolve_redirects(no_redirects)
     assert rr.count() == 0 and set(rr.columns) == {
         "url", "final_url", "n_hops", "is_cycle"}
-    scc = strongly_connected_components(no_edges)
-    assert scc.count() == 0 and set(scc.columns) == {"node", "scc_id"}
     pol = crawl_policy(
         crawler_traps(no_urls), soft404_hosts(no_pages),
         spark.createDataFrame([], "host string, rank double"),

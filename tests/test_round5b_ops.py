@@ -189,78 +189,6 @@ def test_doremi_upweights_hard_source(spark):
     assert math.isclose(total, 1.0, abs_tol=5e-6)
 
 
-def _eval_ents(spark, n_base=20, n_twin=5):
-    from textgraphs_spark.plans.er_eval import eval_entities
-
-    return eval_entities(spark, n_base=n_base, n_twin=n_twin).select(
-        "entity_key", "surface", "label", "mention_count", "doc_freq"
-    )
-
-
-def test_constrained_modulus_one_rejects_every_edge(spark):
-    # hash % 1 == 0 always: the reviewer rejects ALL proposed matches ->
-    # every entity is a singleton and no rejected pair can reconnect
-    from textgraphs_spark.plans.er_constraints import (
-        constrained_run, constraint_violations,
-    )
-
-    out = constrained_run(spark, None, entities=_eval_ents(spark), modulus=1)
-    bad = out["assignments"].filter(F.col("cluster_id") != F.col("entity_key"))
-    assert bad.count() == 0
-    v = constraint_violations(out["assignments"], out["cannot"])
-    assert v.count() > 0
-    assert v.filter(F.col("violated")).count() == 0
-
-
-def test_constrained_empty_cannot_matches_unconstrained(spark):
-    # an empty verdict table must reproduce the unconstrained clustering
-    from textgraphs_spark.plans.er_constraints import constrained_run
-    from textgraphs_spark.plans.er_pipeline import ERPipeline
-
-    ents = _eval_ents(spark)
-    empty = spark.createDataFrame([], "left_id string, right_id string")
-    out = constrained_run(spark, None, entities=ents, cannot_links=empty)
-    base = ERPipeline(spark).run_lean(None, entities=ents)
-    got = {(r["entity_key"], r["cluster_id"])
-           for r in out["assignments"].collect()}
-    want = {(r["entity_key"], r["cluster_id"]) for r in base.collect()}
-    assert got == want
-
-
-def test_constrained_removal_only_splits(spark):
-    # removing edges can only split clusters: the constrained run has at
-    # least as many clusters as the unconstrained one
-    from textgraphs_spark.plans.er_constraints import constrained_run
-    from textgraphs_spark.plans.er_pipeline import ERPipeline
-
-    ents = _eval_ents(spark)
-    out = constrained_run(spark, None, entities=ents, modulus=3)
-    base = ERPipeline(spark).run_lean(None, entities=ents)
-    n_con = out["assignments"].select("cluster_id").distinct().count()
-    n_base = base.select("cluster_id").distinct().count()
-    assert out["cannot"].count() > 0
-    assert n_con >= n_base
-
-
-def test_cluster_churn_boundary_fracs(spark):
-    # prior_frac=1.0: the prior run IS the current run -> every cluster
-    # 'stable'; prior_frac=0.0: no prior entities -> every cluster 'new'
-    from textgraphs_spark.plans.er_eval import cluster_churn
-    from textgraphs_spark.plans.er_pipeline import ERPipeline
-
-    ents = _eval_ents(spark)
-    parts = ERPipeline(spark).run_lean(None, entities=ents, return_parts=True)
-    full = cluster_churn(ents, parts, prior_frac=1.0)
-    assert full.filter(F.col("status") != "stable").count() == 0
-    none = cluster_churn(ents, parts, prior_frac=0.0)
-    assert none.filter(F.col("status") != "new").count() == 0
-    # membership accounting: cluster sizes sum to the entity count
-    assert (
-        full.agg(F.sum("n_members")).collect()[0][0]
-        == ents.count()
-    )
-
-
 def test_url_history_intervals(spark):
     # url u: captures a a b a -> three revisions; middle re-fetch folds
     # into revision 1 (n_captures 2); only the last row is current
@@ -370,25 +298,6 @@ def test_blocking_budget_curve_empty_entities(spark):
     assert all(r["n_pairs"] == 0 for r in rows)
 
 
-def test_merge_review_covers_exactly_merged_clusters(spark):
-    # the review queue's cluster set == churn's 'merged' set, and every
-    # bridging edge joins endpoints of different prior lineage
-    from textgraphs_spark.plans.er_eval import cluster_churn, merge_review
-    from textgraphs_spark.plans.er_pipeline import ERPipeline
-
-    ents = _eval_ents(spark, n_base=60, n_twin=12)
-    parts = ERPipeline(spark).run_lean(None, entities=ents, return_parts=True)
-    churn = cluster_churn(ents, parts)
-    review = merge_review(ents, parts)
-    merged = {r["cluster_id"] for r in churn.filter(F.col("status") == "merged").collect()}
-    got = {r["cluster_id"] for r in review.select("cluster_id").distinct().collect()}
-    assert got == merged
-    bad = review.filter(
-        F.col("left_prior").eqNullSafe(F.col("right_prior"))
-    ).count()
-    assert bad == 0
-
-
 def test_plan_shards_append_stable(spark):
     # shard assignment is an exclusive prefix cumsum in doc_id order, so
     # appending docs with LARGER ids must never move an existing doc's
@@ -427,21 +336,3 @@ def test_leakage_split_append_stable(spark):
     after = {r["doc_id"]: r["split"]
              for r in leakage_safe_split(grown, val_pct=15, test_pct=15).collect()}
     assert all(after[d] == s for d, s in before.items())
-
-
-def test_reviewed_clusters_splits_only_low_score_merges(spark):
-    # rejecting low-score bridges can only SPLIT clusters (>= cluster
-    # count), and with the cut at 0 (reject nothing) the reviewed
-    # clustering equals the unconstrained one
-    from textgraphs_spark.plans.er_eval import reviewed_clusters
-    from textgraphs_spark.plans.er_pipeline import ERPipeline, cluster_summary
-
-    ents = _eval_ents(spark, n_base=60, n_twin=12)
-    parts = ERPipeline(spark).run_lean(None, entities=ents, return_parts=True)
-    base = cluster_summary(parts["assignments"])
-    noop = reviewed_clusters(ents, parts, min_bridge_score=0.0)
-    got = {(r["cluster_id"], r["members"]) for r in noop.collect()}
-    want = {(r["cluster_id"], r["members"]) for r in base.collect()}
-    assert got == want
-    strict = reviewed_clusters(ents, parts, min_bridge_score=1.01)
-    assert strict.count() >= base.count()

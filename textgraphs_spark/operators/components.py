@@ -243,8 +243,8 @@ def components_over_keys(
     and self-describing in exports. The CC iterations run on 128-bit
     ``key_id128`` struct ids — two unrelated clusters cannot silently
     merge on a 64-bit birthday collision at 10^10+ distinct keys; only
-    the final label is the min key, via one extra vocabulary-sized
-    aggregation.
+    the final label is the min key, via one min-over-component window
+    (one shuffle of the assignment rows).
     """
     ids = (
         match_edges.select(F.col(left).alias("k"))
@@ -268,133 +268,3 @@ def components_over_keys(
             F.min("k").over(Window.partitionBy("comp")).alias("cluster_id"),
         )
     )
-
-
-def strongly_connected_components(
-    edges: DataFrame,
-    *,
-    src: str = "src",
-    dst: str = "dst",
-    max_rounds: int = 50,
-    max_prop_iters: int = 50,
-    stats: dict | None = None,
-) -> DataFrame:
-    """DIRECTED edges(src, dst) → (node, scc_id) with scc_id = min node
-    id of the strongly connected component. The directed closure the
-    undirected CC above cannot provide: mutual-link host rings (link
-    farms interlink in BOTH directions; organic links rarely come back)
-    and cyclic redirect webs are SCCs, not mere weak components.
-
-    Algorithm — forward-max coloring (Orzan / Slota et al.'s coloring
-    step), peeled: per outer round, (1) propagate ``color(v) = max(v,
-    colors of in-neighbors)`` to fixpoint — every vertex learns the max
-    id that reaches it; (2) vertices with ``color(v) == v`` are roots,
-    and the SCC of root r is exactly the set of color-r vertices that
-    REACH r (backward BFS from r over same-color edges); (3) emit those
-    SCCs keyed by min member, peel them, repeat on the remainder.
-
-    Scale shape: every step is an equi-join keyed by a vertex id
-    (forward step on src, backward step on dst) over vertex- or
-    edge-vocabulary-sized frames; ``localCheckpoint`` truncates lineage
-    per iteration exactly like connected_components. Round counts are
-    the algorithm's published behavior: forward fixpoint is O(graph
-    depth) joins, outer peeling is O(condensation-DAG depth) — both
-    modest on web host graphs (bow-tie structure), both capped and
-    loudly failed rather than silently truncated. Works on any
-    orderable id type (string hosts included): only equality joins and
-    min/max comparisons, never star rounds.
-    """
-    e_all = (
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d"))
-        .distinct()
-        .localCheckpoint()
-    )
-    verts = (
-        e_all.select(F.col("s").alias("v"))
-        .union(e_all.select(F.col("d").alias("v")))
-        .distinct()
-        .localCheckpoint()
-    )
-    remaining = verts
-    out: DataFrame | None = None
-    rounds = 0
-    for _ in range(max_rounds):
-        if remaining.isEmpty():
-            break
-        rounds += 1
-        e = (
-            e_all.join(remaining.withColumnRenamed("v", "s"), "s", "left_semi")
-            .join(remaining.withColumnRenamed("v", "d"), "d", "left_semi")
-            .localCheckpoint()
-        )
-        color = remaining.select("v", F.col("v").alias("c"))
-        for _ in range(max_prop_iters):
-            inc = (
-                e.join(color.withColumnRenamed("v", "s"), "s")
-                .groupBy(F.col("d").alias("v"))
-                .agg(F.max("c").alias("ic"))
-            )
-            new = (
-                color.join(inc, "v", "left")
-                .select("v", F.greatest("c", F.coalesce("ic", "c")).alias("c"))
-                .localCheckpoint()
-            )
-            changed = (
-                new.join(color.withColumnRenamed("c", "c0"), "v")
-                .filter(F.col("c") != F.col("c0"))
-                .isEmpty()
-            )
-            color = new
-            if changed:
-                break
-        else:
-            raise RuntimeError(
-                f"SCC forward coloring did not converge in {max_prop_iters} "
-                "iterations — raise max_prop_iters (bound is the graph depth)"
-            )
-        # same-color edges only: the backward walk must not leave the
-        # color class, or it would swallow vertices of other SCCs
-        cs = color.select(F.col("v").alias("s"), F.col("c").alias("sc"))
-        cd = color.select(F.col("v").alias("d"), F.col("c").alias("dc"))
-        same = (
-            e.join(cs, "s").join(cd, "d")
-            .filter(F.col("sc") == F.col("dc"))
-            .select("s", "d")
-            .localCheckpoint()
-        )
-        assigned = color.filter(F.col("v") == F.col("c")).select(
-            "v", F.col("v").alias("root")
-        ).localCheckpoint()
-        frontier = assigned
-        for _ in range(max_prop_iters):
-            preds = (
-                same.join(frontier.withColumnRenamed("v", "d"), "d")
-                .select(F.col("s").alias("v"), "root")
-                .distinct()
-            )
-            fresh = preds.join(assigned, "v", "left_anti").localCheckpoint()
-            if fresh.isEmpty():
-                break
-            assigned = assigned.unionByName(fresh).localCheckpoint()
-            frontier = fresh
-        else:
-            raise RuntimeError(
-                f"SCC backward walk did not converge in {max_prop_iters} "
-                "iterations — raise max_prop_iters (bound is the SCC diameter)"
-            )
-        mins = assigned.groupBy("root").agg(F.min("v").alias("scc_id"))
-        res = assigned.join(mins, "root").select(F.col("v").alias("node"), "scc_id")
-        out = res if out is None else out.unionByName(res)
-        remaining = remaining.join(assigned, "v", "left_anti").localCheckpoint()
-    else:
-        raise RuntimeError(
-            f"SCC peeling did not finish in {max_rounds} rounds — raise "
-            "max_rounds (bound is the condensation-DAG depth)"
-        )
-    if stats is not None:
-        stats["rounds"] = rounds
-    if out is None:
-        t = edges.schema[src].dataType.simpleString()
-        return edges.sparkSession.createDataFrame([], f"node {t}, scc_id {t}")
-    return out.localCheckpoint()

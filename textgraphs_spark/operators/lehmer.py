@@ -2,9 +2,8 @@
 
 ``det_hash`` (Spark) and ``det_hash_sql`` (DuckDB) compute the same
 value in [0, LEHMER_P) for any 64-bit integer, so a hash-threshold
-filter (cannot-link selection, prior-run subsets, deterministic
-sampling and sharding) picks the identical rows in the engine and in its
-oracle. Keep the two in lockstep.
+filter (deterministic sampling and sharding) picks the identical rows
+in the engine and in its oracle. Keep the two in lockstep.
 """
 
 from __future__ import annotations

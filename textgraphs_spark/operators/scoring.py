@@ -9,7 +9,6 @@ against KG aliases with min_similarity 0.9 (reference: textgraphs/kg.py:
   batch loop is amortized across ~10k pairs per Arrow batch). Semantics
   match DuckDB's ``jaro_winkler_similarity`` (standard: boost threshold
   0.7, prefix scale 0.1, prefix cap 4) so the driver oracle can verify it.
-* Levenshtein: Spark builtin ``F.levenshtein`` (JVM, codegen).
 * name_match_score: the ER decision function — last-token JW weighted with
   first-token compatibility (initial-aware), thresholded at the
   reference's min_similarity (0.9).
@@ -303,8 +302,7 @@ def cosine_expr(a: str, b: str) -> Column:
     """JVM-side cosine similarity between two array<float/double> columns.
 
     ``try_divide`` so a zero-norm vector yields NULL instead of an ANSI
-    DIVIDE_BY_ZERO error; callers (``score_pairs``) treat NULL cosine as
-    "no embedding signal" and fall back to the name score.
+    DIVIDE_BY_ZERO error.
     """
     dot = F.expr(f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0.0D, (acc, v) -> acc + v)")
     na = F.sqrt(F.expr(f"aggregate({a}, 0.0D, (acc, v) -> acc + v * v)"))
@@ -312,57 +310,11 @@ def cosine_expr(a: str, b: str) -> Column:
     return F.try_divide(dot, na * nb).alias("cosine")
 
 
-def score_pairs(
-    pairs: DataFrame,
-    *,
-    left_col: str = "left_surface",
-    right_col: str = "right_surface",
-    threshold: float = MIN_SIMILARITY,
-    lean: bool = False,
-    left_vec: str | None = None,
-    right_vec: str | None = None,
-    vec_weight: float = 0.35,
-) -> DataFrame:
-    """Score candidate pairs; adds jw, lev_ratio, score, match columns.
-
-    ``lean=True`` computes only the decision score + match flag (one UDF
-    stage instead of two) — the clustering path needs nothing else.
-
-    When both sides carry an embedding column (``left_vec``/``right_vec``,
-    array<float/double>), the decision score blends in embedding cosine:
-    ``(1 - vec_weight) * name_score + vec_weight * cosine``. The cosine
-    runs entirely JVM-side (zip_with + aggregate), so the Python cost per
-    pair is unchanged; pairs where either vector is NULL fall back to the
-    pure name score.
-    """
-    name_score = name_match_udf(F.col(left_col), F.col(right_col))
-    if left_vec and right_vec:
-        cos = cosine_expr(left_vec, right_vec)
-        blended = (
-            F.lit(1.0 - vec_weight) * name_score + F.lit(vec_weight) * cos
-        )
-        # fall back to the name score not only for NULL vectors but for any
-        # degenerate cosine (zero-norm vector -> 0/0 -> NULL/NaN, length-
-        # mismatched arrays) — otherwise a NULL score silently drops the pair
-        score = F.when(
-            F.col(left_vec).isNotNull()
-            & F.col(right_vec).isNotNull()
-            & cos.isNotNull()
-            & ~F.isnan(cos),
-            blended,
-        ).otherwise(name_score)
-    else:
-        score = name_score
-    scored = pairs.withColumn(
-        "score", score
-    ).withColumn("match", F.col("score") >= F.lit(threshold))
-    if lean:
-        return scored
-    lev_ratio = 1.0 - F.levenshtein(F.lower(left_col), F.lower(right_col)) / F.greatest(
-        F.length(left_col), F.length(right_col)
-    )
-    return (
-        scored
-        .withColumn("jw", jaro_winkler_udf(F.lower(F.col(left_col)), F.lower(F.col(right_col))))
-        .withColumn("lev_ratio", lev_ratio.cast("double"))
+def score_pairs(pairs: DataFrame, *, threshold: float = MIN_SIMILARITY) -> DataFrame:
+    """Score candidate pairs(left_surface, right_surface, ...): adds the
+    ``name_match_score`` decision ``score`` and ``match = score >=
+    threshold`` — one Arrow UDF stage."""
+    score = name_match_udf(F.col("left_surface"), F.col("right_surface"))
+    return pairs.withColumn("score", score).withColumn(
+        "match", F.col("score") >= F.lit(threshold)
     )

@@ -27,7 +27,6 @@ from __future__ import annotations
 from ..nlp import lex
 from ..operators.blocking import minhash_xor_constants
 from ..operators.graphops import BALL_MAX_ITER
-from ..operators.lehmer import det_hash_sql
 
 
 def _inlist(words) -> str:
@@ -727,7 +726,7 @@ cands AS MATERIALIZED (
 def pair_scores_ctes(entities: str = "entities") -> str:
     """``cands`` → ``pair_scores(left_id, right_id, score)``: every
     candidate pair with its decision score — the SQL twin of
-    scoring.score_pairs(lean=True) over the blocking output."""
+    scoring.score_pairs over the blocking output."""
     return f"""scored AS MATERIALIZED (
   SELECT c.left_id, c.right_id, lp.p AS lp, rp.p AS rp
   FROM cands c
@@ -778,8 +777,8 @@ assignments AS MATERIALIZED (
 
 def assignment_ctes(table: str = "documents", *, min_similarity: float = 0.9) -> str:
     """CTE chain through ``assignments(entity_key, cluster_id, surface,
-    mention_count, doc_freq)`` — shared by the cluster-summary,
-    ranked-members, golden-record and cohesion oracles. Must be placed
+    mention_count, doc_freq)`` — shared by the cluster-summary and
+    ranked-members oracles. Must be placed
     under WITH RECURSIVE (the reach CTE)."""
     return f"""{entities_ctes(table)},
 {clustering_ctes('entities', min_similarity=min_similarity)}"""
@@ -1481,52 +1480,3 @@ JOIN df da ON pairs.key_a = da.node_key
 JOIN df db ON pairs.key_b = db.node_key
 CROSS JOIN tot
 """
-
-
-def constrained_clustering_ctes(
-    entities: str = "entities", *, min_similarity: float = 0.9, modulus: int = 7
-) -> str:
-    """``clustering_ctes`` with the deterministic-reviewer cannot-link
-    removal (plans/er_constraints.py): matches are canonicalized
-    (least, greatest), the ~1/modulus whose canonical-pair Lehmer hash
-    ≡ 0 (mod modulus) are EXCEPTed out before the closure, and the
-    ``cannot`` CTE stays visible for the violations audit. Must be
-    placed under WITH RECURSIVE."""
-    ph = det_hash_sql(
-        "CAST('0x' || substr(md5(left_id || '|' || right_id), 1, 15) AS BIGINT)"
-    )
-    return f"""{blocking_ctes(entities)},
-{pair_scores_ctes(entities)},
-matches AS MATERIALIZED (
-  SELECT least(left_id, right_id) AS left_id,
-         greatest(left_id, right_id) AS right_id
-  FROM pair_scores WHERE score >= {min_similarity}
-),
-cannot AS MATERIALIZED (
-  SELECT left_id, right_id FROM matches WHERE ({ph}) % {modulus} = 0
-),
-kept AS MATERIALIZED (
-  -- anti-join, not EXCEPT: DuckDB rejects set ops other than UNION
-  -- anywhere under a WITH RECURSIVE clause list
-  SELECT m.left_id, m.right_id FROM matches m
-  WHERE NOT EXISTS (
-    SELECT 1 FROM cannot c
-    WHERE c.left_id = m.left_id AND c.right_id = m.right_id
-  )
-),
-edgesu AS MATERIALIZED (
-  SELECT left_id AS a, right_id AS b FROM kept
-  UNION SELECT right_id, left_id FROM kept
-),
-reach(node, r) AS (
-  SELECT entity_key, entity_key FROM {entities}
-  UNION
-  SELECT e.b, x.r FROM reach x JOIN edgesu e ON e.a = x.node
-),
-comp AS MATERIALIZED (
-  SELECT node AS entity_key, min(r) AS cluster_id FROM reach GROUP BY node
-),
-assignments AS MATERIALIZED (
-  SELECT e.entity_key, c.cluster_id, e.surface, e.mention_count, e.doc_freq
-  FROM {entities} e JOIN comp c ON e.entity_key = c.entity_key
-)"""

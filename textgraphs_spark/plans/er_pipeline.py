@@ -152,10 +152,11 @@ class ERPipeline(StagedPipeline):
 
     def resolve(
         self, entities: DataFrame, *, prior: DataFrame | None = None
-    ) -> dict[str, DataFrame]:
+    ) -> DataFrame:
         """entities(entity_key, surface, label, mention_count, doc_freq) →
-        {entities, match_scores, assignments}: block → score → CC →
-        assign, the one definition every entry point runs.
+        assignments(entity_key, cluster_id, surface, label, mention_count,
+        doc_freq): block → score → CC → assign, the one definition every
+        entry point runs.
 
         ``prior`` is a committed assignment table (entity_key, cluster_id,
         ...) over a subset of ``entities``. Only pairs touching a FRESH key
@@ -184,18 +185,15 @@ class ERPipeline(StagedPipeline):
         n_score_parts = self.spark.sparkContext.defaultParallelism * 2
         # checkpoint: match edges are read several times downstream (CC
         # input, id mapping) — never re-run the scoring UDF. Checkpoint
-        # BEFORE the match filter: a filter over the projected score is
-        # pushed below the projection, which would run the UDF twice (once
-        # to filter, once for the kept score). The score column rides
-        # along so evaluation operators can audit cluster cohesion without
-        # re-scoring.
+        # BEFORE the match filter: a filter over the projected match flag
+        # is pushed below the projection, which would run the UDF twice
+        # (once to filter, once for the kept columns).
         scores = (
-            S.score_pairs(pairs.repartition(n_score_parts), lean=True)
-            .select("left_id", "right_id", "score", "match")
+            S.score_pairs(pairs.repartition(n_score_parts))
+            .select("left_id", "right_id", "match")
             .localCheckpoint()
         )
-        match_scores = scores.filter(F.col("match")).drop("match")
-        edges = match_scores.select("left_id", "right_id")
+        edges = scores.filter(F.col("match")).select("left_id", "right_id")
         if prior is not None:
             edges = edges.unionByName(
                 prior.filter(F.col("entity_key") != F.col("cluster_id")).select(
@@ -208,16 +206,11 @@ class ERPipeline(StagedPipeline):
             small_graph_threshold=self.small_graph_threshold,
             stats=self.cc_stats,
         )
-        assignments = (
+        return (
             entities.join(clusters, "entity_key", "left")
             .withColumn("cluster_id", F.coalesce("cluster_id", F.col("entity_key")))
             .select("entity_key", "cluster_id", "surface", "label", "mention_count", "doc_freq")
         )
-        return {
-            "entities": entities,
-            "match_scores": match_scores,
-            "assignments": assignments,
-        }
 
     def run(self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> dict[str, DataFrame]:
         """Staged batch run → {extracted, entities, clusters}.
@@ -229,22 +222,16 @@ class ERPipeline(StagedPipeline):
         """
         extracted = self._stage("extracted", lambda: self._extract(docs, id_col, text_col))
         entities = self._stage("entities", lambda: entity_aggregate(mention_rows(extracted)))
-        assignments = self._stage(
-            "assignments", lambda: self.resolve(entities)["assignments"]
-        )
+        assignments = self._stage("assignments", lambda: self.resolve(entities))
         self.write_lineage()
         return {"extracted": extracted, "entities": entities, "clusters": assignments}
 
     def run_lean(
         self, docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-        *, entities: DataFrame | None = None, return_parts: bool = False,
-    ) -> DataFrame | dict[str, DataFrame]:
-        """Throughput-path variant: one lazy DAG, no per-stage counts.
-
-        ``return_parts=True`` returns {entities, match_scores,
-        assignments} instead of just the assignment frame — the
-        evaluation operators (plans/er_eval.cluster_cohesion) need the
-        per-edge match scores that the plain path discards.
+        *, entities: DataFrame | None = None,
+    ) -> DataFrame:
+        """Throughput-path variant: one lazy DAG, no per-stage counts;
+        returns the assignment frame.
 
         Extraction feeds the vocabulary-sized ``entities`` aggregate, which
         is the only thing persisted — it is reused by both blocking
@@ -259,8 +246,7 @@ class ERPipeline(StagedPipeline):
         """
         if entities is None:
             entities = entity_aggregate(mention_rows(self._extract(docs, id_col, text_col)))
-        parts = self.resolve(entities)
-        return parts if return_parts else parts["assignments"]
+        return self.resolve(entities)
 
     def update(self, new_docs: DataFrame, id_col: str = "doc_id",
                text_col: str = "text", *,
@@ -283,7 +269,8 @@ class ERPipeline(StagedPipeline):
         mid-write can never corrupt readable state). Default (None) is
         the classic in-place refresh of ``self.workdir``.
         """
-        assert self.workdir, "update() needs the workdir of a prior run()"
+        if not self.workdir:
+            raise ValueError("update() needs the workdir of a prior run()")
         t0 = time.time()
         spark = self.spark
         src = state_from or self.workdir
@@ -300,7 +287,7 @@ class ERPipeline(StagedPipeline):
         merged = entity_aggregate(
             old_entities.unionByName(mention_rows(self._extract(new_docs, id_col, text_col)))
         )
-        assignments = self.resolve(merged, prior=old_assign)["assignments"].localCheckpoint()
+        assignments = self.resolve(merged, prior=old_assign).localCheckpoint()
         # refresh the resumable state. Direct overwrite is safe — both
         # DataFrames are localCheckpoint'ed, so their lineage no longer
         # reads the paths being replaced — and it works on any Hadoop
