@@ -11,9 +11,9 @@ the conf at runtime (it is session-local and runtime-settable) and drive
 the exact call chain the driver uses.
 
 Audited Arrow-shape-dependent boundaries (see PLANS.md "Arrow boundary
-audit"): components.py:109 (struct itertuples — covered here),
-components.py:144 (createDataFrame from dict-celled pandas — covered
-here), graphops.py:162 (long-only itertuples — shape-invariant).
+audit"): components._driver_union_find (struct ids cross toPandas and
+createDataFrame as flattened long columns — covered here),
+graphops.girvan_newman_communities (long-only itertuples — shape-invariant).
 """
 
 import pytest

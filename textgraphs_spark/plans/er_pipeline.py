@@ -138,12 +138,15 @@ class ERPipeline(StagedPipeline):
         # include NOUN/PROPN lemma mentions as resolvable entities —
         # for corpora whose text has no NER surface forms
         self.include_lemmas = include_lemmas
-        # CC size-adaptive cutover: below this many match edges the
+        # CC size-adaptive cutover: up to this many match edges the
         # clustering runs as a driver union-find; 0 forces the
-        # distributed large-star/small-star rounds (engage-scale proof
-        # runs and clusters-at-10^12 both take that path). Execution
-        # evidence for the most recent clustering lands in
-        # ``self.cc_stats`` (path, edges, rounds).
+        # distributed path, a per-partition contraction pass then
+        # large-star/small-star rounds until the edges form a star forest
+        # (engage-scale proof runs and clusters-at-10^12 both take that
+        # path). Every resolve overwrites ``self.cc_stats`` with the
+        # evidence of its own clustering: path, edges, and rounds (passes
+        # over the edge set, the contraction pass included; 0 on the
+        # union-find path).
         self.small_graph_threshold = small_graph_threshold
         self.cc_stats: dict = {}
 
