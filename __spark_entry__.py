@@ -921,339 +921,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def token_count(spark, sf_dir):
         return TQ.token_count(_docs(spark, sf_dir))
 
-    # ---- generic operator checks on TPC-H-ish tables --------------------
-
-    def tpch_pricing_summary(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        dec = lambda c: F.col(c).cast("decimal(18,4)")
-        return (
-            li.groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.round(F.sum(dec("l_quantity")).cast("double"), 2).alias("sum_qty"),
-                F.round(F.sum(dec("l_extendedprice")).cast("double"), 2).alias("sum_base_price"),
-                F.round(
-                    F.sum((dec("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - dec("l_discount"))).cast("decimal(28,8)")).cast("double"),
-                    2,
-                ).alias("sum_disc_price"),
-                F.count("*").alias("count_order"),
-            )
-            .orderBy("l_returnflag", "l_linestatus")
-        )
-
-    def customer_order_rollup(spark, sf_dir):
-        c = _t(spark, sf_dir, "customer")
-        o = _t(spark, sf_dir, "orders")
-        n = _t(spark, sf_dir, "nation")
-        return (
-            o.join(c, F.col("o_custkey") == F.col("c_custkey"))
-            .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-            .groupBy("n_name")
-            .agg(
-                F.count("*").alias("n_orders"),
-                F.round(F.sum(F.col("o_totalprice").cast("decimal(18,4)")).cast("double"), 2).alias("total_price"),
-                F.countDistinct("c_custkey").alias("n_customers"),
-            )
-            .orderBy("n_name")
-        )
-
-    def customers_without_orders(spark, sf_dir):
-        c = _t(spark, sf_dir, "customer")
-        o = _t(spark, sf_dir, "orders")
-        return (
-            c.join(o, F.col("c_custkey") == F.col("o_custkey"), "left_anti")
-            .select("c_custkey", "c_name", "c_mktsegment")
-            .orderBy("c_custkey")
-        )
-
-    def distinct_supplier_part_pairs(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        return (
-            li.select(
-                F.least("l_suppkey", "l_partkey").alias("lo"),
-                F.greatest("l_suppkey", "l_partkey").alias("hi"),
-            )
-            .distinct()
-            .groupBy("lo")
-            .agg(F.count("*").alias("n_pairs"), F.max("hi").alias("max_hi"))
-            .orderBy("lo")
-        )
-
-    def top_parts_by_revenue(spark, sf_dir):
-        li = _t(spark, sf_dir, "lineitem")
-        p = _t(spark, sf_dir, "part")
-        rev = (F.col("l_extendedprice").cast("decimal(18,4)") * (F.lit(1).cast("decimal(18,4)") - F.col("l_discount").cast("decimal(18,4)"))).cast("decimal(28,8)")
-        return (
-            li.groupBy("l_partkey")
-            .agg(F.round(F.sum(rev).cast("double"), 2).alias("revenue"))
-            .join(p, F.col("l_partkey") == F.col("p_partkey"))
-            .select("p_partkey", "p_name", "revenue")
-            .orderBy(F.desc("revenue"), "p_partkey")
-            .limit(10)
-        )
-
-    def events_user_windows(spark, sf_dir):
-        from pyspark.sql.window import Window
-
-        ev = _t(spark, sf_dir, "events")
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        return (
-            ev.withColumn("seq", F.row_number().over(w))
-            .withColumn("prev_ts", F.lag("ts").over(w))
-            .withColumn(
-                "gap_us",
-                F.when(
-                    F.col("prev_ts").isNotNull(),
-                    F.unix_micros(F.col("ts").cast("timestamp"))
-                    - F.unix_micros(F.col("prev_ts").cast("timestamp")),
-                ),
-            )
-            .groupBy("user_id")
-            .agg(
-                F.count("*").alias("n_events"),
-                F.max("seq").alias("max_seq"),
-                F.round(F.avg("gap_us") / 1000000.0, 4).alias("avg_gap_s"),
-                F.countDistinct("event_type").alias("n_types"),
-            )
-            .orderBy("user_id")
-        )
-
-    def events_ntile(spark, sf_dir):
-        from pyspark.sql.window import Window
-
-        ev = _t(spark, sf_dir, "events")
-        w = Window.orderBy(F.col("value").asc(), F.col("event_id").asc())
-        return (
-            ev.withColumn("stripe", F.ntile(8).over(w))
-            .groupBy("stripe")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(F.min("value"), 6).alias("min_v"),
-                F.round(F.max("value"), 6).alias("max_v"),
-            )
-            .orderBy("stripe")
-        )
-
-    def events_ntile_scalable(spark, sf_dir):
-        # EXACT ntile without the single-task global sort: range-
-        # partitioned rank + closed-form tile assignment
-        # (operators/rankops.py); shares the window form's oracle
-        from textgraphs_spark.operators.rankops import global_ntile
-
-        ev = _t(spark, sf_dir, "events")
-        tiled = global_ntile(ev, 8, [F.col("value").asc(), F.col("event_id").asc()])
-        return (
-            tiled.groupBy("stripe")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(F.min("value"), 6).alias("min_v"),
-                F.round(F.max("value"), 6).alias("max_v"),
-            )
-            .orderBy("stripe")
-        )
-
-    def events_value_stripes(spark, sf_dir):
-        # the SCALE substitute for events_ntile's global sort (PLANS.md):
-        # value-quantile striping as one percentile aggregation (no sort,
-        # map-side partial) + a broadcast 1-row cut vector bucketing each
-        # row map-side. Cuts rounded to 9 decimals on both engines so
-        # boundary rows bucket identically.
-        ev = _t(spark, sf_dir, "events")
-        ps = [i / 8.0 for i in range(1, 8)]
-        cuts = ev.agg(
-            F.expr(
-                f"transform(percentile(value, array({', '.join(map(str, ps))})),"
-                " c -> round(c, 9))"
-            ).alias("cuts")
-        )
-        return (
-            ev.crossJoin(F.broadcast(cuts))
-            .withColumn(
-                "stripe",
-                (F.lit(1) + F.expr("size(filter(cuts, c -> value > c))")).cast("int"),
-            )
-            .groupBy("stripe")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(F.min("value"), 6).alias("min_v"),
-                F.round(F.max("value"), 6).alias("max_v"),
-            )
-            .orderBy("stripe")
-        )
-
-    def documents_quality_gate(spark, sf_dir):
-        from textgraphs_spark.operators.quality_gate import document_rules, violation_counts
-
-        return violation_counts(_docs(spark, sf_dir), document_rules())
-
-    def events_distinct_sketch(spark, sf_dir):
-        # mergeable-HLL daily sketches; estimate vs exact per day. At the
-        # testdata cardinality the estimate is exact, so this is
-        # value-checked against DuckDB's plain count(DISTINCT)
-        from textgraphs_spark.operators.sketches import daily_distinct_sketches
-
-        return (
-            daily_distinct_sketches(_t(spark, sf_dir, "events"))
-            .select(
-                # ISO string, not DATE: date columns round-trip through
-                # pandas as object-vs-datetime64 depending on the engine
-                F.date_format("day", "yyyy-MM-dd").alias("day"),
-                "n_events",
-                F.col("distinct_est").cast("long").alias("distinct_users"),
-            )
-            .orderBy("day")
-        )
-
-    def events_distinct_rollup(spark, sf_dir):
-        # the MERGE path — the reason sketches exist at scale: persisted
-        # daily sketches union into a range estimate with no rescan of
-        # the raw events (exact at test cardinality, like the daily query)
-        from textgraphs_spark.operators.sketches import (
-            daily_distinct_sketches, rollup_distinct,
-        )
-
-        return rollup_distinct(
-            daily_distinct_sketches(_t(spark, sf_dir, "events"))
-        ).select(
-            F.col("distinct_est").cast("long").alias("distinct_users"),
-            "n_events", "n_days",
-        )
-
-    def events_sessionize(spark, sf_dir):
-        from textgraphs_spark.operators.analytics import session_stats
-
-        return session_stats(_t(spark, sf_dir, "events"))
-
-    def events_session_window(spark, sf_dir):
-        # Spark's BUILT-IN gap-based session window (same sessions as the
-        # lag+cumsum sessionize operator; window end = last event + gap)
-        ev = _t(spark, sf_dir, "events")
-        w = F.session_window(F.col("ts").cast("timestamp"), "30 minutes")
-        return (
-            ev.groupBy("user_id", w.alias("w"))
-            .agg(F.count("*").alias("n_events"))
-            .select(
-                "user_id",
-                F.unix_micros(F.col("w.start").cast("timestamp")).alias("start_us"),
-                F.unix_micros(F.col("w.end").cast("timestamp")).alias("end_us"),
-                "n_events",
-            )
-            .orderBy("user_id", "start_us")
-        )
-
-    def events_asof_attribution(spark, sf_dir):
-        from textgraphs_spark.operators.analytics import asof_join
-
-        ev = _t(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select(
-            "user_id", F.col("event_id").alias("click_id"), "ts"
-        )
-        views = ev.filter(F.col("event_type") == "view").select(
-            "user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("vts")
-        )
-        out = asof_join(clicks, views, "user_id", "ts", "vts")
-        click_us = F.unix_micros(F.col("ts").cast("timestamp"))
-        return out.select(
-            "click_id", "user_id",
-            click_us.alias("click_us"),
-            F.col("asof_view_id").alias("view_id"),
-            F.col("asof_ts_us").alias("view_us"),
-            # exact integer micros, not round(double, 4): a latency on a
-            # .xxxx5 double boundary rounds differently across engines
-            (click_us - F.col("asof_ts_us")).alias("latency_us"),
-        ).orderBy("click_id")
-
-    def events_funnel(spark, sf_dir):
-        # view -> click -> purchase first-qualifying-chain funnel: one
-        # conditional min per step (keyed shuffles), counts stitched
-        # with a broadcast cross join — never a per-user sequence sort
-        from textgraphs_spark.operators.analytics import funnel_counts
-
-        return funnel_counts(
-            _t(spark, sf_dir, "events"), ["view", "click", "purchase"]
-        ).orderBy("step")
-
-    def events_cohort_retention(spark, sf_dir):
-        # weekly cohort x offset retention triangle; exact unix-micro
-        # week arithmetic so both engines agree bit-for-bit
-        from textgraphs_spark.operators.analytics import cohort_retention
-
-        return cohort_retention(_t(spark, sf_dir, "events")).orderBy(
-            "cohort_us", "week_offset"
-        )
-
-    def events_value_buckets(spark, sf_dir):
-        from textgraphs_spark.operators.analytics import range_bucket_join
-
-        ev = _t(spark, sf_dir, "events")
-        buckets = spark.createDataFrame(
-            [("b0", 0.0, 50.0), ("b1", 50.0, 100.0),
-             ("b2", 100.0, 200.0), ("b3", 200.0, 500.0)],
-            "bucket string, lo double, hi double",
-        )
-        return (
-            range_bucket_join(ev, buckets)
-            .groupBy("bucket")
-            .agg(
-                F.count("*").alias("n"),
-                F.round(
-                    F.sum(F.col("value").cast("decimal(18,6)")).cast("double"), 2
-                ).alias("sum_value"),
-            )
-            .orderBy("bucket")
-        )
-
-    def region_nation_rollup(spark, sf_dir):
-        c = _t(spark, sf_dir, "customer")
-        n = _t(spark, sf_dir, "nation")
-        r = _t(spark, sf_dir, "region")
-        joined = (
-            c.join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
-            .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        )
-        return (
-            joined.rollup("r_name", "n_name")
-            .agg(
-                F.count("*").alias("n_customers"),
-                F.round(
-                    F.sum(F.col("c_acctbal").cast("decimal(18,4)")).cast("double"), 2
-                ).alias("total_acctbal"),
-            )
-            .select(
-                F.coalesce("r_name", F.lit("ALL")).alias("region"),
-                F.coalesce("n_name", F.lit("ALL")).alias("nation"),
-                "n_customers", "total_acctbal",
-            )
-            .orderBy("region", "nation")
-        )
-
-    def events_value_percentiles(spark, sf_dir):
-        ev = _t(spark, sf_dir, "events")
-        pct = lambda p: F.round(
-            F.expr(f"percentile(value, {p})"), 6
-        ).alias(f"p{int(p * 100)}")
-        return ev.groupBy("event_type").agg(
-            F.count("*").alias("n"), pct(0.25), pct(0.5), pct(0.75), pct(0.95)
-        ).orderBy("event_type")
-
-    def events_type_pivot(spark, sf_dir):
-        ev = _t(spark, sf_dir, "events")
-        types = ["click", "error", "purchase", "signup", "view"]
-        return (
-            ev.groupBy("user_id")
-            .pivot("event_type", types)
-            .agg(F.count(F.lit(1)))
-            .na.fill(0, types)
-            .orderBy("user_id")
-        )
-
-    def users_click_no_purchase(spark, sf_dir):
-        ev = _t(spark, sf_dir, "events")
-        clicks = ev.filter(F.col("event_type") == "click").select("user_id")
-        big_buyers = ev.filter(
-            (F.col("event_type") == "purchase") & (F.col("value") > 200)
-        ).select("user_id")
-        viewers = ev.filter(F.col("event_type") == "view").select("user_id")
-        return clicks.intersect(viewers).exceptAll(big_buyers.distinct()).orderBy("user_id")
+    # ---- word cloud (reference vis.py) -----------------------------------
 
     def wordcloud_weights(spark, sf_dir):
         # reference vis.py:253-265: per-token frequency scaled by max -> 1000
@@ -1525,10 +1193,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # prefix of this dict (round 3 recorded exactly the first 50 keys),
     # so operator-critical queries that have never (or least recently)
     # appeared in a driver record come FIRST — the fuzzy-fallback and
-    # salted-skew paths, the KG linking family, and the events/window
-    # family rotated out of round 3 — while generic checks that are
-    # redundant with other green entries (plain TPC-H rollups, simple
-    # event windows) sit at the tail.
+    # salted-skew paths and the KG linking family — while generic checks
+    # that are redundant with other green entries sit at the tail.
     return {
         # round-5 ordering (least-recently-driver-verified first):
         # (a) never in any driver record — session-6 additions first
@@ -1583,8 +1249,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "graph_hits": graph_hits,
         "dedup_containment": dedup_containment,
         "doc_readability": doc_readability,
-        "events_funnel": events_funnel,
-        "events_cohort_retention": events_cohort_retention,
         "doc_lm_xent2": doc_lm_xent2,
         "pack_efficiency": pack_efficiency,
         "graph_kcore": graph_kcore,
@@ -1633,19 +1297,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "lang_id": lang_id,
         "quality_score": quality_score,
         "token_count": token_count,
-        "events_ntile": events_ntile,
-        "events_value_stripes": events_value_stripes,
-        "events_value_percentiles": events_value_percentiles,
-        "events_type_pivot": events_type_pivot,
-        "events_user_windows": events_user_windows,
-        "users_click_no_purchase": users_click_no_purchase,
-        "documents_quality_gate": documents_quality_gate,
-        "events_distinct_sketch": events_distinct_sketch,
-        "tpch_pricing_summary": tpch_pricing_summary,
-        "customer_order_rollup": customer_order_rollup,
-        "customers_without_orders": customers_without_orders,
-        "distinct_supplier_part_pairs": distinct_supplier_part_pairs,
-        "top_parts_by_revenue": top_parts_by_revenue,
         # (f) green in the r4 record on unchanged code — most recently
         # verified, so last
         "kg_linking_second_pass": kg_linking_second_pass,
@@ -1656,12 +1307,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "relation_inf_edges": relation_inf_edges,
         "ranked_phrases_pages": ranked_phrases_pages,
         "wordcloud_weights": wordcloud_weights,
-        "region_nation_rollup": region_nation_rollup,
-        "events_distinct_rollup": events_distinct_rollup,
-        "events_sessionize": events_sessionize,
-        "events_session_window": events_session_window,
-        "events_asof_attribution": events_asof_attribution,
-        "events_value_buckets": events_value_buckets,
         "boilerplate_removal": boilerplate_removal,
         "stratified_sample": stratified_sample,
         "pii_signals": pii_signals,
@@ -1669,7 +1314,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dedup_paragraphs": dedup_paragraphs,
         "host_stats": host_stats,
         "url_host_filter": url_host_filter,
-        "events_ntile_scalable": events_ntile_scalable,
         "per_source_cap_windowless": per_source_cap_windowless,
         "cross_doc_repetition": cross_doc_repetition,
         "er_eval_blocked": er_eval_blocked,
@@ -2578,15 +2222,6 @@ FROM per_doc GROUP BY lang
         "stratified_sample": stratified_sample_sql,
         # the scalable exact forms are VALUE-IDENTICAL to the window
         # forms by construction — they share the same oracles
-        "events_ntile_scalable": """
-WITH w AS (
-  SELECT value, event_id, ntile(8) OVER (ORDER BY value ASC, event_id ASC) AS stripe
-  FROM events
-)
-SELECT stripe, count(*) AS n,
-       round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-FROM w GROUP BY stripe ORDER BY stripe
-""",
         "per_source_cap_windowless": per_source_cap_sql,
         "cross_doc_repetition": f"""
 WITH d AS (SELECT doc_id, {toks} AS toks FROM documents),
@@ -2792,66 +2427,6 @@ SELECT doc_id, n_words, n_sentences, n_syllables,
             THEN round(n_distinct / n_words, 6) END AS ttr
 FROM c
 """,
-        "tpch_pricing_summary": """
-SELECT l_returnflag, l_linestatus,
-       round(CAST(sum(CAST(l_quantity AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_qty,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS sum_base_price,
-       round(CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(28,8))) AS DOUBLE), 2) AS sum_disc_price,
-       count(*) AS count_order
-FROM lineitem
-GROUP BY l_returnflag, l_linestatus
-ORDER BY l_returnflag, l_linestatus
-""",
-        "customer_order_rollup": """
-SELECT n_name,
-       count(*) AS n_orders,
-       round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,4))) AS DOUBLE), 2) AS total_price,
-       count(DISTINCT c_custkey) AS n_customers
-FROM orders
-JOIN customer ON o_custkey = c_custkey
-JOIN nation ON c_nationkey = n_nationkey
-GROUP BY n_name
-ORDER BY n_name
-""",
-        "customers_without_orders": """
-SELECT c_custkey, c_name, c_mktsegment
-FROM customer
-WHERE c_custkey NOT IN (SELECT o_custkey FROM orders)
-ORDER BY c_custkey
-""",
-        "distinct_supplier_part_pairs": """
-WITH pairs AS (
-  SELECT DISTINCT least(l_suppkey, l_partkey) AS lo, greatest(l_suppkey, l_partkey) AS hi
-  FROM lineitem
-)
-SELECT lo, count(*) AS n_pairs, max(hi) AS max_hi
-FROM pairs GROUP BY lo ORDER BY lo
-""",
-        "top_parts_by_revenue": """
-WITH rev AS (
-  SELECT l_partkey,
-         round(CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,4)) * (CAST(1 AS DECIMAL(18,4)) - CAST(l_discount AS DECIMAL(18,4))) AS DECIMAL(28,8))) AS DOUBLE), 2) AS revenue
-  FROM lineitem GROUP BY l_partkey
-)
-SELECT p_partkey, p_name, revenue
-FROM rev JOIN part ON l_partkey = p_partkey
-ORDER BY revenue DESC, p_partkey
-LIMIT 10
-""",
-        "events_user_windows": """
-WITH w AS (
-  SELECT user_id, event_id, event_type, ts,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS seq,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-)
-SELECT user_id,
-       count(*) AS n_events,
-       max(seq) AS max_seq,
-       round(avg(epoch_us(ts) - epoch_us(prev_ts)) / 1000000.0, 4) AS avg_gap_s,
-       count(DISTINCT event_type) AS n_types
-FROM w GROUP BY user_id ORDER BY user_id
-""",
         "wordcloud_weights": """
 WITH freq AS (
   SELECT t.token, count(*) AS freq
@@ -2862,198 +2437,5 @@ WITH freq AS (
 SELECT token, freq,
        CAST(round(freq * 1000.0 / (SELECT max(freq) FROM freq)) AS BIGINT) AS weight
 FROM freq ORDER BY freq DESC, token
-""",
-        "events_value_percentiles": """
-SELECT event_type, count(*) AS n,
-       round(quantile_cont(value, 0.25), 6) AS p25,
-       round(quantile_cont(value, 0.50), 6) AS p50,
-       round(quantile_cont(value, 0.75), 6) AS p75,
-       round(quantile_cont(value, 0.95), 6) AS p95
-FROM events GROUP BY event_type ORDER BY event_type
-""",
-        "events_type_pivot": """
-SELECT user_id,
-       count(*) FILTER (event_type = 'click') AS click,
-       count(*) FILTER (event_type = 'error') AS error,
-       count(*) FILTER (event_type = 'purchase') AS purchase,
-       count(*) FILTER (event_type = 'signup') AS signup,
-       count(*) FILTER (event_type = 'view') AS view
-FROM events GROUP BY user_id ORDER BY user_id
-""",
-        "users_click_no_purchase": """
-SELECT user_id FROM events WHERE event_type = 'click'
-INTERSECT
-SELECT user_id FROM events WHERE event_type = 'view'
-EXCEPT
-SELECT user_id FROM events WHERE event_type = 'purchase' AND value > 200
-ORDER BY user_id
-""",
-        "documents_quality_gate": """
-SELECT count(*) AS n_rows,
-       CAST(coalesce(sum(CASE WHEN coalesce(text IS NULL, TRUE) THEN 1 ELSE 0 END), 0) AS BIGINT) AS null_text,
-       CAST(coalesce(sum(CASE WHEN coalesce(length(coalesce(text, '')) = 0, TRUE) THEN 1 ELSE 0 END), 0) AS BIGINT) AS empty_text,
-       CAST(coalesce(sum(CASE WHEN coalesce(NOT regexp_matches(coalesce(lang, ''), '^[a-z]{2,3}$'), TRUE) THEN 1 ELSE 0 END), 0) AS BIGINT) AS bad_lang,
-       CAST(coalesce(sum(CASE WHEN coalesce(length(text) > 1000000, TRUE) THEN 1 ELSE 0 END), 0) AS BIGINT) AS text_too_long
-FROM documents
-""",
-        "events_distinct_sketch": """
-SELECT strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
-       count(*) AS n_events,
-       count(DISTINCT user_id) AS distinct_users
-FROM events GROUP BY 1 ORDER BY 1
-""",
-        "events_distinct_rollup": """
-SELECT count(DISTINCT user_id) AS distinct_users,
-       count(*) AS n_events,
-       count(DISTINCT CAST(ts AS DATE)) AS n_days
-FROM events
-""",
-        "events_sessionize": """
-WITH w AS (
-  SELECT user_id, event_id, ts,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-),
-f AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN prev_ts IS NULL
-                   OR epoch_us(ts) - epoch_us(prev_ts) > 30 * 60 * 1000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM w
-),
-s AS (
-  SELECT user_id, ts,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM f
-)
-SELECT user_id, CAST(session_seq AS BIGINT) AS session_seq,
-       count(*) AS n_events,
-       min(epoch_us(ts)) AS start_us,
-       max(epoch_us(ts)) AS end_us,
-       max(epoch_us(ts)) - min(epoch_us(ts)) AS duration_us
-FROM s GROUP BY user_id, session_seq ORDER BY user_id, session_seq
-""",
-        "events_session_window": """
-WITH w AS (
-  SELECT user_id, event_id, ts,
-         lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-  FROM events
-),
-f AS (
-  SELECT user_id, event_id, ts,
-         CASE WHEN prev_ts IS NULL
-                   OR epoch_us(ts) - epoch_us(prev_ts) > 30 * 60 * 1000000
-              THEN 1 ELSE 0 END AS is_new
-  FROM w
-),
-s AS (
-  SELECT user_id, ts,
-         sum(is_new) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS UNBOUNDED PRECEDING) AS session_seq
-  FROM f
-)
-SELECT user_id,
-       min(epoch_us(ts)) AS start_us,
-       max(epoch_us(ts)) + 30 * 60 * 1000000 AS end_us,
-       count(*) AS n_events
-FROM s GROUP BY user_id, session_seq ORDER BY user_id, start_us
-""",
-        "events_asof_attribution": """
-SELECT c.event_id AS click_id, c.user_id,
-       epoch_us(c.ts) AS click_us,
-       v.event_id AS view_id,
-       epoch_us(v.ts) AS view_us,
-       epoch_us(c.ts) - epoch_us(v.ts) AS latency_us
-FROM (SELECT * FROM events WHERE event_type = 'click') c
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
-  ON c.user_id = v.user_id AND c.ts >= v.ts
-ORDER BY click_id
-""",
-        "events_funnel": """
-WITH ev AS (
-  SELECT user_id AS u, event_type AS et,
-         epoch_us(CAST(ts AS TIMESTAMP)) AS us
-  FROM events
-),
-s1 AS (SELECT u, min(us) AS t FROM ev WHERE et = 'view' GROUP BY u),
-s2 AS (SELECT e.u, min(e.us) AS t FROM ev e
-       JOIN s1 ON e.u = s1.u AND e.us > s1.t
-       WHERE e.et = 'click' GROUP BY e.u),
-s3 AS (SELECT e.u, min(e.us) AS t FROM ev e
-       JOIN s2 ON e.u = s2.u AND e.us > s2.t
-       WHERE e.et = 'purchase' GROUP BY e.u),
-counts AS (
-  SELECT 1 AS step, 'view' AS event_type,
-         (SELECT CAST(count(*) AS BIGINT) FROM s1) AS n_users
-  UNION ALL SELECT 2, 'click', (SELECT CAST(count(*) AS BIGINT) FROM s2)
-  UNION ALL SELECT 3, 'purchase', (SELECT CAST(count(*) AS BIGINT) FROM s3)
-)
-SELECT c.step, c.event_type, c.n_users,
-       round(c.n_users * 1.0 / f.n_first, 6) AS conv_from_first,
-       round(c.n_users * 1.0 / p.n_prev, 6) AS conv_from_prev
-FROM counts c
-CROSS JOIN (SELECT n_users AS n_first FROM counts WHERE step = 1) f
-LEFT JOIN (SELECT step + 1 AS step, n_users AS n_prev FROM counts) p
-  ON p.step = c.step
-ORDER BY c.step
-""",
-        "events_cohort_retention": """
-WITH uw AS (
-  SELECT user_id AS u,
-         epoch_us(date_trunc('week', CAST(ts AS TIMESTAMP))) AS wus
-  FROM events
-),
-cohort AS (SELECT u, min(wus) AS cus FROM uw GROUP BY u),
-active AS (SELECT DISTINCT u, wus FROM uw)
-SELECT c.cus AS cohort_us,
-       (a.wus - c.cus) // 604800000000 AS week_offset,
-       CAST(count(*) AS BIGINT) AS n_users
-FROM active a JOIN cohort c ON a.u = c.u
-GROUP BY 1, 2
-ORDER BY 1, 2
-""",
-        "events_value_buckets": """
-WITH buckets(bucket, lo, hi) AS (
-  VALUES ('b0', 0.0, 50.0), ('b1', 50.0, 100.0),
-         ('b2', 100.0, 200.0), ('b3', 200.0, 500.0)
-)
-SELECT bucket, count(*) AS n,
-       round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 2) AS sum_value
-FROM events JOIN buckets ON value >= lo AND value < hi
-GROUP BY bucket ORDER BY bucket
-""",
-        "region_nation_rollup": """
-SELECT coalesce(r_name, 'ALL') AS region,
-       coalesce(n_name, 'ALL') AS nation,
-       count(*) AS n_customers,
-       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,4))) AS DOUBLE), 2) AS total_acctbal
-FROM customer
-JOIN nation ON c_nationkey = n_nationkey
-JOIN region ON n_regionkey = r_regionkey
-GROUP BY ROLLUP(r_name, n_name)
-ORDER BY region, nation
-""",
-        "events_ntile": """
-WITH w AS (
-  SELECT value, event_id, ntile(8) OVER (ORDER BY value ASC, event_id ASC) AS stripe
-  FROM events
-)
-SELECT stripe, count(*) AS n,
-       round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-FROM w GROUP BY stripe ORDER BY stripe
-""",
-        "events_value_stripes": """
-WITH cuts AS (
-  SELECT list_transform(
-           quantile_cont(value, [0.125, 0.25, 0.375, 0.5, 0.625, 0.75, 0.875]),
-           c -> round(c, 9)) AS cuts
-  FROM events
-)
-SELECT CAST(1 + len(list_filter(cuts.cuts, c -> value > c)) AS INT) AS stripe,
-       count(*) AS n,
-       round(min(value), 6) AS min_v, round(max(value), 6) AS max_v
-FROM events, cuts
-GROUP BY 1 ORDER BY 1
 """,
     }

@@ -156,6 +156,21 @@ def test_minhash_dedup_finds_near_dups(docs):
     assert (0, 5) not in pairs
 
 
+def test_minhash_single_band_skips_prefilter(spark):
+    from textgraphs_spark.operators.dedup import minhash_dedup_pairs
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog " * 4),
+         (2, "the quick brown fox jumps over the lazy dog " * 4),
+         (3, "a completely different document about spark plans")],
+        "doc_id long, text string",
+    )
+    out = minhash_dedup_pairs(
+        docs, num_hashes=16, bands=1, threshold=0.9
+    ).collect()
+    assert [(r.left_id, r.right_id) for r in out] == [(1, 2)]
+
+
 def test_simhash_hamming(docs):
     fps = {r["doc_id"]: r["simhash"] for r in D.simhash(docs).collect()}
     assert fps[0] == fps[1]
@@ -213,27 +228,6 @@ def test_stripe_column_guards():
         stripe_column(np.array([1.0, np.nan]), bins)
     got = stripe_column(np.array([1.0, 2.0, 3.0]), bins)
     assert got.shape == (3,)
-
-
-def test_streaming_windowed_counts(spark, sf_dir, tmp_path):
-    from textgraphs_spark.streaming.events import (
-        read_events_stream, run_available_now, windowed_counts,
-    )
-
-    import shutil
-
-    src_dir = tmp_path / "events_src"
-    src_dir.mkdir()
-    shutil.copy(f"{sf_dir}/events.parquet", src_dir / "part-0.parquet")
-    stream = read_events_stream(spark, str(src_dir))
-    agg = windowed_counts(stream, window="1 day", watermark="1 hour")
-    run_available_now(
-        agg, checkpoint=str(tmp_path / "ckpt"), table_name="win_counts",
-        output_mode="complete",
-    )
-    got = spark.sql("SELECT sum(n_events) AS n FROM win_counts").collect()[0]["n"]
-    expected = spark.read.parquet(f"{sf_dir}/events.parquet").count()
-    assert got == expected
 
 
 def test_xxh64_matches_spark(spark):

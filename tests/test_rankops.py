@@ -7,9 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from textgraphs_spark.operators.rankops import (
-    global_ntile, global_rank, grouped_rank,
-)
+from textgraphs_spark.operators.rankops import global_rank, grouped_rank
 
 
 def test_global_rank_matches_window(spark):
@@ -23,20 +21,6 @@ def test_global_rank_matches_window(spark):
     w = Window.orderBy("v", "id")
     want = {r["id"]: r["rn"]
             for r in df.withColumn("rn", F.row_number().over(w)).collect()}
-    assert got == want
-
-
-@pytest.mark.parametrize("n_rows,n_tiles", [(100, 8), (10, 8), (5, 8), (97, 7)])
-def test_global_ntile_matches_window(spark, n_rows, n_tiles):
-    """Covers N % n != 0 (uneven tiles), N < n (one row per tile)."""
-    rows = [(i, (i * 37) % 23) for i in range(n_rows)]
-    df = spark.createDataFrame(rows, ["id", "v"])
-    got = {r["id"]: r["stripe"]
-           for r in global_ntile(df, n_tiles, [F.col("v"), F.col("id")],
-                                 partitions=8).collect()}
-    w = Window.orderBy("v", "id")
-    want = {r["id"]: r["t"]
-            for r in df.withColumn("t", F.ntile(n_tiles).over(w)).collect()}
     assert got == want
 
 

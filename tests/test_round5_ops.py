@@ -196,59 +196,6 @@ def test_readability_syllable_floor(spark):
     assert r["n_syllables"] == 4
 
 
-def test_funnel_strict_ordering(spark):
-    # u1 completes view->click->purchase in order; u2 clicks BEFORE its
-    # first view (click doesn't count) and never purchases; u3 views
-    # only. Chain semantics: step times must strictly increase.
-    from textgraphs_spark.operators.analytics import funnel_counts
-
-    rows = [
-        (1, "view", "2026-01-01 10:00:00"),
-        (1, "click", "2026-01-01 10:05:00"),
-        (1, "purchase", "2026-01-01 10:10:00"),
-        (2, "click", "2026-01-01 09:00:00"),
-        (2, "view", "2026-01-01 09:30:00"),
-        (3, "view", "2026-01-01 08:00:00"),
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, event_type string, ts string")
-    got = {r["step"]: r for r in
-           funnel_counts(ev, ["view", "click", "purchase"]).collect()}
-    assert got[1]["n_users"] == 3 and got[1]["conv_from_prev"] is None
-    assert got[2]["n_users"] == 1          # only u1: u2's click precedes its view
-    assert got[3]["n_users"] == 1
-    assert got[2]["conv_from_first"] == 0.333333
-    assert got[3]["conv_from_prev"] == 1.0
-
-
-def test_funnel_rejects_single_step(spark):
-    from textgraphs_spark.operators.analytics import funnel_counts
-
-    ev = spark.createDataFrame(
-        [(1, "view", "2026-01-01 10:00:00")],
-        "user_id long, event_type string, ts string",
-    )
-    with pytest.raises(ValueError):
-        funnel_counts(ev, ["view"])
-
-
-def test_cohort_retention_triangle(spark):
-    # u1 first active week 0, returns week 1; u2 joins week 1 only —
-    # cohorts anchor at each user's OWN first week
-    from textgraphs_spark.operators.analytics import cohort_retention
-
-    rows = [
-        (1, "2026-01-05 10:00:00"),   # Monday, week A
-        (1, "2026-01-13 10:00:00"),   # week A+1
-        (2, "2026-01-14 10:00:00"),   # week A+1 (their week 0)
-    ]
-    ev = spark.createDataFrame(rows, "user_id long, ts string")
-    got = {(r["cohort_us"], r["week_offset"]): r["n_users"]
-           for r in cohort_retention(ev).collect()}
-    offsets = sorted((k[1], v) for k, v in got.items())
-    assert offsets == [(0, 1), (0, 1), (1, 1)]  # two week-0 cells, one return
-    assert len({k[0] for k in got}) == 2        # two distinct cohorts
-
-
 def test_bigram_xent_word_salad_scores_high(spark):
     # three docs of the SAME unigram distribution; doc 3 scrambles the
     # adjacencies. Unigram xent cannot separate it; bigram xent must.

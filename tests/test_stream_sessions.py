@@ -1,62 +1,10 @@
-"""Stateful streaming sessionization (applyInPandasWithState)."""
-
-import time
-from datetime import datetime, timedelta
-
-from textgraphs_spark.streaming.events import read_events_stream, run_available_now
-from textgraphs_spark.streaming.sessions import stream_sessionize
-
-T0 = datetime(2024, 1, 1, 12, 0, 0)
-
-
-def _write(spark, path, rows):
-    spark.createDataFrame(rows, "user_id long, ts timestamp").coalesce(1) \
-        .write.mode("append").parquet(path)
-
-
-def test_stream_sessionize_closes_on_gap_and_timeout(spark, tmp_path):
-    src = str(tmp_path / "events")
-    ckpt = str(tmp_path / "ckpt")
-
-    # user 1: two sessions split by a 2h in-stream gap; the second session
-    # is later closed by the watermark timeout once user 2's far-future
-    # event advances event time.
-    _write(spark, src, [
-        (1, T0),
-        (1, T0 + timedelta(minutes=5)),
-        (1, T0 + timedelta(hours=2)),
-    ])
-    time.sleep(1.1)  # distinct mtime => deterministic file order
-    _write(spark, src, [(2, T0 + timedelta(hours=12))])
-
-    stream = read_events_stream(
-        spark, src, max_files_per_trigger=1
-    ).select("user_id", "ts")
-    out = stream_sessionize(
-        stream, gap_minutes=30, watermark="10 minutes"
-    )
-    run_available_now(
-        out, checkpoint=ckpt, table_name="sessions_out", output_mode="append"
-    )
-    rows = {
-        (r.user_id, r.session_seq): r
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    # session 1 closed in-stream by the 2h gap
-    s1 = rows[(1, 1)]
-    assert s1.n_events == 2
-    assert (s1.end_us - s1.start_us) == 5 * 60 * 1_000_000
-    # session 2 closed by event-time timeout when the watermark advanced
-    s2 = rows[(1, 2)]
-    assert s2.n_events == 1
-    # user 2's open session is still in state — not emitted
-    assert (2, 1) not in rows
+"""Structured Streaming tests: the exactly-once incremental ER fold
+(``streaming/er.py``), the stateless ``simhash_col`` expression, and
+extraction planned on a streaming source."""
 
 
 def test_stream_extract_builds_on_stream(spark, tmp_path):
     """_respread must not force batch planning on a streaming source."""
-    from textgraphs_spark.streaming.events import run_available_now
-    from textgraphs_spark.streaming.sessions import stream_sessionize  # noqa: F401
     from textgraphs_spark.operators.extract import extract_graphs
 
     src = str(tmp_path / "docs")
@@ -66,97 +14,16 @@ def test_stream_extract_builds_on_stream(spark, tmp_path):
     schema = spark.read.parquet(src).schema
     stream = spark.readStream.schema(schema).parquet(src)
     out = extract_graphs(stream)          # must not raise at plan time
-    run_available_now(
-        out.select("doc_id"), checkpoint=str(tmp_path / "eck"),
-        table_name="ext_out",
+    q = (
+        out.select("doc_id").writeStream
+        .trigger(availableNow=True)
+        .option("checkpointLocation", str(tmp_path / "eck"))
+        .format("memory")
+        .queryName("ext_out")
+        .start()
     )
+    q.awaitTermination()
     assert spark.sql("SELECT * FROM ext_out").count() == 1
-
-
-def test_stream_sessionize_seq_monotone_after_timeout(spark, tmp_path):
-    """session_seq keeps counting after a timeout-closed session."""
-    src = str(tmp_path / "seq")
-    ckpt = str(tmp_path / "sck")
-    _write(spark, src, [(1, T0)])
-    time.sleep(1.1)
-    _write(spark, src, [(9, T0 + timedelta(hours=12))])   # closes u1 s1
-    time.sleep(1.1)
-    _write(spark, src, [(1, T0 + timedelta(hours=13))])   # u1 session 2
-    time.sleep(1.1)
-    _write(spark, src, [(9, T0 + timedelta(hours=48))])   # closes u1 s2
-    stream = read_events_stream(spark, src, max_files_per_trigger=1) \
-        .select("user_id", "ts")
-    out = stream_sessionize(stream, gap_minutes=30, watermark="10 minutes")
-    run_available_now(out, checkpoint=ckpt, table_name="seq_out")
-    got = {
-        (r.user_id, r.session_seq)
-        for r in spark.sql("SELECT * FROM seq_out").collect()
-    }
-    assert (1, 1) in got and (1, 2) in got
-
-
-def test_stream_sessionize_late_event_no_regression(spark, tmp_path):
-    """A late-but-within-watermark event never regresses boundaries."""
-    src = str(tmp_path / "late")
-    ckpt = str(tmp_path / "lck")
-    _write(spark, src, [(1, T0)])                              # 12:00
-    time.sleep(1.1)
-    # late 11:30 (within 2h watermark) + 12:40 (gap > 30m closes session)
-    _write(spark, src, [
-        (1, T0 - timedelta(minutes=30)), (1, T0 + timedelta(minutes=40)),
-    ])
-    time.sleep(1.1)
-    _write(spark, src, [(9, T0 + timedelta(hours=12))])        # flush
-    stream = read_events_stream(spark, src, max_files_per_trigger=1) \
-        .select("user_id", "ts")
-    out = stream_sessionize(stream, gap_minutes=30, watermark="2 hours")
-    run_available_now(out, checkpoint=ckpt, table_name="late_out")
-    rows = spark.sql("SELECT * FROM late_out WHERE user_id = 1").collect()
-    assert rows, "no session emitted"
-    for r in rows:
-        assert r.end_us >= r.start_us
-    first = next(r for r in rows if r.session_seq == 1)
-    assert first.n_events == 2     # 12:00 + the late 11:30 straggler
-
-
-def test_stream_sessionize_matches_batch(spark, tmp_path):
-    """Closed sessions from the stream == batch sessionize on the same
-    events (for every session the watermark has passed)."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from textgraphs_spark.operators.analytics import session_stats
-
-    rng = random.Random(23)
-    rows = [
-        (u, T0 + timedelta(minutes=rng.randint(0, 300)))
-        for u in range(1, 5) for _ in range(12)
-    ]
-    src = str(tmp_path / "eq")
-    _write(spark, src, rows)
-    time.sleep(1.1)
-    flush = [(99, T0 + timedelta(days=2))]   # advances the watermark
-    _write(spark, src, flush)
-
-    stream = read_events_stream(spark, src, max_files_per_trigger=1) \
-        .select("user_id", "ts")
-    out = stream_sessionize(stream, gap_minutes=30, watermark="10 minutes")
-    run_available_now(out, checkpoint=str(tmp_path / "eqck"), table_name="eq_out")
-    streamed = {
-        (r.user_id, r.session_seq, r.n_events, r.start_us, r.end_us)
-        for r in spark.sql("SELECT * FROM eq_out").collect()
-    }
-
-    ev = spark.createDataFrame(
-        [(i, u, ts) for i, (u, ts) in enumerate(rows)],
-        "event_id long, user_id long, ts timestamp",
-    )
-    batch = {
-        (r.user_id, r.session_seq, r.n_events, r.start_us, r.end_us)
-        for r in session_stats(ev, gap_minutes=30).collect()
-    }
-    assert streamed == batch
 
 
 def test_simhash_col_matches_batch_kernel(spark):
@@ -309,3 +176,37 @@ def test_stream_er_snapshot_pruning(spark, tmp_path):
     markers = [n for n in os.listdir(os.path.join(wd, "commits"))
                if not n.startswith(".")]  # Hadoop local-FS .crc sidecars
     assert sorted(markers) == ["v0-b0.json", "v1-b1.json", "v2-b2.json"]
+
+
+def test_stream_er_rejects_keep_last_below_one(spark, tmp_path):
+    """keep_last=0 would prune the snapshot the fold just committed, and
+    every later fold would find no committed state. Both entry points
+    refuse it before any work; the prior snapshot stays readable."""
+    import pytest
+
+    from pyspark.sql import functions as F
+
+    from textgraphs_spark.sources.pages import synth_pages
+    from textgraphs_spark.streaming import er as ER
+
+    docs = synth_pages(spark, 60).select(
+        F.xxhash64("url").alias("doc_id"), "text"
+    ).cache()
+    wd = str(tmp_path / "er_keep_wd")
+    assert ER.er_fold_batch(docs.filter(F.pmod("doc_id", F.lit(2)) == 0), 0, wd)
+    v0 = sorted(map(tuple, ER.read_current(spark, wd).collect()))
+
+    with pytest.raises(ValueError, match="keep_last"):
+        ER.er_fold_batch(
+            docs.filter(F.pmod("doc_id", F.lit(2)) == 1), 1, wd, keep_last=0
+        )
+    src = str(tmp_path / "er_keep_src")
+    docs.write.parquet(src)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    with pytest.raises(ValueError, match="keep_last"):
+        ER.stream_er_updates(
+            stream, wd, checkpoint=str(tmp_path / "er_keep_ck"), keep_last=0
+        )
+
+    assert ER.committed(spark, wd) == (0, 0)
+    assert sorted(map(tuple, ER.read_current(spark, wd).collect())) == v0

@@ -70,20 +70,3 @@ def test_session_runs_outside_checkout(tmp_path):
     lines = dict(ln.split(" ", 1) for ln in proc.stdout.splitlines() if " " in ln)
     assert lines["master"] == f"local[{len(os.sched_getaffinity(0))}]"
     assert int(lines["rows"]) == 3
-
-
-def test_bench_cpus_default_follows_affinity():
-    """bench.py with SPARK_GRAFT_CPUS unset sizes local[N] by the
-    process's CPU affinity, the same default as get_spark()."""
-    import os
-    import sys
-
-    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
-    # keep the import from redirecting fd 2 into the JVM log file
-    env["SPARK_GRAFT_QUIET_JVM"] = "0"
-    proc = subprocess.run(
-        [sys.executable, "-c", "import bench; print(bench.CPUS)"],
-        cwd=REPO, env=env, capture_output=True, text=True, timeout=120,
-    )
-    assert proc.returncode == 0, proc.stderr[-2000:]
-    assert int(proc.stdout) == len(os.sched_getaffinity(0))

@@ -562,7 +562,7 @@ def simhash_col(text_col: str = "text", *, bits: int = 60) -> "F.Column":
     """STATELESS per-row SimHash — the same fingerprint as ``simhash()``
     computed entirely inside array expressions (no groupBy), for contexts
     where aggregation is unavailable or costly (streams: the only
-    stateful operator should be the join; see streaming/events.py).
+    stateful operator should be the join).
 
     Bit-identical to the aggregation kernel: summing ±1 per token
     OCCURRENCE equals summing ±count per distinct token. Higher-order
@@ -695,9 +695,9 @@ def winnow_fingerprints(
 
 def winnow_select_expr(window: int, hs: str = "_hs") -> str:
     """SQL expression selecting the local-minimum fingerprints out of a
-    gram-hash array column ``hs`` as array<struct<pos int, fp bigint>> —
-    shared by the batch operator and the stateless streaming path
-    (streaming/events.py), so both select the identical positions."""
+    gram-hash array column ``hs`` as array<struct<pos int, fp bigint>>
+    — stateless, so a per-row (streaming) caller selects the same
+    positions as the batch operator."""
     w = int(window)
     assert w >= 2, "window must be >= 2 (window=1 selects every gram)"
     return (

@@ -472,11 +472,11 @@ def harmonic_centrality(
     (the pagerank lineage discipline) and the loop stops early when a
     1-row delta agg hits zero (every ball closed).
 
-    At sandbox scale the Datasketches sparse representation keeps every
-    estimate EXACT (the `daily_distinct_sketches` exactness envelope:
-    lg_k=14 is exact well past these ball cardinalities), so the DuckDB
-    all-pairs-BFS oracle value-matches; at 10^12 nodes the counts are
-    approximate by design with ~0.8% relative error.
+    At test scale the Datasketches sparse representation keeps every
+    estimate EXACT (lg_k=14 is exact well past these ball
+    cardinalities), so the DuckDB all-pairs-BFS oracle value-matches;
+    at 10^12 nodes the counts are approximate by design with ~0.8%
+    relative error.
     """
     und = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))

@@ -3,8 +3,8 @@
 The naive exact forms — ``Window.orderBy(...)`` with no partition, or
 ``Window.partitionBy(hot_group)`` — funnel the whole corpus (or the
 whole hot group) through ONE task, the acknowledged scale ceiling of
-the ``events_ntile`` and ``per_source_cap`` queries. These operators
-compute the IDENTICAL values with the standard two-phase construction:
+the ``per_source_cap`` query. These operators compute the IDENTICAL
+values with the standard two-phase construction:
 
 1. ``repartitionByRange`` on the ordering key — the sort work is
    distributed across K disjoint, globally-ordered ranges (equal keys
@@ -16,9 +16,8 @@ compute the IDENTICAL values with the standard two-phase construction:
 The only non-distributed step is the offset cumulation, which runs
 over a table bounded by the PARTITION COUNT (global form) or by
 (groups x partitions-they-span) (grouped form) — cluster-sized /
-vocabulary-sized, never data-sized. Values are exact: both operators
-are verified hash-equal to DuckDB's ``ntile``/``row_number`` window
-oracles.
+vocabulary-sized, never data-sized. Values are exact: every operator
+is verified equal to its single-task Spark window form.
 
 The range-partitioned input is ``localCheckpoint``-ed so the counting
 job and the ranking job observe the SAME physical partitioning
@@ -66,36 +65,6 @@ def global_rank(
         .join(F.broadcast(offsets), "_pid")
         .withColumn(rank_col, (F.col("_off") + F.col("_rn")).cast("long"))
         .drop("_pid", "_rn", "_off")
-    )
-
-
-def global_ntile(
-    df: DataFrame,
-    n: int,
-    order_cols,
-    *,
-    tile_col: str = "stripe",
-    partitions: int | None = None,
-) -> DataFrame:
-    """Exact SQL ``ntile(n) OVER (ORDER BY ...)`` without the
-    single-task window: ``global_rank`` + the closed-form tile
-    assignment (the first ``N % n`` tiles carry ``N/n + 1`` rows).
-    Value-identical to the window form on any input."""
-    ranked = global_rank(df, order_cols, rank_col="_grank", partitions=partitions)
-    total = ranked.agg(F.count("*").alias("_n_total"))
-    r = F.col("_n_total") % n
-    q = F.floor(F.col("_n_total") / n)
-    big = r * (q + 1)  # rows living in the (q+1)-sized leading tiles
-    rank = F.col("_grank")
-    tile = F.when(
-        rank <= big, F.floor((rank - 1) / (q + 1)) + 1
-    ).otherwise(
-        r + F.floor((rank - big - 1) / F.greatest(q, F.lit(1))) + 1
-    )
-    return (
-        ranked.crossJoin(F.broadcast(total))
-        .withColumn(tile_col, tile.cast("int"))
-        .drop("_grank", "_n_total")
     )
 
 

@@ -982,10 +982,9 @@ def per_source_cap(
 
     Head-domain mitigation: without a cap, the top domains dominate a
     crawl-ordered corpus. This exact form ranks within each source via
-    a window — which funnels the HOT source through one task, the same
-    scale ceiling as ``events_ntile``'s global sort. Its scale twin is
-    ``per_source_cap_threshold`` (no window, approximate); ship both,
-    pick by corpus (the ntile / value_stripes pairing discipline).
+    a window — which funnels the HOT source through one task. Its scale
+    twin is ``per_source_cap_threshold`` (no window, approximate); ship
+    both, pick by corpus.
     ``WindowGroupLimit`` pushes the rank filter below the shuffle, so
     only ~cap rows per source per map partition reach the exchange.
     """
@@ -3032,8 +3031,8 @@ def url_history(
     Revision boundaries are content-hash changes between consecutive
     captures; unchanged re-fetches fold into their interval and are
     COUNTED (n_captures — the wasted-refetch evidence rides along).
-    valid_to is the next revision's valid_from (half-open, the AS-OF
-    convention events_asof_attribution uses), NULL on the current row.
+    valid_to is the next revision's valid_from (half-open, the usual
+    AS-OF convention), NULL on the current row.
 
     100 TB shape: md5 per row map-only, then TWO url-partitioned lag/
     lead windows (per-url capture counts bounded by crawl frequency —

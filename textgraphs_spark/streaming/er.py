@@ -148,7 +148,12 @@ def er_fold_batch(
     Returns False when the batch was skipped (already folded — replay
     after restart). Usable directly for non-streaming callers that
     receive arrivals from an external scheduler.
+
+    ``keep_last`` (>= 1) is the number of newest committed snapshot dirs
+    kept after the commit; 0 would prune the snapshot just committed.
     """
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
     spark = docs.sparkSession
     version, seen = committed(spark, workdir)
     if batch_id <= seen:
@@ -189,6 +194,8 @@ def stream_er_updates(
     long-running continuous query. Returns the started StreamingQuery
     (callers own ``awaitTermination``).
     """
+    if keep_last < 1:
+        raise ValueError(f"keep_last must be >= 1, got {keep_last}")
 
     def _fold(batch_df: DataFrame, batch_id: int) -> None:
         if not batch_df.head(1):

@@ -7,8 +7,8 @@ the round-1 lenient stringify — both sides go through pandas, columns
 sorted by name, rows sorted by all columns (this *crashes* on array
 columns exactly like the driver did on er_clusters in round 1), and
 values hashed dtype-sensitively (DuckDB HUGEINT → object dtype is a
-MISMATCH against Spark's int64, as the driver scored
-documents_quality_gate/events_sessionize in round 1).
+MISMATCH against Spark's int64, as the driver scored two HUGEINT-typed
+oracles in round 1).
 
 Round 5: `--plain` runs the sweep on a DEFAULT-config SparkSession
 (no get_spark tuning — Arrow OFF, stock shuffle partitions) — the
@@ -36,8 +36,7 @@ import __spark_entry__ as entrymod
 from textgraphs_spark.session import get_spark
 
 TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "region", "nation", "customer", "supplier", "documents", "embeddings",
 ]
 
 

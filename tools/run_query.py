@@ -2,7 +2,7 @@
 """Run any driver-contract query by name and print its result.
 
     python tools/run_query.py                       # list query names
-    python tools/run_query.py tpch_pricing_summary  # run one at default SF
+    python tools/run_query.py wordcloud_weights     # run one at default SF
     python tools/run_query.py er_clusters /root/testdata/sf0.01 --limit 50
 """
 
