@@ -299,10 +299,10 @@ def test_run_accepts_custom_id_and_text_columns(spark):
 
 
 def test_every_entry_point_runs_one_resolve_path(spark, tmp_path, monkeypatch):
-    """run, run_lean, update and the streaming fold each block, score and
-    cluster exactly once, through the same three layer functions."""
+    """run, run_lean, update and the streaming fold each block and score
+    (one pass) and cluster exactly once, through the same two layer
+    functions."""
     from textgraphs_spark.operators import components as C
-    from textgraphs_spark.operators import scoring as S
     from textgraphs_spark.plans import er_pipeline as ERP
     from textgraphs_spark.streaming.er import er_fold_batch
 
@@ -317,8 +317,7 @@ def test_every_entry_point_runs_one_resolve_path(spark, tmp_path, monkeypatch):
 
         monkeypatch.setattr(mod, name, wrapper)
 
-    counted(ERP, "blocking_pairs")
-    counted(S, "score_pairs")
+    counted(ERP, "match_edges")
     counted(C, "components_over_keys")
 
     docs = spark.createDataFrame(
@@ -338,9 +337,7 @@ def test_every_entry_point_runs_one_resolve_path(spark, tmp_path, monkeypatch):
     for name, call in entry_points.items():
         calls.clear()
         call()
-        assert calls == {
-            "blocking_pairs": 1, "score_pairs": 1, "components_over_keys": 1,
-        }, name
+        assert calls == {"match_edges": 1, "components_over_keys": 1}, name
 
 
 def test_flagship_er_queries_match_oracle(spark, sf_dir):

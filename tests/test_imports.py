@@ -94,3 +94,36 @@ def test_verdict_parity_citations_exist():
     }
     assert cited
     assert sorted(cited - set(em.queries()) - tests) == []
+
+
+def test_plan_and_coverage_docs_cite_live_code():
+    """PLANS.md's plan-shape table names only driver queries, and every
+    backticked ``*.py`` path in COVERAGE.md is a file in the repo, so
+    deleting a query or a module cannot leave stale rows behind."""
+    import __spark_entry__ as em
+
+    plans = (REPO / "PLANS.md").read_text()
+    table = plans.split("## Per-query plan shapes", 1)[1].split("\n## ", 1)[0]
+    named = set()
+    for line in table.splitlines():
+        cells = [c.strip() for c in line.split("|")]
+        if len(cells) > 2 and cells[1] != "query" and set(cells[1]) != {"-"}:
+            named |= set(re.findall(r"`([^`]+)`", cells[1]))
+    assert named
+    assert sorted(named - set(em.queries())) == []
+
+    files = [
+        p.relative_to(REPO).as_posix() for p in REPO.rglob("*.py")
+        if not p.relative_to(REPO).parts[0].startswith(".")
+    ]
+    cited = {
+        path
+        for code in re.findall(r"`([^`]+)`", (REPO / "COVERAGE.md").read_text())
+        for path in re.findall(r"[\w./-]*\w\.py\b", code)
+    }
+    assert cited
+    missing = sorted(
+        path for path in cited
+        if not any(f == path or f.endswith("/" + path) for f in files)
+    )
+    assert missing == []

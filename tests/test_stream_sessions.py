@@ -150,15 +150,29 @@ def test_stream_er_crash_before_commit_recovers_exactly_once(spark, tmp_path, mo
     assert got == want
 
 
-def test_stream_er_snapshot_pruning(spark, tmp_path):
+def test_stream_er_snapshot_pruning(spark, tmp_path, monkeypatch):
     """Snapshot expiry: only the ``keep_last`` newest snapshot dirs
-    survive a sequence of folds; the committed reader never breaks."""
+    survive a sequence of folds; the committed reader never breaks. Each
+    fold drops only the snapshot that left the window, never re-probing
+    the ones earlier folds dropped (per-fold work must not grow with
+    the number of versions)."""
     import os
+    import re
 
     from pyspark.sql import functions as F
 
+    from textgraphs_spark.sources import tables as TBL
     from textgraphs_spark.sources.pages import synth_pages
     from textgraphs_spark.streaming import er as ER
+
+    dropped = []
+    real_drop = TBL.drop_stage
+
+    def counted_drop(spark_, path):
+        dropped.append(path)
+        real_drop(spark_, path)
+
+    monkeypatch.setattr(TBL, "drop_stage", counted_drop)
 
     docs = synth_pages(spark, 120).select(
         F.xxhash64("url").alias("doc_id"), "text"
@@ -166,7 +180,15 @@ def test_stream_er_snapshot_pruning(spark, tmp_path):
     wd = str(tmp_path / "er_prune_wd")
     for b in range(3):
         batch = docs.filter(F.pmod("doc_id", F.lit(3)) == b)
+        dropped.clear()
         assert ER.er_fold_batch(batch, b, wd, keep_last=1) is True
+        # snapshot dirs below the one this fold committed
+        older = [
+            int(m.group(1)) for m in
+            (re.search(r"/v(\d+)/?$", path) for path in dropped)
+            if m and int(m.group(1)) < b
+        ]
+        assert older == ([b - 1] if b else []), (b, dropped)
 
     assert ER.committed(spark, wd) == (2, 2)
     assert not os.path.exists(os.path.join(wd, "v0"))

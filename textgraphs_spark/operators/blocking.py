@@ -20,7 +20,11 @@ Scale discipline (the part that must survive 1000 executors / 10^12 docs):
 * every block is counted first; blocks above ``max_block_size`` are
   **salted** by hashing members into ``ceil(size/max_block_size)`` salt
   shards (hot-head-domain keys stay bounded; AQE skew-join is the backstop);
-* the pair join shuffles on the block key, so co-location is exact.
+* the ER job never joins pairs: ``er_pipeline.match_edges`` shuffles the
+  salted block rows on the salted key, sorts them within each partition,
+  and scores every block's pairs in place, so co-location is exact.
+  ``candidate_pairs`` (the self-join) stays as the reference pair
+  definition the evaluation operators and the salting oracle use.
 """
 
 from __future__ import annotations

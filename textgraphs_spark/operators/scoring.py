@@ -12,6 +12,9 @@ against KG aliases with min_similarity 0.9 (reference: textgraphs/kg.py:
 * name_match_score: the ER decision function — last-token JW weighted with
   first-token compatibility (initial-aware), thresholded at the
   reference's min_similarity (0.9).
+* block_match_edges: the ER job's scoring pass — a mapInPandas body
+  that enumerates each salted block's pairs with numpy and keeps only
+  the matches; ``score_pairs`` scores an explicit pair table the same way.
 * cosine: embedding cosine via JVM higher-order functions (zip_with +
   aggregate) — no Python at all.
 """
@@ -19,7 +22,9 @@ against KG aliases with min_similarity 0.9 (reference: textgraphs/kg.py:
 from __future__ import annotations
 
 from functools import lru_cache
+from typing import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -118,8 +123,6 @@ def _codes(s: pd.Series):
     fast factorize path stays; a batch containing any NUL routes to
     ``np.unique``, whose object-array comparisons are byte-exact.
     """
-    import numpy as np
-
     filled = s.fillna("")
     arr = filled.to_numpy(dtype=object)
     if any("\x00" in x for x in arr):
@@ -151,8 +154,6 @@ def _jw_batch(a, b):
     on ALL inputs (property-tested to 1e-12). Same fallback if DuckDB
     is unavailable on a worker.
     """
-    import numpy as np
-
     ca, ua = _codes(pd.Series(a, dtype=object))
     cb, ub = _codes(pd.Series(b, dtype=object))
     if len(ca) == 0:
@@ -164,8 +165,6 @@ def _jw_coded(ca, va, cb, vb):
     """JW where rows are INTEGER CODES into per-side vocabularies —
     dedups to unique (code, code) pairs, scores each once, scatters
     back. The O(rows) work is integer packing + np.unique only."""
-    import numpy as np
-
     stride = max(len(vb), 1)
     packed = ca.astype("int64") * stride + cb
     upairs, inv = np.unique(packed, return_inverse=True)
@@ -177,8 +176,6 @@ def _jw_coded(ca, va, cb, vb):
 def _jw_unique(xs, ys):
     """JW over two aligned object arrays of (already unique) pairs;
     order-stable output via an explicit row index."""
-    import numpy as np
-
     n = len(xs)
     out = np.zeros(n, dtype="float64")
     ascii_mask = np.fromiter(
@@ -239,10 +236,10 @@ def name_match_score(a: str, b: str) -> float:
     return 0.35 * first_compat + 0.65 * last_sim
 
 
-@F.pandas_udf(T.DoubleType())
-def name_match_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Batched ``name_match_score``, bit-equal to the scalar reference
-    (asserted in tests/test_properties.py).
+def name_match_batch(a, b):
+    """``name_match_score`` over two aligned string sequences → float64
+    ndarray, bit-equal to the scalar reference (asserted in
+    tests/test_properties.py).
 
     Row-level work is all integer codes: surfaces factorize to codes,
     parts are computed once per UNIQUE surface (memoized tokenizer),
@@ -251,13 +248,10 @@ def name_match_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     kernel, scattering back through inverse indexes. The compat
     overrides (exact first, initial-abbreviation) are evaluated at the
     unique-pair level too — everything between is numpy."""
-    import numpy as np
-
     sa, ua = _codes(pd.Series(a, dtype=object))
     sb, ub = _codes(pd.Series(b, dtype=object))
-    n = len(sa)
-    if n == 0:
-        return pd.Series(np.zeros(0), dtype="float64")
+    if len(sa) == 0:
+        return np.zeros(0, dtype="float64")
     pa = [_name_parts(s) for s in ua]
     pb = [_name_parts(s) for s in ub]
     fa_u = np.array([p[0] for p in pa], dtype=object)
@@ -294,8 +288,13 @@ def name_match_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     first_compat = np.where(exact_first, 1.0, first_compat)
     score = 0.35 * first_compat + 0.65 * last_sim
     empty_last = (la_u == "")[sa] | (lb_u == "")[sb]
-    score = np.where(empty_last, 0.0, score)
-    return pd.Series(score, dtype="float64")
+    return np.where(empty_last, 0.0, score)
+
+
+@F.pandas_udf(T.DoubleType())
+def name_match_udf(a: pd.Series, b: pd.Series) -> pd.Series:
+    """``name_match_batch`` as an Arrow-batched pandas UDF."""
+    return pd.Series(name_match_batch(a, b), dtype="float64")
 
 
 def cosine_expr(a: str, b: str) -> Column:
@@ -308,6 +307,82 @@ def cosine_expr(a: str, b: str) -> Column:
     na = F.sqrt(F.expr(f"aggregate({a}, 0.0D, (acc, v) -> acc + v * v)"))
     nb = F.sqrt(F.expr(f"aggregate({b}, 0.0D, (acc, v) -> acc + v * v)"))
     return F.try_divide(dot, na * nb).alias("cosine")
+
+
+# pairs enumerated and scored at once inside the block pass, whatever
+# the block sizes (a block of m rows holds m(m-1)/2 pairs): one chunk
+# peaked at 177 MB of Python allocations scoring a 3,000-row block
+_PAIR_CHUNK = 1 << 20
+
+
+def _block_pairs(keys: np.ndarray) -> Iterator[tuple[np.ndarray, np.ndarray]]:
+    """Row indices (i, j), i < j, of every pair of rows that share a key,
+    for ``keys`` with equal keys adjacent, in chunks of at most about
+    ``_PAIR_CHUNK`` pairs. numpy over the run lengths — no Python loop
+    over blocks: the row at position p of a run of m pairs with the
+    m - 1 - p rows after it."""
+    n = len(keys)
+    starts = np.flatnonzero(np.r_[True, keys[1:] != keys[:-1]])
+    lengths = np.diff(np.r_[starts, n])
+    after = np.repeat(starts + lengths, lengths) - np.arange(n) - 1
+    ends = np.cumsum(after)
+    lo = 0
+    while lo < n:
+        # left rows [lo, hi) hold the next chunk; at least one row each
+        done = ends[lo - 1] if lo else 0
+        hi = max(int(np.searchsorted(ends, done + _PAIR_CHUNK, "right")), lo + 1)
+        rows = np.arange(lo, hi)
+        i = np.repeat(rows, after[lo:hi])
+        first = np.repeat(ends[lo:hi] - after[lo:hi] - done, after[lo:hi])
+        yield i, i + 1 + np.arange(len(i)) - first
+        lo = hi
+
+
+def _block_matches(rows: pd.DataFrame) -> Iterator[pd.DataFrame]:
+    """Whole blocks of rows (salted_key, entity_key, surface, fresh), equal
+    keys adjacent → the pairs that score ``>= MIN_SIMILARITY`` as
+    (left_id, right_id), left_id < right_id. A pair with no fresh end is
+    dropped before scoring; a row without an id pairs with nothing."""
+    rows = rows[rows["entity_key"].notna()]
+    ids = rows["entity_key"].to_numpy()
+    fresh = rows["fresh"].to_numpy(dtype=bool)
+    surface = rows["surface"].to_numpy(dtype=object)
+    for i, j in _block_pairs(rows["salted_key"].to_numpy(dtype=object)):
+        keep = (fresh[i] | fresh[j]) & (ids[i] != ids[j])
+        i, j = i[keep], j[keep]
+        # score as (smaller id, larger id), the order candidate_pairs
+        # emits: Python str order is code-point order, Spark's UTF-8
+        # byte order
+        swap = ids[i] > ids[j]
+        lo, hi = np.where(swap, j, i), np.where(swap, i, j)
+        hit = name_match_batch(surface[lo], surface[hi]) >= MIN_SIMILARITY
+        yield pd.DataFrame({"left_id": ids[lo[hit]], "right_id": ids[hi[hit]]})
+
+
+def block_match_edges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas body: one partition of block rows (salted_key,
+    entity_key, surface, fresh), sorted on salted_key → its match edges
+    (left_id, right_id), left_id < right_id: ``score_pairs`` plus the
+    match filter, evaluated inside each block.
+
+    The batches stream in order. A block can straddle a batch boundary,
+    so each batch's trailing block is carried into the next one: memory
+    is one batch plus one block, never the partition. A pair found in
+    several blocks is emitted once per block."""
+    carry = None
+    for pdf in batches:
+        if carry is not None:
+            pdf = pd.concat([carry, pdf], ignore_index=True)
+        keys = pdf["salted_key"].to_numpy(dtype=object)
+        if len(keys) == 0:
+            continue
+        other = np.flatnonzero(keys != keys[-1])
+        cut = other[-1] + 1 if len(other) else 0
+        carry = pdf.iloc[cut:]
+        if cut:
+            yield from _block_matches(pdf.iloc[:cut])
+    if carry is not None:
+        yield from _block_matches(carry)
 
 
 def score_pairs(pairs: DataFrame, *, threshold: float = MIN_SIMILARITY) -> DataFrame:

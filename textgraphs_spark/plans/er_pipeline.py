@@ -7,14 +7,18 @@ as the north-star record-linkage job:
     extract (mapInPandas, flat per-doc entity mentions)
       → entity aggregate: one groupBy on the entity key (vocabulary-sized)
       → blocking (normalized keys + MinHash-LSH, salted for skew)
-      → pairwise scoring (batched JW inside Arrow UDFs)
-      → match edges (score >= MIN_SIMILARITY, reference defaults.py:14)
+      → pairwise scoring inside each salted block: one sorted
+        mapInPandas pass (batched JW) emits only the match edges
+        (score >= MIN_SIMILARITY, reference defaults.py:14)
       → transitive clustering (connected components, min-member-key ids)
       → assignments: every entity gets a cluster (unmatched = singleton)
 
-``entity_aggregate`` and ``ERPipeline.resolve`` (block → score → CC →
+``entity_aggregate`` and ``ERPipeline.resolve`` (``match_edges`` → CC →
 assign) are the one definition of those stages; ``run``, ``run_lean``,
 ``update`` and the streaming fold are thin wrappers over them.
+``blocking_pairs`` and ``scoring.score_pairs`` stay as the reference
+pair path the evaluation operators measure; ``match_edges`` yields
+exactly its match set.
 
 ``run`` checkpoints its stages (``extracted``, ``entities``,
 ``assignments``) to parquet under the workdir (mirroring the reference's
@@ -32,6 +36,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..operators import blocking as B
 from ..operators import components as C
@@ -78,7 +83,8 @@ def blocked_keys(entities: DataFrame) -> DataFrame:
     channels — ``channel`` is ``'name'`` (normalized last token + first
     initial) or ``'minhash'`` (md5-family LSH band keys over the
     normalized surface, reproducible in DuckDB). This is the pre-salting
-    block table ``blocking_pairs`` self-joins; exposed so diagnostics
+    block table ``match_edges`` salts and scores in place (and
+    ``blocking_pairs`` self-joins); exposed so diagnostics
     (plans/er_eval.blocking_stats) describe the EXACT blocks the
     pipeline builds.
     """
@@ -110,13 +116,62 @@ def blocking_pairs(
     surface, salted above ``max_block_size`` (blocking.candidate_pairs).
 
     Module-level so the evaluation operators (plans/er_eval) measure the
-    EXACT candidate set the pipeline clusters from — ERPipeline.resolve
-    calls it.
+    EXACT candidate set the pipeline clusters from: ``match_edges``
+    scores these pairs inside their blocks, and its edges are the
+    matches among them.
     """
     blocked = blocked_keys(entities).drop("channel")
     return B.candidate_pairs(
         blocked, key_col="bkey", id_col="entity_key",
         max_block_size=max_block_size,
+    )
+
+
+def match_edges(
+    entities: DataFrame, *, max_block_size: int = 200,
+    prior: DataFrame | None = None,
+) -> DataFrame:
+    """entities(entity_key, surface, ...) → match edges (left_id,
+    right_id), left_id < right_id: the pairs of ``blocking_pairs`` that
+    ``score_pairs`` marks as matches, found without building the pairs.
+
+    The salted block rows are hash-partitioned and sorted on
+    ``salted_key``, so each block is a run of adjacent rows, and
+    ``scoring.block_match_edges`` scores every block's pairs inside its
+    partition; only matches leave the Python worker. A pair that several
+    blocks share comes out once per block (CC starts with a ``distinct``).
+
+    With a ``prior`` assignment table, a block row is ``fresh`` when its
+    key has no prior row (one join of the block rows against the prior
+    keys), and pairs with no fresh end are never scored; without one,
+    every row is fresh. The edges are localCheckpointed because CC reads
+    them twice (key ids and CC input).
+    """
+    spark = entities.sparkSession
+    blocked = blocked_keys(entities).drop("channel")
+    fresh = F.lit(True)
+    if prior is not None:
+        old = prior.select("entity_key", F.lit(True).alias("_old"))
+        blocked = blocked.join(old, "entity_key", "left")
+        fresh = F.col("_old").isNull()
+    salted = B._salt_oversized(
+        blocked.select("bkey", "entity_key", "surface", fresh.alias("fresh")),
+        "bkey", "entity_key", max_block_size,
+    )
+    id_type = entities.schema["entity_key"].dataType
+    schema = T.StructType([
+        T.StructField("left_id", id_type), T.StructField("right_id", id_type),
+    ])
+    # an explicit partition count: AQE coalesces shuffles by BYTE size,
+    # but the scoring pass is compute-bound per ROW — a few MB of block
+    # rows coalesced into one partition would score on one core
+    n_parts = spark.sparkContext.defaultParallelism * 2
+    return (
+        salted.select("salted_key", "entity_key", "surface", "fresh")
+        .repartition(n_parts, "salted_key")
+        .sortWithinPartitions("salted_key")
+        .mapInPandas(S.block_match_edges, schema)
+        .localCheckpoint()
     )
 
 
@@ -239,7 +294,8 @@ class ERPipeline:
         """entities(entity_key, surface, label, mention_count, doc_freq) →
         assignments(entity_key, cluster_id, surface, label, mention_count,
         doc_freq): block → score → CC → assign, the one definition every
-        entry point runs.
+        entry point runs. Blocking and scoring are one block-local pass
+        (``match_edges``).
 
         ``prior`` is a committed assignment table (entity_key, cluster_id,
         ...) over a subset of ``entities``. Only pairs touching a FRESH key
@@ -249,34 +305,14 @@ class ERPipeline:
         join the match edges as CC edges — ``cluster_id`` is the min
         member key, so a prior row is an edge inside its old cluster — and
         connected components merges clusters transitively, so a new
-        bridging form can fuse two old clusters.
+        bridging form can fuse two old clusters. The result equals a
+        full-batch run when no prior key's canonical surface changes and
+        no block crosses ``max_block_size`` between folds; otherwise old
+        decisions stand unrevised (ROADMAP D8).
         """
-        pairs = blocking_pairs(entities, max_block_size=self.max_block_size)
-        if prior is not None:
-            # a pair touches a fresh key unless BOTH ends have a prior row
-            ol = prior.select(F.col("entity_key").alias("left_id"), F.lit(True).alias("_ol"))
-            orr = prior.select(F.col("entity_key").alias("right_id"), F.lit(True).alias("_or"))
-            pairs = (
-                pairs.join(ol, "left_id", "left").join(orr, "right_id", "left")
-                .filter(F.col("_ol").isNull() | F.col("_or").isNull())
-                .drop("_ol", "_or")
-            )
-        # respread before the scoring UDF: AQE coalesces shuffles by BYTE
-        # size, but a Python-UDF stage is compute-bound per ROW — a few MB
-        # of pairs is minutes of scoring, and a byte-coalesced single
-        # partition would run it serially on one core
-        n_score_parts = self.spark.sparkContext.defaultParallelism * 2
-        # checkpoint: match edges are read several times downstream (CC
-        # input, id mapping) — never re-run the scoring UDF. Checkpoint
-        # BEFORE the match filter: a filter over the projected match flag
-        # is pushed below the projection, which would run the UDF twice
-        # (once to filter, once for the kept columns).
-        scores = (
-            S.score_pairs(pairs.repartition(n_score_parts))
-            .select("left_id", "right_id", "match")
-            .localCheckpoint()
+        edges = match_edges(
+            entities, max_block_size=self.max_block_size, prior=prior
         )
-        edges = scores.filter(F.col("match")).select("left_id", "right_id")
         if prior is not None:
             edges = edges.unionByName(
                 prior.filter(F.col("entity_key") != F.col("cluster_id")).select(
@@ -338,8 +374,10 @@ class ERPipeline:
         clustering (the continuously-crawled-corpus path): merge the
         batch's mention rows into the prior entity aggregate, then
         ``resolve`` the merged vocabulary against the prior assignments —
-        only pairs touching a previously-unseen surface form are scored,
-        and the result equals a full-batch run.
+        only pairs touching a previously-unseen key are scored. The
+        result equals a full-batch run when no prior key's canonical
+        surface changes and no block crosses ``max_block_size`` between
+        folds; otherwise prior decisions stand unrevised (ROADMAP D8).
 
         Work scales with |new batch| + |vocabulary|, never |old corpus|.
         Writes refreshed ``entities``/``assignments`` stages back to the

@@ -15,8 +15,11 @@ Design points:
   batch and incremental CLI paths use, and both are thin wrappers over
   ``ERPipeline.resolve`` — the one block → score → CC → assign path —
   so streaming adds arrival handling, never a second clustering
-  implementation (the stream==batch pytest pins final assignments
-  bit-equal to a one-shot batch run over the union).
+  implementation. Folding equals a one-shot batch run over the union
+  when no prior key's canonical surface changes and no block crosses
+  ``max_block_size`` between folds (the stream==batch pytest pins that
+  case bit-equal); otherwise a fold keeps prior decisions that a batch
+  run would revise (ROADMAP D8).
 * **Snapshot-commit folding (Iceberg semantics on the parquet seam).**
   ``foreachBatch`` replays micro-batches after failures (at-least-once
   per epoch) and ``update()`` is not idempotent — re-folding would
@@ -61,6 +64,7 @@ from ..sources import tables as TBL
 from ..plans.er_pipeline import ERPipeline
 
 _MARKER_RE = re.compile(r"^v(\d+)-b(-?\d+)\.json$")
+_SNAP_RE = re.compile(r"^v(\d+)$")
 
 
 def _fs(spark: SparkSession, path: str):
@@ -123,10 +127,15 @@ def read_current(spark: SparkSession, workdir: str,
 
 def _prune(spark: SparkSession, workdir: str, upto_version: int,
            keep_last: int) -> None:
-    """Drop snapshot dirs older than the ``keep_last`` newest. Runs only
-    after the commit, so a crash mid-prune costs disk, never state."""
-    for v in range(max(0, upto_version - keep_last + 1)):
-        TBL.drop_stage(spark, _snap_dir(workdir, v))
+    """Drop snapshot dirs older than the ``keep_last`` newest. One
+    listing of the workdir finds them, so a fold never probes the
+    versions earlier folds already dropped. Runs only after the commit,
+    so a crash mid-prune costs disk, never state."""
+    fs, p, _ = _fs(spark, workdir)
+    for st in fs.listStatus(p):
+        m = _SNAP_RE.match(st.getPath().getName())
+        if m and st.isDirectory() and int(m.group(1)) <= upto_version - keep_last:
+            TBL.drop_stage(spark, st.getPath().toString())
 
 
 def er_fold_batch(
